@@ -9,79 +9,34 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Representative slice of every operator family: scan+filter, wide
-    * agg, shuffle join, as-of union-window join, window frames, top-k,
-    * dedup (exact + minhash + simhash), kNN, tf-idf, arrays, windows.
-    */
-  val headline: Seq[String] = Seq(
-    "q01_project_filter", "q03_agg_pricing_summary", "q04_count_distinct",
-    "q06_rollup", "q07_broadcast_join", "q08_shuffle_join_topk",
-    "q12_asof_join", "q14_window_rank", "q15_window_frames", "q16_sort_topk",
-    "q18_dedup_keeper", "q21_math_conditional", "q22_array_funcs",
-    "q24_json_funcs", "q30_percentiles", "q31_pivot", "q35_lateral_topk",
-    "q37_range_join", "q38_grouping_sets", "q39_recursive_cte",
-    "q40_listagg", "q41_range_frames", "q42_unpivot",
-    "t1_window_tumbling", "t3_window_session",
-    "l1_exact_dedup", "l1_bloom_dedup", "l2_jaccard_pairs", "l2_containment", "l2_winnow_pairs", "l2_minhash_lsh", "l2_simhash",
-    "l2_dup_clusters", "l3_knn_bruteforce", "l3_ann_lsh", "l3_semdedup", "l3_ann_pq",
-    "l3_ann_ivfpq", "l3_ann_ivfpq_residual", "l3_ann_refined",
-    "l3_knn_graph", "l3_cluster_sample",
-    "l4_tfidf", "l4_fingerprint", "l4_lm_score", "l4_entropy", "l4_winnow",
-    "l6_corpus_clean", "l6_pack_shards",
-    "l8_decontaminate", "l8_repetition", "l8_chunk_windows", "l8_line_dedup",
-    "l8_mixture_apply", "l8_ngram_novelty", "l8_span_dedup",
-    // l8_ppl_bucket is deliberately absent: its cost IS the
-    // l4_lm_score pipeline (already measured) + one catalog-sized window
-    "l8_pack_sequences", "l4_classifier", "l4_vocab_oov", "l8_profile",
-    "q43_minmax_by", "q44_pagerank", "l2_edit_distance", "l4_bpe_merges",
-    "l4_bpe_encode", "l8_weighted_sample", "q45_histogram", "q46_ppr",
-    "q47_pagerank_weighted", "l3_ann_incremental", "l4_bpe_merges_batched",
-    "q48_components", "q49_bfs", "q50_triangles", "q51_stats_agg",
-    "l8_importance", "q52_zorder", "l8_heavy_hitters",
-    "q53_tpch_q3", "q54_tpch_q5", "q55_tpch_q10", "l3_pca_top",
-    "q56_sssp", "q57_kcore", "q58_upsert", "q59_cdc_apply", "q60_scd2", "q61_resample", "q62_retention",
-    "q63_wppr", "q64_lpa", "q65_hits", "q66_adamic_adar",
-    "l2_incremental_clusters", "q67_tpch_q18", "q68_tpch_q21", "q69_modularity",
-    "q70_louvain", "q71_rolling_zscore", "q72_scc", "q73_random_walks",
-    "q74_tpch_q19", "q75_hilbert", "l3_truncated_recall", "l8_cdc_chunks",
-    "q76_pagerank_incr", "q77_louvain_l2", "q78_funnel", "q79_frequent_triples", "q80_assoc_rules",
-    "q81_link_predict", "q82_ewma", "l4_kn_lm", "q83_zonemap", "q84_tpch_q7", "q85_betweenness", "q86_graph_profile", "q87_node2vec_walks", "q88_mv_maintain", "l3_nprobe_sweep", "q89_transitions", "l2_lsh_sweep", "q90_tpch_q8", "q91_tpch_q14", "q92_skew_profile", "q93_harmonic",
-    "q94_salted_join", "q95_hyperball", "q96_tpch_q17", "q97_tpch_q22",
-    "l4_unigram_lm", "l4_unigram_encode",
-    "q98_ktruss", "q99_condensation", "q100_mv_distinct", "q101_dq_constraints",
-    "l3_ann_graph_search", "q102_attribution", "q103_zonemap_maintain",
-    "q104_mv_join", "l3_ann_hnsw", "q105_tpch_q2", "q106_tpch_q11", "q107_tpch_q15",
-    "q108_tpch_q16", "q109_clustering_depth", "q110_mv_join_delete",
-    "q111_tpch_q4", "q112_tpch_q6", "q113_tpch_q9", "q114_tpch_q12",
-    "q115_tpch_q13", "q116_tpch_q20", "q117_mv_agg_delete", "q118_mv_minmax_delete",
-    "q119_mv_quantile_delete", "q120_mv_tpch_q1_delete",
-    "l3_ann_hnsw_incremental",
-    "q121_zonemap_pruned_read", "q122_mv_pipeline_delete",
-    "q123_mv_cascade_delete", "q124_mv_two_hop_delete",
-    "l3_ann_compact", "l2_incremental_delete", "l3_ann_delete",
-    "l4_classifier_train", "l4_bm25", "l4_bm25_maintain", "l5_video_header",
-    "q125_mv_topk_delete", "l4_bm25_incremental", "l6_cascade_delete",
-    "q126_zonemap_transparent_read", "l6_cascade_insert",
-    "q127_zonemap_string_or_read", "q128_zonemap_file_read",
-    "q129_zonemap_prefix_read", "q130_zonemap_zorder_read",
-    "q131_zonemap_nullcount_read", "q132_zonemap_notbetween_read",
-    "q133_zonemap_notin_read", "q134_zonemap_zorder_files_read",
-    "l3_ann_retrain",
-    "q135_zonemap_nested_read", "q136_zonemap_bloom_read",
-    "l3_ann_filtered", "l3_hybrid_rrf",
-    "l3_ann_incremental_stored",
-    // the _apply cells: a PRE-TIMED prewarm run builds + persists the
-    // stored bundle/fixture once per testdata fingerprint, and all
-    // three timed runs measure read-stored + maintenance (cascades)
-    // or zone-resolve + pruned scan (zone family) only — the numbers
-    // the construction-dominated cells above hide in build noise
-    "l6_cascade_delete_apply", "l6_cascade_insert_apply",
-    "q121_zonemap_pruned_read_apply", "q126_zonemap_transparent_read_apply",
-    "q127_zonemap_string_or_read_apply", "q128_zonemap_file_read_apply",
-    "q129_zonemap_prefix_read_apply", "q130_zonemap_zorder_read_apply",
-    "q131_zonemap_nullcount_read_apply", "q132_zonemap_notbetween_read_apply",
-    "q133_zonemap_notin_read_apply", "q134_zonemap_zorder_files_read_apply",
-    "q135_zonemap_nested_read_apply", "q136_zonemap_bloom_read_apply")
+  /** Registry queries that are NOT bench cells — mostly small
+    * single-operator or variant entries whose cost a benched cell of
+    * the same family already carries (e.g. l8_ppl_bucket IS the
+    * l4_lm_score pipeline plus one catalog-sized window). A name added
+    * here removes a cell from every later record. */
+  val unbenched: Set[String] = Set(
+    "q27_scalar_subquery", "q28_in_subquery", "q29_correlated_exists",
+    "q02_predicates", "q05_approx_distinct", "q06_cube", "q09_outer_join",
+    "q09_full_outer_join", "q10_semi_join", "q10_anti_join",
+    "q11_theta_join", "q13_cross_join", "q17_union", "q17_intersect",
+    "q17_except", "q19_string_funcs", "q20_date_funcs", "q22_array_explode",
+    "q23_map_funcs", "q25_udf", "q25_udaf_geomean", "q25_generator",
+    "q26_sql_entry", "q32_window_distribution", "q33_salted_skew_agg",
+    "q34_approx_sketch_bounds", "q36_sessionize", "t2_window_sliding",
+    "l2_embedding_cosine", "l3_ann_recall", "l3_ann_ivf",
+    "l3_ann_ivf_kmeans", "l3_quantize_int8", "l3_ann_pq_trained",
+    "l4_langid", "l4_quality", "l4_tokens", "l5_binary_payload",
+    "l5_media_pipeline", "l6_filter_funnel", "l8_sample_stratified",
+    "l8_sample_hash", "l8_scrub_ids", "l8_mixture_plan", "l8_shuffle_order",
+    "l8_source_stats", "l8_source_overlap", "l2_incremental_dedup",
+    "l8_decontam_scrub", "l8_ppl_bucket", "l5_binary_neardup",
+    "l6_cluster_keeper", "l2_minhash_estimate", "l3_cluster_sample_kept",
+    "l8_profile_approx")
+
+  /** The bench cells: every registry query in registry order, minus
+    * `unbenched` — a renamed or new registry entry lands here by
+    * construction instead of silently dropping out. */
+  def headline: Seq[String] = SparkEntry.names.filterNot(unbenched)
 
   /** 1-minute system load average, -1.0 where the platform can't say.
     * Recorded at both ends of the run so the record SELF-ADJUDICATES:
@@ -208,13 +163,12 @@ object Bench {
       }
       cell
     }
-    val results = headline.filter(queries.contains).map { name =>
+    val results = headline.map { name =>
       // _apply cells read a PERSISTED bundle/fixture: the first call
       // per testdata fingerprint builds it, which would structurally
       // blow the cell's spread envelope (and burn retry budget on an
       // outlier no retry can fix) — prewarm once untimed, so all
-      // three measured runs time the read+maintain path (the
-      // Sf1Ledger discipline, round-15 advisory)
+      // three measured runs time the read+maintain path
       if (name.endsWith("_apply")) BenchSession.timeQuery(spark, name, sfDir)
       name -> measure(() => BenchSession.timeQuery(spark, name, sfDir))
     }
@@ -236,14 +190,20 @@ object Bench {
     // self-certifying record: the resolved SPARK_GRAFT_CONF override
     // map (normally {}) rides in the JSON, so a record produced under
     // a stale exported override is distinguishable after the fact
-    val confStamp = BenchSession.confOverrides
-      .map { case (k, v) => "\"" + k + "\":\"" + v.replace("\"", "\\\"") + "\"" }
-      .mkString("{", ",", "}")
-    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"load":$loads,"foreign":$foreigns,"contaminated":$contaminated,"n_retries":$nRetries,"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"nproc":$nproc,"n_entries":${all.size},"conf_overrides":$confStamp,"sf":"$sfDir"}"""
+    val confStamp = confJson(BenchSession.confOverrides)
+    // the cores the session actually ran on — nproc is the HOST's count
+    val cpus = spark.sparkContext.defaultParallelism
+    val master = Verify.jsonString(spark.sparkContext.master)
+    val json = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"spread":$spread,"load":$loads,"foreign":$foreigns,"contaminated":$contaminated,"n_retries":$nRetries,"loadavg_start":$loadStart%.2f,"loadavg_end":$loadEnd%.2f,"nproc":$nproc,"cpus":$cpus,"master":$master,"n_entries":${all.size},"conf_overrides":$confStamp,"sf":"$sfDir"}"""
     println(json)
     writeRecord(json)
     spark.stop()
   }
+
+  /** The conf-override map as a JSON object, keys and values escaped. */
+  private[graft] def confJson(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => Verify.jsonString(k) + ":" + Verify.jsonString(v) }
+      .mkString("{", ",", "}")
 
   /** Persist the record the stdout line carries: two driver rounds in a
     * row captured only an unparseable tail fragment of the println, so

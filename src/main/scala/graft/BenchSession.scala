@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One SparkSession recipe for the measurement mains (Bench, Stress) —
-  * keeps their methodology from drifting apart. */
+/** One SparkSession recipe for the measurement mains (Bench, Stress,
+  * Measure) — keeps their methodology from drifting apart. */
 object BenchSession {
 
   /** Parse "k=v;k2=v2" conf-override syntax — ONE definition shared by
-    * the session builder, ConfAb's arm parser, and Bench's record
+    * the session builder, Measure's A/B arm parser, and Bench's record
     * stamp, so the three spellings cannot drift. (A value cannot
     * contain ';' — acceptable for SQL conf values, documented here.) */
   def parseConfPairs(s: String): Seq[(String, String)] =
@@ -30,26 +30,27 @@ object BenchSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
-    // ad-hoc conf overrides for measurement experiments (TimeOne A/B
-    // loops): SPARK_GRAFT_CONF="k=v;k2=v2". Unset = the exact session
-    // every committed record ran under; Bench stamps the active map
-    // into its record JSON either way (audit trail).
+    // ad-hoc conf overrides for measurement experiments:
+    // SPARK_GRAFT_CONF="k=v;k2=v2". Unset = the exact session every
+    // committed record ran under; Bench stamps the active map into its
+    // record JSON either way (audit trail).
     confOverrides.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Time one query through the noop sink; cache cleanup happens
-    * OUTSIDE the measured window. Returns -1 on failure. */
-  def timeQuery(spark: SparkSession, name: String, dir: String): Double = {
+  /** Time one action: build `df` and force it through the noop sink.
+    * Cache cleanup happens OUTSIDE the measured window. Returns -1 on
+    * failure. */
+  def timeNoop(spark: SparkSession, label: String)(df: => DataFrame): Double = {
     val t0 = System.nanoTime()
     val elapsed = try {
-      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     } catch {
       case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        System.err.println(s"[bench] $label failed: ${e.getMessage}")
         -1.0
     }
     spark.sharedState.cacheManager.clearCache() // after timing, not inside it
@@ -57,7 +58,11 @@ object BenchSession {
     // RDD level, invisible to the SQL cache manager — release whatever
     // the cleared caches left behind so repeated cold runs measure the
     // same storage baseline instead of accumulating dead round tables
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     elapsed
   }
+
+  /** Time one registry query through the noop sink (see timeNoop). */
+  def timeQuery(spark: SparkSession, name: String, dir: String): Double =
+    timeNoop(spark, name)(SparkEntry.queries(name)(spark, dir))
 }

@@ -13,6 +13,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q03_agg_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** Every query name, in registry order. */
+  def names: Seq[String] = registries.map(_.name)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registries.map(q => q.name -> q.run).toMap

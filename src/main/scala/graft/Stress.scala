@@ -1,31 +1,51 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-up stress harness: rebuilds `documents` / `embeddings` at
-  * `factor`× the chosen fixture (distinct ids; each copy's text is
-  * prefixed with 20 copy-specific words, so replicas sit BELOW the 0.8
-  * Jaccard near-dup threshold — the corpus grows without a synthetic
-  * candidate-pair explosion), then times the corpus-heavy pipelines at
-  * 1× and `factor`×. Prints one JSON line per run.
+import graft.BenchSession.{timeNoop, timeQuery}
+import graft.ops.{CorpusOps, GraphOps}
+
+/** Scale-up stress harness: "would it survive 10×?", measured.
   *
-  * This is the "would it survive 10×?" check the plan audits argue on
-  * paper: candidate-bounded near-dup, banded minhash, bucketed ANN and
-  * the cleanup composite should all grow ~linearly in rows, not
-  * quadratically.
+  * Registry cells run on the chosen fixture AND on a `factor`×
+  * replicated copy of the tables they touch. Replication is
+  * structure-preserving: documents/embeddings get distinct ids and a
+  * copy-specific word prefix (replicas sit BELOW the 0.8 Jaccard
+  * near-dup threshold, so the corpus grows without a synthetic
+  * candidate-pair explosion); lineitem/orders shift every key column by
+  * `i · 10M` per replica, so the co-purchase and customer–supplier
+  * graphs become `factor` DISJOINT copies — node, edge and document
+  * mass scale by exactly `factor` while per-component structure
+  * (degree profile, diameter, cluster sizes) stays fixed. That isolates
+  * the engine's growth exponent from data-shape drift: a cell whose
+  * ratio lands far above its plan-predicted exponent (linear for the
+  * round-bounded graph family and candidate-bounded near-dup, n^1.5
+  * for the IVF-bounded ANN index builds) is a scaling bug, not noise.
   *
-  * Usage: `sbt "runMain graft.Stress [sfDir] [factor]"`
+  * Synthetic entries then price single ops on generated inputs at a
+  * base and a scaled size (the fixture tables cannot exercise a hub,
+  * a hot key or a hot cluster).
+  *
+  * Usage: `sbt "runMain graft.Stress [sfDir] [factor] [name ...]"` —
+  * optional names restrict the run to those cells/entries (a shorter
+  * run is less exposed to co-tenant load waves when re-adjudicating a
+  * few). Prints one JSON line per entry:
+  * `{"name":…,"base":s,"scaled":s,"ratio":r}` (`"ratio":null,
+  * "failed":true` when either side fails).
   */
 object Stress {
 
-  private val queriesUnderTest = Seq(
+  /** The registry cells timed at 1× and `factor`×: the corpus-heavy
+    * pipelines, then the expensive bench cells (graph, ANN, zone-map,
+    * cascade). */
+  private[graft] val cells: Seq[String] = Seq(
     "l1_bloom_dedup",
     "l2_jaccard_pairs", "l2_containment", "l2_winnow_pairs", "l2_minhash_lsh", "l2_simhash", "l2_embedding_cosine",
     "l2_dup_clusters", "l3_ann_lsh", "l3_semdedup", "l3_ann_pq", "l3_ann_ivfpq",
     "l3_ann_ivfpq_residual", "l3_ann_refined",
     // l8_profile_approx is absent: it profiles `events`, which this
-    // harness does not scale (only documents/embeddings replicate)
+    // harness does not scale
     "l6_corpus_clean",
     "l6_pack_shards", "l8_decontaminate", "l8_repetition", "l8_chunk_windows",
     "l8_line_dedup", "l4_entropy", "l8_mixture_apply",
@@ -41,36 +61,79 @@ object Stress {
     // graph-search: index build is the IVF n^1.5, traversal beam-sized
     "l3_ann_graph_search",
     // hnsw: same shared index; layer builds + descent are 4^-l-sized
-    "l3_ann_hnsw")
+    "l3_ann_hnsw",
+    // BENCH_r12's most expensive cells, most expensive first
+    "l3_ann_hnsw_incremental", "q77_louvain_l2",
+    "q99_condensation", "q76_pagerank_incr",
+    "q72_scc", "q95_hyperball", "q70_louvain",
+    "q69_modularity", "q85_betweenness", "q64_lpa", "q48_components",
+    "q44_pagerank", "q65_hits", "q46_ppr", "q47_pagerank_weighted",
+    "q73_random_walks", "q63_wppr",
+    // each later round's own expensive cells, audited the round they
+    // shipped; the read-only zone _apply family should read ~flat (only
+    // the pruned read scales, not the write)
+    "q121_zonemap_pruned_read", "l3_ann_compact",
+    "l2_incremental_delete", "l3_ann_delete",
+    "l6_cascade_delete", "l4_bm25_incremental", "q125_mv_topk_delete",
+    "l6_cascade_insert",
+    "q126_zonemap_transparent_read", "q127_zonemap_string_or_read",
+    "q128_zonemap_file_read", "q129_zonemap_prefix_read",
+    "q130_zonemap_zorder_read",
+    "l6_cascade_delete_apply", "l6_cascade_insert_apply",
+    "q131_zonemap_nullcount_read", "q132_zonemap_notbetween_read",
+    "q133_zonemap_notin_read", "q134_zonemap_zorder_files_read",
+    "l3_ann_retrain",
+    "q121_zonemap_pruned_read_apply", "q126_zonemap_transparent_read_apply",
+    "q127_zonemap_string_or_read_apply", "q128_zonemap_file_read_apply",
+    "q129_zonemap_prefix_read_apply", "q130_zonemap_zorder_read_apply",
+    "q131_zonemap_nullcount_read_apply", "q132_zonemap_notbetween_read_apply",
+    "q133_zonemap_notin_read_apply", "q134_zonemap_zorder_files_read_apply")
+
+  /** One result line; a -1 (failed) side never becomes a ratio — a
+    * both-sides failure must NOT print ratio 1.00 and pass silently. */
+  private def report(name: String, b: Double, s: Double, extra: String = ""): Unit = {
+    val ratio = if (b <= 0 || s <= 0) "null,\"failed\":true" else f"${s / b}%.2f"
+    println(f"""{"name":"$name"$extra,"base":$b%.3f,"scaled":$s%.3f,"ratio":$ratio}""")
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factor = if (args.length > 1) args(1).toInt else 10
-    // optional 3rd+ args: restrict to named queries — a shorter run is
-    // less exposed to co-tenant load waves when re-adjudicating a few
-    // entries (a full pass stays the default)
     val only = args.drop(2).toSet
+    def selected(name: String) = only.isEmpty || only(name)
     val spark = BenchSession.build()
 
-    val scaledDir = java.nio.file.Files.createTempDirectory("graft-stress").toString
+    // pid-stamped scratch: old scaled corpora (and the zone fixtures
+    // the _apply prewarms persist against them — keyed to this
+    // never-repeating dir, so unreachable after the run) reap once
+    // their owning process is gone instead of accumulating a
+    // multi-table copy per invocation
+    val scaledDir = graft.ops.ArtifactCache.scratchDir("stress")
     buildScaled(spark, sfDir, scaledDir, factor)
 
-    def timeAll(dir: String): Seq[(String, Double)] =
-      queriesUnderTest.filter(n => only.isEmpty || only(n))
-        .map(name => name -> BenchSession.timeQuery(spark, name, dir))
+    val names = cells.filter(selected)
+    if (names.nonEmpty) {
+      // one warm-up per corpus (JIT, codegen, parquet footers) so the
+      // first timed cell doesn't absorb one-time costs
+      timeQuery(spark, names.last, sfDir)
+      timeQuery(spark, names.last, scaledDir)
+      // the _apply cells time the REPAIR path: their FIRST run per
+      // corpus builds and persists the stored bundle (construction), so
+      // prewarm each once per corpus — the timed run then measures
+      // read-stored + maintenance only
+      names.filter(_.endsWith("_apply")).foreach { n =>
+        timeQuery(spark, n, sfDir)
+        timeQuery(spark, n, scaledDir)
+      }
+      names.foreach(n => report(n, timeQuery(spark, n, sfDir), timeQuery(spark, n, scaledDir)))
+    }
 
-    // warm-up BOTH corpora (JIT, codegen, parquet footers) so neither
-    // side's first query absorbs one-time costs the other skips
-    timeAll(sfDir); timeAll(scaledDir)
-    val base = timeAll(sfDir)
-    val scaled = timeAll(scaledDir)
-    def js(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    println(s"""{"stress":"base","sf":"$sfDir","queries":${js(base)}}""")
-    println(s"""{"stress":"${factor}x","queries":${js(scaled)}}""")
-    val ratios = base.zip(scaled).map { case ((k, b), (_, s0)) => k -> s0 / b }
-    val ratioBody = ratios.map { case (k, r) => f""""$k":$r%.1f""" }.mkString(",")
-    println("{\"stress\":\"ratio_at_" + factor + "x_data\",\"ratios\":{" + ratioBody + "}}")
+    /** Warm-up at `base`, then time `run` at `base` and at `scaled`. */
+    def scaling(name: String, base: Long, scaled: Long)(run: Long => Double): Unit =
+      if (selected(name)) {
+        run(base)
+        report(name, run(base), run(scaled), s""","base_n":$base,"scaled_n":$scaled""")
+      }
 
     // SKEWED semdedup: the uniform replicas above spread evenly over
     // the adaptive centroids, so they never exercise the hot-cluster
@@ -78,173 +141,65 @@ object Stress {
     // direction — the shape real embedding corpora take — and the
     // ratio shows the guard keeps the pairwise stage ~linear (~cap·n
     // candidates) instead of quadratic in the hot cluster (n²·0.64).
-    def timeSkewedSemDedup(n: Int): Double = {
-      val vecs = skewedEmbeddings(spark, n)
-      val t0 = System.nanoTime()
-      graft.ops.CorpusOps.semDedup(vecs, k = 32, tau = 0.5)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      dt
-    }
-    if (only.isEmpty || only("semdedup_skew")) {
-      timeSkewedSemDedup(2000) // warm-up
-      val skewBase = timeSkewedSemDedup(2000)
-      val skewScaled = timeSkewedSemDedup(2000 * factor)
-      println(f"""{"stress":"semdedup_skew","base_n":2000,"base":$skewBase%.3f,"scaled_n":${2000 * factor},"scaled":$skewScaled%.3f,"ratio":${skewScaled / skewBase}%.1f}""")
+    scaling("semdedup_skew", 2000, 2000L * factor) { n =>
+      val vecs = skewedEmbeddings(spark, n.toInt)
+      timeNoop(spark, "semdedup_skew")(CorpusOps.semDedup(vecs, k = 32, tau = 0.5))
     }
 
-    // GRAPH family: the fixture tables don't scale here (only
-    // documents/embeddings replicate), so the edge-linear claim for
-    // the GraphOps rounds gets its own synthetic corpus — a
-    // deterministic preferential-attachment-ish multigraph at E and
+    // GRAPH family: a deterministic synthetic multigraph at E and
     // E·factor edges. What this pins: per-iteration cost tracks the
     // EDGE table (ratio ~ factor), and the data-derived round width
     // (edge partition count) does not leave the 10× graph stuck at
     // the 1× width.
-    def timePageRank(nEdges: Int): Double = {
-      val edges = graft.ops.GraphOps.undirect(
-        spark.range(nEdges.toLong).selectExpr(
+    scaling("graph_pagerank", 100000, 100000L * factor) { n =>
+      val edges = GraphOps.undirect(
+        spark.range(n).selectExpr(
           "cast(id % 20000 as bigint) as src",
           // hub-skewed destinations: id*2654435761 mod fans out with a
           // bias to small ids, the shape real interaction graphs take
           "cast((id * 2654435761) % (1 + id % 997) as bigint) as dst"))
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.pageRank(edges)(graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
-    }
-    if (only.isEmpty || only("graph_pagerank")) {
-      timePageRank(100000) // warm-up
-      val gBase = timePageRank(100000)
-      val gScaled = timePageRank(100000 * factor)
-      println(f"""{"stress":"graph_pagerank","base_edges":100000,"base":$gBase%.3f,"scaled_edges":${100000 * factor},"scaled":$gScaled%.3f,"ratio":${gScaled / gBase}%.1f}""")
+      timeNoop(spark, "graph_pagerank")(GraphOps.pageRank(edges))
     }
 
     // TRIANGLES under a HUB: the quadratic trap degree orientation
-    // defuses. The graph is a star (one hub wired to n/10 spokes — a
-    // naive wedge join would emit (n/10)² hub wedges) plus hash-chord
-    // edges. With orientation the hub, being the HIGHEST-degree node,
-    // emits NO wedges (all its edges point at it), so cost tracks the
-    // chord count — the measured ratio at factor× edges should stay
-    // near the edge ratio, not its square.
-    def timeTriangles(nEdges: Int): Double = {
-      val nodes = nEdges / 2L
-      val spokes = spark.range(1, nodes / 5)
-        .selectExpr("cast(0 as bigint) as src", "id as dst")
-      val chords = spark.range(nEdges.toLong)
-        .selectExpr(s"1 + (id * 6364136223) % $nodes as a",
-          s"1 + (id * 2654435761) % $nodes as b")
-        .selectExpr("least(a, b) as src", "greatest(a, b) as dst")
-        .filter("src < dst").distinct()
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.triangles(spokes.union(chords).distinct())(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      dt
-    }
-    if (only.isEmpty || only("graph_triangles")) {
-      timeTriangles(100000) // warm-up
-      val tBase = timeTriangles(100000)
-      val tScaled = timeTriangles(100000 * factor)
-      println(f"""{"stress":"graph_triangles","base_edges":100000,"base":$tBase%.3f,"scaled_edges":${100000 * factor},"scaled":$tScaled%.3f,"ratio":${tScaled / tBase}%.1f}""")
+    // defuses. With orientation the hub, being the HIGHEST-degree
+    // node, emits NO wedges (all its edges point at it), so cost
+    // tracks the chord count — the measured ratio at factor× edges
+    // should stay near the edge ratio, not its square.
+    scaling("graph_triangles", 100000, 100000L * factor) { n =>
+      val edges = starChords(spark, n)
+      timeNoop(spark, "graph_triangles")(GraphOps.triangles(edges))
     }
 
     // ADAMIC-ADAR under a hub: the derived cap (~sqrt(2E)) keeps wedge
     // volume (2E)^1.5-bounded at ANY size — the star hub (highest
     // degree) exceeds the cap at both scales and generates no wedges,
     // while the cap GROWS with the graph so mid-degree centers are not
-    // silently dropped at 10x. Measured ratio should track the edge
-    // ratio, not its square. Same star+chords graph as graph_triangles.
-    def timeAdamicAdar(nEdges: Int): Double = {
-      val nodes = nEdges / 2L
-      val spokes = spark.range(1, nodes / 5)
-        .selectExpr("cast(0 as bigint) as src", "id as dst")
-      val chords = spark.range(nEdges.toLong)
-        .selectExpr(s"1 + (id * 6364136223) % $nodes as a",
-          s"1 + (id * 2654435761) % $nodes as b")
-        .selectExpr("least(a, b) as src", "greatest(a, b) as dst")
-        .filter("src < dst").distinct()
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.adamicAdar(spokes.union(chords).distinct())(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
-    }
-    if (only.isEmpty || only("graph_adamic")) {
-      timeAdamicAdar(100000) // warm-up
-      val aBase = timeAdamicAdar(100000)
-      val aScaled = timeAdamicAdar(100000 * factor)
-      println(f"""{"stress":"graph_adamic","base_edges":100000,"base":$aBase%.3f,"scaled_edges":${100000 * factor},"scaled":$aScaled%.3f,"ratio":${aScaled / aBase}%.1f}""")
+    // silently dropped at 10x. Ratio should track the edge ratio.
+    scaling("graph_adamic", 100000, 100000L * factor) { n =>
+      val edges = starChords(spark, n)
+      timeNoop(spark, "graph_adamic")(GraphOps.adamicAdar(edges))
     }
 
     // LINK-PREDICT under the same hub graph: identical wedge-volume
     // argument as graph_adamic (shared derived cap), plus the two
     // UNCAPPED endpoint-degree joins — which are node-sized, so the
     // ratio should still track the edge ratio.
-    def timeLinkPredict(nEdges: Int): Double = {
-      val nodes = nEdges / 2L
-      val spokes = spark.range(1, nodes / 5)
-        .selectExpr("cast(0 as bigint) as src", "id as dst")
-      val chords = spark.range(nEdges.toLong)
-        .selectExpr(s"1 + (id * 6364136223) % $nodes as a",
-          s"1 + (id * 2654435761) % $nodes as b")
-        .selectExpr("least(a, b) as src", "greatest(a, b) as dst")
-        .filter("src < dst").distinct()
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.linkPredict(spokes.union(chords).distinct())(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
-    }
-    if (only.isEmpty || only("graph_linkpredict")) {
-      timeLinkPredict(100000) // warm-up
-      val lpBase = timeLinkPredict(100000)
-      val lpScaled = timeLinkPredict(100000 * factor)
-      println(f"""{"stress":"graph_linkpredict","base_edges":100000,"base":$lpBase%.3f,"scaled_edges":${100000 * factor},"scaled":$lpScaled%.3f,"ratio":${lpScaled / lpBase}%.1f}""")
+    scaling("graph_linkpredict", 100000, 100000L * factor) { n =>
+      val edges = starChords(spark, n)
+      timeNoop(spark, "graph_linkpredict")(GraphOps.linkPredict(edges))
     }
 
     // BETWEENNESS with a FIXED seed count: state is (seeds × reached)
     // and each round's work is frontier-/level-sized joins against the
-    // edge table — at fixed seeds the per-round joins scale with the
-    // edge table, so the ratio should track the edge ratio, not the
-    // state product. Same chord-graph generator (no star hub: σ path
+    // edge table — at fixed seeds the ratio should track the edge
+    // ratio, not the state product. Chord graph, no star hub: σ path
     // counts through a hub multiply, which is the 2^52 guard's job,
-    // not the scale test's).
-    def timeBetweenness(nEdges: Int): Double = {
-      val nodes = nEdges / 2L
-      val chords = spark.range(nEdges.toLong)
-        .selectExpr(s"1 + (id * 6364136223) % $nodes as a",
-          s"1 + (id * 2654435761) % $nodes as b")
-        .selectExpr("least(a, b) as src", "greatest(a, b) as dst")
-        .filter("src < dst").distinct()
-      val edges = graft.ops.GraphOps.undirect(chords)
+    // not the scale test's.
+    scaling("graph_betweenness", 100000, 100000L * factor) { n =>
+      val edges = GraphOps.undirect(chords(spark, n))
       val seeds = spark.range(1, 9).selectExpr("id as node")
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.betweenness(edges, seeds, maxHops = 3)(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
-    }
-    if (only.isEmpty || only("graph_betweenness")) {
-      timeBetweenness(100000) // warm-up
-      val bBase = timeBetweenness(100000)
-      val bScaled = timeBetweenness(100000 * factor)
-      println(f"""{"stress":"graph_betweenness","base_edges":100000,"base":$bBase%.3f,"scaled_edges":${100000 * factor},"scaled":$bScaled%.3f,"ratio":${bScaled / bBase}%.1f}""")
+      timeNoop(spark, "graph_betweenness")(GraphOps.betweenness(edges, seeds, maxHops = 3))
     }
 
     // INCREMENTAL CLUSTER ASSIGNMENT: the batch-sized-work claim. The
@@ -253,126 +208,48 @@ object Stress {
     // batch stays FIXED, and only incrementalClusters is timed: the
     // delta rounds are batch-sized, untouched clusters pass through one
     // broadcast remap join (a corpus-linear SCAN, no shuffle), so the
-    // ratio should sit far below factor — unlike l2_dup_clusters in the
-    // table above, whose full recompute tracks the corpus.
-    def timeIncrementalClusters(nClusters: Int, storedDir: String): Double = {
+    // ratio should sit far below factor — unlike l2_dup_clusters,
+    // whose full recompute tracks the corpus.
+    scaling("incremental_clusters", 50000, 50000L * factor) { nClusters =>
       // synthetic stored state: nClusters pair-clusters of size 2
       // (ids 2i ~ 2i+1), persisted like the production table
-      val corpusPairs = spark.range(nClusters.toLong)
-        .selectExpr("id * 2 as d1", "id * 2 + 1 as d2")
-      graft.ops.CorpusOps.dupClusters(corpusPairs)(
-        graft.ops.CacheScope.sessionOwned)
+      val storedDir = java.nio.file.Files.createTempDirectory("graft-incr").toString
+      CorpusOps.dupClusters(spark.range(nClusters).selectExpr("id * 2 as d1", "id * 2 + 1 as d2"))
         .write.mode("overwrite").parquet(storedDir)
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      val stored = spark.read.parquet(storedDir)
       // fixed batch: 1000 docs, each bridging two neighboring stored
       // clusters (the merge path) + intra-batch chain pairs
       val batchPairs = spark.range(500L)
         .selectExpr("1000000000 + id * 2 as d1", "1000000001 + id * 2 as d2")
       val crossPairs = spark.range(1000L)
         .selectExpr("1000000000 + id as d1", s"(id * 4) % ${2L * nClusters} as d2")
-      val t0 = System.nanoTime()
-      graft.ops.CorpusOps.incrementalClusters(stored, batchPairs, crossPairs)(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
-    }
-    if (only.isEmpty || only("incremental_clusters")) {
-      val d1 = java.nio.file.Files.createTempDirectory("graft-incr1").toString
-      val dN = java.nio.file.Files.createTempDirectory("graft-incrN").toString
-      timeIncrementalClusters(50000, d1) // warm-up
-      val iBase = timeIncrementalClusters(50000, d1)
-      val iScaled = timeIncrementalClusters(50000 * factor, dN)
-      println(f"""{"stress":"incremental_clusters","base_clusters":50000,"base":$iBase%.3f,"scaled_clusters":${50000 * factor},"scaled":$iScaled%.3f,"ratio":${iScaled / iBase}%.1f}""")
+      timeNoop(spark, "incremental_clusters")(CorpusOps.incrementalClusters(
+        spark.read.parquet(storedDir), batchPairs, crossPairs))
     }
 
     // SCC at the fixed schedule: the round count never moves, and each
     // round is one edge-sized join at edge-derived width — so 10x
-    // edges must cost ~10x, never edge². Base graph: disjoint 4-cycles
-    // (guaranteed SCC structure at both scales) plus one-way hash
-    // chords for edge mass.
-    def timeScc(nCycles: Int): Double = {
-      val n = 4L * nCycles
-      val cycles = spark.range(n)
-        .selectExpr("id as src", "(id div 4) * 4 + (id + 1) % 4 as dst")
-      val chords = spark.range(nCycles.toLong)
-        .selectExpr(s"(id * 6364136223) % $n as src",
-          s"(id * 2654435761) % $n as dst")
-        .filter("src <> dst")
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.scc(cycles.union(chords).distinct())(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
-    }
-    if (only.isEmpty || only("graph_scc")) {
-      timeScc(20000) // warm-up
-      val sBase = timeScc(20000)
-      val sScaled = timeScc(20000 * factor)
-      println(f"""{"stress":"graph_scc","base_cycles":20000,"base":$sBase%.3f,"scaled_cycles":${20000 * factor},"scaled":$sScaled%.3f,"ratio":${sScaled / sBase}%.1f}""")
+    // edges must cost ~10x, never edge².
+    scaling("graph_scc", 20000, 20000L * factor) { n =>
+      val edges = cyclesChords(spark, n)
+      timeNoop(spark, "graph_scc")(GraphOps.scc(edges))
     }
 
-    // CONVERGED-FORM SCC: the fixed-schedule entry above prices a
-    // round; the production sccConverged form adds a convergence
-    // PROBE (an action) per outer round — this entry prices that
-    // action-per-round cost at scale. Same guaranteed-SCC corpus.
-    def timeSccConverged(nCycles: Int): Double = {
-      val n = 4L * nCycles
-      val cycles = spark.range(n)
-        .selectExpr("id as src", "(id div 4) * 4 + (id + 1) % 4 as dst")
-      val chords = spark.range(nCycles.toLong)
-        .selectExpr(s"(id * 6364136223) % $n as src",
-          s"(id * 2654435761) % $n as dst")
-        .filter("src <> dst")
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.sccConverged(cycles.union(chords).distinct())(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
-    }
-    if (only.isEmpty || only("graph_scc_converged")) {
-      timeSccConverged(20000) // warm-up
-      val sBase = timeSccConverged(20000)
-      val sScaled = timeSccConverged(20000 * factor)
-      println(f"""{"stress":"graph_scc_converged","base_cycles":20000,"base":$sBase%.3f,"scaled_cycles":${20000 * factor},"scaled":$sScaled%.3f,"ratio":${sScaled / sBase}%.1f}""")
+    // CONVERGED-FORM SCC: the production sccConverged form adds a
+    // convergence PROBE (an action) per outer round — this entry
+    // prices that action-per-round cost at scale.
+    scaling("graph_scc_converged", 20000, 20000L * factor) { n =>
+      val edges = cyclesChords(spark, n)
+      timeNoop(spark, "graph_scc_converged")(GraphOps.sccConverged(edges))
     }
 
     // CONVERGED-FORM K-TRUSS: peel until no edge drops, with the
     // per-round convergence action — prices kTrussConverged's
     // action-per-round against the fixed-round graph_ktruss entry.
-    def timeKTrussConverged(nEdges: Int): Double = {
-      val nodes = nEdges / 2L
-      val spokes = spark.range(1, nodes / 5)
-        .selectExpr("cast(0 as bigint) as src", "id as dst")
-      val chords = spark.range(nEdges.toLong)
-        .selectExpr(s"1 + (id * 6364136223) % $nodes as a",
-          s"1 + (id * 2654435761) % $nodes as b")
-        .selectExpr("least(a, b) as src", "greatest(a, b) as dst")
-        .filter("src < dst").distinct()
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.kTrussConverged(spokes.union(chords).distinct(), k = 3)(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
-    }
-    if (only.isEmpty || only("graph_ktruss_converged")) {
-      timeKTrussConverged(100000) // warm-up
-      val kBase = timeKTrussConverged(100000)
-      val kScaled = timeKTrussConverged(100000 * factor)
-      println(f"""{"stress":"graph_ktruss_converged","base_edges":100000,"base":$kBase%.3f,"scaled_edges":${100000 * factor},"scaled":$kScaled%.3f,"ratio":${kScaled / kBase}%.1f}""")
+    scaling("graph_ktruss_converged", 100000, 100000L * factor) { n =>
+      val edges = starChords(spark, n)
+      timeNoop(spark, "graph_ktruss_converged")(GraphOps.kTrussConverged(edges, k = 3))
     }
 
     // TWO-LEVEL LOUVAIN: fixed rounds at both levels, contraction in
@@ -380,8 +257,8 @@ object Stress {
     // community-sized, so 10x edges must cost ~10x at worst. Base
     // graph: 4-cliques chained by single bridges (real community
     // structure at any scale — level 1 should find the cliques).
-    def timeLouvain(nCliques: Int): Double = {
-      val base = spark.range(nCliques.toLong)
+    scaling("graph_louvain", 15000, 15000L * factor) { nCliques =>
+      val base = spark.range(nCliques)
       val intra = Seq((0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3))
         .map { case (i, j) =>
           base.selectExpr(s"id * 4 + $i as src", s"id * 4 + $j as dst")
@@ -389,221 +266,116 @@ object Stress {
       val chain = base.filter("id > 0")
         .selectExpr("(id - 1) * 4 as src", "id * 4 as dst")
       val edges = intra.union(chain)
-      val t0 = System.nanoTime()
-      val scope = graft.ops.CacheScope.sessionOwned
-      val l1 = graft.ops.GraphOps.louvain(edges)(scope)
-      val coarse = graft.ops.GraphOps.louvainContract(edges, l1)(scope)
-      graft.ops.GraphOps.louvain(coarse, weightCol = Some("w"))(scope)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
+      timeNoop(spark, "graph_louvain") {
+        val l1 = GraphOps.louvain(edges)
+        val coarse = GraphOps.louvainContract(edges, l1)
+        GraphOps.louvain(coarse, weightCol = Some("w"))
+      }
     }
-    if (only.isEmpty || only("graph_louvain")) {
-      timeLouvain(15000) // warm-up
-      val lBase = timeLouvain(15000)
-      val lScaled = timeLouvain(15000 * factor)
-      println(f"""{"stress":"graph_louvain","base_cliques":15000,"base":$lBase%.3f,"scaled_cliques":${15000 * factor},"scaled":$lScaled%.3f,"ratio":${lScaled / lBase}%.1f}""")
-    }
-    // SKEW-MITIGATED JOIN under a manufactured hot key: half the fact
-    // rows land on ONE key (the shape q92 exists to warn about), the
-    // dim is key-spaced. saltedJoinProfiled spreads the hot key over
-    // the salt buckets, so per-reducer work is bounded by
-    // ~max_freq/buckets and the measured ratio at factor× rows should
-    // track the row ratio — a single-hot-reducer join would pin one
-    // task at factor× the work and the wall clock with it.
-    def timeSkewJoin(nRows: Int): Double = {
-      val nKeys = 10000L
-      val fact = spark.range(nRows.toLong)
-        .selectExpr(s"CASE WHEN id % 2 = 0 THEN 7 ELSE 1 + (id * 2654435761) % $nKeys END as k",
-          "id as v")
-      val dim = spark.range(nKeys + 1)
-        .selectExpr("id as k", "id * 31 as d")
-      val t0 = System.nanoTime()
-      graft.ops.SkewTools.saltedJoinProfiled(fact, dim, "k", buckets = 32)(
-          graft.ops.CacheScope.sessionOwned)
-        .groupBy("k").agg(sum("v").as("sv"), sum("d").as("sd"))
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      dt
-    }
+
     // HYPERBALL: the neighborhood function's edge-linear claim — per
     // hop ONE edge-sized join + ONE node-keyed register-max merge, so
     // 10x edges must cost ~10x even though the EXACT pair closure it
     // replaces would grow with sum-of-ball-sizes (superlinear on the
-    // hub-free chord graph, quadratic under a hub). Same chord
-    // generator as graph_betweenness.
-    def timeHyperBall(nEdges: Int): Double = {
-      val nodes = nEdges / 2L
-      val chords = spark.range(nEdges.toLong)
-        .selectExpr(s"1 + (id * 6364136223) % $nodes as a",
-          s"1 + (id * 2654435761) % $nodes as b")
-        .selectExpr("least(a, b) as src", "greatest(a, b) as dst")
-        .filter("src < dst").distinct()
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.hyperBall(chords, maxH = 3, lgK = 7)(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
+    // hub-free chord graph, quadratic under a hub).
+    scaling("graph_hyperball", 100000, 100000L * factor) { n =>
+      val edges = chords(spark, n)
+      timeNoop(spark, "graph_hyperball")(GraphOps.hyperBall(edges, maxH = 3, lgK = 7))
     }
-    if (only.isEmpty || only("graph_hyperball")) {
-      timeHyperBall(100000) // warm-up
-      val hBase = timeHyperBall(100000)
-      val hScaled = timeHyperBall(100000 * factor)
-      println(f"""{"stress":"graph_hyperball","base_edges":100000,"base":$hBase%.3f,"scaled_edges":${100000 * factor},"scaled":$hScaled%.3f,"ratio":${hScaled / hBase}%.1f}""")
-    }
+
     // K-TRUSS: the same E^1.5 degree-orientation bound as
     // graph_triangles, paid once per peel round — at fixed rounds the
     // 10x-edge ratio must track the triangle-enumeration ratio, never
-    // edge². Star + chords (the hub emits no wedges under orientation).
-    def timeKTruss(nEdges: Int): Double = {
-      val nodes = nEdges / 2L
-      val spokes = spark.range(1, nodes / 5)
-        .selectExpr("cast(0 as bigint) as src", "id as dst")
-      val chords = spark.range(nEdges.toLong)
-        .selectExpr(s"1 + (id * 6364136223) % $nodes as a",
-          s"1 + (id * 2654435761) % $nodes as b")
-        .selectExpr("least(a, b) as src", "greatest(a, b) as dst")
-        .filter("src < dst").distinct()
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.kTruss(spokes.union(chords).distinct(), k = 3, rounds = 2)(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
+    // edge².
+    scaling("graph_ktruss", 100000, 100000L * factor) { n =>
+      val edges = starChords(spark, n)
+      timeNoop(spark, "graph_ktruss")(GraphOps.kTruss(edges, k = 3, rounds = 2))
     }
-    if (only.isEmpty || only("graph_ktruss")) {
-      timeKTruss(100000) // warm-up
-      val ktBase = timeKTruss(100000)
-      val ktScaled = timeKTruss(100000 * factor)
-      println(f"""{"stress":"graph_ktruss","base_edges":100000,"base":$ktBase%.3f,"scaled_edges":${100000 * factor},"scaled":$ktScaled%.3f,"ratio":${ktScaled / ktBase}%.1f}""")
-    }
+
     // BFS DEPTH: seededBfs (the betweenness/harmonic forward pass)
     // probes a CARRIED visited checkpoint — one leaf per round — so
-    // doubling the exploration depth should ~double the time (the
-    // pre-round-11 shape unioned all h prior level leaves per round,
-    // a quadratic-in-depth ladder that would read ratio ~3.7 here).
-    // Ring graph: the frontier stays seed-bounded at every depth, so
-    // the measurement isolates the per-round machinery rather than
-    // frontier growth.
-    def timeBfsDepth(depth: Int): Double = {
+    // doubling the exploration depth should ~double the time (a
+    // shape that unioned all h prior level leaves per round would
+    // read ratio ~3.7 here). Ring graph: the frontier stays
+    // seed-bounded at every depth, so the measurement isolates the
+    // per-round machinery rather than frontier growth.
+    scaling("graph_bfs_depth", 5, 10) { depth =>
       val n = 100000L
-      val ring = spark.range(n).selectExpr(
-          s"id as a", s"(id + 1) % $n as b")
+      val ring = spark.range(n).selectExpr("id as a", s"(id + 1) % $n as b")
         .selectExpr("stack(2, a, b, b, a) as (src, dst)")
       val seeds = spark.range(256).selectExpr(s"(id * 390625) % $n as node")
-      val t0 = System.nanoTime()
-      graft.ops.GraphOps.harmonicCentrality(ring, seeds, maxHops = depth)(
-        graft.ops.CacheScope.sessionOwned)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
+      timeNoop(spark, "graph_bfs_depth")(GraphOps.harmonicCentrality(ring, seeds, maxHops = depth.toInt))
     }
-    if (only.isEmpty || only("graph_bfs_depth")) {
-      timeBfsDepth(5) // warm-up
-      val bBase = timeBfsDepth(5)
-      val bDeep = timeBfsDepth(10)
-      println(f"""{"stress":"graph_bfs_depth","base_depth":5,"base":$bBase%.3f,"scaled_depth":10,"scaled":$bDeep%.3f,"ratio":${bDeep / bBase}%.1f}""")
+
+    // SKEW-MITIGATED JOIN under a manufactured hot key: half the fact
+    // rows land on ONE key, the dim is key-spaced. saltedJoinProfiled
+    // spreads the hot key over the salt buckets, so per-reducer work is
+    // bounded by ~max_freq/buckets and the ratio at factor× rows should
+    // track the row ratio — a single-hot-reducer join would pin one
+    // task at factor× the work and the wall clock with it.
+    scaling("skew_join", 1000000, 1000000L * factor) { n =>
+      val (fact, dim) = hotKeyJoin(spark, n, "k")
+      timeNoop(spark, "skew_join")(graft.ops.SkewTools.saltedJoinProfiled(fact, dim, "k", buckets = 32)
+        .groupBy("k").agg(sum("v").as("sv"), sum("d").as("sd")))
     }
-    if (only.isEmpty || only("skew_join")) {
-      timeSkewJoin(1000000) // warm-up
-      val kBase = timeSkewJoin(1000000)
-      val kScaled = timeSkewJoin(1000000 * factor)
-      println(f"""{"stress":"skew_join","base_rows":1000000,"base":$kBase%.3f,"scaled_rows":${1000000 * factor},"scaled":$kScaled%.3f,"ratio":${kScaled / kBase}%.1f}""")
-    }
+
     // AUTO-SKEW RULE: the same 50%-hot workload as skew_join, but the
-    // query text is the PLAIN cross-name join (l_suppkey = s_suppkey
-    // spelling) and the optimizer rule does the salting — the ratio
-    // must track skew_join's (same rewritten physical shape; the rule
-    // adds only optimization-time work, never a per-row cost).
-    def timeAutoSkewRule(nRows: Int): Double = {
-      val nKeys = 10000L
-      val fact = spark.range(nRows.toLong)
-        .selectExpr(s"CASE WHEN id % 2 = 0 THEN 7 ELSE 1 + (id * 2654435761) % $nKeys END as k",
-          "id as v")
-      val dim = spark.range(nKeys + 1)
-        .selectExpr("id as k2", "id * 31 as d")
+    // query text is the PLAIN cross-name join and the optimizer rule
+    // does the salting — the ratio must track skew_join's (same
+    // rewritten physical shape; the rule adds only optimization-time
+    // work, never a per-row cost).
+    scaling("auto_skew_rule", 1000000, 1000000L * factor) { n =>
+      val (fact, dim) = hotKeyJoin(spark, n, "k2")
       spark.conf.set(graft.plans.AutoSkew.EnabledKey, "true")
       graft.plans.AutoSkew.register(spark, "k", Seq(7L), buckets = 32)
-      val t0 = System.nanoTime()
-      try fact.join(dim, col("k") === col("k2"))
-        .groupBy("k").agg(sum("v").as("sv"), sum("d").as("sd"))
-        .write.format("noop").mode("overwrite").save()
+      try timeNoop(spark, "auto_skew_rule")(fact.join(dim, col("k") === col("k2"))
+        .groupBy("k").agg(sum("v").as("sv"), sum("d").as("sd")))
       finally {
         spark.conf.unset(graft.plans.AutoSkew.EnabledKey)
         graft.plans.AutoSkew.unregister(spark, "k")
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      dt
     }
-    if (only.isEmpty || only("auto_skew_rule")) {
-      timeAutoSkewRule(1000000) // warm-up
-      val aBase = timeAutoSkewRule(1000000)
-      val aScaled = timeAutoSkewRule(1000000 * factor)
-      println(f"""{"stress":"auto_skew_rule","base_rows":1000000,"base":$aBase%.3f,"scaled_rows":${1000000 * factor},"scaled":$aScaled%.3f,"ratio":${aScaled / aBase}%.1f}""")
-    }
+
     // MV CONSOLIDATION: the q110 compaction — a counted view that
     // accumulated N signed delta rows between compactions consolidates
     // with ONE view-keyed shuffle, so 10x accumulated rows must cost
     // ~linear (the amortization claim: maintenance writes stay
     // batch-sized because this periodic pass is cheap and linear).
-    def timeConsolidate(nRows: Int): Double = {
-      val keys = math.max(1L, nRows / 20L)
-      val v = spark.range(nRows.toLong).selectExpr(
-        s"id % $keys as k", "id % 7 as a",
+    scaling("mv_consolidate", 1000000, 1000000L * factor) { n =>
+      val v = spark.range(n).selectExpr(
+        s"id % ${math.max(1L, n / 20L)} as k", "id % 7 as a",
         "CASE WHEN id % 3 = 0 THEN CAST(-1 AS BIGINT) ELSE CAST(1 AS BIGINT) END as _mult")
-      val t0 = System.nanoTime()
-      graft.ops.TableOps.consolidate(v, Seq("k", "a"))
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      dt
+      timeNoop(spark, "mv_consolidate")(graft.ops.TableOps.consolidate(v, Seq("k", "a")))
     }
-    if (only.isEmpty || only("mv_consolidate")) {
-      timeConsolidate(1000000) // warm-up
-      val cBase = timeConsolidate(1000000)
-      val cScaled = timeConsolidate(1000000 * factor)
-      println(f"""{"stress":"mv_consolidate","base_rows":1000000,"base":$cBase%.3f,"scaled_rows":${1000000 * factor},"scaled":$cScaled%.3f,"ratio":${cScaled / cBase}%.1f}""")
-    }
+
     // ANN INDEX vs TRAVERSAL split: l3_knn_graph is the n^1.5 IVF
     // index build alone; l3_ann_graph_search adds symmetrization +
     // the fixed-beam traversal. At 10x vectors the index ratio is the
     // n^1.5 story; the BEYOND-INDEX delta (search minus build) must
     // grow far slower — the traversal is beam x degree rows per query,
     // query-count-bounded, plus a graph-linear symmetrize.
-    if (only.isEmpty || only("ann_index_vs_traverse")) {
-      def tq(name: String, dir: String) = BenchSession.timeQuery(spark, name, dir)
-      tq("l3_knn_graph", sfDir); tq("l3_ann_graph_search", sfDir) // warm-up
-      val ib = tq("l3_knn_graph", sfDir)
-      val is = tq("l3_knn_graph", scaledDir)
-      val gb = tq("l3_ann_graph_search", sfDir)
-      val gs = tq("l3_ann_graph_search", scaledDir)
+    if (selected("ann_index_vs_traverse")) {
+      timeQuery(spark, "l3_knn_graph", sfDir); timeQuery(spark, "l3_ann_graph_search", sfDir) // warm-up
+      val ib = timeQuery(spark, "l3_knn_graph", sfDir)
+      val is = timeQuery(spark, "l3_knn_graph", scaledDir)
+      val gb = timeQuery(spark, "l3_ann_graph_search", sfDir)
+      val gs = timeQuery(spark, "l3_ann_graph_search", scaledDir)
       val tb = math.max(0.001, gb - ib)
       val ts = math.max(0.001, gs - is)
-      println(f"""{"stress":"ann_index_vs_traverse","index_base":$ib%.3f,"index_scaled":$is%.3f,"index_ratio":${is / ib}%.1f,"beyond_index_base":$tb%.3f,"beyond_index_scaled":$ts%.3f,"beyond_index_ratio":${ts / tb}%.1f}""")
+      println(f"""{"name":"ann_index_vs_traverse","index_base":$ib%.3f,"index_scaled":$is%.3f,"index_ratio":${is / ib}%.2f,"beyond_index_base":$tb%.3f,"beyond_index_scaled":$ts%.3f,"beyond_index_ratio":${ts / tb}%.2f}""")
     }
-    // FROZEN-QUANTIZER ingest (round 17): the below-gate arm of
+
+    // FROZEN-QUANTIZER ingest: the below-gate arm of
     // retrainIfDriftedStored against PERSISTED state + index, with a
     // FIXED-size batch on both corpora. The train/state build is paid
-    // once (untimed, like the lifecycle's v0); the timed step is what
-    // every steady-state ingest commit costs — batch·nlist assignment,
-    // batch·m·k encoding, and one narrow d2c-column aggregate over the
-    // stored index. Expected ~flat at 10× corpus (the aggregate is the
-    // only corpus-row-sized term, and it reads one stored column);
-    // contrast with l3_ann_incremental above, whose self-contained
-    // spelling re-trains the codebook over the full corpus per call.
-    if (only.isEmpty || only("ann_retrain_frozen")) {
-      implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.sessionOwned
+    // once (untimed); the timed step is what every steady-state ingest
+    // commit costs — batch·nlist assignment, batch·m·k encoding, and
+    // one narrow d2c-column aggregate over the stored index. Expected
+    // ~flat at 10× corpus (the aggregate is the only corpus-row-sized
+    // term, and it reads one stored column); contrast with
+    // l3_ann_incremental, whose self-contained spelling re-trains the
+    // codebook over the full corpus per call.
+    if (selected("ann_retrain_frozen")) {
       val batch = Tables(spark, sfDir, "embeddings")
         .filter(col("vec_id") < 200).select("vec_id", "embedding")
         .withColumn("vec_id", col("vec_id") + 900000000L)
@@ -611,37 +383,74 @@ object Stress {
         val corpus = Tables(spark, dir, "embeddings").select("vec_id", "embedding")
         val root = java.nio.file.Files
           .createTempDirectory(s"graft-frozen-$tag").toString
-        val st = graft.ops.CorpusOps.trainQuantizer(corpus)
+        val st = CorpusOps.trainQuantizer(corpus)
         st.cents.write.parquet(s"$root/quant_cents")
         st.codebook.write.parquet(s"$root/quant_cb")
-        graft.ops.CorpusOps.ivfpqEncodeAll(st, corpus)
+        CorpusOps.ivfpqEncodeAll(st, corpus)
           .write.parquet(s"$root/index")
         spark.sharedState.cacheManager.clearCache()
         root
       }
-      def timeFrozen(root: String, dir: String): Double = {
-        val t0 = System.nanoTime()
-        val st = graft.ops.CorpusOps.QuantizerState(
+      def timeFrozen(root: String, dir: String): Double = timeNoop(spark, "ann_retrain_frozen") {
+        val st = CorpusOps.QuantizerState(
           spark.read.parquet(s"$root/quant_cents"),
           spark.read.parquet(s"$root/quant_cb"))
-        val (idx, trig, _) = graft.ops.CorpusOps.retrainIfDriftedStored(
+        val (idx, trig, _) = CorpusOps.retrainIfDriftedStored(
           st, spark.read.parquet(s"$root/index"),
           Tables(spark, dir, "embeddings").select("vec_id", "embedding"),
           batch, driftThreshold = 100.0)
         require(!trig, "stress batch must take the frozen path")
-        idx.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.sharedState.cacheManager.clearCache()
-        dt
+        idx
       }
       val rBase = prep(sfDir, "base")
       val rScaled = prep(scaledDir, "scaled")
       timeFrozen(rBase, sfDir) // warm-up
-      val fb = timeFrozen(rBase, sfDir)
-      val fs = timeFrozen(rScaled, scaledDir)
-      println(f"""{"stress":"ann_retrain_frozen","base":$fb%.3f,"scaled":$fs%.3f,"ratio":${fs / fb}%.1f}""")
+      report("ann_retrain_frozen", timeFrozen(rBase, sfDir), timeFrozen(rScaled, scaledDir))
     }
     spark.stop()
+  }
+
+  /** Hash-chord edges over `nEdges / 2` nodes, deduplicated and
+    * oriented src < dst — hub-free. */
+  private def chords(spark: SparkSession, nEdges: Long): DataFrame = {
+    val nodes = nEdges / 2
+    spark.range(nEdges)
+      .selectExpr(s"1 + (id * 6364136223) % $nodes as a",
+        s"1 + (id * 2654435761) % $nodes as b")
+      .selectExpr("least(a, b) as src", "greatest(a, b) as dst")
+      .filter("src < dst").distinct()
+  }
+
+  /** `chords` plus a star: one hub (node 0) wired to nEdges/10 spokes —
+    * a naive wedge join would emit (nEdges/10)² hub wedges. */
+  private def starChords(spark: SparkSession, nEdges: Long): DataFrame = {
+    val spokes = spark.range(1, nEdges / 10)
+      .selectExpr("cast(0 as bigint) as src", "id as dst")
+    spokes.union(chords(spark, nEdges)).distinct()
+  }
+
+  /** Disjoint directed 4-cycles (guaranteed SCC structure at any
+    * scale) plus one-way hash chords for edge mass. */
+  private def cyclesChords(spark: SparkSession, nCycles: Long): DataFrame = {
+    val n = 4L * nCycles
+    val cycles = spark.range(n)
+      .selectExpr("id as src", "(id div 4) * 4 + (id + 1) % 4 as dst")
+    val extra = spark.range(nCycles)
+      .selectExpr(s"(id * 6364136223) % $n as src",
+        s"(id * 2654435761) % $n as dst")
+      .filter("src <> dst")
+    cycles.union(extra).distinct()
+  }
+
+  /** Fact rows (k, v) with HALF of them on key 7, and a key-spaced dim
+    * (`dimKey`, d) over 10 000 keys. */
+  private def hotKeyJoin(spark: SparkSession, nRows: Long, dimKey: String): (DataFrame, DataFrame) = {
+    val nKeys = 10000L
+    val fact = spark.range(nRows)
+      .selectExpr(s"CASE WHEN id % 2 = 0 THEN 7 ELSE 1 + (id * 2654435761) % $nKeys END as k",
+        "id as v")
+    val dim = spark.range(nKeys + 1).selectExpr(s"id as $dimKey", "id * 31 as d")
+    (fact, dim)
   }
 
   /** 32 deterministic seed directions; 80% of the remaining vectors on
@@ -662,9 +471,16 @@ object Stress {
     (seeds ++ rest).toDF("vec_id", "embedding")
   }
 
-  private[graft] def buildScaled(spark: SparkSession, sfDir: String, outDir: String, factor: Int): Unit = {
-    val docs = Tables(spark, sfDir, "documents")
-    val maxDoc = 10000000L
+  /** Write the `factor`× corpus into `outDir`: documents + embeddings
+    * (distinct ids, copy-specific word pad) and lineitem + orders
+    * (join-consistent key shifts). Non-key columns replicate verbatim. */
+  private def buildScaled(spark: SparkSession, sfDir: String, outDir: String, factor: Int): Unit = {
+    val off = 10000000L
+    def replicate(table: String)(copy: (DataFrame, Int) => DataFrame): Unit = {
+      val t = Tables(spark, sfDir, table)
+      (0 until factor).map(copy(t, _)).reduce(_ union _)
+        .write.mode("overwrite").parquet(s"$outDir/$table.parquet")
+    }
     // 40 pad words: a copy of an n-word doc shares n-2 shingles and
     // adds ~40, so J = (n-2)/(n+38) < 0.8 needs n < 162 — true for the
     // whole fixture (max 100 tokens). A 20-word pad would leave docs
@@ -673,18 +489,32 @@ object Stress {
     val pad = (i: Int) =>
       (('a' to 't').map(c => s"$c$i") ++ ('a' to 't').map(c => s"$c${i + 1000}"))
         .mkString(" ") + " "
-    (0 until factor).map { i =>
+    replicate("documents") { (docs, i) =>
       docs.select(
-        (col("doc_id") + i * maxDoc).as("doc_id"),
+        (col("doc_id") + i * off).as("doc_id"),
         concat(lit(if (i == 0) "" else pad(i)), col("text")).as("text"),
         col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-
-    val emb = Tables(spark, sfDir, "embeddings")
-    (0 until factor).map { i =>
-      emb.select((col("vec_id") + i * maxDoc).as("vec_id"), col("embedding"), col("label"))
-    }.reduce(_ union _)
-      .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
+    }
+    replicate("embeddings") { (emb, i) =>
+      emb.select((col("vec_id") + i * off).as("vec_id"), col("embedding"), col("label"))
+    }
+    // orderkey/partkey/suppkey/custkey all move together, so the
+    // co-purchase and customer–supplier graphs stay join-consistent
+    replicate("lineitem") { (li, i) =>
+      li.select(
+        (col("l_orderkey") + i * off).as("l_orderkey"),
+        (col("l_partkey") + i * off).as("l_partkey"),
+        (col("l_suppkey") + i * off).as("l_suppkey"),
+        col("l_linenumber"), col("l_quantity"), col("l_extendedprice"),
+        col("l_discount"), col("l_tax"), col("l_returnflag"),
+        col("l_linestatus"), col("l_shipdate"))
+    }
+    replicate("orders") { (ord, i) =>
+      ord.select(
+        (col("o_orderkey") + i * off).as("o_orderkey"),
+        (col("o_custkey") + i * off).as("o_custkey"),
+        col("o_orderstatus"), col("o_totalprice"),
+        col("o_orderdate"), col("o_orderpriority"))
+    }
   }
 }

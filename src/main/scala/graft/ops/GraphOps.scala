@@ -50,14 +50,6 @@ object GraphOps {
 
   private val viewSeq = new java.util.concurrent.atomic.AtomicLong
 
-  /** TEMPORARY round-18 measurement flags — read from the CALLER's
-    * session at plan-construction time so ConfAb can A/B a code shape
-    * inside one JVM (paired arms, host noise hits both arms equally).
-    * Winners get hard-coded and the flag reads deleted before the
-    * round closes. */
-  private[graft] def optFlag(s: SparkSession, key: String): Boolean =
-    s.conf.get(s"spark.graft.opt.$key", "false").toBoolean
-
   /** Lineage-cut `df` in the caller's session and re-root it in `rs`
     * as an RDD leaf. The crossing is a GLOBAL temp view (shared
     * catalog): `rs.table` resolves it to the checkpoint's InternalRow

@@ -2860,7 +2860,7 @@ object Relational {
   // single-column pruned parquet scans read the same bytes as one
   // three-column scan, and the fused-explode alternative (tried in
   // round 10) tripled the pre-aggregation row stream for a measured
-  // 2× slowdown while saving zero bytes (Q92Probe, docs/PERF.md).
+  // 2× slowdown while saving zero bytes (docs/PERF.md).
   // This is the query that runs BEFORE a 100 TB shuffle; the round-9
   // shape cost 6 fact passes (freq recomputed per consumer), this
   // costs 3 with nothing cached.

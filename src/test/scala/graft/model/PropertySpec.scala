@@ -35,6 +35,15 @@ class PropertySpec extends AnyFunSuite {
     }, "checkpoint roundtrip")
   }
 
+  test("Bench conf_overrides stamp parses back to the same map (escaped keys and values)") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    check(Prop.forAll(Gen.mapOf(Gen.zip(nastyString, nastyString))) { m =>
+      val parsed = mapper.readValue(graft.Bench.confJson(m.toSeq),
+        classOf[java.util.Map[String, String]])
+      scala.jdk.CollectionConverters.MapHasAsScala(parsed).asScala.toMap == m
+    }, "conf_overrides JSON roundtrip")
+  }
+
   test("cursor ordering is a total order; inclusive sorts before exclusive") {
     val seqNum = Gen.listOfN(12, Gen.numChar).map(_.mkString)
     val cur = for {
