@@ -194,4 +194,12 @@ object VectorExprs {
     ColumnBridge.column(VecNorm(ColumnBridge.expression(a)))
   def vec_l2sq(a: Column, b: Column): Column =
     ColumnBridge.column(VecL2Sq(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** Cosine similarity, the one spelling every embedding query ranks
+    * on: a plain composition of [[vec_dot]] and [[vec_norm]] (no new
+    * expression), so it carries their fold order and null rules: a
+    * null input gives null, and a zero vector divides by zero (an
+    * error under ANSI mode, null without it). */
+  def vec_cos(a: Column, b: Column): Column =
+    vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorExprs.vec_cos
 import graft.queries.QueryDef.sha60
 
 /** The training-data pipeline operators as reusable
@@ -956,8 +957,8 @@ object CorpusOps {
 
   /** Smallest b with 2^b >= m (0 for m <= 1) — integer-only so banding
     * and cluster-count derivations can never round differently between
-    * engines (same rationale as the Llm copy). */
-  private def ceilLog2(m: Long): Int = {
+    * engines. */
+  private[graft] def ceilLog2(m: Long): Int = {
     var b = 0
     while ((1L << b) < m && b < 62) b += 1
     b
@@ -970,7 +971,7 @@ object CorpusOps {
 
   /** Deterministic hyperplane component — the same public LCG-style
     * arithmetic the embedding-LSH family uses, so oracles replay it. */
-  private def subPlaneVal(p: Int, d: Int): Double =
+  private[graft] def subPlaneVal(p: Int, d: Int): Double =
     (((p * 64 + d) * 2654435761L + 1013904223L) % 2147483647L).toDouble / 2147483647.0 * 2 - 1
 
   private def subPlaneLit(p: Int): Column =
@@ -1087,13 +1088,11 @@ object CorpusOps {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
-    import graft.functions.VectorExprs.{vec_dot, vec_norm}
-    def cos(a: Column, b: Column) = vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
     val w = Window.partitionBy("a").orderBy(col("_simr").desc, col("b").asc)
     adj.join(vecs.select(col(idCol).as("a"), col(vecCol).as("_ea")), "a")
       .join(vecs.select(col(idCol).as("b"), col(vecCol).as("_eb")), "b")
       .select(col("a"), col("b"),
-        round(cos(col("_ea"), col("_eb")), 6).as("_simr"))
+        round(vec_cos(col("_ea"), col("_eb")), 6).as("_simr"))
       .withColumn("_rn", row_number().over(w)).filter(col("_rn") <= k)
       .select("a", "b")
   }
@@ -1133,13 +1132,11 @@ object CorpusOps {
   def semDedup(vecs: DataFrame, k: Int = 0, tau: Double = 0.35,
                maxCluster: Int = 256)
               (implicit scope: CacheScope): DataFrame = {
-    import graft.functions.VectorExprs.{vec_dot, vec_norm}
-    def cos(a: Column, b: Column) = vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
     val assignB = semDedupAssignments(vecs, k, maxCluster)
     val dropped = assignB.as("a").join(assignB.as("b"),
         col("a.cid") === col("b.cid") && col("a.sub") === col("b.sub") &&
         col("a.vid") < col("b.vid"))
-      .withColumn("simr", round(cos(col("a.ve"), col("b.ve")), 6))
+      .withColumn("simr", round(vec_cos(col("a.ve"), col("b.ve")), 6))
       .filter(col("simr") >= tau)
       .groupBy(col("b.vid").as("vid"))
       .agg(min(col("a.vid")).as("dup_of"))
@@ -1158,14 +1155,12 @@ object CorpusOps {
     val kk =
       if (k > 0) k
       else math.max(32, 1L << ceilLog2((vecs.count() + 63) / 64)).toInt
-    import graft.functions.VectorExprs.{vec_dot, vec_norm}
-    def cos(a: Column, b: Column) = vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
     val cents = vecs.filter(col("vec_id") < kk)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
     val wAssign = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
     val assign = vecs.select(col("vec_id").as("vid"), col("embedding").as("ve"))
       .crossJoin(broadcast(cents))
-      .withColumn("simr", round(cos(col("ve"), col("ce")), 6))
+      .withColumn("simr", round(vec_cos(col("ve"), col("ce")), 6))
       .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
       .select(col("vid"), col("cid"), col("ve"))
     val sizes = assign.groupBy("cid").agg(count(lit(1)).as("csz"))
@@ -1810,11 +1805,11 @@ object CorpusOps {
     * whenever the filter bites inside the top-k, and filtering the
     * corpus before indexing would need an index per predicate.
     *
-    * Recall caveat (documented, AnnSpec pins the floor): with a
-    * selective filter the nprobe probed lists may hold fewer than k
-    * survivors — recall is measured against the FILTERED brute force,
-    * and a production deployment raises nprobe as selectivity grows
-    * (the FAISS guidance for selector searches).
+    * Recall caveat (documented; QueriesSpec's filtered-ANN recall test
+    * pins the floor): with a selective filter the nprobe probed lists
+    * may hold fewer than k survivors — recall is measured against the
+    * FILTERED brute force, and a production deployment raises nprobe
+    * as selectivity grows (the FAISS guidance for selector searches).
     *
     * Scale shape: `allowed` is a (vec_id) key set — it moves as a
     * semi-join build side, never the vectors; candidates stay
@@ -1875,18 +1870,117 @@ object CorpusOps {
     * Rank on round(cos,6) desc with vid tie-break — composes with any
     * candidate source that emits (qid, vid). */
   def refine(candidates: DataFrame, vecs: DataFrame, queries: DataFrame,
-             topK: Int = 10): DataFrame = {
-    import graft.functions.VectorExprs.{vec_dot, vec_norm}
-    val w = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-    candidates.select("qid", "vid").distinct()
+             topK: Int = 10): DataFrame =
+    topPerQuery(candidates.select("qid", "vid").distinct()
       .join(vecs.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
       .join(broadcast(queries.select(col("qid"), col("embedding").as("qe"))), "qid")
       .filter(col("vid") =!= col("qid"))
-      .withColumn("simr", round(
-        vec_dot(col("qe"), col("ve")) / (vec_norm(col("qe")) * vec_norm(col("ve"))), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
+      .withColumn("simr", round(vec_cos(col("qe"), col("ve")), 6)), topK)
+
+  // ---- the cosine-IVF kit: one spelling of the IVF-over-cosine steps
+  // the embedding family shares (l3_ann_ivf, l3_nprobe_sweep, the kNN
+  // graph build, l3_ann_delete, the cluster sample, the cascade bundle).
+  // Every rank is on round(cos, 6) with an id tie-break, so the DuckDB
+  // oracles — which spell the same steps independently — replay each
+  // one bit-for-bit. Vector tables are (id, vector) by POSITION: the
+  // first two columns, whatever their names. ----
+
+  /** The first two columns of `df` renamed to (`id`, `vec`). */
+  private def idVec(df: DataFrame, id: String, vec: String): DataFrame =
+    df.select(col(df.columns.head).as(id), col(df.columns(1)).as(vec))
+
+  /** The deterministic seed quantizer: the first max(32, ⌈√n⌉)
+    * vectors of `vecs` (vec_id, embedding) as centroids (cid,
+    * embedding). The list count scales with the corpus — a fixed
+    * count would make probe-list candidates quadratic — and is derived
+    * ACTION-FREE, as a broadcast 1-row aggregate the id filter joins
+    * against. */
+  private[graft] def sqrtSeedCents(vecs: DataFrame): DataFrame = {
+    val nlist = broadcast(vecs.agg(
+      greatest(lit(32L), ceil(sqrt(count(lit(1)))).cast("long")).as("nlist")))
+    vecs.crossJoin(nlist).filter(col("vec_id") < col("nlist"))
+      .select(col("vec_id").as("cid"), col("embedding"))
+  }
+
+  /** Each vector's top-`probeK` cells: (vid, cid, rn), ranked by
+    * round(cos(vector, centroid), 6) desc, cid asc — rn = 1 is the
+    * vector's assignment, rn <= probeK its probe list. One crossJoin
+    * against the broadcast centroid table (nlist rows); exactly
+    * min(probeK, nlist) rows per vector. */
+  private[graft] def cosineCells(vecs: DataFrame, cents: DataFrame,
+                                 probeK: Int): DataFrame = {
+    val w = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
+    idVec(vecs, "vid", "ve")
+      .crossJoin(broadcast(idVec(cents, "cid", "qe")))
+      .withColumn("simr", round(vec_cos(col("qe"), col("ve")), 6))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= probeK)
+      .select("vid", "cid", "rn")
+  }
+
+  /** Probe-list candidates scored exactly: every (qid, vid) where a
+    * cell in qid's probe list (`probes` (qid, cid)) holds vid
+    * (`assign` (vid, cid)), minus qid itself, with simr =
+    * round(cos, 6) over `vecs`. One row per pair as long as `probes`
+    * lists each cell once per qid and `assign` gives each vid one
+    * cell — the shapes [[cosineCells]] produces. */
+  private[graft] def cellScores(probes: DataFrame, assign: DataFrame,
+                                vecs: DataFrame): DataFrame =
+    probes.join(assign, "cid").filter(col("vid") =!= col("qid"))
+      .select("qid", "vid")
+      .join(idVec(vecs, "qid", "_qe"), "qid")
+      .join(idVec(vecs, "vid", "_ve"), "vid")
+      .select(col("qid"), col("vid"),
+        round(vec_cos(col("_qe"), col("_ve")), 6).as("simr"))
+
+  /** The top `k` of each qid's scored candidates: (qid, rn, vid,
+    * simr), ranked by simr desc, vid asc. */
+  private[graft] def topPerQuery(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
+    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
       .select("qid", "rn", "vid", "simr")
+  }
+
+  /** Build a top-`annK` index over `vecs` with the frozen quantizer
+    * `cents`: probe lists = each vector's top-`probeK` cells,
+    * assignments = its top cell, lists = the top `annK` of its
+    * probe-list candidates. Returns (index (qid, rn, vid, simr),
+    * probes (qid, cid), assign (vid, cid)); the cell table and the
+    * index are cached — later maintenance reads them more than once. */
+  private[graft] def annBuild(vecs: DataFrame, cents: DataFrame, annK: Int,
+                              probeK: Int)(implicit scope: CacheScope)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val cd = scope.cached(cosineCells(vecs, cents, probeK))
+    val assign = cd.filter(col("rn") === 1).select("vid", "cid")
+    val probes = cd.select(col("vid").as("qid"), col("cid"))
+    (scope.cached(topPerQuery(cellScores(probes, assign, vecs), annK)), probes, assign)
+  }
+
+  /** Delete vectors from a stored top-`annK` index with a frozen
+    * quantizer, exactly: deleted nodes' lists drop; AFFECTED
+    * survivors (whose stored list holds a deleted id) re-rank over
+    * their frozen probe lists joined to the SURVIVING assignments;
+    * every other list passes through untouched (it lost no member,
+    * and removing non-members cannot reorder it). `del` carries the
+    * deleted ids in its first column; `index` (qid, rn, vid, simr),
+    * `probes` (qid, cid), `assign` (vid, cid), `vecs` (id, vector).
+    * Returns (index, probes, assignments) after the delete, all
+    * uncached. Cost: one index-sized affected scan plus affected ×
+    * posting re-scoring — never a rebuild. */
+  private[graft] def annDeleteStep(del: DataFrame, index: DataFrame,
+                                   probes: DataFrame, assign: DataFrame,
+                                   vecs: DataFrame, annK: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val delQ = del.select(col(del.columns.head).as("qid"))
+    val delV = del.select(col(del.columns.head).as("vid"))
+    val affected = index.join(delV, Seq("vid"), "left_semi")
+      .select("qid").distinct()
+      .join(delQ, Seq("qid"), "left_anti")
+    val kept = index.join(delQ, Seq("qid"), "left_anti")
+      .join(affected, Seq("qid"), "left_anti")
+    val survAssign = assign.join(delV, Seq("vid"), "left_anti")
+    val rer = topPerQuery(cellScores(
+      probes.join(affected, Seq("qid"), "left_semi"), survAssign, vecs), annK)
+    (kept.unionByName(rer), probes.join(delQ, Seq("qid"), "left_anti"), survAssign)
   }
 
   /** Single-pass APPROXIMATE dataset profile — the 100 TB shape of
@@ -2152,34 +2246,13 @@ object CorpusOps {
   def buildArtifacts(docs: DataFrame, vectors: DataFrame, cents: DataFrame,
                      terms: Seq[String], annK: Int = 5, probeK: Int = 4)
                     (implicit scope: CacheScope): CorpusArtifacts = {
-    import graft.functions.VectorExprs.{vec_dot, vec_norm}
-    def cos(a: Column, b: Column) = vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
     val exactAux = docs.select(sha2(col("text"), 256).as("h"), col("doc_id"))
     val exactKeepers = exactAux.groupBy("h")
       .agg(min("doc_id").as("keeper"), count(lit(1)).as("n_dups"))
     val pairs = scope.cached(nearDupPairs(docs))
     val clusters = dupClusters(pairs)
-    def vid2(df: DataFrame, as: String, vas: String): DataFrame =
-      df.select(col(df.columns.head).as(as), col(df.columns(1)).as(vas))
-    val wA = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
-    val cd = scope.cached(vid2(vectors, "vid", "ve")
-      .crossJoin(broadcast(vid2(cents, "cid", "qe")))
-      .withColumn("simr", round(cos(col("qe"), col("ve")), 6))
-      .withColumn("rn", row_number().over(wA)).filter(col("rn") <= probeK)
-      .select("vid", "cid", "rn"))
-    val assign = cd.filter(col("rn") === 1).select("vid", "cid")
-    val probes = cd.select(col("vid").as("qid"), col("cid"))
-    val wR = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-    val vecs = vid2(vectors, "vec_id", "embedding")
-    val index = scope.cached(
-      probes.join(assign, "cid").filter(col("vid") =!= col("qid"))
-        .select("qid", "vid")
-        .join(vecs.select(col("vec_id").as("qid"), col("embedding").as("_qe")), "qid")
-        .join(vecs.select(col("vec_id").as("vid"), col("embedding").as("_ve")), "vid")
-        .select(col("qid"), col("vid"),
-          round(cos(col("_qe"), col("_ve")), 6).as("simr"))
-        .withColumn("rn", row_number().over(wR)).filter(col("rn") <= annK)
-        .select("qid", "rn", "vid", "simr"))
+    val vecs = idVec(vectors, "vec_id", "embedding")
+    val (index, probes, assign) = annBuild(vecs, cents, annK, probeK)
     val stats = bm25StatRows(docs, terms, 1)
       .groupBy("stat", "k").agg(sum("v").as("v"), count(lit(1)).as("cnt"))
     CorpusArtifacts(exactAux, exactKeepers, clusters, pairs, index,
@@ -2216,7 +2289,6 @@ object CorpusOps {
                       arts: CorpusArtifacts, terms: Seq[String],
                       annK: Int = 5)
                      (implicit scope: CacheScope): CascadeResult = {
-    import graft.functions.VectorExprs.{vec_dot, vec_norm}
     val del = scope.cached(
       delIds.select(col(delIds.columns.head).cast("long").as("doc_id")))
     // 1. exact-dup keepers — touched-group-bounded
@@ -2239,29 +2311,9 @@ object CorpusOps {
       .join(del.select(col("doc_id").as("d2")), Seq("d2"), "left_anti")
       .select(arts.pairs.columns.map(col).toIndexedSeq: _*)
     // 3. ANN index — affected-survivor-bounded re-rank
-    val delQ = del.select(col("doc_id").as("qid"))
-    val delV = del.select(col("doc_id").as("vid"))
-    val affected = arts.annIndex.join(delV, Seq("vid"), "left_semi")
-      .select("qid").distinct()
-      .join(delQ, Seq("qid"), "left_anti")
-    val kept = arts.annIndex.join(delQ, Seq("qid"), "left_anti")
-      .join(affected, Seq("qid"), "left_anti")
-    val survAssign = arts.annAssign.join(delV, Seq("vid"), "left_anti")
-    def cos(a: Column, b: Column) = vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
-    val wRank = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-    val rer = arts.annProbes.join(affected, Seq("qid"), "left_semi")
-      .join(survAssign, "cid").filter(col("vid") =!= col("qid"))
-      .select("qid", "vid")
-      .join(arts.vectors.select(col(arts.vectors.columns.head).as("qid"),
-        col(arts.vectors.columns(1)).as("_qe")), "qid")
-      .join(arts.vectors.select(col(arts.vectors.columns.head).as("vid"),
-        col(arts.vectors.columns(1)).as("_ve")), "vid")
-      .select(col("qid"), col("vid"),
-        round(cos(col("_qe"), col("_ve")), 6).as("simr"))
-      .withColumn("rn", row_number().over(wRank)).filter(col("rn") <= annK)
-      .select("qid", "rn", "vid", "simr")
-    val annAfter = scope.cached(kept.unionByName(rer))
-    val probesAfter = arts.annProbes.join(delQ, Seq("qid"), "left_anti")
+    val (annRepaired, probesAfter, survAssign) = annDeleteStep(del,
+      arts.annIndex, arts.annProbes, arts.annAssign, arts.vectors, annK)
+    val annAfter = scope.cached(annRepaired)
     val vidCol = arts.vectors.columns.head
     val vectorsAfter = arts.vectors.join(
       del.select(col("doc_id").as(vidCol)), Seq(vidCol), "left_anti")
@@ -2319,7 +2371,6 @@ object CorpusOps {
                       terms: Seq[String],
                       annK: Int = 5, probeK: Int = 4)
                      (implicit scope: CacheScope): CascadeResult = {
-    import graft.functions.VectorExprs.{vec_dot, vec_norm}
     val bdocs = scope.cached(batch.select(col("doc_id"), col("text")))
     // 1. exact-dup keepers — touched-group-bounded
     val batchAux = bdocs.select(sha2(col("text"), 256).as("h"), col("doc_id"))
@@ -2339,44 +2390,28 @@ object CorpusOps {
     val clustersAfter = scope.cached(incrementalClusters(arts.clusters, bp, xp))
     val pairsAfter = arts.pairs.unionByName(bp).unionByName(xp)
     // 3. ANN index — frozen-quantizer assignment + affected re-rank
-    def cos(a: Column, b: Column) = vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
-    def vid2(df: DataFrame, as: String, vas: String): DataFrame =
-      df.select(col(df.columns.head).as(as), col(df.columns(1)).as(vas))
-    val wA = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
-    val batchCd = scope.cached(vid2(batchVectors, "vid", "ve")
-      .crossJoin(broadcast(vid2(cents, "cid", "qe")))
-      .withColumn("simr", round(cos(col("qe"), col("ve")), 6))
-      .withColumn("rn", row_number().over(wA)).filter(col("rn") <= probeK)
-      .select("vid", "cid", "rn"))
+    val batchCd = scope.cached(cosineCells(batchVectors, cents, probeK))
     val batchAssign = batchCd.filter(col("rn") === 1).select("vid", "cid")
     val assignAll = arts.annAssign.unionByName(batchAssign)
-    val vecsAll = vid2(arts.vectors, "vec_id", "embedding")
-      .unionByName(vid2(batchVectors, "vec_id", "embedding"))
+    val vecsAll = idVec(arts.vectors, "vec_id", "embedding")
+      .unionByName(idVec(batchVectors, "vec_id", "embedding"))
     val affected = arts.annProbes
       .join(batchAssign.select("cid").distinct(), Seq("cid"), "left_semi")
       .select("qid").distinct()
     val kept = arts.annIndex.join(affected, Seq("qid"), "left_anti")
-    val wRank = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-    def lists(probes: DataFrame): DataFrame = probes
-      .join(assignAll, "cid").filter(col("vid") =!= col("qid"))
-      .select("qid", "vid")
-      .join(vecsAll.select(col("vec_id").as("qid"), col("embedding").as("_qe")), "qid")
-      .join(vecsAll.select(col("vec_id").as("vid"), col("embedding").as("_ve")), "vid")
-      .select(col("qid"), col("vid"),
-        round(cos(col("_qe"), col("_ve")), 6).as("simr"))
-      .withColumn("rn", row_number().over(wRank)).filter(col("rn") <= annK)
-      .select("qid", "rn", "vid", "simr")
     // ONE candidate-scoring pass for both the re-ranked stored nodes
     // and the fresh batch nodes: their qid sets are DISJOINT (batch
-    // ids are new by the nearDupPairsAgainst contract), so
-    // lists(affected ∪ batch) ≡ lists(affected) ∪ lists(batch)
+    // ids are new by the nearDupPairsAgainst contract), so the top-k
+    // of (affected ∪ batch) ≡ top-k(affected) ∪ top-k(batch)
     // row-for-row while sharing one join+window pipeline instead of
     // two (guide §2.4; paired A/B: 0.83 min-ratio on
     // l6_cascade_insert_apply, neutral on the build-dominated
-    // l6_cascade_insert — round-18 ledger).
-    val annAfter = scope.cached(kept.unionByName(lists(
+    // l6_cascade_insert — round-18 ledger). CorpusOpsSpec executes
+    // the equivalence on the cascade fixture.
+    val annAfter = scope.cached(kept.unionByName(topPerQuery(cellScores(
       arts.annProbes.join(affected, Seq("qid"), "left_semi")
-        .unionByName(batchCd.select(col("vid").as("qid"), col("cid"))))))
+        .unionByName(batchCd.select(col("vid").as("qid"), col("cid"))),
+      assignAll, vecsAll), annK)))
     val probesAfter = arts.annProbes.unionByName(
       batchCd.select(col("vid").as("qid"), col("cid")))
     // 4. BM25 stats — the batch's +1 rows

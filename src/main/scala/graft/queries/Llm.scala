@@ -5,6 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.VectorExprs.vec_cos
+import graft.ops.CorpusOps.{ceilLog2, cellScores, cosineCells, sqrtSeedCents,
+  subPlaneVal, topPerQuery}
 import QueryDef.sha60
 
 /** LLM-data-pipeline operators over `documents` / `embeddings`
@@ -38,16 +41,6 @@ object Llm {
     * of an unreleasable corpus-sized cache. */
   private def cached(df: DataFrame)(implicit scope: graft.ops.CacheScope): DataFrame =
     scope.cached(df)
-
-  /** Smallest b with 2^b >= m (0 for m <= 1). Integer-only on purpose:
-    * the banding widths below derive from it on BOTH engines, and a
-    * float log2 landing exactly on a power-of-two boundary could round
-    * differently between engines and change the banding structure. */
-  private def ceilLog2(m: Long): Int = {
-    var b = 0
-    while ((1L << b) < m && b < 62) b += 1
-    b
-  }
 
   // (word n-grams are produced by the native kernel
   // graft.functions.ShingleExprs.shingle_sha60(text, n) — 3-gram
@@ -487,16 +480,10 @@ object Llm {
   // broadcast; the scan side never shuffles (per-partition dot products,
   // then a global top-k). Ranking happens on round(sim, 6) in BOTH
   // engines so float summation order can't reorder ranks.
-  // Cosine kernel: native codegen'd expressions (graft.functions
-  // VecDot/VecNorm) with the same sequential float→double fold the
-  // DuckDB oracle computes — numerically identical to the former
-  // `aggregate(zip_with(...))` HOF spelling, but inside whole-stage
-  // codegen with a primitive loop (the HOF is an interpreted per-row
-  // closure).
-  private def cosSim(qe: Column, ve: Column): Column = {
-    import graft.functions.VectorExprs.{vec_dot, vec_norm}
-    vec_dot(qe, ve) / (vec_norm(qe) * vec_norm(ve))
-  }
+  // Cosine kernel: VectorExprs.vec_cos, over the native codegen'd
+  // VecDot/VecNorm with the same sequential float→double fold the
+  // DuckDB oracle computes. The IVF steps (cell assignment, probe-list
+  // scoring, top-k) come from the CorpusOps cosine-IVF kit.
 
   private val l3 = QueryDef(
     "l3_knn_bruteforce",
@@ -505,13 +492,9 @@ object Llm {
       val q = e.filter(col("vec_id").isin(0, 1, 2))
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val c = e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
-      val sims = c.join(broadcast(q), col("vid") =!= col("qid"))
-        .withColumn("sim", cosSim(col("qe"), col("ve")))
-        .select(col("qid"), col("vid"), round(col("sim"), 6).as("simr"))
-      val w = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-      sims.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 10)
-        .select("qid", "rn", "vid", "simr")
+      topPerQuery(c.join(broadcast(q), col("vid") =!= col("qid"))
+          .select(col("qid"), col("vid"),
+            round(vec_cos(col("qe"), col("ve")), 6).as("simr")), 10)
         .orderBy("qid", "rn")
     },
     Some("""WITH q AS (SELECT vec_id AS qid, unnest(embedding) AS qx,
@@ -551,16 +534,13 @@ object Llm {
     "l3_ann_lsh",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      // component of hyperplane p at dim d, in [-1, 1), deterministic
-      def planeVal(p: Int, d: Int): Double =
-        (((p * 64 + d) * 2654435761L + 1013904223L) % 2147483647L).toDouble / 2147483647.0 * 2 - 1
       // each plane dot is ONE native vec_dot against a literal plane
       // vector — the former spelling (64 element_at multiplies per
       // bit x 48 bits) built a ~3000-node expression tree whose
       // generated code dominated runtime (27s -> ~1s at sf0.1)
       def planeDot(p: Int): Column = {
         import graft.functions.VectorExprs.vec_dot
-        vec_dot(col("embedding"), lit(Array.tabulate(64)(d => planeVal(p, d))))
+        vec_dot(col("embedding"), lit(Array.tabulate(64)(d => subPlaneVal(p, d))))
       }
       // sign test on the 6dp-ROUNDED dot (round-before-rank rule): the
       // oracle's SUM order is not Spark's sequential fold, and an
@@ -596,13 +576,8 @@ object Llm {
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("qe"), col("vec_id").as("vid"), col("embedding").as("ve"))
         .distinct()
-      val sims = cand
-        .withColumn("sim", cosSim(col("qe"), col("ve")))
-        .select(col("qid"), col("vid"), round(col("sim"), 6).as("simr"))
-      val w = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-      sims.withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 10)
-        .select("qid", "rn", "vid", "simr")
+      topPerQuery(cand.select(col("qid"), col("vid"),
+          round(vec_cos(col("qe"), col("ve")), 6).as("simr")), 10)
         .orderBy("qid", "rn")
     },
     Some("""WITH planes AS (
@@ -825,10 +800,8 @@ object Llm {
       Seq(8, 16, 32).map { d =>
         val sims = c.join(broadcast(q), col("vid") =!= col("qid"))
           .withColumn("simr",
-            round(cosSim(slice(col("qe"), 1, d), slice(col("ve"), 1, d)), 6))
-        val w = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-        val top = sims.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 10).select("qid", "vid")
+            round(vec_cos(slice(col("qe"), 1, d), slice(col("ve"), 1, d)), 6))
+        val top = topPerQuery(sims, 10).select("qid", "vid")
         val hits = ref.join(top, Seq("qid", "vid"), "semi")
           .groupBy("qid").agg(count(lit(1)).as("n_hit"))
         ref.select("qid").distinct()
@@ -911,19 +884,7 @@ object Llm {
       val probes = s3.filter(col("vid").isin(0, 1, 2))
         .withColumn("rn", row_number().over(wProbe)).filter(col("rn") <= 4)
         .select(col("vid").as("qid"), col("cid"))
-      val qvec = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val cand = probes.join(assign, "cid")
-        .filter(col("vid") =!= col("qid"))
-        .select("qid", "vid").distinct()
-        .join(qvec, "qid")
-        .join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
-      val wRank = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-      cand.withColumn("sim", cosSim(col("qe"), col("ve")))
-        .select(col("qid"), col("vid"), round(col("sim"), 6).as("simr"))
-        .withColumn("rn", row_number().over(wRank)).filter(col("rn") <= 10)
-        .select("qid", "rn", "vid", "simr")
-        .orderBy("qid", "rn")
+      topPerQuery(cellScores(probes, assign, e), 10).orderBy("qid", "rn")
     },
     Some("""WITH x AS (SELECT vec_id, unnest(embedding) AS e,
                          generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
@@ -1000,11 +961,9 @@ object Llm {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       val nbits = math.max(16, ceilLog2(e.count()))
-      def planeVal(p: Int, d: Int): Double =
-        (((p * 64 + d) * 2654435761L + 1013904223L) % 2147483647L).toDouble / 2147483647.0 * 2 - 1
       val code = (0 until nbits).map { p =>
         import graft.functions.VectorExprs.vec_dot
-        val dot = vec_dot(col("embedding"), lit(Array.tabulate(64)(d => planeVal(p, d))))
+        val dot = vec_dot(col("embedding"), lit(Array.tabulate(64)(d => subPlaneVal(p, d))))
         when(round(dot, 6) > 0, lit(1L << p)).otherwise(lit(0L))
       }.reduce(_ + _)
       val coded = e.select(col("vec_id"), col("embedding"), code.as("code"))
@@ -1012,8 +971,7 @@ object Llm {
           col("a.code") === col("b.code") && col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("v1"), col("a.embedding").as("qe"),
                 col("b.vec_id").as("v2"), col("b.embedding").as("ve"))
-      cand.withColumn("sim", cosSim(col("qe"), col("ve")))
-        .select(col("v1"), col("v2"), round(col("sim"), 6).as("simr"))
+      cand.select(col("v1"), col("v2"), round(vec_cos(col("qe"), col("ve")), 6).as("simr"))
         .filter(col("simr") >= 0.9)
         .orderBy("v1", "v2")
     },
@@ -1053,43 +1011,18 @@ object Llm {
   // At scale the inverted lists are the partitioning: candidates touch
   // nprobe/k of the corpus. All rankings happen on round(sim, 6) so
   // the SQL oracle — the identical algorithm — matches bit-for-bit;
-  // recall vs brute force is additionally asserted in AnnSpec.
+  // recall vs brute force is additionally asserted in QueriesSpec's
+  // ANN recall tests. One cell pass serves both sides: rn = 1 is each
+  // vector's inverted list, a query's rn <= 4 its probe list.
   private val l3ivf = QueryDef(
     "l3_ann_ivf",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val cents = e.filter(col("vec_id") < 32)
-        .select(col("vec_id").as("cid"), col("embedding").as("qe"))
-      def cos(df: DataFrame): DataFrame =
-        df.withColumn("sim", cosSim(col("qe"), col("ve")))
-      // nearest centroid per vector (inverted-list assignment); rank on
-      // the ROUNDED similarity so cross-engine float-sum order can't
-      // reorder near-ties differently than the oracle
-      val wAssign = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
-      val assign = cos(e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
-          .crossJoin(broadcast(cents)))
-        .withColumn("simr", round(col("sim"), 6))
-        .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
-        .select(col("vid"), col("cid"))
-      // queries probe their 4 closest centroids
-      val wProbe = Window.partitionBy("qid").orderBy(col("simr").desc, col("cid").asc)
-      val probes = cos(e.filter(col("vec_id").isin(0, 1, 2))
-          .select(col("vec_id").as("qid"), col("embedding").as("ve"))
-          .crossJoin(broadcast(cents)))
-        .withColumn("simr", round(col("sim"), 6))
-        .withColumn("rn", row_number().over(wProbe)).filter(col("rn") <= 4)
-        .select(col("qid"), col("cid"))
-      val qvec = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val cand = probes.join(assign, "cid")
-        .filter(col("vid") =!= col("qid"))
-        .select("qid", "vid").distinct()
-        .join(qvec, "qid")
-        .join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
-      val wRank = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-      cos(cand).select(col("qid"), col("vid"), round(col("sim"), 6).as("simr"))
-        .withColumn("rn", row_number().over(wRank)).filter(col("rn") <= 10)
-        .select("qid", "rn", "vid", "simr")
+      val cells = cosineCells(e, e.filter(col("vec_id") < 32), 4)
+      val probes = cells.filter(col("vid").isin(0, 1, 2))
+        .select(col("vid").as("qid"), col("cid"))
+      topPerQuery(cellScores(probes,
+          cells.filter(col("rn") === 1).select("vid", "cid"), e), 10)
         .orderBy("qid", "rn")
     },
     Some("""WITH x AS (SELECT vec_id, unnest(embedding) AS e,
@@ -1127,11 +1060,11 @@ object Llm {
   // table every IVF deployment reads before picking its operating
   // point — for nprobe ∈ {1, 2, 4, 8}, per query: candidate volume
   // (the COST — candidates scale ~nprobe/nlist of the corpus) and
-  // recall@10 vs the brute-force cosine reference. The centroid
-  // distance table and the assignment are computed ONCE and cached;
-  // each sweep point is a rank-prefix filter over the same table plus
-  // the probed-list re-rank — so the sweep costs one assignment plus
-  // four candidate-bounded re-ranks, not four index builds. The
+  // recall@10 vs the brute-force cosine reference. The top-8 cell
+  // table and the assignment are computed ONCE and cached; each sweep
+  // point is a rank-prefix filter over the same table plus the
+  // probed-list re-rank — so the sweep costs one assignment plus four
+  // candidate-bounded re-ranks, not four index builds. The
   // np = 4 rows reproduce l3_ann_ivf's recall exactly (same
   // algorithm, same rounding contract). All counts exact; recall is
   // one n/10 division rounded 6 (the l3_ann_recall convention).
@@ -1140,36 +1073,20 @@ object Llm {
     (s, dir) => {
       val scope = graft.ops.CacheScope.sessionOwned
       val e = t(s, dir, "embeddings")
-      val cents = e.filter(col("vec_id") < 32)
-        .select(col("vec_id").as("cid"), col("embedding").as("qe"))
-      def cos(df: DataFrame): DataFrame =
-        df.withColumn("sim", cosSim(col("qe"), col("ve")))
-      val wAssign = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
-      val cd = scope.cached(
-        cos(e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
-            .crossJoin(broadcast(cents)))
-          .withColumn("simr", round(col("sim"), 6))
-          .select("vid", "cid", "simr"))
-      val assign = scope.cached(cd
-        .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
-        .select("vid", "cid"))
-      val qcd = cd.filter(col("vid").isin(0, 1, 2))
-        .withColumn("rn", row_number().over(wAssign))
-      val qvec = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      // one cell pass at the widest sweep point: a query's nprobe list
+      // is its rn <= np prefix, rn = 1 every vector's assignment
+      val cells = scope.cached(cosineCells(e, e.filter(col("vec_id") < 32), 8))
+      val assign = scope.cached(cells.filter(col("rn") === 1).select("vid", "cid"))
+      val qcells = cells.filter(col("vid").isin(0, 1, 2))
       val ref = scope.cached(l3.run(s, dir).select(col("qid"), col("vid")))
-      val wRank = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
       Seq(1, 2, 4, 8).map { np =>
-        val probes = qcd.filter(col("rn") <= np)
+        val probes = qcells.filter(col("rn") <= np)
           .select(col("vid").as("qid"), col("cid"))
-        val cand = probes.join(assign, "cid")
-          .filter(col("vid") =!= col("qid"))
-          .select("qid", "vid").distinct()
+        // cached: the candidate count and the re-rank both read it,
+        // and it is query-sized (3 probe lists' members)
+        val cand = scope.cached(cellScores(probes, assign, e))
         val ncand = cand.groupBy("qid").agg(count(lit(1)).as("n_cand"))
-        val top = cos(cand.join(qvec, "qid")
-            .join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid"))
-          .select(col("qid"), col("vid"), round(col("sim"), 6).as("simr"))
-          .withColumn("rn", row_number().over(wRank)).filter(col("rn") <= 10)
+        val top = topPerQuery(cand, 10)
         val hits = ref.join(top.select("qid", "vid"), Seq("qid", "vid"), "semi")
           .groupBy("qid").agg(count(lit(1)).as("n_hit"))
         ref.select("qid").distinct()
@@ -1350,7 +1267,7 @@ object Llm {
   // fixture embeddings have mass (47/500 drops at sf0.01); the
   // algorithm is threshold-agnostic. Clusters above 256 members would
   // additionally split into secondary-hyperplane sub-buckets (the
-  // hot-cluster guard — see CorpusOps.semDedup; SkewSpec drives it on
+  // hot-cluster guard — see CorpusOps.semDedup; SkewGuardSpec drives it on
   // a synthetic hot cluster), and the oracle replays that arithmetic
   // too, so the gate holds at any skew, not just the uniform fixture.
   private val l3semdedup = QueryDef(
@@ -1431,8 +1348,8 @@ object Llm {
   // before the subtract, matching the kernel's widening order).
   // At 100 TB this is THE index layout: codes (8 bytes/vector here)
   // plus a constant-size codebook move through the cluster; raw
-  // vectors never shuffle. Recall floor vs brute force is asserted in
-  // AnnSpec alongside the other ANN variants.
+  // vectors never shuffle. Recall floor vs exact L2 is asserted in
+  // QueriesSpec's ANN recall tests alongside the other ANN variants.
   private val l3pq = QueryDef(
     "l3_ann_pq",
     (s, dir) => {
@@ -3998,39 +3915,18 @@ object Llm {
     * scores the STORED corpus only through this. */
   private def knnCandScoredOver(e: DataFrame)
                                (implicit scope: graft.ops.CacheScope): DataFrame = {
-    val nlist = broadcast(e.agg(
-      greatest(lit(32L), ceil(sqrt(count(lit(1)))).cast("long")).as("nlist")))
-    val cents = e.crossJoin(nlist).filter(col("vec_id") < col("nlist"))
-      .select(col("vec_id").as("cid"), col("embedding").as("qe"))
     // one centroid-similarity pass shared by assignment and probes;
     // only the rn<=4 slice materializes (4n rows — LINEAR; assign =
     // rn=1 is a subset of the probe lists, so caching the full
     // n x nlist table would store n^1.5 rows for nothing)
-    val w = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
-    val cdTop = cached(e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
-      .crossJoin(broadcast(cents))
-      .withColumn("simr", round(cosSim(col("qe"), col("ve")), 6))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 4)
-      .select("vid", "cid", "rn"))
-    val assign = cdTop.filter(col("rn") === 1).select(col("vid"), col("cid"))
-    val probes = cdTop.select(col("vid").as("qid"), col("cid"))
-    val cand = probes.join(assign, "cid")
-      .filter(col("vid") =!= col("qid"))
-      .select("qid", "vid")
-      .join(e.select(col("vec_id").as("qid"), col("embedding").as("qe")), "qid")
-      .join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
-    cand.select(col("qid"), col("vid"),
-      round(cosSim(col("qe"), col("ve")), 6).as("simr"))
+    val cdTop = cached(cosineCells(e, sqrtSeedCents(e), 4))
+    cellScores(cdTop.select(col("vid").as("qid"), col("cid")),
+      cdTop.filter(col("rn") === 1).select("vid", "cid"), e)
   }
 
   private def knnGraphTop5(s: SparkSession, dir: String)
-                          (implicit scope: graft.ops.CacheScope): DataFrame = {
-    val wRank = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-    knnCandScored(s, dir)
-      .withColumn("rn", row_number().over(wRank)).filter(col("rn") <= 5)
-      .select("qid", "rn", "vid", "simr")
-  }
+                          (implicit scope: graft.ops.CacheScope): DataFrame =
+    topPerQuery(knnCandScored(s, dir), 5)
 
   /** The l3_knn_graph oracle's CTE chain ending in
     * `r(qid, vid, simr, rn)` — also the prefix of the graph-search
@@ -4100,7 +3996,7 @@ object Llm {
         cands.join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
           .join(q, "qid")
           .select(col("qid"), col("vid"),
-            round(cosSim(col("qe"), col("ve")), 6).as("simr"))
+            round(vec_cos(col("qe"), col("ve")), 6).as("simr"))
       val wB = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
       var beam = cached(scored(q.select(col("qid"))
         .crossJoin(broadcast(e.filter(col("vec_id") < 4)
@@ -4191,72 +4087,13 @@ object Llm {
     (s, dir) => {
       implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.sessionOwned
       val e = t(s, dir, "embeddings")
+      val hs = new HnswSearch(e)
       val cs = cached(knnCandScored(s, dir))
-      val wRank = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-      val g = cs.withColumn("rn", row_number().over(wRank))
-        .filter(col("rn") <= 5).select(col("qid").as("a"), col("vid").as("b"))
-      val adj = cached(
-        g.union(g.select(col("b").as("a"), col("a").as("b"))).distinct())
-      val lvl = cached(e.select(col("vec_id").as("vid"))
-        .withColumn("h", sha60(col("vid").cast("string")))
-        .withColumn("lvl",
-          when(pmod(col("h"), lit(64L)) === 0, 3)
-            .when(pmod(col("h"), lit(16L)) === 0, 2)
-            .when(pmod(col("h"), lit(4L)) === 0, 1)
-            .otherwise(0))
-        .select("vid", "lvl"))
-      def layerAdj(l: Int): DataFrame = {
-        val edges = cs
-          .join(lvl.select(col("vid").as("qid"), col("lvl").as("lq"))
-            .filter(col("lq") >= l), "qid")
-          .join(lvl.select(col("vid"), col("lvl").as("lv"))
-            .filter(col("lv") >= l), "vid")
-          .withColumn("rn", row_number().over(wRank)).filter(col("rn") <= 3)
-          .select(col("qid").as("a"), col("vid").as("b"))
-        edges.union(edges.select(col("b").as("a"), col("a").as("b"))).distinct()
-      }
-      val q = broadcast(e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding").as("qe")))
-      def scored(cands: DataFrame): DataFrame =
-        cands.join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
-          .join(q, "qid")
-          .select(col("qid"), col("vid"),
-            round(cosSim(col("qe"), col("ve")), 6).as("simr"))
-      val wB = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-      // per-round LINEAGE CUTS, not caches: each round references the
-      // previous scored set TWICE (anti-join + union), so cached
-      // lineage doubles the logical plan every round — 10 rounds
-      // would hand Catalyst a 2^10-node tree (measured: minutes of
-      // pure planning). The GraphOps round discipline applies.
-      def cut(df: DataFrame): DataFrame =
-        scope.checkpointed(df, reliable = false)
-      // --- HNSW: beam-1 descent from the single top-level entry ---
-      val entry = broadcast(lvl.orderBy(col("lvl").desc, col("vid").asc)
-        .limit(1).select(col("vid")))
-      var seen = cut(scored(q.select(col("qid")).crossJoin(entry)
-        .union(q.select(col("qid"), col("qid").as("vid")))))
-      for (l <- 3 to 1 by -1) {
-        val top1 = seen.withColumn("rn", row_number().over(wB))
-          .filter(col("rn") <= 1).select(col("qid"), col("vid").as("a"))
-        val neigh = top1.join(layerAdj(l), "a")
-          .select(col("qid"), col("b").as("vid")).distinct()
-          .join(seen.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-        seen = cut(seen.union(scored(neigh)))
-      }
-      var beam = cut(seen.withColumn("rn", row_number().over(wB))
-        .filter(col("rn") <= 10).select("qid", "vid", "simr"))
-      for (_ <- 1 to 2) {
-        val expand = beam.select(col("qid"), col("vid").as("a"))
-          .join(adj, "a").select(col("qid"), col("b").as("vid")).distinct()
-          .join(seen.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-        val ns = cut(scored(expand))
-        seen = cut(seen.union(ns))
-        beam = cut(beam.union(ns)
-          .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 10)
-          .select("qid", "vid", "simr"))
-      }
+      val adj = cached(hs.sym(hs.top(cs, 5)))
+      // --- HNSW: the shared layered search, scored set kept ---
+      val seen = hs.seen(adj, l => hs.sym(hs.layerTop3(cs, l)))
       // --- flat: l3_ann_graph_search's exact traversal, scored set kept ---
-      var fseen = cut(scored(q.select(col("qid"))
+      var fseen = hs.cut(hs.scored(hs.q.select(col("qid"))
         .crossJoin(broadcast(e.filter(col("vec_id") < 4)
           .select(col("vec_id").as("vid"))))))
       var fbeam = fseen
@@ -4264,26 +4101,22 @@ object Llm {
         val expand = fbeam.select(col("qid"), col("vid").as("a"))
           .join(adj, "a").select(col("qid"), col("b").as("vid")).distinct()
           .join(fbeam.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-        val ns = cut(scored(expand))
-        fseen = cut(fseen.union(ns))
-        fbeam = cut(fbeam.union(ns)
-          .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 10)
-          .select("qid", "vid", "simr"))
+        val ns = hs.cut(hs.scored(expand))
+        fseen = hs.cut(fseen.union(ns))
+        fbeam = hs.cut(hs.beam10(fbeam.union(ns)))
       }
       // --- exact top-10 ground truth + the two report rows ---
       val exactTop = cached(
-        scored(q.select(col("qid"))
-          .crossJoin(e.select(col("vec_id").as("vid"))))
-          .filter(col("vid") =!= col("qid"))
-          .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 10)
+        topPerQuery(hs.scored(hs.q.select(col("qid"))
+            .crossJoin(e.select(col("vec_id").as("vid"))))
+          .filter(col("vid") =!= col("qid")), 10)
           .select("qid", "vid"))
       def report(method: String, all: DataFrame): DataFrame = {
         // the flat traversal can re-score a candidate dropped from the
         // beam (its anti-join sees only the beam) — distinct first, so
         // ranking and the scored count see each pair once
         val dist = all.select("qid", "vid", "simr").distinct()
-        val top = dist.filter(col("vid") =!= col("qid"))
-          .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 10)
+        val top = topPerQuery(dist.filter(col("vid") =!= col("qid")), 10)
           .select("qid", "vid")
         dist.agg(count(lit(1)).as("n_scored"))
           .crossJoin(top.join(exactTop, Seq("qid", "vid"))
@@ -4441,33 +4274,17 @@ object Llm {
   // maintenance cost is batch-sized (b·n scoring + batch-sized link
   // ranking); only the rebuilt arm — present here as the comparison
   // target — pays the n^1.5 build.
-  /** Shared scaffolding for the incremental-HNSW family
-    * (l3_ann_hnsw_incremental and l3_ann_compact): the sha60-layered
-    * hierarchy, the frozen stored-corpus candidate scores, the one
-    * batch-vs-stored scoring pass, the insertion-maintained adjacency
-    * builders, and the l3_ann_hnsw layered search — all verbatim from
-    * the round-12 query, factored so compaction composes on top
-    * instead of duplicating the build. */
-  private final case class HnswIncrKit(
-      e: DataFrame, lvl: DataFrame, csStored: DataFrame, bs: DataFrame,
-      top: (DataFrame, Int) => DataFrame,
-      sym: DataFrame => DataFrame,
-      layerTop3: (DataFrame, Int) => DataFrame,
-      adjM: DataFrame, layerAdjM: Int => DataFrame,
-      search: (DataFrame, Int => DataFrame, String) => DataFrame)
-
-  private def hnswIncrKit(s: SparkSession, dir: String)
-                         (implicit scope: graft.ops.CacheScope): HnswIncrKit = {
-    val e = t(s, dir, "embeddings")
-    val stored = e.filter(col("vec_id") % 8 =!= 5)
-    val batch = e.filter(col("vec_id") % 8 === 5)
-    val wRank = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-    def top(cs: DataFrame, k: Int): DataFrame =
-      cs.withColumn("rn", row_number().over(wRank)).filter(col("rn") <= k)
-        .select(col("qid").as("a"), col("vid").as("b"))
-    def sym(g: DataFrame): DataFrame =
-      g.union(g.select(col("b").as("a"), col("a").as("b"))).distinct()
-    val lvl = cached(e.select(col("vec_id").as("vid"))
+  /** The l3_ann_hnsw layered search over the corpus `e`, written once
+    * for l3_ann_hnsw, l3_ann_hnsw_incremental and l3_ann_compact: the
+    * sha60 level table, top-k link ranking ([[top]], [[layerTop3]],
+    * [[sym]]), the scorer for the three query nodes, and the search —
+    * {top-level entry, the query itself}, a beam-1 descent per layer
+    * 3→1, then a width-10 base-layer beam for two rounds. [[seen]]
+    * returns every (qid, vid, simr) the search scored; [[search]] its
+    * result-heap top-10. */
+  private final class HnswSearch(val e: DataFrame)
+                                (implicit scope: graft.ops.CacheScope) {
+    private val lvl: DataFrame = cached(e.select(col("vec_id").as("vid"))
       .withColumn("h", sha60(col("vid").cast("string")))
       .withColumn("lvl",
         when(pmod(col("h"), lit(64L)) === 0, 3)
@@ -4475,13 +4292,80 @@ object Llm {
           .when(pmod(col("h"), lit(4L)) === 0, 1)
           .otherwise(0))
       .select("vid", "lvl"))
+    val q: DataFrame = broadcast(e.filter(col("vec_id").isin(0, 1, 2))
+      .select(col("vec_id").as("qid"), col("embedding").as("qe")))
+    def scored(cands: DataFrame): DataFrame =
+      cands.join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
+        .join(q, "qid")
+        .select(col("qid"), col("vid"),
+          round(vec_cos(col("qe"), col("ve")), 6).as("simr"))
+    // per-round LINEAGE CUTS, not caches: each round references the
+    // previous scored set TWICE (anti-join + union), so cached
+    // lineage doubles the logical plan every round — 10 rounds
+    // would hand Catalyst a 2^10-node tree (measured: minutes of
+    // pure planning). The GraphOps round discipline applies.
+    def cut(df: DataFrame): DataFrame = scope.checkpointed(df, reliable = false)
+    def beam10(df: DataFrame): DataFrame =
+      topPerQuery(df, 10).select("qid", "vid", "simr")
+    /** Each node's top-`k` scored links as directed (a, b) edges. */
+    def top(cs: DataFrame, k: Int): DataFrame =
+      topPerQuery(cs, k).select(col("qid").as("a"), col("vid").as("b"))
+    def sym(g: DataFrame): DataFrame =
+      g.union(g.select(col("b").as("a"), col("a").as("b"))).distinct()
+    /** Top-3 links among layer-`l` members — a kNN graph WITHIN the
+      * layer, so upper layers are not left edgeless. */
     def layerTop3(cs: DataFrame, l: Int): DataFrame =
-      cs.join(lvl.select(col("vid").as("qid"), col("lvl").as("lq"))
+      top(cs.join(lvl.select(col("vid").as("qid"), col("lvl").as("lq"))
           .filter(col("lq") >= l), "qid")
         .join(lvl.select(col("vid"), col("lvl").as("lv"))
-          .filter(col("lv") >= l), "vid")
-        .withColumn("rn", row_number().over(wRank)).filter(col("rn") <= 3)
-        .select(col("qid").as("a"), col("vid").as("b"))
+          .filter(col("lv") >= l), "vid"), 3)
+    private val entry = broadcast(lvl.orderBy(col("lvl").desc, col("vid").asc)
+      .limit(1).select(col("vid")))
+
+    def seen(adjBase: DataFrame, layerAdj: Int => DataFrame): DataFrame = {
+      var all = cut(scored(q.select(col("qid")).crossJoin(entry)
+        .union(q.select(col("qid"), col("qid").as("vid")))))
+      for (l <- 3 to 1 by -1) {
+        val top1 = topPerQuery(all, 1).select(col("qid"), col("vid").as("a"))
+        val neigh = top1.join(layerAdj(l), "a")
+          .select(col("qid"), col("b").as("vid")).distinct()
+          .join(all.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
+        all = cut(all.union(scored(neigh)))
+      }
+      var beam = cut(beam10(all))
+      for (_ <- 1 to 2) {
+        val expand = beam.select(col("qid"), col("vid").as("a"))
+          .join(adjBase, "a").select(col("qid"), col("b").as("vid")).distinct()
+          .join(all.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
+        val ns = cut(scored(expand))
+        all = cut(all.union(ns))
+        beam = cut(beam10(beam.union(ns)))
+      }
+      all
+    }
+
+    def search(adjBase: DataFrame, layerAdj: Int => DataFrame,
+               method: String): DataFrame =
+      topPerQuery(seen(adjBase, layerAdj).select("qid", "vid", "simr").distinct()
+          .filter(col("vid") =!= col("qid")), 10)
+        .select(lit(method).as("method"), col("qid"), col("rn"),
+          col("vid"), col("simr"))
+  }
+
+  /** Shared scaffolding for the incremental-HNSW family
+    * (l3_ann_hnsw_incremental and l3_ann_compact): the frozen
+    * stored-corpus candidate scores, the one batch-vs-stored scoring
+    * pass and the insertion-maintained adjacency, over the shared
+    * [[HnswSearch]] — factored so compaction composes on top instead
+    * of duplicating the build. */
+  private final case class HnswIncrKit(hs: HnswSearch, adjM: DataFrame,
+                                       layerAdjM: Int => DataFrame)
+
+  private def hnswIncrKit(s: SparkSession, dir: String)
+                         (implicit scope: graft.ops.CacheScope): HnswIncrKit = {
+    val hs = new HnswSearch(t(s, dir, "embeddings"))
+    val stored = hs.e.filter(col("vec_id") % 8 =!= 5)
+    val batch = hs.e.filter(col("vec_id") % 8 === 5)
     // frozen stored-corpus index + one batch-vs-stored scoring pass
     // (batch side BROADCAST so the corpus side streams — the
     // l3_knn_bruteforce idiom; at real scale swap the brute pass
@@ -4492,55 +4376,10 @@ object Llm {
       .crossJoin(broadcast(batch
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))))
       .select(col("qid"), col("vid"),
-        round(cosSim(col("qe"), col("ve")), 6).as("simr")))
-    val adjM = cached(sym(top(csStored, 5).unionByName(top(bs, 5))))
-    def layerAdjM(l: Int): DataFrame =
-      sym(layerTop3(csStored, l).unionByName(layerTop3(bs, l)))
-    // the l3_ann_hnsw search, verbatim, parameterized by index
-    val q = broadcast(e.filter(col("vec_id").isin(0, 1, 2))
-      .select(col("vec_id").as("qid"), col("embedding").as("qe")))
-    def scored(cands: DataFrame): DataFrame =
-      cands.join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
-        .join(q, "qid")
-        .select(col("qid"), col("vid"),
-          round(cosSim(col("qe"), col("ve")), 6).as("simr"))
-    val wB = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-    def cut(df: DataFrame): DataFrame =
-      scope.checkpointed(df, reliable = false)
-    val entry = broadcast(lvl.orderBy(col("lvl").desc, col("vid").asc)
-      .limit(1).select(col("vid")))
-    def search(adjBase: DataFrame, layerAdj: Int => DataFrame,
-               method: String): DataFrame = {
-      var seen = cut(scored(q.select(col("qid")).crossJoin(entry)
-        .union(q.select(col("qid"), col("qid").as("vid")))))
-      for (l <- 3 to 1 by -1) {
-        val top1 = seen.withColumn("rn", row_number().over(wB))
-          .filter(col("rn") <= 1).select(col("qid"), col("vid").as("a"))
-        val neigh = top1.join(layerAdj(l), "a")
-          .select(col("qid"), col("b").as("vid")).distinct()
-          .join(seen.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-        seen = cut(seen.union(scored(neigh)))
-      }
-      var beam = cut(seen.withColumn("rn", row_number().over(wB))
-        .filter(col("rn") <= 10).select("qid", "vid", "simr"))
-      for (_ <- 1 to 2) {
-        val expand = beam.select(col("qid"), col("vid").as("a"))
-          .join(adjBase, "a").select(col("qid"), col("b").as("vid")).distinct()
-          .join(seen.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-        val ns = cut(scored(expand))
-        seen = cut(seen.union(ns))
-        beam = cut(beam.union(ns)
-          .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 10)
-          .select("qid", "vid", "simr"))
-      }
-      seen.select("qid", "vid", "simr").distinct()
-        .filter(col("vid") =!= col("qid"))
-        .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 10)
-        .select(lit(method).as("method"), col("qid"), col("rn"),
-          col("vid"), col("simr"))
-    }
-    HnswIncrKit(e, lvl, csStored, bs, top, sym, layerTop3, adjM, layerAdjM,
-      search)
+        round(vec_cos(col("qe"), col("ve")), 6).as("simr")))
+    val adjM = cached(hs.sym(hs.top(csStored, 5).unionByName(hs.top(bs, 5))))
+    HnswIncrKit(hs, adjM,
+      l => hs.sym(hs.layerTop3(csStored, l).unionByName(hs.layerTop3(bs, l))))
   }
 
   // ---- shared oracle CTE builders for the incremental-HNSW family
@@ -4686,12 +4525,13 @@ object Llm {
     (s, dir) => {
       implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.sessionOwned
       val kit = hnswIncrKit(s, dir)
+      val hs = kit.hs
       // rebuilt full-corpus index (the comparison target)
-      val csAll = cached(knnCandScoredOver(kit.e))
-      val adjR = cached(kit.sym(kit.top(csAll, 5)))
-      def layerAdjR(l: Int): DataFrame = kit.sym(kit.layerTop3(csAll, l))
-      kit.search(kit.adjM, kit.layerAdjM, "maintained")
-        .unionByName(kit.search(adjR, layerAdjR, "rebuilt"))
+      val csAll = cached(knnCandScoredOver(hs.e))
+      val adjR = cached(hs.sym(hs.top(csAll, 5)))
+      def layerAdjR(l: Int): DataFrame = hs.sym(hs.layerTop3(csAll, l))
+      hs.search(kit.adjM, kit.layerAdjM, "maintained")
+        .unionByName(hs.search(adjR, layerAdjR, "rebuilt"))
         .orderBy("method", "qid", "rn")
     },
     Some {
@@ -4750,10 +4590,10 @@ object Llm {
       // M itself (that would halve the search graph's degree vs the
       // rebuilt index and gut recall — measured 20/30 vs 30/30 at
       // sf0.001 with cap 5)
-      val adjC = cached(graft.ops.CorpusOps.compactAdjacency(kit.adjM, kit.e, 10))
+      val adjC = cached(graft.ops.CorpusOps.compactAdjacency(kit.adjM, kit.hs.e, 10))
       def layerAdjC(l: Int): DataFrame =
-        graft.ops.CorpusOps.compactAdjacency(kit.layerAdjM(l), kit.e, 6)
-      kit.search(adjC, layerAdjC, "compacted").orderBy("qid", "rn")
+        graft.ops.CorpusOps.compactAdjacency(kit.layerAdjM(l), kit.hs.e, 6)
+      kit.hs.search(adjC, layerAdjC, "compacted").orderBy("qid", "rn")
     },
     Some {
       // compaction in SQL: re-score the maintained adjacency's edges
@@ -4803,52 +4643,15 @@ object Llm {
     (s, dir) => {
       implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.sessionOwned
       val e = t(s, dir, "embeddings")
-      // frozen quantizer: nlist from the ORIGINAL count, centroids by
-      // original id (their vectors persist with the index)
-      val nlist = broadcast(e.agg(
-        greatest(lit(32L), ceil(sqrt(count(lit(1)))).cast("long")).as("nlist")))
-      val cents = e.crossJoin(nlist).filter(col("vec_id") < col("nlist"))
-        .select(col("vec_id").as("cid"), col("embedding").as("qe"))
-      val wA = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
-      // the persisted probe/assign auxiliary (computed at build)
-      val cdTop = cached(e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
-        .crossJoin(broadcast(cents))
-        .withColumn("simr", round(cosSim(col("qe"), col("ve")), 6))
-        .withColumn("rn", row_number().over(wA))
-        .filter(col("rn") <= 4)
-        .select("vid", "cid", "rn"))
-      val assign = cdTop.filter(col("rn") === 1).select("vid", "cid")
-      val probes = cdTop.select(col("vid").as("qid"), col("cid"))
-      val wRank = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-      def score(c: DataFrame): DataFrame =
-        c.join(e.select(col("vec_id").as("qid"), col("embedding").as("qe")), "qid")
-          .join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
-          .select(col("qid"), col("vid"),
-            round(cosSim(col("qe"), col("ve")), 6).as("simr"))
-      def top5(sc: DataFrame): DataFrame =
-        sc.withColumn("rn", row_number().over(wRank)).filter(col("rn") <= 5)
-          .select("qid", "rn", "vid", "simr")
-      // the STORED index: per-node top-5 lists over the build corpus
-      val g = cached(top5(score(
-        probes.join(assign, "cid").filter(col("vid") =!= col("qid"))
-          .select("qid", "vid"))))
+      // the STORED index under the frozen quantizer (nlist from the
+      // ORIGINAL count, centroids by original id — their vectors
+      // persist with the index), with its probe/assign auxiliary
+      val (g, probes, assign) = graft.ops.CorpusOps.annBuild(e,
+        sqrtSeedCents(e), annK = 5, probeK = 4)
       // ---- the deletion batch: every 9th vector ----
-      val delQ = e.filter(col("vec_id") % 9 === 3)
-        .select(col("vec_id").as("qid"))
-      val delV = delQ.select(col("qid").as("vid"))
-      // affected = surviving nodes whose stored list holds a deleted id
-      val affected = g.join(delV, Seq("vid"), "left_semi")
-        .select("qid").distinct()
-        .join(delQ, Seq("qid"), "left_anti")
-      val kept = g.join(delQ, Seq("qid"), "left_anti")
-        .join(affected, Seq("qid"), "left_anti")
-      // re-rank affected nodes: frozen probes × SURVIVING assignments
-      val survAssign = assign.join(delV, Seq("vid"), "left_anti")
-      val rer = top5(score(
-        probes.join(affected, Seq("qid"), "left_semi")
-          .join(survAssign, "cid").filter(col("vid") =!= col("qid"))
-          .select("qid", "vid")))
-      kept.unionByName(rer).orderBy("qid", "rn")
+      val (repaired, _, _) = graft.ops.CorpusOps.annDeleteStep(
+        e.filter(col("vec_id") % 9 === 3).select("vec_id"), g, probes, assign, e, 5)
+      repaired.orderBy("qid", "rn")
     },
     Some {
       val surv = "vec_id % 9 <> 3"
@@ -4938,19 +4741,9 @@ object Llm {
   // output-pinned), so the window must materialize all ranks —
   // l3_cluster_sample_kept below is the production shape whose rank
   // filter compiles to a partial per-partition WindowGroupLimit.
-  private def clusterAssign(e: DataFrame): DataFrame = {
-    val k = broadcast(e.agg(
-      greatest(lit(32L), ceil(sqrt(count(lit(1)))).cast("long")).as("kk")))
-    val cents = e.crossJoin(k).filter(col("vec_id") < col("kk"))
-      .select(col("vec_id").as("cid"), col("embedding").as("qe"))
-    val wAssign = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
-    e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
-      .crossJoin(broadcast(cents))
-      .withColumn("simr", round(cosSim(col("qe"), col("ve")), 6))
-      .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
-      .select(col("vid"), col("cid"))
+  private def clusterAssign(e: DataFrame): DataFrame =
+    cosineCells(e, sqrtSeedCents(e), 1).select(col("vid"), col("cid"))
       .withColumn("hk", pmod(sha60(col("vid").cast("string")), lit(1000000007L)))
-  }
 
   private val clusterSampleOracle =
     """WITH x AS (SELECT vec_id, unnest(embedding) AS e,
@@ -5742,16 +5535,6 @@ object Llm {
 
   private val cascadeTerms = Seq("table", "scan", "join", "merge")
 
-  /** The frozen quantizer the cascade fixtures persist: the first
-    * max(32, ceil(sqrt(n))) vectors as centroids — nlist frozen on
-    * the corpus `e` was derived from. */
-  private def centsOf(e: DataFrame): DataFrame = {
-    val nlist = broadcast(e.agg(
-      greatest(lit(32L), ceil(sqrt(count(lit(1)))).cast("long")).as("nlist")))
-    e.crossJoin(nlist).filter(col("vec_id") < col("nlist"))
-      .select(col("vec_id").as("cid"), col("embedding"))
-  }
-
   /** Shared output assembly: ONE 5-column (artifact, k, x, y, z)
     * union over the repaired bundle + funnel — exact = (h, keeper,
     * n); cluster = (cluster_id, doc_id, size); ann = (qid, rn, vid);
@@ -5806,7 +5589,7 @@ object Llm {
           (docsAll.filter(col("doc_id") % 10 =!= 0),
             eAll.filter(col("vec_id") % 10 =!= 0).select("vec_id", "embedding"))
         else (docsAll, eAll.select("vec_id", "embedding"))
-      val cents = centsOf(e)
+      val cents = sqrtSeedCents(e)
       val arts = CorpusOps.buildArtifacts(docs, e, cents, cascadeTerms)
       def w(df: DataFrame, n: String): Unit = df.write.mode("overwrite")
         .parquet(new java.io.File(rootDir, n).toString)
@@ -5851,7 +5634,7 @@ object Llm {
       // jaccard pair graph + clusters, the frozen-quantizer ANN chain
       // at probeK 4 / annK 5, the (stat, k, v, cnt) BM25 view)
       val e = t(s, dir, "embeddings")
-      val arts = graft.ops.CorpusOps.buildArtifacts(docs, e, centsOf(e),
+      val arts = graft.ops.CorpusOps.buildArtifacts(docs, e, sqrtSeedCents(e),
         cascadeTerms)
       // ---- ONE call applies the delete list to every artifact ----
       cascadeRows(graft.ops.CorpusOps.deleteDocuments(del, docs, arts,
@@ -5951,7 +5734,7 @@ object Llm {
         .select("vec_id", "embedding")
       val be = eAll.filter(col("vec_id") % 10 === 0)
         .select("vec_id", "embedding")
-      val cents = centsOf(e)
+      val cents = sqrtSeedCents(e)
       val arts = graft.ops.CorpusOps.buildArtifacts(stored, e, cents,
         cascadeTerms)
       // ---- ONE call ingests the batch into every artifact ----

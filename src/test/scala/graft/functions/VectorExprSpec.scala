@@ -50,6 +50,51 @@ class VectorExprSpec extends AnyFunSuite {
       .collect().forall(_.isNullAt(0)))
   }
 
+  test("vec_cos is bit-identical to the spelled-out dot/norm composition") {
+    def spelled(a: String, b: String) =
+      VectorExprs.vec_dot(col(a), col(b)) /
+        (VectorExprs.vec_norm(col(a)) * VectorExprs.vec_norm(col(b)))
+    def same(x: Double, y: Double): Boolean =
+      java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y)
+    val dbl = vecs.select(col("id"),
+      col("a").cast("array<double>").as("a"), col("b").cast("array<double>").as("b"))
+    for (df <- Seq(vecs, dbl); (a, b) <- Seq(("a", "b"), ("b", "a"))) {
+      val rows = df.select(VectorExprs.vec_cos(col(a), col(b)), spelled(a, b),
+        VectorExprs.vec_cos(col(b), col(a))).collect()
+      assert(rows.length == 3)
+      rows.foreach { r =>
+        assert(same(r.getDouble(0), r.getDouble(1)), s"vec_cos($a, $b) differs: $r")
+        // a·b and |a||b| fold the same pairs in the same order either way round
+        assert(same(r.getDouble(0), r.getDouble(2)), s"vec_cos not symmetric: $r")
+      }
+    }
+    // null input: null on both spellings
+    val edge = Seq(
+      (1L, Array[java.lang.Float](0.0f, 0.0f), Array[java.lang.Float](3.0f, 4.0f)),
+      (2L, null, Array[java.lang.Float](3.0f, 4.0f))
+    ).toDF("id", "a", "b")
+    val nul = edge.filter(col("id") === 2L)
+      .select(VectorExprs.vec_cos(col("a"), col("b")), spelled("a", "b")).collect()
+    assert(nul.length == 1 && nul(0).isNullAt(0) && nul(0).isNullAt(1))
+    // zero vector: Spark's double division by zero — DIVIDE_BY_ZERO
+    // under ANSI mode (the default), null without it — on both spellings
+    val zero = edge.filter(col("id") === 1L)
+    for (c <- Seq(VectorExprs.vec_cos(col("a"), col("b")), spelled("a", "b"))) {
+      val conf = "spark.sql.ansi.enabled"
+      val saved = spark.conf.getOption(conf)
+      try {
+        spark.conf.set(conf, "true")
+        val err = intercept[Exception](zero.select(c).collect())
+        assert(err.getMessage.contains("DIVIDE_BY_ZERO"), err.getMessage)
+        spark.conf.set(conf, "false")
+        assert(zero.select(c).collect().head.isNullAt(0))
+      } finally saved match {
+        case Some(v) => spark.conf.set(conf, v)
+        case None => spark.conf.unset(conf)
+      }
+    }
+  }
+
   test("vec_dot participates in whole-stage codegen (no fallback)") {
     // range source (not a LocalRelation, which gets constant-folded);
     // arrays built with array() — a transform() HOF here would itself

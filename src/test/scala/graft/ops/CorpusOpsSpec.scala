@@ -614,15 +614,10 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(corrected.values.map(xs => xs.map(x => x * x).sum).max > 1e-4)
   }
 
-  test("cascade batches CHAIN off the returned bundle: ingest then delete == rebuild from the final corpus, auxiliaries included") {
-    // The round-14 CascadeResult returned four repaired artifacts but
-    // not the auxiliaries the NEXT batch needs, so consecutive batches
-    // had to re-derive exactAux/pairs/probes/assign out-of-band. This
-    // pins the chained lifecycle: arts0 --ingest--> res1.artifacts
-    // --delete--> res2.artifacts, every member (auxiliaries too) equal
-    // to that artifact rebuilt from the final corpus with the SAME
-    // frozen quantizer.
-    implicit val scope: CacheScope = CacheScope.sessionOwned
+  /** The cascade fixture: eight stored docs and a three-doc batch
+    * with planted exact and near-dup groups, 4-d vectors around three
+    * axis centroids. */
+  private object cascade {
     import org.apache.spark.sql.DataFrame
     val base40 = (1 to 40).map(i => s"w$i").mkString(" ")
     val near40 = (1 to 39).map(i => s"w$i").mkString(" ") + " zz"
@@ -654,6 +649,19 @@ class CorpusOpsSpec extends AnyFunSuite {
     val cents = Seq((100L, vec(1, 0, 0, 0)), (101L, vec(0, 1, 0, 0)),
       (102L, vec(0, 0, 1, 0))).toDF("cid", "embedding")
     val annK = 2; val probeK = 2
+  }
+
+  test("cascade batches CHAIN off the returned bundle: ingest then delete == rebuild from the final corpus, auxiliaries included") {
+    // The round-14 CascadeResult returned four repaired artifacts but
+    // not the auxiliaries the NEXT batch needs, so consecutive batches
+    // had to re-derive exactAux/pairs/probes/assign out-of-band. This
+    // pins the chained lifecycle: arts0 --ingest--> res1.artifacts
+    // --delete--> res2.artifacts, every member (auxiliaries too) equal
+    // to that artifact rebuilt from the final corpus with the SAME
+    // frozen quantizer.
+    implicit val scope: CacheScope = CacheScope.sessionOwned
+    import org.apache.spark.sql.DataFrame
+    import cascade._
     // ONE canonical build arm — the same buildArtifacts the l6 queries
     // and T26 construct from
     def artsOf(docs: DataFrame, vecs: DataFrame): CorpusOps.CorpusArtifacts =
@@ -701,5 +709,73 @@ class CorpusOpsSpec extends AnyFunSuite {
         .select(sha2(col("text"), 256).as("h")), "h")
       .select("keeper", "n_dups").as[(Long, Long)].collect().toSeq
     assert(gA == Seq((2L, 2L)), s"group A keeper/count: $gA") // {2, 11} survive of {1, 2, 11}
+  }
+
+  test("cosine-IVF kit tie rules: lower cid / lower vid win ties, no self-match, min(probeK, nlist) cells") {
+    // 1 = 2 and 3 = 4 as vectors; centroids 100 = 101
+    val vecs = Seq(
+      (1L, Seq(1.0, 0.0, 0.0)), (2L, Seq(1.0, 0.0, 0.0)),
+      (3L, Seq(0.9, 0.1, 0.0)), (4L, Seq(0.9, 0.1, 0.0)),
+      (5L, Seq(0.0, 1.0, 0.0))).toDF("id", "v")
+    val cents = Seq((100L, Seq(1.0, 0.0, 0.0)), (101L, Seq(1.0, 0.0, 0.0)),
+      (102L, Seq(0.0, 1.0, 0.0))).toDF("c", "v")
+    def cellsOf(probeK: Int): Map[Long, Seq[(Long, Int)]] =
+      CorpusOps.cosineCells(vecs, cents, probeK).as[(Long, Long, Int)].collect()
+        .groupBy(_._1).map { case (v, rs) => v -> rs.map(r => (r._2, r._3)).sortBy(_._2).toSeq }
+    val cells2 = cellsOf(2)
+    // identical centroids: the lower cid takes rn = 1
+    assert(cells2(1L) == Seq((100L, 1), (101L, 2)), cells2.toString)
+    assert(cells2(5L) == Seq((102L, 1), (100L, 2)), cells2.toString)
+    assert(cells2.values.forall(_.size == 2))
+    // probeK past nlist: every cell, once
+    assert(cellsOf(5).values.forall(cs => cs.map(_._1).sorted == Seq(100L, 101L, 102L)))
+    val cells = CorpusOps.cosineCells(vecs, cents, 2)
+    val scored = CorpusOps.cellScores(cells.select(col("vid").as("qid"), col("cid")),
+      cells.filter(col("rn") === 1).select("vid", "cid"), vecs)
+    assert(scored.filter(col("qid") === col("vid")).isEmpty, "a vector listed itself")
+    assert(scored.groupBy("qid", "vid").count().filter(col("count") > 1).isEmpty)
+    val top = CorpusOps.topPerQuery(scored, 4).as[(Long, Int, Long, Double)].collect()
+    def ranked(q: Long): Seq[Long] = top.filter(_._1 == q).sortBy(_._2).map(_._3).toSeq
+    // equal round-6 cosine (1 vs 2, 3 vs 4): the lower vid ranks first
+    assert(ranked(5L) == Seq(3L, 4L, 1L, 2L), top.toSeq.toString)
+    assert(ranked(3L) == Seq(4L, 1L, 2L), top.toSeq.toString)
+    assert(ranked(1L) == Seq(2L, 3L, 4L), top.toSeq.toString)
+  }
+
+  test("cascade ingest's fused re-rank pass: batch ids are new, and one pass over affected ∪ batch == the two separate passes") {
+    implicit val scope: CacheScope = CacheScope.sessionOwned
+    import cascade._
+    val storedVecs = vecsOf((1L to 8L).toSeq)
+    val batchVecs = vecsOf(Seq(11L, 12L, 13L))
+    val arts = CorpusOps.buildArtifacts(stored, storedVecs, cents, terms, annK, probeK)
+    // (a) the contract the fusion rests on: batch vec ids are disjoint
+    // from the stored ones
+    assert(batchVecs.select("vec_id").intersect(arts.vectors.select("vec_id")).isEmpty)
+    // (b) the two probe sets ingestDocuments fuses
+    val batchCells = CorpusOps.cosineCells(batchVecs, cents, probeK)
+    val batchAssign = batchCells.filter(col("rn") === 1).select("vid", "cid")
+    val assignAll = arts.annAssign.unionByName(batchAssign)
+    val vecsAll = arts.vectors.unionByName(batchVecs)
+    val affected = arts.annProbes
+      .join(batchAssign.select("cid").distinct(), Seq("cid"), "left_semi")
+      .select("qid").distinct()
+    val affectedProbes = arts.annProbes.join(affected, Seq("qid"), "left_semi")
+    val batchProbes = batchCells.select(col("vid").as("qid"), col("cid"))
+    def pass(probes: org.apache.spark.sql.DataFrame): Set[String] =
+      CorpusOps.topPerQuery(CorpusOps.cellScores(probes, assignAll, vecsAll), annK)
+        .collect().map(_.toString).toSet
+    val fused = pass(affectedProbes.unionByName(batchProbes))
+    val separate = pass(affectedProbes) ++ pass(batchProbes)
+    assert(!affected.isEmpty && pass(affectedProbes).nonEmpty && pass(batchProbes).nonEmpty,
+      "fixture no longer exercises both arms")
+    assert(fused == separate, s"fused $fused != separate $separate")
+    // and the fused pass is what ingestDocuments stores for those nodes
+    val res = CorpusOps.ingestDocuments(batch, stored, arts, batchVecs, cents,
+      terms, annK, probeK)
+    val stored2 = res.artifacts.annIndex
+      .join(affectedProbes.select("qid").unionByName(batchProbes.select("qid")).distinct(),
+        Seq("qid"), "left_semi")
+      .select("qid", "rn", "vid", "simr").collect().map(_.toString).toSet
+    assert(stored2 == fused)
   }
 }
