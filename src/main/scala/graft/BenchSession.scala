@@ -2,9 +2,25 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One SparkSession recipe for the measurement mains (Bench, Stress,
-  * Measure) — keeps their methodology from drifting apart. */
+/** One SparkSession recipe for every graft session — the measurement
+  * mains (Bench, Stress, Measure), Verify and the test fixture — so
+  * their methodology and their filesystem cannot drift apart. */
 object BenchSession {
+
+  /** The shared recipe: `local[cpus]` with as many shuffle partitions,
+    * UTC, graft's SQL extensions, no UI, and the fork-free local
+    * filesystem ([[graft.fs.NioLocalFileSystem]] for FileSystem,
+    * [[graft.fs.NioLocalFs]] for FileContext) behind every `file:`
+    * path: checkpoints, state stores, sinks and parquet writes. */
+  def builder(cpus: Int): SparkSession.Builder = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.extensions", "graft.GraftExtensions")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.ui.enabled", "false")
+    .config("spark.hadoop.fs.file.impl", classOf[graft.fs.NioLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.fs.NioLocalFs].getName)
 
   /** Parse "k=v;k2=v2" conf-override syntax — ONE definition shared by
     * the session builder, Measure's A/B arm parser, and Bench's record
@@ -22,20 +38,13 @@ object BenchSession {
     sys.env.get("SPARK_GRAFT_CONF").map(parseConfPairs).getOrElse(Nil)
 
   def build(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val b = builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // ad-hoc conf overrides for measurement experiments:
     // SPARK_GRAFT_CONF="k=v;k2=v2". Unset = the exact session every
     // committed record ran under; Bench stamps the active map into its
     // record JSON either way (audit trail).
-    confOverrides.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    confOverrides.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -33,6 +33,9 @@ import graft.model.{Cursor, Message, StartingPoint}
   *     (the reference's GetRecords LIMIT=1000 pacing,
   *     `KinesisStreamingBuffer.java:41,100`)
   *
+  * Lag: each micro-batch's source progress `metrics` carry the records
+  * behind latest per shard and their max ([[MessageMicroBatchStream.metrics]]).
+  *
   * Scale shape: shard discovery happens on the driver
   * (`planInputPartitions` = §2A-12), each shard becomes ONE
   * InputPartition read sequentially by an executor — per-shard order
@@ -187,7 +190,8 @@ object TopicOffset {
 final class MessageMicroBatchStream(logNames: Seq[String], startingPosition: Option[String],
                                     maxPerBatch: Int, pollIntervalMs: Long = 1000L)
     extends MicroBatchStream with SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow
+    with org.apache.spark.sql.connector.read.streaming.ReportsSourceMetrics {
 
   private def logs: Seq[ShardLog] = logNames.map(ShardLog.getOrCreate)
 
@@ -260,6 +264,27 @@ final class MessageMicroBatchStream(logNames: Seq[String], startingPosition: Opt
     new MessageReaderFactory(pollIntervalMs)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+
+  /** Records behind latest after each trigger — graft's analogue of the
+    * reference's `millisBehindLatest` pacing signal: per shard
+    * (`recordsBehindLatest.<shardId>`, the shard log's end minus the
+    * consumed offset) and their max (`maxRecordsBehindLatest`). Reads
+    * each shard's end position once: O(shards), no job. Empty until a
+    * batch has been consumed. */
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset]): util.Map[String, String] =
+    if (!latestConsumedOffset.isPresent) util.Collections.emptyMap()
+    else {
+      val consumed = latestConsumedOffset.get.asInstanceOf[TopicOffset].offsets
+        .map(o => o.shardId -> o.nextIndex).toMap
+      val behind = logs.map { log =>
+        val end = ShardLog.parseSeq(log.endSequence)
+        log.shardId -> math.max(0L, end - consumed.getOrElse(log.shardId, 0L))
+      }
+      val m = new util.LinkedHashMap[String, String]()
+      m.put("maxRecordsBehindLatest", behind.map(_._2).max.toString)
+      behind.foreach { case (id, n) => m.put(s"recordsBehindLatest.$id", n.toString) }
+      m
+    }
 }
 
 final case class MessagePartition(logName: String, startIdx: Long, endIdx: Long)

@@ -2,17 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM, on the
+  * shared recipe ([[BenchSession.builder]]). */
 object SparkFixture {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = BenchSession.builder(4).appName("graft-tests").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,6 +65,31 @@ class TopicSpec extends AnyFunSuite {
     q2.processAllAvailable()
     q2.stop()
     assert(seen.toArray.map(_.toString).toSeq.sortBy(_.drop(1).toInt) == (40 until 45).map("e" + _))
+  }
+
+  test("source lag metrics: records behind latest per shard and max, 0 once caught up") {
+    val name = "tp-lag-" + System.nanoTime()
+    val topic = Topics.create(name, 2)
+    val p = topic.producer(seed = 3)
+    (0 until 60).foreach(i => p.publish(msg("k" + i, "e" + i)))
+    val cap = 10
+    assert(topic.shards.map(_.size).max > cap, "fixture: the backlog must exceed one batch")
+    val q = spark.readStream.format("graft-messages").option("topic", name)
+      .option("maxRecordsPerBatch", cap.toString).load()
+      .writeStream.format("noop")
+      .option("checkpointLocation", Files.createTempDirectory("tp-lag").toString).start()
+    try {
+      q.processAllAvailable()
+      def lag(m: java.util.Map[String, String]) = m.asScala.toMap
+      // after the first batch each shard is behind by what the cap held back
+      val first = lag(q.recentProgress.find(_.numInputRows > 0).get.sources.head.metrics)
+      val behind = topic.shards.map(s => s.shardId -> math.max(0, s.size - cap))
+      assert(first == (behind.map { case (id, n) => s"recordsBehindLatest.$id" -> n.toString } :+
+        ("maxRecordsBehindLatest" -> behind.map(_._2).max.toString)).toMap)
+      assert(first("maxRecordsBehindLatest").toLong > 0)
+      val last = lag(q.lastProgress.sources.head.metrics)
+      assert(last.size == 3 && last.values.forall(_ == "0"), s"caught up yet behind: $last")
+    } finally q.stop()
   }
 
   test("admin surface: list/create-if-absent/shard discovery/lastMessage") {
