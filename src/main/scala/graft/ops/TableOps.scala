@@ -619,15 +619,17 @@ object TableOps {
         // silently serve a leftover version instead of failing loudly.
         // FileContext.rename(OVERWRITE) is atomic where the FS supports
         // it (HDFS, local) and throws loudly where it does not.
-        // CHECKSUM-FS hygiene: fc renames at the RAW layer, so a
-        // `.marker.crc` sidecar a checksummed fs (LocalFileSystem) left
-        // behind — ours via fs.create(tmp), or a pre-rename-era
-        // delete+rename build's marker sidecar — would describe STALE
-        // content and brick every later fs.open(marker) with
-        // ChecksumException. Drop the marker's sidecar BEFORE the
-        // rename (a crash after the drop leaves the old marker
+        // CHECKSUM-FS hygiene: fc's ChecksumFs rename carries the
+        // source's `.crc` sidecar onto the destination's, but a source
+        // WITHOUT one leaves the destination's old `.marker.crc` in
+        // place — describing STALE content and bricking every later
+        // fs.open(marker) with ChecksumException. fs.create(tmp) on a
+        // checksummed fs writes the tmp's sidecar, so only a crc-less
+        // tmp strands one; drop the marker's sidecar BEFORE the rename
+        // regardless (a crash after the drop leaves the old marker
         // crc-less — readable, missing checksums just skip
-        // verification) and the tmp's after (orphan cleanup).
+        // verification) and the tmp's after (orphan cleanup; a no-op
+        // once the rename has carried it).
         def crcOf(x: org.apache.hadoop.fs.Path) =
           new org.apache.hadoop.fs.Path(x.getParent, s".${x.getName}.crc")
         fs.delete(crcOf(marker), false)

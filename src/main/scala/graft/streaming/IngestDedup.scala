@@ -1,8 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, KeyValueGroupedDataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import graft.functions.{MinHashBands, MinHashExprs, ShingleExprs}
 
 /** Near-dup detection AT INGEST — the dedup a 100 TB pipeline wants to
   * run BEFORE paying to store a document: MinHash-LSH banding applied
@@ -11,14 +19,15 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   *
   * Shape: signatures are row-local (the same native `shingle_sha60` +
   * `minhash_sig` kernels as batch `l2_minhash_lsh`, 16 bands × 4
-  * rows); the only shuffle keys by band bucket, where a
-  * `flatMapGroupsWithState` keeps min(doc_id) seen per bucket. The
-  * emitted stream is one record per (doc, band) with its collision
-  * verdict — collision events are tiny (candidate-sized, not
-  * corpus-sized), and the per-doc rollup (`dup = ANY band collided`,
-  * an LSH candidate in the batch path's sense) composes downstream: a
-  * second hop over the message bus, or a batch rollup over the sink
-  * (IngestDedupSpec drives both the stream and the rollup).
+  * rows, band keys from `minhash_bands`); the only shuffle keys by
+  * band bucket (band, bsig), where a `flatMapGroupsWithState` keeps
+  * min(doc_id) seen per bucket. The emitted stream is one record per
+  * (doc, band) with its collision verdict — collision events are tiny
+  * (candidate-sized, not corpus-sized), and the per-doc rollup
+  * (`dup = ANY band collided`, an LSH candidate in the batch path's
+  * sense) composes downstream: a second hop over the message bus, or a
+  * batch rollup over the sink (IngestDedupSpec drives both the stream
+  * and the rollup).
   *
   * Determinism: keep-first is by doc_id, not arrival order — a batch's
   * verdicts depend only on min(doc_id) across state ∪ batch, so two
@@ -37,19 +46,23 @@ object IngestDedup {
     * bucket has (or this batch contains) a smaller doc_id. */
   final case class BandHit(doc_id: Long, band: Int, dup: Boolean)
 
+  /** One (doc, band) row of the bucket stream, as the state function
+    * reads it (the bucket key itself is the group key). */
+  final case class BandRow(doc_id: Long, band: Int, ts: Timestamp)
+
+  /** The state key: (band, bsig) — `bsig` is `minhash_bands`' packed
+    * band values. Checkpoints written under the earlier string key
+    * (`"$band|v1,v2,v3,v4"`) do not restart on this schema. */
+  type BandKey = (Int, Array[Byte])
+
   def bandCollisions(docs: DataFrame, nBands: Int = 16, rowsPerBand: Int = 4): Dataset[BandHit] = {
     implicit val hitEnc = Encoders.product[BandHit]
     implicit val stateEnc = Encoders.scalaLong
-    bucketStream(docs, nBands, rowsPerBand)
-      .groupByKey { case (_, band, bsig, _) => s"$band|$bsig" }(Encoders.STRING)
+    buckets(docs, nBands, rowsPerBand)
       .flatMapGroupsWithState[Long, BandHit](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, rows: Iterator[(Long, Int, String, java.sql.Timestamp)], state: org.apache.spark.sql.streaming.GroupState[Long]) =>
-          val batch = rows.toVector
-          val batchMin = batch.iterator.map(_._1).min
-          val seenMin = state.getOption.fold(batchMin)(math.min(_, batchMin))
-          state.update(seenMin)
-          batch.iterator.map { case (d, band, _, _) => BandHit(d, band, d > seenMin) }
+        (_: BandKey, rows: Iterator[BandRow], state: GroupState[Long]) =>
+          keepFirst(rows.toVector, state)
       }
   }
 
@@ -74,41 +87,55 @@ object IngestDedup {
                         nBands: Int = 16, rowsPerBand: Int = 4): Dataset[BandHit] = {
     implicit val hitEnc = Encoders.product[BandHit]
     implicit val stateEnc = Encoders.scalaLong
-    bucketStream(docs, nBands, rowsPerBand)
-      .groupByKey { case (_, band, bsig, _) => s"$band|$bsig" }(Encoders.STRING)
+    buckets(docs, nBands, rowsPerBand)
       .flatMapGroupsWithState[Long, BandHit](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: String, rows: Iterator[(Long, Int, String, java.sql.Timestamp)], state: org.apache.spark.sql.streaming.GroupState[Long]) =>
+        (_: BandKey, rows: Iterator[BandRow], state: GroupState[Long]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
             val batch = rows.toVector
-            val batchMin = batch.iterator.map(_._1).min
-            val seenMin = state.getOption.fold(batchMin)(math.min(_, batchMin))
-            state.update(seenMin)
-            state.setTimeoutTimestamp(batch.iterator.map(_._4.getTime).max + horizonMs)
-            batch.iterator.map { case (d, band, _, _) => BandHit(d, band, d > seenMin) }
+            val hits = keepFirst(batch, state)
+            state.setTimeoutTimestamp(batch.iterator.map(_.ts.getTime).max + horizonMs)
+            hits
           }
       }
   }
 
-  /** (doc_id, band, bsig, event time) bucket stream — signatures
-    * row-local, one record per (doc, band). The event-time COLUMN rides
-    * through the projection so the upstream watermark attribute (the
-    * TTL path's timeout clock) survives; `ts` defaults to epoch 0 when
-    * the input carries no event time (the unbounded path). */
-  private def bucketStream(docs: DataFrame, nBands: Int, rowsPerBand: Int) = {
-    val withTs = if (docs.columns.contains("ts")) docs
-      else docs.withColumn("ts", lit(new java.sql.Timestamp(0L)))
-    val sigs = withTs.select(col("doc_id"), col("ts"),
-        graft.functions.MinHashExprs.minhash_sig(
-          graft.functions.ShingleExprs.shingle_sha60(col("text"))).as("sig"))
-    val bands = (0 until nBands).map(bd => struct(
-      lit(bd).as("band"),
-      concat_ws(",", (0 until rowsPerBand).map(r => col("sig")(bd * rowsPerBand + r)): _*).as("bsig")))
-    implicit val tupleEnc =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt, Encoders.STRING, Encoders.TIMESTAMP)
-    sigs.select(col("doc_id"), col("ts"), explode(array(bands: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"), col("ts"))
-      .as[(Long, Int, String, java.sql.Timestamp)]
+  /** Keep-first by doc_id: the bucket's owner is min(doc_id) over state
+    * ∪ batch; every other row of the batch is a dup. */
+  private def keepFirst(batch: Vector[BandRow], state: GroupState[Long]): Iterator[BandHit] = {
+    val batchMin = batch.iterator.map(_.doc_id).min
+    val seenMin = state.getOption.fold(batchMin)(math.min(_, batchMin))
+    state.update(seenMin)
+    batch.iterator.map(r => BandHit(r.doc_id, r.band, r.doc_id > seenMin))
   }
+
+  /** (doc_id, band, bsig, event time) bucket stream grouped by
+    * (band, bsig) — signatures row-local, one record per (doc, band).
+    * The event-time COLUMN rides through the projection so the upstream
+    * watermark attribute (the TTL path's timeout clock) survives; `ts`
+    * defaults to epoch 0 when the input carries no event time (the
+    * unbounded path). Grouping by the two columns keeps the key in
+    * Catalyst (no per-row key lambda). A null body has a null
+    * signature; it keys every band by an EMPTY bsig, so null-body docs
+    * share one bucket per band, as under the string key (whose
+    * `concat_ws` of nulls was ""). */
+  private def buckets(docs: DataFrame, nBands: Int, rowsPerBand: Int)
+      : KeyValueGroupedDataset[BandKey, BandRow] = {
+    val withTs = if (docs.columns.contains("ts")) docs
+      else docs.withColumn("ts", lit(new Timestamp(0L)))
+    val sig = MinHashExprs.minhash_sig(ShingleExprs.shingle_sha60(col("text")))
+    val bands = coalesce(MinHashExprs.minhash_bands(sig, nBands, rowsPerBand), nullBodyBands(nBands))
+    withTs.select(col("doc_id"), col("ts"), explode(bands).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"), col("ts"))
+      .groupBy(col("band"), col("bsig"))
+      .as[BandKey, BandRow](
+        Encoders.tuple(Encoders.scalaInt, Encoders.BINARY), Encoders.product[BandRow])
+  }
+
+  /** `nBands` bands with an empty bsig, as one literal. */
+  private def nullBodyBands(nBands: Int): Column =
+    ColumnBridge.column(Literal(
+      new GenericArrayData(Array.tabulate[Any](nBands)(b => InternalRow(b, Array.emptyByteArray))),
+      MinHashBands.dataType))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, ExpressionEncoder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 
@@ -54,8 +53,7 @@ final class MessageWriterFactory(topicName: Option[String], logName: Option[Stri
 final class MessageDataWriter(topicName: Option[String], logName: Option[String],
                               partitionId: Int) extends DataWriter[InternalRow] {
 
-  private val deserialize = ExpressionEncoder(
-    Message.encoder.asInstanceOf[AgnosticEncoder[Message]]).resolveAndBind().createDeserializer()
+  private lazy val deserialize = MessageReaderFactory.deserializer()
   private val ulids = new UlidGenerator(seed = 42L ^ (partitionId.toLong * 0x9e3779b97f4a7c15L))
   private val buffer = new scala.collection.mutable.ArrayBuffer[Message]()
   private var written = 0L

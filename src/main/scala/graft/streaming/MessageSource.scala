@@ -360,8 +360,7 @@ final class MessageReaderFactory(pollIntervalMs: Long = 1000L) extends Partition
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[MessagePartition]
     new PartitionReader[InternalRow] {
-      private val serializer =
-        ExpressionEncoder(Message.encoder.asInstanceOf[AgnosticEncoder[Message]]).createSerializer()
+      private lazy val serializer = MessageReaderFactory.serializer()
       private val log = ShardLog.getOrCreate(p.logName)
       private var idx = p.startIdx
       private var buf: Iterator[Message] = Iterator.empty
@@ -391,6 +390,27 @@ object MessageReaderFactory {
   /** Records per read — the reference's GetRecords fill size
     * (`KinesisStreamingBuffer.java:41`). */
   val ReadChunk: Int = 1000
+
+  private lazy val encoder =
+    ExpressionEncoder(Message.encoder.asInstanceOf[AgnosticEncoder[Message]]).resolveAndBind()
+
+  /** One Message serializer and deserializer per executor thread.
+    * The first call of either generates a projection's Java source
+    * (then compiles it or finds it in Spark's code cache); a fresh one
+    * per reader or writer would pay that per partition per trigger.
+    * Neither is thread-safe (each reuses its output row),
+    * hence per thread: take one on the thread that calls it (a
+    * continuous reader is created on the task thread but read on a
+    * data-reader thread), and `.copy()` a serialized row before the
+    * next call on that thread. */
+  private final class Codec {
+    lazy val serializer: ExpressionEncoder.Serializer[Message] = encoder.createSerializer()
+    lazy val deserializer: ExpressionEncoder.Deserializer[Message] = encoder.createDeserializer()
+  }
+  private val codec = ThreadLocal.withInitial[Codec](() => new Codec)
+
+  def serializer(): ExpressionEncoder.Serializer[Message] = codec.get.serializer
+  def deserializer(): ExpressionEncoder.Deserializer[Message] = codec.get.deserializer
 }
 
 /** Shared starting-position resolution for micro-batch and continuous
@@ -470,8 +490,7 @@ final class MessageContinuousReaderFactory(pollIntervalMs: Long)
   override def createReader(partition: InputPartition): ContinuousPartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[MessageContinuousPartition]
     new ContinuousPartitionReader[InternalRow] {
-      private val serializer =
-        ExpressionEncoder(Message.encoder.asInstanceOf[AgnosticEncoder[Message]]).createSerializer()
+      private lazy val serializer = MessageReaderFactory.serializer()
       private val log = ShardLog.getOrCreate(p.logName)
       private var idx = p.startIdx // next index to EMIT — getOffset contract
       private var buf: Iterator[Message] = Iterator.empty

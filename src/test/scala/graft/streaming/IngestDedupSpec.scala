@@ -1,9 +1,12 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
@@ -138,6 +141,72 @@ class IngestDedupSpec extends AnyFunSuite {
     }
   }
 
+  /** Streams `batches` of (ts, doc_id, text) through `dedup`, one
+    * micro-batch each (plus any no-data batch a watermark move
+    * triggers), and returns the sorted (doc_id, band, dup) rows. */
+  private def streamed(name: String, batches: Seq[Seq[(Timestamp, Long, String)]])(
+      dedup: DataFrame => Dataset[IngestDedup.BandHit]): Seq[(Long, Int, Boolean)] = {
+    val in = MemoryStream[(Timestamp, Long, String)](spark)
+    val q = dedup(in.toDF().toDF("ts", "doc_id", "text"))
+      .writeStream.format("memory").queryName(name).outputMode("append")
+      .option("checkpointLocation", Files.createTempDirectory("g").toString)
+      .start()
+    try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(name).as[(Long, Int, Boolean)].collect().toSeq.sorted
+  }
+
+  test("null bodies keep the string key's verdicts: 16 bands each, colliding with each other") {
+    val t0 = new Timestamp(0L)
+    val hits = streamed("ingest_null", Seq(Seq(
+      (t0, 1L, "some ordinary text body with enough words"), (t0, 2L, null), (t0, 3L, null))))(
+      IngestDedup.bandCollisions(_))
+    val perDoc = hits.groupBy(_._1).map { case (d, hs) => (d, hs.size, hs.exists(_._3)) }.toSeq.sorted
+    assert(perDoc == Seq((1L, 16, false), (2L, 16, false), (3L, 16, true)))
+  }
+
+  test("binary (band, bsig) key gives the string key's (doc_id, band, dup) rows, unbounded and TTL") {
+    import IngestDedupSpec.{corpus, refCollisions, refCollisionsTtl}
+    val horizonMs = 10 * 60000L
+    def ttl(f: (DataFrame, Long) => Dataset[IngestDedup.BandHit]) =
+      (df: DataFrame) => f(df.withWatermark("ts", "1 minute"), horizonMs)
+    val ref = streamed("ingest_eq_ref", corpus)(refCollisions)
+    val got = streamed("ingest_eq_new", corpus)(IngestDedup.bandCollisions(_))
+    assert(got == ref)
+    val refTtl = streamed("ingest_eq_ref_ttl", corpus)(ttl(refCollisionsTtl))
+    val gotTtl = streamed("ingest_eq_new_ttl", corpus)(ttl(IngestDedup.bandCollisionsTtl(_, _)))
+    assert(gotTtl == refTtl)
+    // the corpus exercises every kind of collision, and the horizon bites
+    val nDocs = corpus.map(_.size).sum
+    assert(ref.size == 16 * nDocs && refTtl.size == 16 * nDocs)
+    val dups = ref.filter(_._3).map(_._1).toSet
+    val dupsTtl = refTtl.filter(_._3).map(_._1).toSet
+    assert(IngestDedupSpec.mustCollide.subsetOf(dups), s"dup docs: $dups")
+    assert(dups.size < nDocs / 2, s"dup docs: $dups")
+    assert(dupsTtl.nonEmpty && dupsTtl != dups, s"TTL dups $dupsTtl vs unbounded $dups")
+  }
+
+  test("a checkpoint written under the string key fails loudly on restart") {
+    val text = "identical payload text repeated verbatim across the docs"
+    val ckpt = Files.createTempDirectory("g").toString
+    val in = MemoryStream[(Long, String)](spark)
+    def start(dedup: DataFrame => Dataset[IngestDedup.BandHit]) =
+      dedup(in.toDF().toDF("doc_id", "text"))
+        .writeStream.outputMode("append")
+        .foreachBatch { (df: Dataset[IngestDedup.BandHit], _: Long) => df.collect(); () }
+        .option("checkpointLocation", ckpt).start()
+    val q1 = start(IngestDedupSpec.refCollisions)
+    in.addData((1L, text))
+    q1.processAllAvailable()
+    q1.stop()
+    val q2 = start(IngestDedup.bandCollisions(_))
+    try {
+      in.addData((2L, text))
+      val e = intercept[StreamingQueryException](q2.processAllAvailable())
+      assert(e.getMessage.contains("STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"), e.getMessage)
+    } finally q2.stop()
+  }
+
   test("same-batch race resolves keep-first by doc_id, not arrival order") {
     val text = "identical payload text repeated verbatim across both docs " +
       "so every band signature matches exactly between the pair"
@@ -157,8 +226,95 @@ class IngestDedupSpec extends AnyFunSuite {
   }
 }
 
-/** Static sink so the RocksDB restart test's foreachBatch closure
-  * survives the query restart (the StreamingTckSpec pattern). */
 object IngestDedupSpec {
+  /** Static sink so the RocksDB restart test's foreachBatch closure
+    * survives the query restart (the StreamingTckSpec pattern). */
   val rocksHits = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Boolean)]()
+
+  /** The string-key spelling `IngestDedup` shipped before its binary
+    * (band, bsig) key, kept as the reference: `nBands` structs of
+    * `concat_ws` over the band's signature values, grouped by a
+    * `"$band|$bsig"` key lambda. */
+  private def refBuckets(docs: DataFrame, nBands: Int = 16, rowsPerBand: Int = 4) = {
+    val withTs = if (docs.columns.contains("ts")) docs
+      else docs.withColumn("ts", lit(new Timestamp(0L)))
+    val sigs = withTs.select(col("doc_id"), col("ts"),
+      graft.functions.MinHashExprs.minhash_sig(
+        graft.functions.ShingleExprs.shingle_sha60(col("text"))).as("sig"))
+    val bands = (0 until nBands).map(bd => struct(
+      lit(bd).as("band"),
+      concat_ws(",", (0 until rowsPerBand).map(r => col("sig")(bd * rowsPerBand + r)): _*).as("bsig")))
+    implicit val tupleEnc =
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt, Encoders.STRING, Encoders.TIMESTAMP)
+    sigs.select(col("doc_id"), col("ts"), explode(array(bands: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"), col("ts"))
+      .as[(Long, Int, String, Timestamp)]
+      .groupByKey { case (_, band, bsig, _) => s"$band|$bsig" }(Encoders.STRING)
+  }
+
+  private def refKeepFirst(batch: Vector[(Long, Int, String, Timestamp)],
+                           state: GroupState[Long]): Iterator[IngestDedup.BandHit] = {
+    val batchMin = batch.iterator.map(_._1).min
+    val seenMin = state.getOption.fold(batchMin)(math.min(_, batchMin))
+    state.update(seenMin)
+    batch.iterator.map { case (d, band, _, _) => IngestDedup.BandHit(d, band, d > seenMin) }
+  }
+
+  def refCollisions(docs: DataFrame): Dataset[IngestDedup.BandHit] = {
+    implicit val hitEnc = Encoders.product[IngestDedup.BandHit]
+    implicit val stateEnc = Encoders.scalaLong
+    refBuckets(docs).flatMapGroupsWithState[Long, IngestDedup.BandHit](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+      (_: String, rows: Iterator[(Long, Int, String, Timestamp)], state: GroupState[Long]) =>
+        refKeepFirst(rows.toVector, state)
+    }
+  }
+
+  def refCollisionsTtl(docs: DataFrame, horizonMs: Long): Dataset[IngestDedup.BandHit] = {
+    implicit val hitEnc = Encoders.product[IngestDedup.BandHit]
+    implicit val stateEnc = Encoders.scalaLong
+    refBuckets(docs).flatMapGroupsWithState[Long, IngestDedup.BandHit](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+      (_: String, rows: Iterator[(Long, Int, String, Timestamp)], state: GroupState[Long]) =>
+        if (state.hasTimedOut) { state.remove(); Iterator.empty }
+        else {
+          val batch = rows.toVector
+          val hits = refKeepFirst(batch, state)
+          state.setTimeoutTimestamp(batch.iterator.map(_._4.getTime).max + horizonMs)
+          hits
+        }
+    }
+  }
+
+  /** Docs every spelling must flag: a near-dup (one word changed), an
+    * exact copy, a repeated one-word doc, a second empty string and a
+    * second null body. */
+  val mustCollide: Set[Long] = Set(101L, 102L, 103L, 104L, 105L)
+
+  /** Seeded corpus in four micro-batches: originals at minute 0 and 5,
+    * then (after the watermark has passed the 10-minute horizon) copies
+    * and near-dups of the first batch at minute 60-61. Ids do not follow
+    * arrival order, so later batches hold smaller ids too. */
+  val corpus: Seq[Seq[(Timestamp, Long, String)]] = {
+    val rnd = new scala.util.Random(20261019L)
+    val vocab = Vector.tabulate(60)(i => s"w$i")
+    def body(n: Int) = Vector.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    def ts(min: Long) = new Timestamp((min + 100) * 60000L)
+    def nearDup(t: String) = {
+      val ws = t.split(" ")
+      ws(rnd.nextInt(ws.length)) = "edited"
+      ws.mkString(" ")
+    }
+    // doc 10 is long, so its one-word near-dup collides on some band for sure
+    val b1 = Seq.tabulate(24)(i => (ts(0), 10L + 3 * i, body(if (i == 0) 40 else 8 + rnd.nextInt(16)))) ++
+      Seq((ts(0), 1L, "solo"), (ts(0), 2L, "two words"), (ts(0), 3L, ""), (ts(0), 4L, null))
+    val b2 = Seq.tabulate(16)(i => (ts(5), 200L + i, body(8 + rnd.nextInt(16)))) ++ Seq(
+      (ts(5), 101L, nearDup(b1(0)._3)), (ts(5), 102L, b1(1)._3), (ts(5), 103L, "solo"),
+      (ts(5), 104L, ""), (ts(5), 105L, null), (ts(5), 5L, b1(5)._3))
+    val b3 = Seq((ts(60), 300L, body(12)))
+    val b4 = Seq.tabulate(6)(i => (ts(61), 400L + i, nearDup(b1(2 + i)._3))) ++
+      Seq((ts(61), 6L, b1(10)._3), (ts(61), 410L, b2(3)._3), (ts(61), 411L, "two words"),
+        (ts(61), 412L, null), (ts(61), 413L, "words two"))
+    Seq(b1, b2, b3, b4)
+  }
 }
