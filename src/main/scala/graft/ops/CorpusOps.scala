@@ -1,9 +1,14 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
+import graft.functions.{MinHashBands, MinHashExprs, ShingleExprs}
 import graft.functions.VectorExprs.vec_cos
 import graft.queries.QueryDef.sha60
 
@@ -27,9 +32,9 @@ import graft.queries.QueryDef.sha60
 object CorpusOps {
 
   /** Jaccard near-dup threshold, fixed at 4/5: the ppjoin positional
-    * filter and the LSH length filter below encode T/(1+T) = 4/9 and
-    * T = 4/5 as exact integer ratios — keep them in sync if T ever
-    * changes. */
+    * filter in [[nearDupPairs]] and `l2_minhash_lsh`'s length filter
+    * encode T/(1+T) = 4/9 and T = 4/5 as exact integer ratios — keep
+    * them in sync if T ever changes. */
   val JaccardThreshold = 0.8
 
   private val T = JaccardThreshold
@@ -1876,6 +1881,81 @@ object CorpusOps {
       .join(broadcast(queries.select(col("qid"), col("embedding").as("qe"))), "qid")
       .filter(col("vid") =!= col("qid"))
       .withColumn("simr", round(vec_cos(col("qe"), col("ve")), 6)), topK)
+
+  // ---- the LSH banding kit: one spelling of the near-dup family's
+  // banding (l2_minhash_lsh, l2_minhash_estimate, l2_lsh_sweep,
+  // l2_simhash, l5_binary_neardup and the streaming IngestDedup). A
+  // MinHash band is keyed by (band, bsig) from the native
+  // `minhash_bands` kernel in batch and stream alike; the DuckDB
+  // oracles spell their own banding and never call the kit. ----
+
+  /** Per-doc MinHash signatures (doc_id, arr, sig, sz): `arr` the doc's
+    * distinct 60-bit word-3-gram hashes (`shingle_sha60`), `sig` its 64
+    * minima (`minhash_sig`), `sz` = |arr|. Row-local — no shuffle. */
+  private[graft] def minhashSigs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), ShingleExprs.shingle_sha60(col("text")).as("arr"))
+      .withColumn("sig", MinHashExprs.minhash_sig(col("arr")))
+      .withColumn("sz", size(col("arr")))
+
+  /** One row per (doc, band): every column of `df` but `sig`, then
+    * (band, bsig) from `minhash_bands(sig, nBands, rowsPerBand)`. The
+    * signature is the `sig` column unless given as an expression (the
+    * stream passes its kernel call, so no column is projected for it).
+    * A null signature (null body) keys every band by an EMPTY bsig:
+    * null-body docs share one bucket per band and never meet a real
+    * signature. */
+  private[graft] def lshBands(df: DataFrame, nBands: Int, rowsPerBand: Int,
+                              sig: Column = col("sig")): DataFrame = {
+    val keep = df.columns.filter(_ != "sig").map(col)
+    val nullSigBands = ColumnBridge.column(Literal(
+      new GenericArrayData(Array.tabulate[Any](nBands)(b => InternalRow(b, Array.emptyByteArray))),
+      MinHashBands.dataType))
+    val bands = coalesce(MinHashExprs.minhash_bands(sig, nBands, rowsPerBand), nullSigBands)
+    df.select(keep :+ explode(bands).as("bk"): _*)
+      .select(keep :+ col("bk.band").as("band") :+ col("bk.bsig").as("bsig"): _*)
+  }
+
+  /** Distinct candidate pairs (d1 < d2) sharing a (band, bsig) bucket
+    * of [[lshBands]] output. `pairFilter` is an extra join condition
+    * over the two sides aliased `x` and `y` (e.g. a length filter). */
+  private[graft] def lshCandidates(bands: DataFrame, pairFilter: Column = lit(true)): DataFrame =
+    bands.as("x").join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
+        col("x.doc_id") < col("y.doc_id") && pairFilter)
+      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")).distinct()
+
+  /** SimHash pairs within the banding's guaranteed radius: `sigs` holds
+    * (id, sig) rows by POSITION (60-bit signatures), `n` the corpus
+    * size. k = ⌈60 / w⌉ chunks of w bits guarantee (pigeonhole) that
+    * every pair with hamming <= k − 1 shares a chunk. The width is
+    * SCALE-PARAMETERIZED: w = max(6, ⌈log2((n + 511) / 512)⌉) keeps
+    * expected bucket occupancy ~512 docs, so background candidates
+    * stay ~k·n·512/2 — linear in n — instead of the k·n²/2^(w+1) a
+    * fixed width degenerates to (docs/PERF.md). The price at huge n is
+    * a narrower radius (Manku et al. WWW'07 run 64-bit fingerprints at
+    * radius 3): pairs are emitted at hamming <= min(9, k − 1) — 9 for
+    * n <= 32768 (w = 6, k = 10), 6 at n = 262144 (w = 9, k = 7).
+    * Returns (d1 < d2, hamming), the pair columns named by `pair` (the
+    * binary cell's are m1, m2). */
+  private[graft] def simhashPairs(sigs: DataFrame, n: Long,
+                                  pair: (String, String) = ("d1", "d2")): DataFrame = {
+    val Array(id, sig) = sigs.columns
+    val w = math.max(6, ceilLog2((n + 511) / 512))
+    val k = (60 + w - 1) / w
+    val chunks = (0 until k).map(c => struct(
+      lit(c).as("c"),
+      shiftright(col(sig), c * w).bitwiseAND((1L << math.min(w, 60 - c * w)) - 1).as("v")))
+    val bu = sigs.select(col(id), col(sig), explode(array(chunks: _*)).as("ck"))
+      .select(col(id), col(sig), col("ck.c").as("c"), col("ck.v").as("v"))
+    val (p1, p2) = pair
+    bu.as("x").join(bu.as("y"), Seq("c", "v"))
+      .filter(col(s"x.$id") < col(s"y.$id"))
+      .select(col(s"x.$id").as(p1), col(s"x.$sig").as("s1"),
+              col(s"y.$id").as(p2), col(s"y.$sig").as("s2"))
+      .distinct()
+      .select(col(p1), col(p2), expr("cast(bit_count(s1 ^ s2) as int)").as("hamming"))
+      .filter(col("hamming") <= math.min(9, k - 1))
+  }
 
   // ---- the cosine-IVF kit: one spelling of the IVF-over-cosine steps
   // the embedding family shares (l3_ann_ivf, l3_nprobe_sweep, the kNN

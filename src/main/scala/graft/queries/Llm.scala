@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorExprs.vec_cos
-import graft.ops.CorpusOps.{ceilLog2, cellScores, cosineCells, sqrtSeedCents,
-  subPlaneVal, topPerQuery}
+import graft.ops.CorpusOps.{JaccardThreshold, ceilLog2, cellScores, cosineCells, lshBands,
+  lshCandidates, minhashSigs, nearDupPairs, simhashPairs, sqrtSeedCents, subPlaneVal,
+  topPerQuery, verifiedJaccard}
 import QueryDef.sha60
 
 /** LLM-data-pipeline operators over `documents` / `embeddings`
@@ -26,10 +27,6 @@ import QueryDef.sha60
   *    with only aggregated or candidate-pair-sized intermediates.
   */
 object Llm {
-
-  private val T = 0.8 // Jaccard near-dup threshold (= 4/5: the ppjoin
-  // positional filter in jaccardPairsOf encodes T/(1+T) as the exact
-  // integer ratio 4/9 — keep them in sync if T ever changes)
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
 
@@ -58,16 +55,6 @@ object Llm {
       |  CAST(concat('0x', substr(sha256(sh), 1, 15)) AS BIGINT) AS h FROM s),
       |sz AS (SELECT doc_id, count(*) AS sz FROM sh2 GROUP BY doc_id)""".stripMargin
 
-  /** Exact Jaccard over candidate pairs and pre-collected per-doc
-    * DISTINCT-hash arrays (doc_id, arr, sz). The candidate set is tiny
-    * after filtering, so intersection counting joins each pair against
-    * ONE row per doc and intersects in-memory — two small hash joins
-    * instead of a row-level join against the corpus-sized shingle
-    * table. Shared by the prefix-filter and MinHash paths.
-    */
-  private def verifiedJaccardArr(cand: DataFrame, arrs: DataFrame): DataFrame =
-    graft.ops.CorpusOps.verifiedJaccard(cand, arrs)
-
   /** CTE chain ending in `pairs(d1, d2, j)` — the exact near-dup pair
     * set (prefix-filter algorithm, independently spelled in SQL).
     * Shared by the l2 pair oracles and the cluster oracle. */
@@ -76,7 +63,7 @@ object Llm {
        |pr AS (SELECT doc_id, h FROM (
        |  SELECT sh2.doc_id, h, row_number() OVER (PARTITION BY sh2.doc_id ORDER BY h) AS rn, sz.sz
        |  FROM sh2 JOIN sz ON sh2.doc_id = sz.doc_id)
-       |  WHERE rn <= sz - ceil(sz * $T) + 1),
+       |  WHERE rn <= sz - ceil(sz * $JaccardThreshold) + 1),
        |cand AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
        |  FROM pr a JOIN pr b ON a.h = b.h AND a.doc_id < b.doc_id),
        |i AS (SELECT c.d1, c.d2, count(*) AS i
@@ -84,12 +71,44 @@ object Llm {
        |  JOIN sh2 b ON b.doc_id = c.d2 AND b.h = a.h GROUP BY c.d1, c.d2),
        |pairs AS (SELECT d1, d2, CAST(i AS DOUBLE) / (x.sz + y.sz - i) AS j
        |  FROM i JOIN sz x ON x.doc_id = d1 JOIN sz y ON y.doc_id = d2
-       |  WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= $T)""".stripMargin
+       |  WHERE CAST(i AS DOUBLE) / (x.sz + y.sz - i) >= $JaccardThreshold)""".stripMargin
 
   /** The exact near-dup pair set as DuckDB SQL — oracle for both l2
     * pair variants. */
   private val jaccardOracle =
     s"WITH $jaccardPairsCte SELECT d1, d2, j FROM pairs ORDER BY d1, d2"
+
+  /** CTE chain `e`, `reach`, `comp(doc_id, cluster_id)` — the true
+    * transitive closure of the undirected pair table `src(d1, d2)`,
+    * cluster_id = the smallest reachable doc_id (a recursive CTE: the
+    * query must open with WITH RECURSIVE). Shared by the cluster
+    * oracles. */
+  private def closureCte(src: String): String =
+    s"""e AS (SELECT d1 AS a, d2 AS b FROM $src UNION SELECT d2 AS a, d1 AS b FROM $src),
+       |reach AS (SELECT a, b FROM e
+       |  UNION SELECT r.a AS a, e.b AS b FROM reach r JOIN e ON e.a = r.b),
+       |comp AS (SELECT a AS doc_id, least(a, MIN(b)) AS cluster_id FROM reach GROUP BY a)""".stripMargin
+
+  /** Cluster table (cluster_id, doc_id, cluster_size) of the closure
+    * over `src`, after the near-dup pair CTEs and any `ctes` (each
+    * ending in ",\n"). The oracle of the three cluster-maintenance
+    * cells. */
+  private def clustersOracle(src: String, ctes: String = ""): String =
+    s"""WITH RECURSIVE $jaccardPairsCte,
+       |$ctes${closureCte(src)}
+       |SELECT cluster_id, doc_id,
+       |       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
+       |FROM comp ORDER BY cluster_id, doc_id""".stripMargin
+
+  /** CTEs `perm`, `sg(doc_id, k, mh)`: the native MinHash kernel's 64
+    * LCG permutations replayed component-for-component in SQL over
+    * `sh2`. Shared by the MinHash oracles. */
+  private val minhashSgCte =
+    """perm AS (SELECT k, (1103515245 * k + 12345) % 1000000007 AS a,
+      |                (69069 * k + 1) % 1000000007 AS b
+      |         FROM (SELECT unnest(range(0, 64)) AS k)),
+      |sg AS (SELECT doc_id, k, MIN(((h % 1000000007) * a + b) % 1000000007) AS mh
+      |       FROM sh2, perm GROUP BY doc_id, k)""".stripMargin
 
   // ---------------------------------------------------------------- L1
   private val l1 = QueryDef(
@@ -116,10 +135,7 @@ object Llm {
   /** The exact near-dup pair set (d1, d2, j), unordered — shared by
     * l2_jaccard_pairs and the l6 cleanup pipeline. */
   private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    jaccardPairsOf(t(s, dir, "documents"))
-
-  private def jaccardPairsOf(docs: DataFrame): DataFrame =
-    graft.ops.CorpusOps.nearDupPairs(docs)
+    nearDupPairs(t(s, dir, "documents"))
 
   private val l2 = QueryDef(
     "l2_jaccard_pairs",
@@ -154,10 +170,9 @@ object Llm {
 
   // MinHash + banded LSH: 64 permutations ((a_k*h + b_k) mod P over the
   // portable sha-60 shingle hash), 16 bands x 4 rows, bucket-join for
-  // candidates, then exact-Jaccard verification. The oracle is the
-  // exact pair set — so this also checks LSH recall, not just shape.
-  private val NPERM = graft.functions.MinHashes.NPERM // perms live in the native kernel
-
+  // candidates (the CorpusOps banding kit), then exact-Jaccard
+  // verification. The oracle is the exact pair set — so this also
+  // checks LSH recall, not just shape.
   private val l2minhash = QueryDef(
     "l2_minhash_lsh",
     (s, dir) => {
@@ -172,15 +187,7 @@ object Llm {
       // bit-identical signatures, candidates, and pair set. Cached
       // intermediate is doc-count-sized — the signature table a 100 TB
       // run would materialize to storage anyway.
-      val doc = cached(t(s, dir, "documents").select(col("doc_id"),
-          graft.functions.ShingleExprs.shingle_sha60(col("text")).as("arr"))
-        .withColumn("sig", graft.functions.MinHashExprs.minhash_sig(col("arr")))
-        .withColumn("sz", size(col("arr"))))
-      val bands = (0 until NPERM / 4).map(bd => struct(
-        lit(bd).as("band"),
-        concat_ws(",", (0 until 4).map(r => col("sig")(bd * 4 + r)): _*).as("bsig")))
-      val buckets = doc.select(col("doc_id"), col("sz"), explode(array(bands: _*)).as("bk"))
-        .select(col("doc_id"), col("sz"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
+      val doc = cached(minhashSigs(t(s, dir, "documents")))
       // length filter inside the bucket join (same exact integer form
       // as the jaccard path: J >= 4/5 forces 5*min(sz) >= 4*max(sz)) —
       // bands collide heavily on merely-similar pairs (a 4-row band
@@ -188,12 +195,9 @@ object Llm {
       // that cannot pass the threshold shouldn't reach the candidate
       // distinct or the verification joins. Provably lossless, so the
       // exact-pair-set oracle is unchanged.
-      val cand = buckets.as("x").join(buckets.as("y"),
-          col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
-          col("x.doc_id") < col("y.doc_id") &&
-          least(col("x.sz"), col("y.sz")) * 5 >= greatest(col("x.sz"), col("y.sz")) * 4)
-        .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")).distinct()
-      verifiedJaccardArr(cand, doc.select("doc_id", "arr", "sz"))
+      val cand = lshCandidates(lshBands(doc.select("doc_id", "sig", "sz"), 16, 4),
+        least(col("x.sz"), col("y.sz")) * 5 >= greatest(col("x.sz"), col("y.sz")) * 4)
+      verifiedJaccard(cand, doc.select("doc_id", "arr", "sz"))
     },
     Some(jaccardOracle))
 
@@ -211,9 +215,7 @@ object Llm {
   private val l2minhashEst = QueryDef(
     "l2_minhash_estimate",
     (s, dir) => {
-      val doc = t(s, dir, "documents").select(col("doc_id"),
-          graft.functions.ShingleExprs.shingle_sha60(col("text")).as("arr"))
-        .withColumn("sig", graft.functions.MinHashExprs.minhash_sig(col("arr")))
+      val doc = minhashSigs(t(s, dir, "documents"))
       jaccardPairs(s, dir)
         .join(doc.select(col("doc_id").as("d1"), col("sig").as("sig1")), "d1")
         .join(doc.select(col("doc_id").as("d2"), col("sig").as("sig2")), "d2")
@@ -225,11 +227,7 @@ object Llm {
         .orderBy("d1", "d2")
     },
     Some(s"""WITH $jaccardPairsCte,
-            |perm AS (SELECT k, (1103515245 * k + 12345) % 1000000007 AS a,
-            |                (69069 * k + 1) % 1000000007 AS b
-            |         FROM (SELECT unnest(range(0, 64)) AS k)),
-            |sg AS (SELECT doc_id, k, MIN(((h % 1000000007) * a + b) % 1000000007) AS mh
-            |       FROM sh2, perm GROUP BY doc_id, k),
+            |$minhashSgCte,
             |m AS (SELECT p.d1, p.d2, p.j,
             |        count(CASE WHEN s1.mh = s2.mh THEN 1 END) AS n_match
             |      FROM pairs p JOIN sg s1 ON s1.doc_id = p.d1
@@ -255,25 +253,16 @@ object Llm {
   private lazy val l2sweep = QueryDef(
     "l2_lsh_sweep",
     (s, dir) => {
-      val doc = cached(t(s, dir, "documents").select(col("doc_id"),
-          graft.functions.ShingleExprs.shingle_sha60(col("text")).as("arr"))
-        .withColumn("sig", graft.functions.MinHashExprs.minhash_sig(col("arr"))))
+      val doc = cached(minhashSigs(t(s, dir, "documents")).drop("sz")) // no length filter
       val truth = cached(jaccardPairs(s, dir).select(col("d1"), col("d2")))
+      val nPerm = graft.functions.MinHashes.NPERM
       Seq(2, 4, 8).map { r =>
-        val bands = (0 until NPERM / r).map(bd => struct(
-          lit(bd).as("band"),
-          concat_ws(",", (0 until r).map(i => col("sig")(bd * r + i)): _*).as("bsig")))
-        val buckets = doc.select(col("doc_id"), explode(array(bands: _*)).as("bk"))
-          .select(col("doc_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-        val cand = buckets.as("x").join(buckets.as("y"),
-            col("x.band") === col("y.band") && col("x.bsig") === col("y.bsig") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2")).distinct()
+        val cand = lshCandidates(lshBands(doc.select("doc_id", "sig"), nPerm / r, r))
         cand.agg(count(lit(1)).as("n_cand"))
           .crossJoin(truth.agg(count(lit(1)).as("n_true")))
           .crossJoin(cand.join(truth, Seq("d1", "d2"), "semi")
             .agg(count(lit(1)).as("true_found")))
-          .select(lit(r).as("r"), lit(NPERM / r).as("n_bands"),
+          .select(lit(r).as("r"), lit(nPerm / r).as("n_bands"),
             col("n_cand"), col("n_true"), col("true_found"),
             when(col("n_cand") > 0,
               round(col("true_found") / col("n_cand"), 6))
@@ -297,11 +286,7 @@ object Llm {
       }.mkString(",\n")
       val unions = Seq(2, 4, 8).map(r => s"SELECT * FROM o$r").mkString("\nUNION ALL ")
       s"""WITH $jaccardPairsCte,
-         |perm AS (SELECT k, (1103515245 * k + 12345) % 1000000007 AS a,
-         |                (69069 * k + 1) % 1000000007 AS b
-         |         FROM (SELECT unnest(range(0, 64)) AS k)),
-         |sg AS (SELECT doc_id, k, MIN(((h % 1000000007) * a + b) % 1000000007) AS mh
-         |       FROM sh2, perm GROUP BY doc_id, k),
+         |$minhashSgCte,
          |$perR,
          |u AS ($unions)
          |SELECT r, n_bands, n_cand, n_true, true_found,
@@ -324,14 +309,7 @@ object Llm {
     "l2_dup_clusters",
     (s, dir) => graft.ops.CorpusOps.dupClusters(jaccardPairs(s, dir))
       .orderBy("cluster_id", "doc_id"),
-    Some(s"""WITH RECURSIVE $jaccardPairsCte,
-            |e AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2 AS a, d1 AS b FROM pairs),
-            |reach AS (SELECT a, b FROM e
-            |  UNION SELECT r.a AS a, e.b AS b FROM reach r JOIN e ON e.a = r.b),
-            |comp AS (SELECT a AS doc_id, least(a, MIN(b)) AS cluster_id FROM reach GROUP BY a)
-            |SELECT cluster_id, doc_id,
-            |       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-            |FROM comp ORDER BY cluster_id, doc_id""".stripMargin))
+    Some(clustersOracle("pairs")))
 
   // INCREMENTAL cluster maintenance (l2_incremental_clusters): the
   // production ingest shape for duplicate-CLUSTER ids — docs split
@@ -353,20 +331,13 @@ object Llm {
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val batch = docs.filter(col("doc_id") % 10 === 0)
-      val stored = graft.ops.CorpusOps.dupClusters(jaccardPairsOf(corpus))
+      val stored = graft.ops.CorpusOps.dupClusters(nearDupPairs(corpus))
       val bp = graft.ops.CorpusOps.nearDupPairs(batch)
       val cp = graft.ops.CorpusOps.nearDupPairsAgainst(corpus, batch)
       graft.ops.CorpusOps.incrementalClusters(stored, bp, cp)
         .orderBy("cluster_id", "doc_id")
     },
-    Some(s"""WITH RECURSIVE $jaccardPairsCte,
-            |e AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2 AS a, d1 AS b FROM pairs),
-            |reach AS (SELECT a, b FROM e
-            |  UNION SELECT r.a AS a, e.b AS b FROM reach r JOIN e ON e.a = r.b),
-            |comp AS (SELECT a AS doc_id, least(a, MIN(b)) AS cluster_id FROM reach GROUP BY a)
-            |SELECT cluster_id, doc_id,
-            |       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-            |FROM comp ORDER BY cluster_id, doc_id""".stripMargin))
+    Some(clustersOracle("pairs")))
 
   // CLUSTER MAINTENANCE UNDER DELETES (l2_incremental_delete): the
   // removal half l2_incremental_clusters leaves open. Every 7th doc is
@@ -392,44 +363,22 @@ object Llm {
       graft.ops.CorpusOps.removeFromClusters(stored, pairs, removed)
         .orderBy("cluster_id", "doc_id")
     },
-    Some(s"""WITH RECURSIVE $jaccardPairsCte,
-            |pf AS (SELECT d1, d2 FROM pairs WHERE d1 % 7 <> 0 AND d2 % 7 <> 0),
-            |e AS (SELECT d1 AS a, d2 AS b FROM pf UNION SELECT d2 AS a, d1 AS b FROM pf),
-            |reach AS (SELECT a, b FROM e
-            |  UNION SELECT r.a AS a, e.b AS b FROM reach r JOIN e ON e.a = r.b),
-            |comp AS (SELECT a AS doc_id, least(a, MIN(b)) AS cluster_id FROM reach GROUP BY a)
-            |SELECT cluster_id, doc_id,
-            |       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-            |FROM comp ORDER BY cluster_id, doc_id""".stripMargin))
+    Some(clustersOracle("pf",
+      "pf AS (SELECT d1, d2 FROM pairs WHERE d1 % 7 <> 0 AND d2 % 7 <> 0),\n")))
 
-  // SimHash: 60-bit signature from sha-60 shingle hashes; banding into
-  // k chunks of w bits guarantees (pigeonhole) every pair with
-  // hamming <= k-1 shares a chunk. The chunk width is SCALE-
-  // PARAMETERIZED: w = max(6, ceil(log2(n/512))) keeps expected bucket
-  // occupancy ~512 docs, so background candidates stay ~k*n*512/2 —
-  // LINEAR in n — instead of the quadratic k*n^2/2^(w+1) a fixed width
-  // degenerates to (formula in docs/PERF.md). The price at huge n is a
-  // narrower guaranteed radius (k-1 shrinks as w grows — the
-  // production simhash tradeoff; Manku et al. WWW'07 run 64-bit
-  // fingerprints at radius 3): the emitted threshold is
-  // min(9, k-1), exact for the radius the width budget affords. For
-  // n <= 32768 w stays 6, k = 10, threshold 9 (every sf fixture is
-  // well under that); past it the width budget tightens the radius —
-  // at n = 262144, w = 9, k = 7, radius 6.
-  // The oracle derives the identical w/k from count(*), so the banding
-  // structure matches bit-for-bit at any sf. Output: pairs with
-  // hamming <= min(9, k-1) (empirically: planted near-dups land at
-  // 1..9, background >= 20). n comes from a parquet count() at plan
-  // build — metadata-only, and unavoidable: the chunk count is the
-  // arity of an explode, fixed at planning like AQE's stats.
+  // SimHash: 60-bit signature from sha-60 shingle hashes, chunk-banded
+  // by CorpusOps.simhashPairs (scale-derived chunk width w, pigeonhole
+  // radius min(9, k-1): 9 at every sf fixture). The oracle derives the
+  // identical w/k from count(*), so the banding structure matches
+  // bit-for-bit at any sf. Output: pairs within the radius
+  // (empirically: planted near-dups land at 1..9, background >= 20).
+  // n comes from a parquet count() at plan build — metadata-only, and
+  // unavoidable: the chunk count is the arity of an explode, fixed at
+  // planning like AQE's stats.
   private val l2simhash = QueryDef(
     "l2_simhash",
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      val n = docs.count()
-      val w = math.max(6, ceilLog2((n + 511) / 512))
-      val k = (60 + w - 1) / w
-      val radius = math.min(9, k - 1)
       // signature per doc in ONE native pass over the shingle kernel's
       // distinct-hash array (bit i set iff strictly more hashes have it
       // set than clear — the same SUM(+/-1) > 0 rule the oracle spells
@@ -440,20 +389,7 @@ object Llm {
       val sig = docs.select(col("doc_id"),
         graft.functions.SimHashExprs.simhash_sig(
           graft.functions.ShingleExprs.shingle_sha60(col("text"))).as("sig"))
-      val chunks = (0 until k).map(c => struct(
-        lit(c).as("c"),
-        shiftright(col("sig"), c * w).bitwiseAND((1L << math.min(w, 60 - c * w)) - 1).as("v")))
-      val bu = sig.select(col("doc_id"), col("sig"), explode(array(chunks: _*)).as("ck"))
-        .select(col("doc_id"), col("sig"), col("ck.c").as("c"), col("ck.v").as("v"))
-      bu.as("x").join(bu.as("y"), Seq("c", "v"))
-        .filter(col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("d1"), col("x.sig").as("s1"),
-                col("y.doc_id").as("d2"), col("y.sig").as("s2"))
-        .distinct()
-        .select(col("d1"), col("d2"),
-          expr("cast(bit_count(s1 ^ s2) as int)").as("hamming"))
-        .filter(col("hamming") <= radius)
-        .orderBy("d1", "d2")
+      simhashPairs(sig, docs.count()).orderBy("d1", "d2")
     },
     Some(s"""WITH $shinglesSql,
             |h AS (SELECT doc_id, CAST(concat('0x', substr(sha256(sh),1,15)) AS BIGINT) AS h FROM s),
@@ -2626,10 +2562,7 @@ object Llm {
         .orderBy("cluster_id", "doc_id")
     },
     Some(s"""WITH RECURSIVE $jaccardPairsCte,
-            |e AS (SELECT d1 AS a, d2 AS b FROM pairs UNION SELECT d2 AS a, d1 AS b FROM pairs),
-            |reach AS (SELECT a, b FROM e
-            |  UNION SELECT r.a AS a, e.b AS b FROM reach r JOIN e ON e.a = r.b),
-            |comp AS (SELECT a AS doc_id, least(a, MIN(b)) AS cluster_id FROM reach GROUP BY a),
+            |${closureCte("pairs")},
             |qq AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
             |qn AS (SELECT doc_id, len(ws) AS n_tok, ${stopCountDuck(enS)} AS stop_n FROM qq),
             |ql AS (SELECT doc_id, ${qualityDuck("n_tok", "stop_n")} AS quality FROM qn),
@@ -2646,9 +2579,9 @@ object Llm {
   // their byte-level SimHash signatures sit within a small Hamming
   // radius. Pipeline: payload bytes -> overlapping byte-4-gram strings
   // over the hex encoding (row-local HOFs) -> distinct-gram 60-bit
-  // hashes -> the native simhash_sig kernel -> the l2_simhash
-  // chunk-banding join (w scale-parameterized the same way, so
-  // background candidates stay linear as the corpus grows). The
+  // hashes -> the native simhash_sig kernel -> l2_simhash's
+  // CorpusOps.simhashPairs chunk banding (background candidates stay
+  // linear as the corpus grows). The
   // fixture payload is the UTF-8 text bytes — real media payloads flow
   // through the identical plan (the signature never looks inside the
   // gram strings). Candidates are banded, never all-pairs; signatures
@@ -2657,10 +2590,6 @@ object Llm {
     "l5_binary_neardup",
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      val n = docs.count()
-      val w = math.max(6, ceilLog2((n + 511) / 512))
-      val k = (60 + w - 1) / w
-      val radius = math.min(9, k - 1)
       val sig = docs
         .select(col("doc_id").as("media_id"), upper(hex(col("text").cast("binary"))).as("hx"))
         .withColumn("gs", expr(
@@ -2673,20 +2602,7 @@ object Llm {
             // to Catalyst) so the array satisfies the kernel's
             // containsNull=false contract; the 0L arm never fires
             "transform(gs, g -> coalesce(cast(conv(substring(sha2(g, 256), 1, 15), 16, 10) as bigint), 0L))")).as("sig"))
-      val chunks = (0 until k).map(c => struct(
-        lit(c).as("c"),
-        shiftright(col("sig"), c * w).bitwiseAND((1L << math.min(w, 60 - c * w)) - 1).as("v")))
-      val bu = sig.select(col("media_id"), col("sig"), explode(array(chunks: _*)).as("ck"))
-        .select(col("media_id"), col("sig"), col("ck.c").as("c"), col("ck.v").as("v"))
-      bu.as("x").join(bu.as("y"), Seq("c", "v"))
-        .filter(col("x.media_id") < col("y.media_id"))
-        .select(col("x.media_id").as("m1"), col("x.sig").as("s1"),
-                col("y.media_id").as("m2"), col("y.sig").as("s2"))
-        .distinct()
-        .select(col("m1"), col("m2"),
-          expr("cast(bit_count(s1 ^ s2) as int)").as("hamming"))
-        .filter(col("hamming") <= radius)
-        .orderBy("m1", "m2")
+      simhashPairs(sig, docs.count(), ("m1", "m2")).orderBy("m1", "m2")
     },
     Some("""WITH bn AS (SELECT doc_id AS media_id, upper(hex(encode(text))) AS hx FROM documents),
             g AS (SELECT media_id, CASE WHEN len(hx) >= 8

@@ -2,15 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, KeyValueGroupedDataset}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.{MinHashBands, MinHashExprs, ShingleExprs}
+import graft.functions.{MinHashExprs, ShingleExprs}
+import graft.ops.CorpusOps
 
 /** Near-dup detection AT INGEST — the dedup a 100 TB pipeline wants to
   * run BEFORE paying to store a document: MinHash-LSH banding applied
@@ -18,8 +15,8 @@ import graft.functions.{MinHashBands, MinHashExprs, ShingleExprs}
   * held in keyed streaming state.
   *
   * Shape: signatures are row-local (the same native `shingle_sha60` +
-  * `minhash_sig` kernels as batch `l2_minhash_lsh`, 16 bands × 4
-  * rows, band keys from `minhash_bands`); the only shuffle keys by
+  * `minhash_sig` kernels and the same `CorpusOps.lshBands` banding as
+  * batch `l2_minhash_lsh`, 16 bands × 4 rows); the only shuffle keys by
   * band bucket (band, bsig), where a `flatMapGroupsWithState` keeps
   * min(doc_id) seen per bucket. The emitted stream is one record per
   * (doc, band) with its collision verdict — collision events are tiny
@@ -111,31 +108,23 @@ object IngestDedup {
   }
 
   /** (doc_id, band, bsig, event time) bucket stream grouped by
-    * (band, bsig) — signatures row-local, one record per (doc, band).
-    * The event-time COLUMN rides through the projection so the upstream
-    * watermark attribute (the TTL path's timeout clock) survives; `ts`
-    * defaults to epoch 0 when the input carries no event time (the
-    * unbounded path). Grouping by the two columns keeps the key in
-    * Catalyst (no per-row key lambda). A null body has a null
-    * signature; it keys every band by an EMPTY bsig, so null-body docs
-    * share one bucket per band, as under the string key (whose
-    * `concat_ws` of nulls was ""). */
+    * (band, bsig) — the banding kit's [[CorpusOps.lshBands]] over the
+    * row-local signature, one record per (doc, band). The event-time
+    * COLUMN rides through the projection so the upstream watermark
+    * attribute (the TTL path's timeout clock) survives; `ts` defaults
+    * to epoch 0 when the input carries no event time (the unbounded
+    * path). Grouping by the two columns keeps the key in Catalyst (no
+    * per-row key lambda). Null-body docs share one bucket per band, as
+    * under the earlier string key. */
   private def buckets(docs: DataFrame, nBands: Int, rowsPerBand: Int)
       : KeyValueGroupedDataset[BandKey, BandRow] = {
     val withTs = if (docs.columns.contains("ts")) docs
       else docs.withColumn("ts", lit(new Timestamp(0L)))
     val sig = MinHashExprs.minhash_sig(ShingleExprs.shingle_sha60(col("text")))
-    val bands = coalesce(MinHashExprs.minhash_bands(sig, nBands, rowsPerBand), nullBodyBands(nBands))
-    withTs.select(col("doc_id"), col("ts"), explode(bands).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"), col("ts"))
+    CorpusOps.lshBands(withTs, nBands, rowsPerBand, sig)
+      .select(col("doc_id"), col("band"), col("bsig"), col("ts"))
       .groupBy(col("band"), col("bsig"))
       .as[BandKey, BandRow](
         Encoders.tuple(Encoders.scalaInt, Encoders.BINARY), Encoders.product[BandRow])
   }
-
-  /** `nBands` bands with an empty bsig, as one literal. */
-  private def nullBodyBands(nBands: Int): Column =
-    ColumnBridge.column(Literal(
-      new GenericArrayData(Array.tabulate[Any](nBands)(b => InternalRow(b, Array.emptyByteArray))),
-      MinHashBands.dataType))
 }

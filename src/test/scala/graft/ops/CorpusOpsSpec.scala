@@ -1,5 +1,8 @@
 package graft.ops
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -545,6 +548,72 @@ class CorpusOpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val pairs = CorpusOps.nearDupPairs(docs).as[(Long, Long, Double)].collect().toSeq
     assert(pairs == Seq((0L, 40L, 1.0)))
+  }
+
+  test("LSH banding kit: stream IngestDedup verdicts == batch lshCandidates over the docs arrived so far") {
+    val rows = graft.Tables(spark, SparkFixture.sfDir, "documents")
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    // three micro-batches, each spanning the id range: later batches
+    // bring smaller ids as well as larger ones
+    val batches = (0 until 3).map(b => rows.filter(r => 2 - r._1 % 3 == b))
+    val in = MemoryStream[(Long, String)](spark)
+    val q = graft.streaming.IngestDedup.bandCollisions(in.toDF().toDF("doc_id", "text"))
+      .writeStream.format("memory").queryName("kit_stream").outputMode("append")
+      .option("checkpointLocation", Files.createTempDirectory("g").toString)
+      .start()
+    try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    val stream = spark.table("kit_stream").groupBy("doc_id").agg(max(col("dup")))
+      .as[(Long, Boolean)].collect().toMap
+    // keep-first sees only what has arrived: a doc of batch i is a dup
+    // iff it is the d2 of a band candidate among batches 0..i
+    def d2s(docs: Seq[(Long, String)]): Set[Long] = {
+      val sigs = CorpusOps.minhashSigs(docs.toDF("doc_id", "text"))
+      CorpusOps.lshCandidates(CorpusOps.lshBands(sigs.select("doc_id", "sig"), 16, 4))
+        .select("d2").as[Long].collect().toSet
+    }
+    val batch = batches.indices.flatMap { i =>
+      val seen = d2s(batches.take(i + 1).flatten)
+      batches(i).map(r => r._1 -> seen(r._1))
+    }.toMap
+    assert(stream == batch)
+    // the fixture exercises both a plain collision and a smaller id
+    // arriving after its larger twin (whose verdict stays clean)
+    val whole = d2s(rows)
+    assert(batch.values.count(identity) > 0)
+    assert(batch.exists { case (d, dup) => dup != whole(d) },
+      "no colliding pair arrived larger id first")
+  }
+
+  test("simhashPairs finds every pair within the radius, at three chunk widths") {
+    val fixture = graft.Tables(spark, SparkFixture.sfDir, "documents")
+      .select(col("doc_id"), graft.functions.SimHashExprs.simhash_sig(
+        graft.functions.ShingleExprs.shingle_sha60(col("text"))).as("sig"))
+      .as[(Long, Long)].collect().toSeq
+    // plus planted variants at hamming 1..12 from seeded bases, the
+    // flipped bits anywhere in the 60, so pairs straddle every chunk
+    val rnd = new scala.util.Random(7L)
+    val planted = (0 until 30).flatMap { b =>
+      val base = rnd.nextLong() & ((1L << 60) - 1)
+      (0 to 12).map { d =>
+        val bits = rnd.shuffle((0 until 60).toList).take(d)
+        (1000000L + b * 100 + d, bits.foldLeft(base)((s, i) => s ^ (1L << i)))
+      }
+    }
+    val all = fixture ++ planted
+    val sigs = all.toDF("doc_id", "sig")
+    // n sets the chunk width: w = 6 (k = 10), 9 (k = 7, a 6-bit last
+    // chunk) and 18 (k = 4, a 6-bit last chunk); radius min(9, k - 1)
+    for ((n, radius) <- Seq((all.size.toLong, 9), (200000L, 6), (1L << 26, 3))) {
+      val got = CorpusOps.simhashPairs(sigs, n).as[(Long, Long, Int)].collect().toSeq
+      val brute = for {
+        (a, i) <- all.zipWithIndex; (b, j) <- all.zipWithIndex if i < j
+        h = java.lang.Long.bitCount(a._2 ^ b._2) if h <= radius
+      } yield (math.min(a._1, b._1), math.max(a._1, b._1), h)
+      assert(got.size == got.distinct.size, s"n = $n: duplicate pairs")
+      assert(got.toSet == brute.toSet, s"n = $n: ${brute.toSet.diff(got.toSet).take(5)} missed")
+      assert(brute.count(_._1 < 1000000L) > 0 && brute.exists(_._3 == radius), s"n = $n: fixture too easy")
+    }
   }
 
   test("topPrincipalDirection recovers a planted dominant direction") {
