@@ -62,13 +62,20 @@ object BenchSession {
         System.err.println(s"[bench] $label failed: ${e.getMessage}")
         -1.0
     }
-    spark.sharedState.cacheManager.clearCache() // after timing, not inside it
-    // local-checkpoint RDD blocks (the dup-cluster rounds) live at the
-    // RDD level, invisible to the SQL cache manager — release whatever
-    // the cleared caches left behind so repeated cold runs measure the
-    // same storage baseline instead of accumulating dead round tables
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    releaseCaches(spark) // after timing, not inside it
     elapsed
+  }
+
+  /** Drop every cache a query left in the session: the SQL cache
+    * manager's entries, then the RDD blocks. Local-checkpoint RDD
+    * blocks (the dup-cluster rounds) live at the RDD level, invisible
+    * to the SQL cache manager — release whatever the cleared caches
+    * left behind so the next query starts from the same storage
+    * baseline (and plans no `InMemoryRelation` over an earlier
+    * query's cache). */
+  def releaseCaches(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
   }
 
   /** Time one registry query through the noop sink (see timeNoop). */

@@ -4,6 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** Per-query measurement on BenchSession's session — the quick loop the
@@ -37,13 +38,19 @@ object Measure {
       case "profile" => names.foreach(profile(spark, dir, _, runs.getOrElse(1)))
       case "explain" => names.foreach { n =>
         println(s"===== $n =====")
-        SparkEntry.queries.get(n) match {
-          case Some(fn) => fn(spark, dir).explain("formatted")
-          case None => println(s"[explain] unknown query: $n")
-        }
+        println(explain(spark, dir, n).getOrElse(s"[explain] unknown query: $n"))
       }
     } finally spark.stop()
   }
+
+  /** The formatted physical plan of registry query `name`, or None for
+    * an unknown name. The caches its build left are released after, so
+    * cells explained in one session plan as they do one JVM each. */
+  def explain(spark: SparkSession, dir: String, name: String): Option[String] =
+    SparkEntry.queries.get(name).map { fn =>
+      try fn(spark, dir).queryExecution.explainString(ExplainMode.fromString("formatted"))
+      finally BenchSession.releaseCaches(spark)
+    }
 
   private def time(spark: SparkSession, dir: String, name: String, runs: Int): Unit = {
     val times = (1 to runs).map { i =>

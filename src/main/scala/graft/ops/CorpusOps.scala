@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -385,6 +385,52 @@ object CorpusOps {
         size(expr(s"slice(ws, chunk_id * $stride + 1, $window)")).cast("long").as("n_tok"),
         expr(s"concat_ws(' ', slice(ws, chunk_id * $stride + 1, $window))").as("chunk"))
 
+  /** One (doc_id, w1, w2) row per adjacent word pair of each doc's
+    * space-split text (docs shorter than two words emit none) — the
+    * occurrence table the bigram language models count over. Row-local. */
+  private[graft] def bigramRows(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("ws", split(col("text"), " "))
+      .filter(size(col("ws")) >= 2)
+      .select(col("doc_id"), explode(
+        expr("transform(sequence(0, size(ws)-2), i -> struct(ws[i] as w1, ws[i+1] as w2))")).as("b"))
+      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+
+  // ---- the doc-id hash order: one spelling of the content-independent
+  // 60-bit id hash every deterministic sampler, shuffle and packer
+  // ranks by (stratifiedSample, hashSample, packSequences, the l8
+  // sampling/shuffle cells and TrainDataPipeline's budget stage). The
+  // oracles spell the hash in SQL and never call the kit. ----
+
+  /** The 60-bit id hash sha60(doc_id as string) — reproducible across
+    * runs, partitionings and engines. */
+  private[graft] def idHash: Column = sha60(col("doc_id").cast("string"))
+
+  /** The (hk, doc_id) order within `partition`; `hk` holds [[idHash]]. */
+  private[graft] def hashOrder(partition: String): WindowSpec =
+    Window.partitionBy(partition).orderBy(col("hk").asc, col("doc_id").asc)
+
+  /** row_number() in the [[hashOrder]] of `partition`: 1 = lowest hash. */
+  private[graft] def hashRank(partition: String): Column =
+    row_number().over(hashOrder(partition))
+
+  /** The A-ES uniform draw u = ((idHash mod 1000003) + 0.5) / 1000003,
+    * strictly inside (0, 1): the weighted samplers' key is u^(1/q). */
+  private[graft] def idUniform: Column = {
+    val m = 1000003L
+    ((idHash % m) + 0.5) / m
+  }
+
+  /** Deterministic corpus shuffle + sharding: (doc_id, shard, pos) with
+    * shard = [[idHash]] mod `nshards` and pos = [[hashRank]] within the
+    * shard. One corpus shuffle keyed by shard, then per-shard local
+    * sorts — no global window. */
+  private[graft] def shuffleOrder(docs: DataFrame, nshards: Long): DataFrame =
+    docs.select(col("doc_id"), idHash.as("hk"))
+      .withColumn("shard", pmod(col("hk"), lit(nshards)))
+      .withColumn("pos", hashRank("shard"))
+      .select("doc_id", "shard", "pos")
+
   /** Fixed-length training-sequence layout (the GPT-style pack): within
     * each deterministic shard (60-bit id-hash mod `nshards`, the
     * shuffle-order rule), docs concatenate in (hash, doc_id) order and
@@ -396,11 +442,10 @@ object CorpusOps {
     * doc emits at most ceil(n_tok/seqLen)+1 pieces. Integer arithmetic
     * end-to-end. */
   def packSequences(docs: DataFrame, seqLen: Long = 256L, nshards: Long = 16L): DataFrame = {
-    val w = Window.partitionBy("shard").orderBy(col("hk").asc, col("doc_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val w = hashOrder("shard").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docs
       .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tok"),
-        sha60(col("doc_id").cast("string")).as("hk"))
+        idHash.as("hk"))
       .withColumn("shard", pmod(col("hk"), lit(nshards)))
       .withColumn("en", sum(col("n_tok")).over(w))
       .withColumn("st", col("en") - col("n_tok"))
@@ -418,11 +463,8 @@ object CorpusOps {
     * the exchange (no literal-limit pushdown applies). For petabyte
     * strata use [[hashSample]] instead — no sort at all. */
   def stratifiedSample(docs: DataFrame, stratum: String, denom: Int = 10): DataFrame = {
-    val ranked = docs.select(col(stratum), col("doc_id"),
-      sha60(col("doc_id").cast("string")).as("hk"))
-    val w = Window.partitionBy(stratum).orderBy(col("hk").asc, col("doc_id").asc)
-    ranked
-      .withColumn("rn", row_number().over(w))
+    docs.select(col(stratum), col("doc_id"), idHash.as("hk"))
+      .withColumn("rn", hashRank(stratum))
       .withColumn("n", count(lit(1)).over(Window.partitionBy(stratum)))
       .filter(expr(s"rn <= (n + ${denom - 1}) div $denom"))
   }
@@ -432,7 +474,7 @@ object CorpusOps {
     * reproducible across runs and engines; the quota is binomial-
     * approximate — the production trade at corpus scale. */
   def hashSample(docs: DataFrame, denom: Int = 10): DataFrame =
-    docs.withColumn("hk", sha60(col("doc_id").cast("string")))
+    docs.withColumn("hk", idHash)
       .filter(col("hk") < (1L << 60) / denom)
 
   /** Connected components over a near-dup pair graph: every doc that
@@ -2300,15 +2342,63 @@ object CorpusOps {
     * contributions from the maintained df/N/Σdl view. */
   def bm25StatRows(docs: DataFrame, terms: Seq[String], mult: Int): DataFrame = {
     require(terms.nonEmpty, "bm25StatRows needs a term catalog")
-    val termsArr = terms.map(w => s"'$w'").mkString("array(", ",", ")")
     val ws = docs.withColumn("_ws", split(col("text"), " "))
     val dl = ws.select(lit("len").as("stat"), lit("*").as("k"),
       size(col("_ws")).cast("long").as("v"), lit(mult.toLong).as("_mult"))
     val df = ws.select(explode(
-        expr(s"array_distinct(filter(_ws, w -> array_contains($termsArr, w)))")).as("k"))
+        expr(s"array_distinct(filter(_ws, w -> array_contains(${termArray(terms)}, w)))")).as("k"))
       .select(lit("df").as("stat"), col("k"), lit(1L).as("v"),
         lit(mult.toLong).as("_mult"))
     dl.unionByName(df)
+  }
+
+  // ---- the BM25 kit: one spelling of the l4_bm25 family's per-(doc,
+  // term) rows and its scorer, so a fresh search (l4_bm25) and a
+  // search over maintained state (l4_bm25_incremental) rank with the
+  // same code. The oracles spell BM25 in SQL and never call the kit. ----
+
+  /** The SQL array literal of a term catalog: array('a','b',...). */
+  private def termArray(terms: Seq[String]): String =
+    terms.map(w => s"'$w'").mkString("array(", ",", ")")
+
+  /** (doc_id, term, tf, dl): one row per doc and catalog term it holds,
+    * tf = occurrences, dl = the doc's word count (constant per doc, so
+    * it rides the exploded hits — no corpus-keyed join back to a
+    * doc-length table). The explode filters to the catalog at the scan,
+    * so the one shuffle is candidate-bounded. tf and dl are linear:
+    * signed copies maintain under [[TableOps.maintainAggCounted]]. */
+  private[graft] def bm25TfRows(docs: DataFrame, terms: Seq[String]): DataFrame =
+    docs.withColumn("ws", split(col("text"), " "))
+      .select(col("doc_id"), size(col("ws")).as("dl"), explode(col("ws")).as("term"))
+      .filter(expr(s"array_contains(${termArray(terms)}, term)"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
+
+  /** BM25 top-`k` (rnk, doc_id, score) — Okapi, Lucene form (the
+    * (k1+1) numerator dropped as rank-equivalent; k1 = 1.2, b = 0.75)
+    * — over `tf` ([[bm25TfRows]]), `df` (term, df) and the one-row
+    * `stats` (n_docs, avgdl). Deterministic: idf and each per-(doc,
+    * term) contribution round to 9 and sum EXACTLY as DECIMAL(18,9)
+    * (libm ln ulps die at the round; no float reassociation in the
+    * per-doc sum); the cut orders by the exact decimal score with a
+    * doc_id tie-break and compiles to TakeOrderedAndProject. */
+  private[graft] def bm25Top(tf: DataFrame, df: DataFrame, stats: DataFrame,
+                             k: Int): DataFrame = {
+    val scored = tf.join(df, "term").crossJoin(stats)
+      .select(col("doc_id"),
+        round(
+          round(log(lit(1.0) +
+            ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
+              (col("df").cast("double") + lit(0.5))), 9) *
+          (col("tf").cast("double") /
+            (col("tf").cast("double") + lit(1.2) * (lit(0.25) +
+              lit(0.75) * (col("dl").cast("double") / col("avgdl"))))), 9)
+          .cast("decimal(18,9)").as("c"))
+    val perDoc = scored.groupBy("doc_id").agg(sum(col("c")).as("sc"))
+    val top = perDoc.orderBy(col("sc").desc, col("doc_id").asc).limit(k)
+      .select(col("doc_id"), round(col("sc").cast("double"), 6).as("score"))
+    top.withColumn("rnk",
+        row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
+      .select("rnk", "doc_id", "score").orderBy("rnk")
   }
 
   /** Build the complete [[CorpusArtifacts]] bundle FROM SCRATCH over

@@ -94,12 +94,10 @@ object TrainDataPipeline {
     // table is budget-sized and cached (curated join + funnel both
     // read it). Deterministic: same corpus, same budget -> same ids.
     val sampledIds = sampleBudget.map { budget =>
-      val m = 1000003L
       scope.cached(afterSpan.select(col("doc_id"))
         .join(flagged.select(col("doc_id"),
           TextScores.quality(col("n_tok"), col("stop_n")).as("qw")), Seq("doc_id"))
-        .withColumn("u",
-          ((graft.queries.QueryDef.sha60(col("doc_id").cast("string")) % m) + 0.5) / m)
+        .withColumn("u", CorpusOps.idUniform)
         .withColumn("k", pow(col("u"), lit(1.0) / col("qw")))
         .orderBy(desc("k"), asc("doc_id")).limit(budget.toInt)
         .select(col("doc_id")))

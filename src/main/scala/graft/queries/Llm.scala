@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorExprs.vec_cos
-import graft.ops.CorpusOps.{JaccardThreshold, ceilLog2, cellScores, cosineCells, lshBands,
-  lshCandidates, minhashSigs, nearDupPairs, simhashPairs, sqrtSeedCents, subPlaneVal,
+import graft.ops.TextScores
+import graft.ops.CorpusOps.{JaccardThreshold, bigramRows, bm25StatRows, bm25TfRows, bm25Top,
+  ceilLog2, cellScores, cosineCells, hashRank, idHash, idUniform, lshBands, lshCandidates,
+  minhashSigs, nearDupPairs, shuffleOrder, simhashPairs, sqrtSeedCents, subPlaneVal,
   topPerQuery, verifiedJaccard}
 import QueryDef.sha60
 
@@ -1834,17 +1836,15 @@ object Llm {
   private def stopCountDuck(langWords: Seq[String]): String =
     s"len(list_filter(ws, x -> x IN (${langWords.map(w => s"'$w'").mkString(", ")})))"
 
-  private val enS = graft.ops.TextScores.enStopwords
+  private val enS = TextScores.enStopwords
   private val deS = Seq("der", "die", "das", "und")
   private val esS = Seq("el", "la", "los", "y")
   private val frS = Seq("le", "les", "et", "des")
 
-  /** Quality score shared by l4_quality, l6_corpus_clean, and the
-    * TrainDataPipeline gate — one definition per engine
-    * (graft.ops.TextScores) so the oracles can never drift apart. */
-  private def qualityCol(nTok: Column, stopN: Column): Column =
-    graft.ops.TextScores.quality(nTok, stopN)
-
+  /** Quality score in DuckDB SQL — the oracle twin of
+    * [[graft.ops.TextScores.quality]], which l4_quality, l6_corpus_clean
+    * and the TrainDataPipeline gate call directly — one definition per
+    * engine so the oracles can never drift apart. */
   private def qualityDuck(nTok: String, stopN: String): String =
     s"""round(0.4 * least(CAST($nTok AS DOUBLE) / 100.0, 1.0) + 0.3 * least(CAST($stopN AS DOUBLE) / $nTok * 5.0, 1.0) + 0.3, 6)"""
 
@@ -1891,7 +1891,7 @@ object Llm {
         .select(col("doc_id"), col("n_tok"),
           ((length(col("text")) - col("n_tok") + 1).cast("double") / col("n_tok")).as("avg_wlen"),
           (col("stop_n").cast("double") / col("n_tok")).as("stop_ratio"),
-          qualityCol(col("n_tok"), col("stop_n")).as("quality"))
+          TextScores.quality(col("n_tok"), col("stop_n")).as("quality"))
         .orderBy("doc_id")
     },
     Some(s"""WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS ws FROM documents),
@@ -1972,12 +1972,7 @@ object Llm {
     * l4_lm_score notes above). Shared by l4_lm_score and
     * l8_ppl_bucket. */
   private def lmXent(docs: DataFrame): DataFrame = {
-    val bi = docs
-      .withColumn("ws", split(col("text"), " "))
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"), explode(
-        expr("transform(sequence(0, size(ws)-2), i -> struct(ws[i] as w1, ws[i+1] as w2))")).as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+    val bi = bigramRows(docs)
     val cb = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
     val cu = bi.groupBy("w1").agg(count(lit(1)).as("cu"))
     val v = broadcast(bi.agg(countDistinct(col("w2")).cast("double").as("v")))
@@ -1989,16 +1984,21 @@ object Llm {
       .agg(count(lit(1)).as("n_bigrams"), avg(col("nlp")).as("x"))
   }
 
-  /** CTE chain ending in `agg(doc_id, n_bigrams, x)` — the bigram-LM
-    * per-doc cross-entropy, independently spelled in DuckDB SQL.
-    * Shared by the l4_lm_score and l8_ppl_bucket oracles. */
-  private val lmCte =
+  /** The `w` (doc_id, ws) and `bi` (doc_id, w1, w2) CTEs — the bigram
+    * occurrence rows in DuckDB SQL, shared by the bigram-LM oracles. */
+  private val bigramCte =
     """w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
       |bi AS (SELECT doc_id,
       |         string_split(bg, ' ')[1] AS w1, string_split(bg, ' ')[2] AS w2
       |       FROM (SELECT doc_id, unnest(list_transform(
       |               generate_series(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1])) AS bg
-      |             FROM w WHERE len(ws) >= 2)),
+      |             FROM w WHERE len(ws) >= 2))""".stripMargin
+
+  /** CTE chain ending in `agg(doc_id, n_bigrams, x)` — the bigram-LM
+    * per-doc cross-entropy, independently spelled in DuckDB SQL.
+    * Shared by the l4_lm_score and l8_ppl_bucket oracles. */
+  private val lmCte =
+    s"""$bigramCte,
       |cb AS (SELECT w1, w2, count(*) AS cb FROM bi GROUP BY w1, w2),
       |cu AS (SELECT w1, count(*) AS cu FROM bi GROUP BY w1),
       |v AS (SELECT CAST(count(DISTINCT w2) AS DOUBLE) AS v FROM bi),
@@ -2041,12 +2041,7 @@ object Llm {
   private val l4kn = QueryDef(
     "l4_kn_lm",
     (s, dir) => {
-      val bi = t(s, dir, "documents")
-        .withColumn("ws", split(col("text"), " "))
-        .filter(size(col("ws")) >= 2)
-        .select(col("doc_id"), explode(
-          expr("transform(sequence(0, size(ws)-2), i -> struct(ws[i] as w1, ws[i+1] as w2))")).as("b"))
-        .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+      val bi = bigramRows(t(s, dir, "documents"))
       val cb = bi.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
       val ctx = bi.groupBy("w1")
         .agg(count(lit(1)).as("cu"), countDistinct("w2").as("n1f"))
@@ -2063,12 +2058,7 @@ object Llm {
           round(col("x"), 6).as("xent"), round(exp(col("x")), 6).as("ppl"))
         .orderBy("doc_id")
     },
-    Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-            |bi AS (SELECT doc_id,
-            |         string_split(bg, ' ')[1] AS w1, string_split(bg, ' ')[2] AS w2
-            |       FROM (SELECT doc_id, unnest(list_transform(
-            |               generate_series(1, len(ws) - 1), i -> ws[i] || ' ' || ws[i+1])) AS bg
-            |             FROM w WHERE len(ws) >= 2)),
+    Some(s"""WITH $bigramCte,
             |cb AS (SELECT w1, w2, count(*) AS cb FROM bi GROUP BY w1, w2),
             |ctx AS (SELECT w1, count(*) AS cu, count(DISTINCT w2) AS n1f
             |        FROM bi GROUP BY w1),
@@ -2245,7 +2235,7 @@ object Llm {
       .withColumn("n_tok", size(col("ws")))
       .withColumn("en_n", expr(stopCount(enS))).withColumn("de_n", expr(stopCount(deS)))
       .withColumn("es_n", expr(stopCount(esS))).withColumn("fr_n", expr(stopCount(frS)))
-      .withColumn("quality", qualityCol(col("n_tok"), col("en_n"))) // en stopwords = quality stoplist
+      .withColumn("quality", TextScores.quality(col("n_tok"), col("en_n"))) // en stopwords = quality stoplist
       .withColumn("pred", langPredCol)
     annotated
       .filter(col("quality") >= 0.6)
@@ -2333,7 +2323,7 @@ object Llm {
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_tok", size(col("ws")))
         .withColumn("stop_n", expr(stopCount(enS)))
-        .select(col("doc_id"), (qualityCol(col("n_tok"), col("stop_n")) >= 0.6).as("q_ok"))
+        .select(col("doc_id"), (TextScores.quality(col("n_tok"), col("stop_n")) >= 0.6).as("q_ok"))
       val nearDrop = stages.nearDupDropIds.withColumn("is_near", lit(true))
       val c = flagged
         .join(stages.keepers.select(col("doc_id"), lit(true).as("is_keeper")), Seq("doc_id"), "left")
@@ -2552,7 +2542,7 @@ object Llm {
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_tok", size(col("ws")))
         .withColumn("stop_n", expr(stopCount(enS)))
-        .select(col("doc_id"), qualityCol(col("n_tok"), col("stop_n")).as("quality"))
+        .select(col("doc_id"), TextScores.quality(col("n_tok"), col("stop_n")).as("quality"))
       val w = Window.partitionBy("cluster_id").orderBy(col("quality").desc, col("doc_id").asc)
       graft.ops.CorpusOps.dupClusters(jaccardPairs(s, dir))
         .join(q, "doc_id")
@@ -2729,13 +2719,12 @@ object Llm {
   private val l8weighted = QueryDef(
     "l8_weighted_sample",
     (s, dir) => {
-      val M = 1000003L
       val keyed = t(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_tok", size(col("ws")))
         .withColumn("stop_n", expr(stopCount(enS)))
-        .select(col("doc_id"), qualityCol(col("n_tok"), col("stop_n")).as("quality"))
-        .withColumn("u", ((sha60(col("doc_id").cast("string")) % M) + 0.5) / M)
+        .select(col("doc_id"), TextScores.quality(col("n_tok"), col("stop_n")).as("quality"))
+        .withColumn("u", idUniform)
         .withColumn("key", round(pow(col("u"), lit(1.0) / col("quality")), 6))
       keyed.orderBy(desc("key"), asc("doc_id")).limit(100)
         .withColumn("rank", row_number().over(Window.orderBy(desc("key"), asc("doc_id"))))
@@ -3006,9 +2995,8 @@ object Llm {
       val quotas = mixturePlanOf(docs).crossJoin(budget)
         .select(col("lang"),
           least(col("n"), greatest(lit(1L), floor(col("mix_share") * col("budget")))).as("quota"))
-      val w = Window.partitionBy("lang").orderBy(col("hk").asc, col("doc_id").asc)
-      docs.select(col("lang"), col("doc_id"), sha60(col("doc_id").cast("string")).as("hk"))
-        .withColumn("pos", row_number().over(w))
+      docs.select(col("lang"), col("doc_id"), idHash.as("hk"))
+        .withColumn("pos", hashRank("lang"))
         .join(broadcast(quotas), Seq("lang"))
         .filter(col("pos") <= col("quota"))
         .select(col("lang"), col("pos").cast("long").as("pos"), col("doc_id"), col("quota"))
@@ -3040,13 +3028,7 @@ object Llm {
   private val l8shuffle = QueryDef(
     "l8_shuffle_order",
     (s, dir) => {
-      val w = Window.partitionBy("shard").orderBy(col("hk").asc, col("doc_id").asc)
-      t(s, dir, "documents")
-        .select(col("doc_id"), sha60(col("doc_id").cast("string")).as("hk"))
-        .withColumn("shard", pmod(col("hk"), lit(16L)))
-        .withColumn("pos", row_number().over(w))
-        .select("doc_id", "shard", "pos")
-        .orderBy("shard", "pos")
+      shuffleOrder(t(s, dir, "documents"), 16L).orderBy("shard", "pos")
     },
     Some("""WITH h AS (SELECT doc_id,
               CAST(concat('0x', substr(sha256(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hk
@@ -3079,7 +3061,7 @@ object Llm {
         .agg(count(lit(1)).as("n_docs"),
              sum(col("n_tok").cast("long")).as("n_tokens"),
              count(when(col("cnt") > 1, lit(1))).as("dup_docs"),
-             round(avg(qualityCol(col("n_tok"), col("stop_n"))), 6).as("mean_quality"))
+             round(avg(TextScores.quality(col("n_tok"), col("stop_n"))), 6).as("mean_quality"))
         .orderBy("source")
     },
     Some(s"""WITH w AS (SELECT doc_id, source, text, string_split(text, ' ') AS ws FROM documents),
@@ -3418,6 +3400,36 @@ object Llm {
            |            WHEN 0 THEN 10 WHEN 1 THEN 20 WHEN 2 THEN 25 ELSE 50 END)) // 1000 AS BIGINT) AS duration_ms
            |FROM documents ORDER BY media_id""".stripMargin))
 
+  /** The query-term catalog every BM25 cell and the corpus cascade
+    * score against. */
+  private val bm25Terms = Seq("table", "scan", "join", "merge")
+
+  /** The BM25 oracle chain dl → st → tf → idf → sc → agg → top over a
+    * source CTE `src` of (doc_id, ws) rows, ending in the ranked
+    * top-20 SELECT — shared by the l4_bm25 and l4_bm25_incremental
+    * oracles, which differ only in their source. */
+  private def bm25OracleChain(src: String): String =
+    s"""dl AS (SELECT doc_id, len(ws) AS dl FROM $src),
+       |st AS (SELECT count(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
+       |tf AS (SELECT doc_id, term, count(*) AS tf
+       |       FROM (SELECT doc_id, unnest(ws) AS term FROM $src)
+       |       WHERE term IN ('table','scan','join','merge')
+       |       GROUP BY doc_id, term),
+       |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+       |sc AS (SELECT tf.doc_id,
+       |         CAST(round(
+       |           round(ln(1.0 + (CAST(st.n_docs - idf.df AS DOUBLE) + 0.5)
+       |                          / (CAST(idf.df AS DOUBLE) + 0.5)), 9)
+       |           * (CAST(tf.tf AS DOUBLE)
+       |              / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75
+       |                 * (CAST(dl.dl AS DOUBLE) / st.avgdl)))), 9) AS DECIMAL(18,9)) AS c
+       |       FROM tf JOIN idf USING (term) JOIN dl USING (doc_id), st),
+       |agg AS (SELECT doc_id, SUM(c) AS sc FROM sc GROUP BY doc_id),
+       |top AS (SELECT doc_id, round(CAST(sc AS DOUBLE), 6) AS score
+       |        FROM agg ORDER BY sc DESC, doc_id LIMIT 20)
+       |SELECT row_number() OVER (ORDER BY score DESC, doc_id) AS rnk, doc_id, score
+       |FROM top ORDER BY rnk""".stripMargin
+
   // BM25 RETRIEVAL (Okapi, Lucene form — the (k1+1) numerator dropped
   // as rank-equivalent; k1 = 1.2, b = 0.75): score every document
   // against a fixed 4-term query and return the top-20 — the lexical
@@ -3430,67 +3442,23 @@ object Llm {
   // N/avgdl ride as ONE action-free broadcast aggregate, doc length
   // rides the exploded hits (no corpus-keyed join back to a length
   // table), and the top-20 compiles to TakeOrderedAndProject
-  // (per-partition top-k, never a global sort). Determinism: idf and
-  // each per-(doc,term)
-  // contribution round to 9 then sum EXACTLY as DECIMAL(18,9) (libm
-  // ln ulps die at the round; no float reassociation in the per-doc
-  // sum), the limit-20 cut orders by the exact decimal score with a
-  // doc_id tiebreak.
+  // (per-partition top-k, never a global sort). Determinism: see
+  // CorpusOps.bm25Top, the one scorer (l4_bm25_incremental ranks with
+  // it too).
   private val l4bm25 = QueryDef(
     "l4_bm25",
     (s, dir) => {
       implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.sessionOwned
-      val terms = Seq("table", "scan", "join", "merge")
-      val termsArr = terms.map(w => s"'$w'").mkString("array(", ",", ")")
-      val docs = t(s, dir, "documents").withColumn("ws", split(col("text"), " "))
-      val stats = broadcast(docs.agg(count(lit(1)).as("n_docs"),
-        (sum(size(col("ws"))).cast("double") / count(lit(1))).as("avgdl")))
-      // dl rides the exploded hits (constant per doc), so tf needs no
-      // corpus-keyed join back to a doc-length table — one scan, one
-      // candidate-bounded shuffle
-      val tf = cached(docs
-        .select(col("doc_id"), size(col("ws")).as("dl"), explode(col("ws")).as("term"))
-        .filter(expr(s"array_contains($termsArr, term)"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"), first(col("dl")).as("dl")))
+      val docs = t(s, dir, "documents")
+      val stats = broadcast(docs.withColumn("ws", split(col("text"), " "))
+        .agg(count(lit(1)).as("n_docs"),
+          (sum(size(col("ws"))).cast("double") / count(lit(1))).as("avgdl")))
+      val tf = cached(bm25TfRows(docs, bm25Terms))
       val dft = broadcast(tf.groupBy("term").agg(count(lit(1)).as("df")))
-      val scored = tf.join(dft, "term").crossJoin(stats)
-        .select(col("doc_id"),
-          round(
-            round(log(lit(1.0) +
-              ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-                (col("df").cast("double") + lit(0.5))), 9) *
-            (col("tf").cast("double") /
-              (col("tf").cast("double") + lit(1.2) * (lit(0.25) +
-                lit(0.75) * (col("dl").cast("double") / col("avgdl"))))), 9)
-            .cast("decimal(18,9)").as("c"))
-      val perDoc = scored.groupBy("doc_id").agg(sum(col("c")).as("sc"))
-      val top = perDoc.orderBy(col("sc").desc, col("doc_id").asc).limit(20)
-        .select(col("doc_id"), round(col("sc").cast("double"), 6).as("score"))
-      top.withColumn("rnk",
-          row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-        .select("rnk", "doc_id", "score").orderBy("rnk")
+      bm25Top(tf, dft, stats, 20)
     },
-    Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-           |dl AS (SELECT doc_id, len(ws) AS dl FROM w),
-           |st AS (SELECT count(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-           |tf AS (SELECT doc_id, term, count(*) AS tf
-           |       FROM (SELECT doc_id, unnest(ws) AS term FROM w)
-           |       WHERE term IN ('table','scan','join','merge')
-           |       GROUP BY doc_id, term),
-           |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-           |sc AS (SELECT tf.doc_id,
-           |         CAST(round(
-           |           round(ln(1.0 + (CAST(st.n_docs - idf.df AS DOUBLE) + 0.5)
-           |                          / (CAST(idf.df AS DOUBLE) + 0.5)), 9)
-           |           * (CAST(tf.tf AS DOUBLE)
-           |              / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-           |                 * (CAST(dl.dl AS DOUBLE) / st.avgdl)))), 9) AS DECIMAL(18,9)) AS c
-           |       FROM tf JOIN idf USING (term) JOIN dl USING (doc_id), st),
-           |agg AS (SELECT doc_id, SUM(c) AS sc FROM sc GROUP BY doc_id),
-           |top AS (SELECT doc_id, round(CAST(sc AS DOUBLE), 6) AS score
-           |        FROM agg ORDER BY sc DESC, doc_id LIMIT 20)
-           |SELECT row_number() OVER (ORDER BY score DESC, doc_id) AS rnk, doc_id, score
-           |FROM top ORDER BY rnk""".stripMargin))
+    Some(s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+           |${bm25OracleChain("w")}""".stripMargin))
 
   // HYBRID RETRIEVAL FUSION (l3_hybrid_rrf): reciprocal-rank fusion
   // of the lexical (l4_bm25 top-20) and vector (l3_knn_bruteforce,
@@ -3539,24 +3507,14 @@ object Llm {
   private val l4bm25Maintain = QueryDef(
     "l4_bm25_maintain",
     (s, dir) => {
-      val terms = Seq("table", "scan", "join", "merge")
-      val termsArr = terms.map(w => s"'$w'").mkString("array(", ",", ")")
-      val docs = t(s, dir, "documents").withColumn("ws", split(col("text"), " "))
+      val docs = t(s, dir, "documents")
       val stored = docs.filter(col("doc_id") % 10 =!= 0)
       val ins = docs.filter(col("doc_id") % 10 === 0)
       val del = stored.filter(col("doc_id") % 7 === 0)
-      def statRows(d: DataFrame, mult: Int): DataFrame = {
-        val dl = d.select(lit("len").as("stat"), lit("*").as("k"),
-          size(col("ws")).cast("long").as("v"), lit(mult.toLong).as("_mult"))
-        val tf = d.select(explode(
-            expr(s"array_distinct(filter(ws, w -> array_contains($termsArr, w)))")).as("k"))
-          .select(lit("df").as("stat"), col("k"), lit(1L).as("v"),
-            lit(mult.toLong).as("_mult"))
-        dl.unionByName(tf)
-      }
-      val mv0 = statRows(stored, 1).groupBy("stat", "k")
+      val mv0 = bm25StatRows(stored, bm25Terms, 1).groupBy("stat", "k")
         .agg(sum("v").as("v"), count(lit(1)).as("cnt"))
-      val batch = statRows(ins, 1).unionByName(statRows(del, -1))
+      val batch = bm25StatRows(ins, bm25Terms, 1)
+        .unionByName(bm25StatRows(del, bm25Terms, -1))
       val m = graft.ops.TableOps.maintainAggCounted(mv0, batch,
         keys = Seq("stat", "k"), sumCols = Seq("v"))
       val dfRows = m.filter(col("stat") === "df")
@@ -3591,48 +3549,29 @@ object Llm {
   // (candidate-bounded — docs containing a catalog term), a broadcast
   // df/len stats view, and never the corpus text. Same batch
   // convention as l4_bm25_maintain (doc_id % 10 inserts, every-7th-doc
-  // deletes); same determinism discipline as l4_bm25 (idf and each
-  // contribution round to 9, DECIMAL(18,9) exact sums, doc_id
+  // deletes); the same scorer as l4_bm25 (CorpusOps.bm25Top: idf and
+  // each contribution round to 9, DECIMAL(18,9) exact sums, doc_id
   // tiebreak). ORACLE = the fresh BM25 recompute over the post-batch
   // corpus — maintained retrieval == rebuilt retrieval, rank for rank.
   private val l4bm25Incremental = QueryDef(
     "l4_bm25_incremental",
     (s, dir) => {
-      val terms = Seq("table", "scan", "join", "merge")
-      val termsArr = terms.map(w => s"'$w'").mkString("array(", ",", ")")
-      val docs = t(s, dir, "documents").withColumn("ws", split(col("text"), " "))
+      val docs = t(s, dir, "documents")
       val stored = docs.filter(col("doc_id") % 10 =!= 0)
       val ins = docs.filter(col("doc_id") % 10 === 0)
       val del = stored.filter(col("doc_id") % 7 === 0)
-      // stats family — identical rows to l4_bm25_maintain
-      def statRows(d: DataFrame, mult: Int): DataFrame = {
-        val dl = d.select(lit("len").as("stat"), lit("*").as("k"),
-          size(col("ws")).cast("long").as("v"), lit(mult.toLong).as("_mult"))
-        val tfr = d.select(explode(
-            expr(s"array_distinct(filter(ws, w -> array_contains($termsArr, w)))")).as("k"))
-          .select(lit("df").as("stat"), col("k"), lit(1L).as("v"),
-            lit(mult.toLong).as("_mult"))
-        dl.unionByName(tfr)
-      }
-      val statsMv0 = statRows(stored, 1).groupBy("stat", "k")
+      val statsMv0 = bm25StatRows(stored, bm25Terms, 1).groupBy("stat", "k")
         .agg(sum("v").as("v"), count(lit(1)).as("cnt"))
       val statsM = graft.ops.TableOps.maintainAggCounted(statsMv0,
-        statRows(ins, 1).unionByName(statRows(del, -1)),
+        bm25StatRows(ins, bm25Terms, 1).unionByName(bm25StatRows(del, bm25Terms, -1)),
         keys = Seq("stat", "k"), sumCols = Seq("v"))
       // per-(doc, term) tf + dl for the catalog — linear, so the same
       // counted maintainer keeps them current
-      def tfRows(d: DataFrame, mult: Int): DataFrame = d
-        .select(col("doc_id"), size(col("ws")).cast("long").as("dl"),
-          explode(col("ws")).as("term"))
-        .filter(expr(s"array_contains($termsArr, term)"))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
-        .withColumn("_mult", lit(mult.toLong))
-      val tfMv0 = tfRows(stored, 1)
-        .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-          lit(1L).as("cnt"))
+      def signedTf(d: DataFrame, mult: Long): DataFrame =
+        bm25TfRows(d, bm25Terms).withColumn("_mult", lit(mult))
+      val tfMv0 = bm25TfRows(stored, bm25Terms).withColumn("cnt", lit(1L))
       val tfM = graft.ops.TableOps.maintainAggCounted(tfMv0,
-        tfRows(ins, 1).unionByName(tfRows(del, -1)),
+        signedTf(ins, 1L).unionByName(signedTf(del, -1L)),
         keys = Seq("doc_id", "term"), sumCols = Seq("tf", "dl"))
       // the READ: maintained state only — no corpus text anywhere
       val lenRow = broadcast(statsM.filter(col("stat") === "len")
@@ -3640,45 +3579,11 @@ object Llm {
           col("cnt").as("n_docs")))
       val dft = broadcast(statsM.filter(col("stat") === "df")
         .select(col("k").as("term"), col("v").as("df")))
-      val scored = tfM.join(dft, "term").crossJoin(lenRow)
-        .select(col("doc_id"),
-          round(
-            round(log(lit(1.0) +
-              ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-                (col("df").cast("double") + lit(0.5))), 9) *
-            (col("tf").cast("double") /
-              (col("tf").cast("double") + lit(1.2) * (lit(0.25) +
-                lit(0.75) * (col("dl").cast("double") / col("avgdl"))))), 9)
-            .cast("decimal(18,9)").as("c"))
-      val perDoc = scored.groupBy("doc_id").agg(sum(col("c")).as("sc"))
-      val top = perDoc.orderBy(col("sc").desc, col("doc_id").asc).limit(20)
-        .select(col("doc_id"), round(col("sc").cast("double"), 6).as("score"))
-      top.withColumn("rnk",
-          row_number().over(Window.orderBy(col("score").desc, col("doc_id").asc)))
-        .select("rnk", "doc_id", "score").orderBy("rnk")
+      bm25Top(tfM, dft, lenRow, 20)
     },
-    Some("""WITH s AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+    Some(s"""WITH s AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents
            |           WHERE doc_id % 10 = 0 OR doc_id % 7 <> 0),
-           |dl AS (SELECT doc_id, len(ws) AS dl FROM s),
-           |st AS (SELECT count(*) AS n_docs, CAST(SUM(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-           |tf AS (SELECT doc_id, term, count(*) AS tf
-           |       FROM (SELECT doc_id, unnest(ws) AS term FROM s)
-           |       WHERE term IN ('table','scan','join','merge')
-           |       GROUP BY doc_id, term),
-           |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-           |sc AS (SELECT tf.doc_id,
-           |         CAST(round(
-           |           round(ln(1.0 + (CAST(st.n_docs - idf.df AS DOUBLE) + 0.5)
-           |                          / (CAST(idf.df AS DOUBLE) + 0.5)), 9)
-           |           * (CAST(tf.tf AS DOUBLE)
-           |              / (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-           |                 * (CAST(dl.dl AS DOUBLE) / st.avgdl)))), 9) AS DECIMAL(18,9)) AS c
-           |       FROM tf JOIN idf USING (term) JOIN dl USING (doc_id), st),
-           |agg AS (SELECT doc_id, SUM(c) AS sc FROM sc GROUP BY doc_id),
-           |top AS (SELECT doc_id, round(CAST(sc AS DOUBLE), 6) AS score
-           |        FROM agg ORDER BY sc DESC, doc_id LIMIT 20)
-           |SELECT row_number() OVER (ORDER BY score DESC, doc_id) AS rnk, doc_id, score
-           |FROM top ORDER BY rnk""".stripMargin))
+           |${bm25OracleChain("s")}""".stripMargin))
 
   // TRAINED classifier — the other half of l4_classifier (which
   // SCORES under fixed weights): a real logistic regression fit by
@@ -5330,12 +5235,6 @@ object Llm {
     (cur, merges.toSeq)
   }
 
-  /** Fixture-bound wrapper both BPE oracle queries share. */
-  private def bpeTrain(s: SparkSession, dir: String)
-                      (implicit scope: graft.ops.CacheScope)
-      : (DataFrame, Seq[(Int, String, String, String, Long)]) =
-    bpeLearn(t(s, dir, "documents"))
-
   /** The unrolled 3-iteration chain both BPE oracles share: v0..v2 are
     * the vocab before each merge, b0..b2 the merges, v3 the trained
     * vocab. DuckDB leaves unreferenced CTEs unexecuted, so each oracle
@@ -5378,7 +5277,7 @@ object Llm {
     "l4_bpe_merges",
     (s, dir) => {
       import s.implicits._
-      bpeTrain(s, dir)._2.toDF("it", "s1", "s2", "merged", "cnt").orderBy("it")
+      bpeLearn(t(s, dir, "documents"))._2.toDF("it", "s1", "s2", "merged", "cnt").orderBy("it")
     },
     Some(s"""WITH $bpeChainSql
             |SELECT it, s1, s2, s1 || s2 AS merged, CAST(cnt AS BIGINT) AS cnt FROM (
@@ -5420,7 +5319,7 @@ object Llm {
   private val l4bpeEnc = QueryDef(
     "l4_bpe_encode",
     (s, dir) => {
-      val (v3, _) = bpeTrain(s, dir)
+      val (v3, _) = bpeLearn(t(s, dir, "documents"))
       val ns = v3.select(col("w"),
         size(split(expr("substring(s, 2, length(s) - 2)"), bpeSep + bpeSep)).as("n_sym"))
       t(s, dir, "documents")
@@ -5448,8 +5347,6 @@ object Llm {
             |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin))
 
   // ---- the cascade family's shared machinery ----
-
-  private val cascadeTerms = Seq("table", "scan", "join", "merge")
 
   /** Shared output assembly: ONE 5-column (artifact, k, x, y, z)
     * union over the repaired bundle + funnel — exact = (h, keeper,
@@ -5497,7 +5394,7 @@ object Llm {
     // reuse a stale persisted bundle — the round-15 advisory class.
     // Lock/_DONE/reap protocol lives in ArtifactCache.
     val root = graft.ops.ArtifactCache.getOrBuild("arts", s"$variant-$dir",
-      s"${fp("documents")}-${fp("embeddings")}-t${cascadeTerms.mkString("_")}-a5p4-r1") { rootDir =>
+      s"${fp("documents")}-${fp("embeddings")}-t${bm25Terms.mkString("_")}-a5p4-r1") { rootDir =>
       val docsAll = t(s, dir, "documents")
       val eAll = t(s, dir, "embeddings")
       val (docs, e) =
@@ -5506,7 +5403,7 @@ object Llm {
             eAll.filter(col("vec_id") % 10 =!= 0).select("vec_id", "embedding"))
         else (docsAll, eAll.select("vec_id", "embedding"))
       val cents = sqrtSeedCents(e)
-      val arts = CorpusOps.buildArtifacts(docs, e, cents, cascadeTerms)
+      val arts = CorpusOps.buildArtifacts(docs, e, cents, bm25Terms)
       def w(df: DataFrame, n: String): Unit = df.write.mode("overwrite")
         .parquet(new java.io.File(rootDir, n).toString)
       w(arts.exactAux, "exactAux"); w(arts.exactKeepers, "exactKeepers")
@@ -5551,10 +5448,10 @@ object Llm {
       // at probeK 4 / annK 5, the (stat, k, v, cnt) BM25 view)
       val e = t(s, dir, "embeddings")
       val arts = graft.ops.CorpusOps.buildArtifacts(docs, e, sqrtSeedCents(e),
-        cascadeTerms)
+        bm25Terms)
       // ---- ONE call applies the delete list to every artifact ----
       cascadeRows(graft.ops.CorpusOps.deleteDocuments(del, docs, arts,
-        cascadeTerms))
+        bm25Terms))
     },
     Some(l6CascadeDeleteSql))
 
@@ -5652,10 +5549,10 @@ object Llm {
         .select("vec_id", "embedding")
       val cents = sqrtSeedCents(e)
       val arts = graft.ops.CorpusOps.buildArtifacts(stored, e, cents,
-        cascadeTerms)
+        bm25Terms)
       // ---- ONE call ingests the batch into every artifact ----
       cascadeRows(graft.ops.CorpusOps.ingestDocuments(batch, stored, arts,
-        be, cents, cascadeTerms))
+        be, cents, bm25Terms))
     },
     Some(l6CascadeInsertSql))
 
@@ -5739,7 +5636,7 @@ object Llm {
       val del = docs.filter(col("doc_id") % 7 === 0).select("doc_id")
       val (arts, _) = persistedArts(s, dir, "full")
       cascadeRows(graft.ops.CorpusOps.deleteDocuments(del, docs, arts,
-        cascadeTerms))
+        bm25Terms))
     },
     Some(l6CascadeDeleteSql))
 
@@ -5754,7 +5651,7 @@ object Llm {
         .select("vec_id", "embedding")
       val (arts, cents) = persistedArts(s, dir, "stored")
       cascadeRows(graft.ops.CorpusOps.ingestDocuments(batch, stored, arts,
-        be, cents, cascadeTerms))
+        be, cents, bm25Terms))
     },
     Some(l6CascadeInsertSql))
 

@@ -585,6 +585,57 @@ class CorpusOpsSpec extends AnyFunSuite {
       "no colliding pair arrived larger id first")
   }
 
+  test("BM25 kit: bm25Top over maintained stats and tf == bm25Top over a rebuild, rank for rank") {
+    val terms = Seq("table", "scan", "join", "merge")
+    val stored = Seq(
+      (1L, "table scan alpha beta"),
+      (2L, "scan table beta alpha"), // same tf and dl as doc 1: equal scores
+      (3L, "merge gamma delta"), // the only 'merge' doc, deleted below
+      (4L, "alpha beta gamma delta"), // no catalog term
+      (5L, "join join table delta epsilon"),
+      (6L, "scan epsilon")).toDF("doc_id", "text")
+    val ins = Seq((7L, "join scan zeta zeta"), (8L, "omega")).toDF("doc_id", "text")
+    val del = stored.filter(col("doc_id").isin(3L, 6L))
+    val post = stored.filter(!col("doc_id").isin(3L, 6L)).unionByName(ins)
+
+    // maintained: the signed rows through the counted Z-set maintainer
+    val statsM = TableOps.maintainAggCounted(
+      CorpusOps.bm25StatRows(stored, terms, 1).groupBy("stat", "k")
+        .agg(sum("v").as("v"), count(lit(1)).as("cnt")),
+      CorpusOps.bm25StatRows(ins, terms, 1).unionByName(CorpusOps.bm25StatRows(del, terms, -1)),
+      keys = Seq("stat", "k"), sumCols = Seq("v"))
+    def signedTf(d: org.apache.spark.sql.DataFrame, mult: Long) =
+      CorpusOps.bm25TfRows(d, terms).withColumn("_mult", lit(mult))
+    val tfM = TableOps.maintainAggCounted(
+      CorpusOps.bm25TfRows(stored, terms).withColumn("cnt", lit(1L)),
+      signedTf(ins, 1L).unionByName(signedTf(del, -1L)),
+      keys = Seq("doc_id", "term"), sumCols = Seq("tf", "dl"))
+    val maintained = CorpusOps.bm25Top(tfM,
+      statsM.filter(col("stat") === "df").select(col("k").as("term"), col("v").as("df")),
+      statsM.filter(col("stat") === "len").select(
+        (col("v").cast("double") / col("cnt").cast("double")).as("avgdl"), col("cnt").as("n_docs")),
+      10)
+
+    // rebuilt: fresh tf, df and corpus stats over the post-batch corpus
+    val tf = CorpusOps.bm25TfRows(post, terms)
+    val rebuilt = CorpusOps.bm25Top(tf, tf.groupBy("term").agg(count(lit(1)).as("df")),
+      post.withColumn("ws", split(col("text"), " ")).agg(count(lit(1)).as("n_docs"),
+        (sum(size(col("ws"))).cast("double") / count(lit(1))).as("avgdl")),
+      10)
+
+    def ranked(df: org.apache.spark.sql.DataFrame) = df.as[(Int, Long, Double)].collect().toSeq
+    val got = ranked(maintained)
+    assert(got == ranked(rebuilt))
+    // the vanished term left no state behind, the termless doc and the
+    // deleted docs never rank, and the tie breaks on doc_id
+    assert(statsM.filter(col("k") === "merge").isEmpty)
+    assert(tfM.filter(col("term") === "merge").isEmpty)
+    assert(got.map(_._2).toSet == Set(1L, 2L, 5L, 7L))
+    val one = got.find(_._2 == 1L).get
+    val two = got.find(_._2 == 2L).get
+    assert(one._3 == two._3 && one._1 + 1 == two._1)
+  }
+
   test("simhashPairs finds every pair within the radius, at three chunk widths") {
     val fixture = graft.Tables(spark, SparkFixture.sfDir, "documents")
       .select(col("doc_id"), graft.functions.SimHashExprs.simhash_sig(

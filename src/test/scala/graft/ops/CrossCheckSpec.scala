@@ -312,16 +312,9 @@ class CrossCheckSpec extends AnyFunSuite {
 
   test("stratified/shuffle contracts: shuffle order is a permutation with dense per-shard ranks") {
     val docs = (0L until 137L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    // inline spelling (same as the l8_shuffle_order query, 16 shards)
-    // over a synthetic id set — the query itself is fixture-bound
-    import graft.queries.QueryDef.sha60
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("shard").orderBy(col("hk").asc, col("doc_id").asc)
-    val rows = docs
-      .select(col("doc_id"), sha60(col("doc_id").cast("string")).as("hk"))
-      .withColumn("shard", pmod(col("hk"), lit(16L)))
-      .withColumn("pos", row_number().over(w))
-      .select("doc_id", "shard", "pos")
+    // the op behind l8_shuffle_order (16 shards), over a synthetic id
+    // set — the query itself is fixture-bound
+    val rows = CorpusOps.shuffleOrder(docs, 16)
       .as[(Long, Long, Int)].collect().toSeq
     assert(rows.map(_._1).sorted == (0L until 137L), "not a permutation of the corpus")
     rows.groupBy(_._2).foreach { case (shard, rs) =>
