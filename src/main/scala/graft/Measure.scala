@@ -13,8 +13,11 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
   * `runMain graft.Measure <time|profile|explain> <sfDir> <name,name,...> [runs] [k=v;k=v]`
   *
   *  - `time`: cold runs (clearCache between), each run and the min
-  *    printed. With a `k=v;k=v` override list: a paired A/B of those
-  *    runtime SQL confs instead (see `ab`).
+  *    printed. "Cold" means no cached data: the fixtures' parquet
+  *    schemas stay cached in the session between runs ([[Tables]]),
+  *    so only the first run of a session pays their inference jobs.
+  *    With a `k=v;k=v` override list: a paired A/B of those runtime
+  *    SQL confs instead (see `ab`).
   *  - `profile`: stage table of the LAST run — where inside a cell the
   *    time goes.
   *  - `explain`: the formatted physical plan, without running the

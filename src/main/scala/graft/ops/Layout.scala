@@ -273,11 +273,13 @@ object Layout {
   }
 
   /** Parquet relation over a custom [[FileIndex]] — the seam both
-    * pruned-read forms share. */
+    * pruned-read forms share. The table's schema comes from the
+    * session's schema cache ([[graft.Tables.schema]]), so a table read
+    * again starts no inference job. */
   private def relationOver(spark: org.apache.spark.sql.SparkSession,
                            path: String,
                            idx: org.apache.spark.sql.execution.datasources.FileIndex): DataFrame = {
-    val fullSchema = spark.read.parquet(path).schema
+    val fullSchema = graft.Tables.schema(spark, path)
     val dataSchema = org.apache.spark.sql.types.StructType(
       fullSchema.filterNot(f => idx.partitionSchema.fieldNames.contains(f.name)))
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(

@@ -1868,7 +1868,7 @@ object Llm {
       t(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .select(col("doc_id"),
-          expr(stopCount(enS)).as("en_n"), expr(stopCount(deS)).as("de_n"),
+          TextScores.stopCountEn(col("ws")).as("en_n"), expr(stopCount(deS)).as("de_n"),
           expr(stopCount(esS)).as("es_n"), expr(stopCount(frS)).as("fr_n"))
         .withColumn("pred", langPredCol)
         .orderBy("doc_id")
@@ -1887,7 +1887,7 @@ object Llm {
       t(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_tok", size(col("ws")))
-        .withColumn("stop_n", expr(stopCount(enS)))
+        .withColumn("stop_n", TextScores.stopCountEn(col("ws")))
         .select(col("doc_id"), col("n_tok"),
           ((length(col("text")) - col("n_tok") + 1).cast("double") / col("n_tok")).as("avg_wlen"),
           (col("stop_n").cast("double") / col("n_tok")).as("stop_ratio"),
@@ -2233,7 +2233,7 @@ object Llm {
     val annotated = docs
       .withColumn("ws", split(col("text"), " "))
       .withColumn("n_tok", size(col("ws")))
-      .withColumn("en_n", expr(stopCount(enS))).withColumn("de_n", expr(stopCount(deS)))
+      .withColumn("en_n", TextScores.stopCountEn(col("ws"))).withColumn("de_n", expr(stopCount(deS)))
       .withColumn("es_n", expr(stopCount(esS))).withColumn("fr_n", expr(stopCount(frS)))
       .withColumn("quality", TextScores.quality(col("n_tok"), col("en_n"))) // en stopwords = quality stoplist
       .withColumn("pred", langPredCol)
@@ -2322,7 +2322,7 @@ object Llm {
       val flagged = docs
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_tok", size(col("ws")))
-        .withColumn("stop_n", expr(stopCount(enS)))
+        .withColumn("stop_n", TextScores.stopCountEn(col("ws")))
         .select(col("doc_id"), (TextScores.quality(col("n_tok"), col("stop_n")) >= 0.6).as("q_ok"))
       val nearDrop = stages.nearDupDropIds.withColumn("is_near", lit(true))
       val c = flagged
@@ -2541,7 +2541,7 @@ object Llm {
       val q = t(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_tok", size(col("ws")))
-        .withColumn("stop_n", expr(stopCount(enS)))
+        .withColumn("stop_n", TextScores.stopCountEn(col("ws")))
         .select(col("doc_id"), TextScores.quality(col("n_tok"), col("stop_n")).as("quality"))
       val w = Window.partitionBy("cluster_id").orderBy(col("quality").desc, col("doc_id").asc)
       graft.ops.CorpusOps.dupClusters(jaccardPairs(s, dir))
@@ -2722,7 +2722,7 @@ object Llm {
       val keyed = t(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_tok", size(col("ws")))
-        .withColumn("stop_n", expr(stopCount(enS)))
+        .withColumn("stop_n", TextScores.stopCountEn(col("ws")))
         .select(col("doc_id"), TextScores.quality(col("n_tok"), col("stop_n")).as("quality"))
         .withColumn("u", idUniform)
         .withColumn("key", round(pow(col("u"), lit(1.0) / col("quality")), 6))
@@ -3052,7 +3052,7 @@ object Llm {
       val d = t(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .withColumn("n_tok", size(col("ws")))
-        .withColumn("stop_n", expr(stopCount(enS)))
+        .withColumn("stop_n", TextScores.stopCountEn(col("ws")))
         .withColumn("h", sha2(col("text"), 256))
         .select("doc_id", "source", "n_tok", "stop_n", "h")
       val dupDocs = d.groupBy("h").agg(count(lit(1)).as("cnt"))
