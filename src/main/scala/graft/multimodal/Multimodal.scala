@@ -30,9 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  /** media wire schema: id + opaque payload + declared kind/format. */
-  val mediaSchema = "media_id BIGINT, kind STRING, fmt STRING, payload BINARY"
-
   final case class MediaFeature(
       media_id: Long, kind: String, fmt: String,
       n_bytes: Int, width: Int, height: Int, n_frames: Int,

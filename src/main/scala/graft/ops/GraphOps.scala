@@ -86,6 +86,8 @@ object GraphOps {
   private def roundSetup(edges: DataFrame, reliable: Boolean)
                         (implicit scope: CacheScope): (SparkSession, DataFrame) = {
     val eck = scope.checkpointed(edges, reliable)
+    // .rdd here is metadata-only: partition COUNT reads the DAG, the
+    // deserializing Row RDD itself never executes
     val rs = roundSession(edges.sparkSession, eck.rdd.getNumPartitions)
     (rs, crossView(rs, eck))
   }
@@ -103,11 +105,7 @@ object GraphOps {
                       cacheNodes: Boolean = true)
                      (implicit scope: CacheScope): (DataFrame, DataFrame) = {
     val cols = Seq(col("src"), col("dst")) ++ weightCol.map(col)
-    val eck = scope.checkpointed(edges.select(cols: _*), reliable = false)
-    // .rdd here is metadata-only: partition COUNT reads the DAG, the
-    // deserializing Row RDD itself never executes
-    val rs = roundSession(edges.sparkSession, eck.rdd.getNumPartitions)
-    val e = crossView(rs, eck)
+    val (rs, e) = roundSetup(edges.select(cols: _*), reliable = false)
     val deg = e.groupBy("src")
       .agg(weightCol.map(w => sum(col(w))).getOrElse(count(lit(1))).as("deg"))
       .select(col("src").as("node"), col("deg"))

@@ -226,8 +226,6 @@ object Layout {
       RangeSpec(column, Some(lo), Some(hi))
     def atLeast(column: String, lo: Any): RangeSpec =
       RangeSpec(column, Some(lo), None)
-    def atMost(column: String, hi: Any): RangeSpec =
-      RangeSpec(column, None, Some(hi))
   }
 
   /** ZONE-MAP-PRUNED READ — the maintained envelopes finally SKIPPING

@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import GraphKit._
 
 /** Graph-analytics battery over the part CO-PURCHASE graph: nodes are
   * parts, an undirected edge connects two parts that appear in the
@@ -24,46 +23,15 @@ import graft.Tables
   * filter is a partial-aggregatable groupBy — map-side combine eats
   * the duplicate-pair mass before it crosses the wire.
   *
-  * The iterative/propagation queries delegate to [[graft.ops.GraphOps]]
-  * / [[graft.ops.CorpusOps.dupClusters]] and inherit their round
-  * discipline (AQE-off child session at edge-derived width, lineage
-  * cuts between rounds). Every value in this battery is an exact
-  * integer — no rounding contract is needed anywhere.
+  * The edge builds, seeds and every oracle round chain come from
+  * [[GraphKit]]. The iterative/propagation queries delegate to
+  * [[graft.ops.GraphOps]] / [[graft.ops.CorpusOps.dupClusters]] and
+  * inherit their round discipline (AQE-off child session at
+  * edge-derived width, lineage cuts between rounds). Every value in
+  * this battery is an exact integer — no rounding contract is needed
+  * anywhere.
   */
 object Graph {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
-
-  /** Canonical (p1 < p2) co-purchase edges with support >= 2. */
-  private def coEdges(s: SparkSession, dir: String): DataFrame =
-    coEdgesW(s, dir).select(col("p1"), col("p2"))
-
-  /** [[coEdges]] keeping the support count as the edge weight. */
-  private def coEdgesW(s: SparkSession, dir: String): DataFrame = {
-    val op = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")).distinct()
-    op.as("a").join(op.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey") &&
-          col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("p1"), col("b.l_partkey").as("p2"))
-      .groupBy("p1", "p2").agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-  }
-
-  /** The weighted edge table as a SQL CTE prefix (`pe(p1, p2, c)`). */
-  private val coEdgesWCte =
-    """pe AS (SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS c
-      |       FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
-      |       JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
-      |         ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      |       GROUP BY 1, 2 HAVING count(*) >= 2)""".stripMargin
-
-  /** The same edge table as a SQL CTE prefix (`pe(p1, p2)`). */
-  private val coEdgesCte =
-    """pe AS (SELECT a.l_partkey AS p1, b.l_partkey AS p2
-      |       FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
-      |       JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
-      |         ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      |       GROUP BY 1, 2 HAVING count(*) >= 2)""".stripMargin
 
   // CONNECTED COMPONENTS (q48): which parts form co-purchase
   // "product families"? GraphOps.connectedComponents = dupClusters'
@@ -82,25 +50,10 @@ object Graph {
           col("component_size"))
         .orderBy("component", "part")
     },
-    Some(s"""WITH $coEdgesCte,
-            |e AS (SELECT p1 AS a, p2 AS b FROM pe
-            |      UNION ALL SELECT p2, p1 FROM pe),
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e", cols = Seq("p1" -> "a", "p2" -> "b"))},
             |l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM e),
-            |r1a AS (SELECT t.a AS node, min(lt.lbl) AS lbl
-            |        FROM (SELECT a, b FROM e
-            |              UNION ALL SELECT node, lbl FROM l0) t
-            |        JOIN l0 lt ON t.b = lt.node GROUP BY t.a),
-            |r1 AS (SELECT x.node, y.lbl FROM r1a x JOIN r1a y ON x.lbl = y.node),
-            |r2a AS (SELECT t.a AS node, min(lt.lbl) AS lbl
-            |        FROM (SELECT a, b FROM e
-            |              UNION ALL SELECT node, lbl FROM r1) t
-            |        JOIN r1 lt ON t.b = lt.node GROUP BY t.a),
-            |r2 AS (SELECT x.node, y.lbl FROM r2a x JOIN r2a y ON x.lbl = y.node),
-            |r3a AS (SELECT t.a AS node, min(lt.lbl) AS lbl
-            |        FROM (SELECT a, b FROM e
-            |              UNION ALL SELECT node, lbl FROM r2) t
-            |        JOIN r2 lt ON t.b = lt.node GROUP BY t.a),
-            |r3 AS (SELECT x.node, y.lbl FROM r3a x JOIN r3a y ON x.lbl = y.node)
+            |${componentRounds(3)}
             |SELECT node AS part, lbl AS component,
             |       count(*) OVER (PARTITION BY lbl) AS component_size
             |FROM r3 ORDER BY component, part""".stripMargin))
@@ -119,40 +72,14 @@ object Graph {
       // the pair build once so the seed checkpoint seam inside the
       // rounds reads this leaf instead of re-running the whole
       // co-purchase build (the q46 seed-seam lesson, +3 s at sf0.1)
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdges(s, dir), reliable = false)
-      val edges = pe.union(pe.select(col("p2").as("p1"), col("p1").as("p2")))
-        .toDF("src", "dst")
-      val seeds = edges.select(col("src").as("node"))
-        .distinct().orderBy("node").limit(10)
-      val d = graft.ops.GraphOps.hopDistance(edges, seeds, maxHops = 4)
+      val edges = bothWays(cutCoEdges(s, dir)).toDF("src", "dst")
+      val d = graft.ops.GraphOps.hopDistance(edges, smallestSeeds(edges), maxHops = 4)
       d.select(col("node").as("part"), col("dist")).orderBy("dist", "part")
     },
-    Some(s"""WITH $coEdgesCte,
-            |e AS (SELECT p1 AS src, p2 AS dst FROM pe
-            |      UNION ALL SELECT p2, p1 FROM pe),
-            |d0 AS (SELECT node, 0 AS dist FROM
-            |       (SELECT DISTINCT src AS node FROM e ORDER BY node LIMIT 10)),
-            |n1 AS (SELECT e.dst AS node, min(d.dist) + 1 AS nd
-            |       FROM e JOIN d0 d ON e.src = d.node GROUP BY e.dst),
-            |d1 AS (SELECT coalesce(d.node, n.node) AS node,
-            |              coalesce(least(d.dist, n.nd), d.dist, n.nd) AS dist
-            |       FROM d0 d FULL JOIN n1 n ON d.node = n.node),
-            |n2 AS (SELECT e.dst AS node, min(d.dist) + 1 AS nd
-            |       FROM e JOIN d1 d ON e.src = d.node GROUP BY e.dst),
-            |d2 AS (SELECT coalesce(d.node, n.node) AS node,
-            |              coalesce(least(d.dist, n.nd), d.dist, n.nd) AS dist
-            |       FROM d1 d FULL JOIN n2 n ON d.node = n.node),
-            |n3 AS (SELECT e.dst AS node, min(d.dist) + 1 AS nd
-            |       FROM e JOIN d2 d ON e.src = d.node GROUP BY e.dst),
-            |d3 AS (SELECT coalesce(d.node, n.node) AS node,
-            |              coalesce(least(d.dist, n.nd), d.dist, n.nd) AS dist
-            |       FROM d2 d FULL JOIN n3 n ON d.node = n.node),
-            |n4 AS (SELECT e.dst AS node, min(d.dist) + 1 AS nd
-            |       FROM e JOIN d3 d ON e.src = d.node GROUP BY e.dst),
-            |d4 AS (SELECT coalesce(d.node, n.node) AS node,
-            |              coalesce(least(d.dist, n.nd), d.dist, n.nd) AS dist
-            |       FROM d3 d FULL JOIN n4 n ON d.node = n.node)
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e")},
+            |d0 AS (SELECT node, 0 AS dist FROM ($smallestSeedsSql)),
+            |${minMergeRounds(4, "min(d.dist) + 1")}
             |SELECT node AS part, dist FROM d4 ORDER BY dist, part""".stripMargin))
 
   // TRIANGLE COUNTS (q50): per-part triangle participation —
@@ -168,7 +95,7 @@ object Graph {
         coEdges(s, dir).toDF("src", "dst"))
       tri.select(col("node").as("part"), col("triangles")).orderBy("part")
     },
-    Some(s"""WITH $coEdgesCte,
+    Some(s"""WITH ${coEdgesCte()},
             |tri AS (SELECT e1.p1 AS a, e1.p2 AS b, e2.p2 AS c
             |        FROM pe e1
             |        JOIN pe e2 ON e1.p2 = e2.p1
@@ -192,41 +119,14 @@ object Graph {
     (s, dir) => {
       // same seed-seam discipline as q49: one lineage cut feeds both
       // the weighted edge table and the seed set
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdgesW(s, dir), reliable = false)
-      val edges = pe.union(
-        pe.select(col("p2").as("p1"), col("p1").as("p2"), col("c")))
-        .toDF("src", "dst", "w")
-      val seeds = edges.select(col("src").as("node"))
-        .distinct().orderBy("node").limit(10)
-      val d = graft.ops.GraphOps.shortestPaths(edges, seeds, "w", rounds = 4)
+      val edges = bothWays(cutCoEdges(s, dir, weighted = true)).toDF("src", "dst", "w")
+      val d = graft.ops.GraphOps.shortestPaths(edges, smallestSeeds(edges), "w", rounds = 4)
       d.select(col("node").as("part"), col("dist")).orderBy("dist", "part")
     },
-    Some(s"""WITH $coEdgesWCte,
-            |e AS (SELECT p1 AS src, p2 AS dst, c AS w FROM pe
-            |      UNION ALL SELECT p2, p1, c FROM pe),
-            |d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM
-            |       (SELECT DISTINCT src AS node FROM e ORDER BY node LIMIT 10)),
-            |n1 AS (SELECT e.dst AS node, min(d.dist + e.w) AS nd
-            |       FROM e JOIN d0 d ON e.src = d.node GROUP BY e.dst),
-            |d1 AS MATERIALIZED (SELECT coalesce(d.node, n.node) AS node,
-            |              coalesce(least(d.dist, n.nd), d.dist, n.nd) AS dist
-            |       FROM d0 d FULL JOIN n1 n ON d.node = n.node),
-            |n2 AS (SELECT e.dst AS node, min(d.dist + e.w) AS nd
-            |       FROM e JOIN d1 d ON e.src = d.node GROUP BY e.dst),
-            |d2 AS MATERIALIZED (SELECT coalesce(d.node, n.node) AS node,
-            |              coalesce(least(d.dist, n.nd), d.dist, n.nd) AS dist
-            |       FROM d1 d FULL JOIN n2 n ON d.node = n.node),
-            |n3 AS (SELECT e.dst AS node, min(d.dist + e.w) AS nd
-            |       FROM e JOIN d2 d ON e.src = d.node GROUP BY e.dst),
-            |d3 AS MATERIALIZED (SELECT coalesce(d.node, n.node) AS node,
-            |              coalesce(least(d.dist, n.nd), d.dist, n.nd) AS dist
-            |       FROM d2 d FULL JOIN n3 n ON d.node = n.node),
-            |n4 AS (SELECT e.dst AS node, min(d.dist + e.w) AS nd
-            |       FROM e JOIN d3 d ON e.src = d.node GROUP BY e.dst),
-            |d4 AS (SELECT coalesce(d.node, n.node) AS node,
-            |              coalesce(least(d.dist, n.nd), d.dist, n.nd) AS dist
-            |       FROM d3 d FULL JOIN n4 n ON d.node = n.node)
+    Some(s"""WITH ${coEdgesCte(weighted = true)},
+            |${bothWaysCte("e", cols = Seq("p1" -> "src", "p2" -> "dst", "c" -> "w"))},
+            |d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM ($smallestSeedsSql)),
+            |${minMergeRounds(4, "min(d.dist + e.w)", materialize = true)}
             |SELECT node AS part, dist FROM d4 ORDER BY dist, part""".stripMargin))
 
   // K-CORE (q57): the 3-core of the co-purchase graph by 4 fixed peel
@@ -242,30 +142,9 @@ object Graph {
         coEdges(s, dir).toDF("src", "dst"), k = 3)
       core.select(col("node").as("part"), col("deg")).orderBy("part")
     },
-    Some(s"""WITH $coEdgesCte,
+    Some(s"""WITH ${coEdgesCte()},
             |e0 AS MATERIALIZED (SELECT p1 AS src, p2 AS dst FROM pe),
-            |d1 AS MATERIALIZED (SELECT node, count(*) AS deg FROM
-            |  (SELECT src AS node FROM e0 UNION ALL SELECT dst FROM e0) GROUP BY node),
-            |e1 AS MATERIALIZED (SELECT src, dst FROM e0
-            |  WHERE src IN (SELECT node FROM d1 WHERE deg >= 3)
-            |    AND dst IN (SELECT node FROM d1 WHERE deg >= 3)),
-            |d2 AS MATERIALIZED (SELECT node, count(*) AS deg FROM
-            |  (SELECT src AS node FROM e1 UNION ALL SELECT dst FROM e1) GROUP BY node),
-            |e2 AS MATERIALIZED (SELECT src, dst FROM e1
-            |  WHERE src IN (SELECT node FROM d2 WHERE deg >= 3)
-            |    AND dst IN (SELECT node FROM d2 WHERE deg >= 3)),
-            |d3 AS MATERIALIZED (SELECT node, count(*) AS deg FROM
-            |  (SELECT src AS node FROM e2 UNION ALL SELECT dst FROM e2) GROUP BY node),
-            |e3 AS MATERIALIZED (SELECT src, dst FROM e2
-            |  WHERE src IN (SELECT node FROM d3 WHERE deg >= 3)
-            |    AND dst IN (SELECT node FROM d3 WHERE deg >= 3)),
-            |d4 AS MATERIALIZED (SELECT node, count(*) AS deg FROM
-            |  (SELECT src AS node FROM e3 UNION ALL SELECT dst FROM e3) GROUP BY node),
-            |e4 AS MATERIALIZED (SELECT src, dst FROM e3
-            |  WHERE src IN (SELECT node FROM d4 WHERE deg >= 3)
-            |    AND dst IN (SELECT node FROM d4 WHERE deg >= 3)),
-            |fd AS (SELECT node, count(*) AS deg FROM
-            |  (SELECT src AS node FROM e4 UNION ALL SELECT dst FROM e4) GROUP BY node)
+            |${kCorePeels(3, 4)}
             |SELECT node AS part, deg FROM fd WHERE deg >= 3 ORDER BY part""".stripMargin))
 
   // LABEL-PROPAGATION COMMUNITIES (q64): synchronous LPA over the
@@ -279,37 +158,17 @@ object Graph {
   private val q64 = QueryDef(
     "q64_lpa",
     (s, dir) => {
-      // same lineage-cut discipline as q49/q56: the pair build is
-      // referenced by both union branches — cut it once
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdges(s, dir), reliable = false)
-      val edges = pe.union(pe.select(col("p2").as("p1"), col("p1").as("p2")))
-        .toDF("src", "dst")
-      val com = graft.ops.GraphOps.labelPropagation(edges)
+      val com = graft.ops.GraphOps.labelPropagation(
+        bothWays(cutCoEdges(s, dir)).toDF("src", "dst"))
       com.select(col("node").as("part"), col("community"))
         .withColumn("community_size",
           count(lit(1)).over(Window.partitionBy(col("community"))))
         .orderBy("community", "part")
     },
-    Some(s"""WITH $coEdgesCte,
-            |e AS (SELECT p1 AS src, p2 AS dst FROM pe
-            |      UNION ALL SELECT p2, p1 FROM pe),
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e")},
             |l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e),
-            |c1 AS (SELECT e.dst AS node, l.lbl, count(*) AS c
-            |       FROM e JOIN l0 l ON e.src = l.node GROUP BY 1, 2),
-            |l1 AS MATERIALIZED (SELECT node, lbl FROM (
-            |  SELECT node, lbl, row_number() OVER (PARTITION BY node ORDER BY c DESC, lbl) AS rn
-            |  FROM c1) WHERE rn = 1),
-            |c2 AS (SELECT e.dst AS node, l.lbl, count(*) AS c
-            |       FROM e JOIN l1 l ON e.src = l.node GROUP BY 1, 2),
-            |l2 AS MATERIALIZED (SELECT node, lbl FROM (
-            |  SELECT node, lbl, row_number() OVER (PARTITION BY node ORDER BY c DESC, lbl) AS rn
-            |  FROM c2) WHERE rn = 1),
-            |c3 AS (SELECT e.dst AS node, l.lbl, count(*) AS c
-            |       FROM e JOIN l2 l ON e.src = l.node GROUP BY 1, 2),
-            |l3 AS (SELECT node, lbl FROM (
-            |  SELECT node, lbl, row_number() OVER (PARTITION BY node ORDER BY c DESC, lbl) AS rn
-            |  FROM c3) WHERE rn = 1)
+            |${lpaRounds(3, materializeLast = false)}
             |SELECT node AS part, lbl AS community,
             |       count(*) OVER (PARTITION BY lbl) AS community_size
             |FROM l3 ORDER BY community, part""".stripMargin))
@@ -336,13 +195,9 @@ object Graph {
         .select(col("rnk"), col("a"), col("b"), col("score"))
         .orderBy("rnk")
     },
-    Some(s"""WITH $coEdgesCte,
-            |prm AS (SELECT GREATEST(64, (SELECT MIN(1::BIGINT << b)
-            |        FROM (SELECT unnest(range(0, 32)) AS b)
-            |        WHERE (1::BIGINT << b) * (1::BIGINT << b) >=
-            |              2 * (SELECT count(*) FROM pe))) AS cap),
-            |e2 AS (SELECT p1 AS src, p2 AS dst FROM pe
-            |       UNION ALL SELECT p2, p1 FROM pe),
+    Some(s"""WITH ${coEdgesCte()},
+            |$hubCapCte,
+            |${bothWaysCte("e2")},
             |deg AS (SELECT src AS z, count(*) AS deg FROM e2 GROUP BY src),
             |zw AS (SELECT e2.src AS z2, e2.dst AS n,
             |              1.0 / ln(CAST(deg.deg AS DOUBLE)) AS w
@@ -371,33 +226,15 @@ object Graph {
   private val q69 = QueryDef(
     "q69_modularity",
     (s, dir) => {
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdges(s, dir), reliable = false)
-      val edges = pe.union(pe.select(col("p2").as("p1"), col("p1").as("p2")))
-        .toDF("src", "dst")
-      val com = graft.ops.GraphOps.labelPropagation(edges)
+      val pe = cutCoEdges(s, dir)
+      val com = graft.ops.GraphOps.labelPropagation(bothWays(pe).toDF("src", "dst"))
       graft.ops.GraphOps.modularity(pe.toDF("src", "dst"), com)
         .orderBy("community")
     },
-    Some(s"""WITH $coEdgesCte,
-            |e AS (SELECT p1 AS src, p2 AS dst FROM pe
-            |      UNION ALL SELECT p2, p1 FROM pe),
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e")},
             |l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e),
-            |c1 AS (SELECT e.dst AS node, l.lbl, count(*) AS c
-            |       FROM e JOIN l0 l ON e.src = l.node GROUP BY 1, 2),
-            |l1 AS MATERIALIZED (SELECT node, lbl FROM (
-            |  SELECT node, lbl, row_number() OVER (PARTITION BY node ORDER BY c DESC, lbl) AS rn
-            |  FROM c1) WHERE rn = 1),
-            |c2 AS (SELECT e.dst AS node, l.lbl, count(*) AS c
-            |       FROM e JOIN l1 l ON e.src = l.node GROUP BY 1, 2),
-            |l2 AS MATERIALIZED (SELECT node, lbl FROM (
-            |  SELECT node, lbl, row_number() OVER (PARTITION BY node ORDER BY c DESC, lbl) AS rn
-            |  FROM c2) WHERE rn = 1),
-            |c3 AS (SELECT e.dst AS node, l.lbl, count(*) AS c
-            |       FROM e JOIN l2 l ON e.src = l.node GROUP BY 1, 2),
-            |l3 AS MATERIALIZED (SELECT node, lbl FROM (
-            |  SELECT node, lbl, row_number() OVER (PARTITION BY node ORDER BY c DESC, lbl) AS rn
-            |  FROM c3) WHERE rn = 1),
+            |${lpaRounds(3, materializeLast = true)},
             |cm AS (SELECT node, lbl AS community FROM l3),
             |mm AS (SELECT count(*) AS m FROM pe),
             |lab AS (SELECT x.community AS ca, y.community AS cb
@@ -436,38 +273,14 @@ object Graph {
           count(lit(1)).over(Window.partitionBy(col("community"))))
         .orderBy("community", "part")
     },
-    Some {
-      val roundCtes = (1 to 4).map { r =>
-        val p = r - 1
-        s"""tot$r AS (SELECT l.c, sum(d.deg) AS tot
-           |        FROM l$p l JOIN deg d ON d.node = l.node GROUP BY l.c),
-           |kic$r AS (SELECT e.src AS node, l.c, count(*) AS k
-           |        FROM e2 e JOIN l$p l ON e.dst = l.node
-           |        WHERE e.src % 2 = ${r % 2} GROUP BY 1, 2),
-           |cand$r AS (SELECT node, c, k FROM kic$r
-           |        UNION ALL SELECT node, c, 0 FROM l$p WHERE node % 2 = ${r % 2}),
-           |sc$r AS (SELECT cd.node, cd.c,
-           |        (SELECT m2 FROM m2t) * cd.k - d.deg *
-           |        (t.tot - CASE WHEN cd.c = l.c THEN d.deg ELSE 0 END) AS score
-           |        FROM cand$r cd JOIN l$p l ON l.node = cd.node
-           |        JOIN deg d ON d.node = cd.node JOIN tot$r t ON t.c = cd.c),
-           |b$r AS (SELECT node, c FROM (SELECT node, c,
-           |        row_number() OVER (PARTITION BY node ORDER BY score DESC, c) AS rn
-           |        FROM sc$r) WHERE rn = 1),
-           |l$r AS MATERIALIZED (SELECT l.node, coalesce(b.c, l.c) AS c
-           |        FROM l$p l LEFT JOIN b$r b ON b.node = l.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $coEdgesCte,
-         |e2 AS (SELECT p1 AS src, p2 AS dst FROM pe
-         |       UNION ALL SELECT p2, p1 FROM pe),
-         |deg AS (SELECT src AS node, count(*) AS deg FROM e2 GROUP BY src),
-         |m2t AS (SELECT sum(deg) AS m2 FROM deg),
-         |l0 AS (SELECT node, node AS c FROM deg),
-         |$roundCtes
-         |SELECT node AS part, c AS community,
-         |       count(*) OVER (PARTITION BY c) AS community_size
-         |FROM l4 ORDER BY community, part""".stripMargin
-    })
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e2")},
+            |deg AS (SELECT src AS node, count(*) AS deg FROM e2 GROUP BY src),
+            |m2t AS (SELECT sum(deg) AS m2 FROM deg),
+            |${louvainLevel("l")}
+            |SELECT node AS part, c AS community,
+            |       count(*) OVER (PARTITION BY c) AS community_size
+            |FROM l4 ORDER BY community, part""".stripMargin))
 
   // STRONGLY CONNECTED COMPONENTS (q72): over the DIRECTED trade
   // graph — supplier → customer for delivered lineitems, customer →
@@ -475,29 +288,10 @@ object Graph {
   // c*2+1 like q65 — which suppliers and customers sit in mutual
   // sale/return cycles? GraphOps.scc's min-label coloring peel at the
   // fixed Seq(5, 2) schedule; the oracle REPLAYS the exact schedule
-  // (generated CTEs: per outer round the live-restricted edge table —
-  // outer 1 runs on the full table, live = every node — then per
-  // inner round ONE CTE holding the min-label pull-merge AND the
-  // stale pointer jump against the round's input labels,
-  // forward+backward in one direction-tagged pass, then
-  // the fmin=bmin assignment and the live anti join). All values
-  // exact integers. GraphOpsSpec pins the fixture fully assigned AND
+  // (GraphKit.sccCtes; outer 1 runs on the full table, live = every
+  // node). All values exact integers. GraphOpsSpec pins the fixture fully assigned AND
   // at its fixpoint (a deeper schedule changes nothing), so the
   // fixed schedule is not hiding an unconverged closure.
-  /** The directed trade graph (delivered: supplier→customer, returned:
-    * customer→supplier) — shared by q72 and q99. */
-  private def tradeGraph(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_returnflag"))
-      .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(
-        when(col("l_returnflag") =!= "R", col("l_suppkey") * 2)
-          .otherwise(col("o_custkey") * 2 + 1).as("src"),
-        when(col("l_returnflag") =!= "R", col("o_custkey") * 2 + 1)
-          .otherwise(col("l_suppkey") * 2).as("dst"))
-      .distinct()
-
   private val q72 = QueryDef(
     "q72_scc",
     (s, dir) => {
@@ -505,71 +299,12 @@ object Graph {
         .orderBy("component", "node")
     },
     Some {
-      s"""WITH ${sccOracleCtes(sccOracleRounds(Seq(5, 2)))}
+      s"""WITH ${sccCtes(Seq(5, 2))}
          |SELECT a.node, a.component, s.component_size
          |FROM allf a JOIN (SELECT component, count(*) AS component_size
          |                  FROM allf GROUP BY 1) s USING (component)
          |ORDER BY component, node""".stripMargin
     })
-
-  /** The generated min-label closure rounds of the q72 oracle, one
-    * outer CTE group per schedule entry. Shared by q72 and q99. */
-  private def sccOracleRounds(schedule: Seq[Int]): String =
-    schedule.zipWithIndex.map { case (inner, idx) =>
-      val o = idx + 1
-      val p = o - 1
-      val pulls = (1 to inner).map { i =>
-        s"""l${o}_$i AS MATERIALIZED (
-           |  SELECT m.node, m.dir, coalesce(least(m.lab1, j.lab), m.lab1) AS lab
-           |  FROM (SELECT l.node, l.dir,
-           |               coalesce(least(l.lab, p.nl), l.lab) AS lab1
-           |        FROM l${o}_${i - 1} l LEFT JOIN (
-           |          SELECT el.src AS node, el.dir, min(l2.lab) AS nl
-           |          FROM el$o el JOIN l${o}_${i - 1} l2
-           |            ON el.dst = l2.node AND el.dir = l2.dir
-           |          GROUP BY 1, 2) p
-           |          ON l.node = p.node AND l.dir = p.dir) m
-           |  LEFT JOIN l${o}_${i - 1} j
-           |    ON m.lab1 = j.node AND m.dir = j.dir)""".stripMargin
-      }.mkString(",\n")
-      val elCte =
-        if (o == 1) s"el$o AS (SELECT src, dst, dir FROM e2)"
-        else
-          s"""el$o AS MATERIALIZED (
-             |  SELECT e2.src, e2.dst, e2.dir FROM e2
-             |  JOIN live$p ls ON e2.src = ls.node
-             |  JOIN live$p ld ON e2.dst = ld.node)""".stripMargin
-      s"""$elCte,
-         |l${o}_0 AS (SELECT node, dir, node AS lab FROM live$p
-         |            CROSS JOIN (SELECT 'f' AS dir UNION ALL SELECT 'b')),
-         |$pulls,
-         |found$o AS MATERIALIZED (
-         |  SELECT node, fmin AS component FROM (
-         |    SELECT node, min(CASE WHEN dir = 'f' THEN lab END) AS fmin,
-         |                 min(CASE WHEN dir = 'b' THEN lab END) AS bmin
-         |    FROM l${o}_$inner GROUP BY node) WHERE fmin = bmin),
-         |live$o AS MATERIALIZED (
-         |  SELECT l.node FROM live$p l LEFT JOIN found$o f ON l.node = f.node
-         |  WHERE f.node IS NULL)""".stripMargin
-    }.mkString(",\n")
-
-  /** The q72 oracle's CTE prefix — `de` (trade edges), the tagged
-    * closure rounds (caller passes the generated outer CTEs), ending
-    * in `allf(node, component)`. Shared by q72 and q99. */
-  private def sccOracleCtes(outerCtes: String): String =
-    s"""de AS (
-       |  SELECT DISTINCT
-       |    CASE WHEN l_returnflag <> 'R' THEN l_suppkey * 2
-       |         ELSE o_custkey * 2 + 1 END AS src,
-       |    CASE WHEN l_returnflag <> 'R' THEN o_custkey * 2 + 1
-       |         ELSE l_suppkey * 2 END AS dst
-       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-       |e2 AS (SELECT src, dst, 'f' AS dir FROM de
-       |       UNION ALL SELECT dst, src, 'b' FROM de),
-       |live0 AS (SELECT DISTINCT node FROM
-       |          (SELECT src AS node FROM de UNION ALL SELECT dst FROM de)),
-       |$outerCtes,
-       |allf AS (SELECT * FROM found1 UNION ALL SELECT * FROM found2)""".stripMargin
 
   // DETERMINISTIC RANDOM WALKS (q73): the DeepWalk/node2vec corpus
   // prep — one walk per node, 3 steps, each step choosing the
@@ -591,10 +326,7 @@ object Graph {
       // ranked adjacency and degree tables — each of the 3 steps joins
       // both, and replaying the window per step would re-rank the
       // whole edge table L times
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdges(s, dir), reliable = false)
-      val e2 = pe.select(col("p1").as("src"), col("p2").as("dst"))
-        .union(pe.select(col("p2").as("src"), col("p1").as("dst")))
+      val e2 = bothWays(cutCoEdges(s, dir)).toDF("src", "dst")
       val scope = graft.ops.CacheScope.sessionOwned
       val adj = scope.cached(e2.withColumn("rnk",
         row_number().over(Window.partitionBy("src").orderBy("dst")) - 1))
@@ -619,32 +351,15 @@ object Graph {
       }
       steps.reduce(_.unionByName(_)).orderBy("walk", "step")
     },
-    Some {
-      val stepCtes = (1 to 3).map { st =>
-        val p = if (st == 1) "w0" else s"s${st - 1}"
-        s"""s$st AS (SELECT w.walk, a.dst AS cur
-           |  FROM $p w
-           |  JOIN deg d ON d.node = w.cur
-           |  JOIN adj a ON a.src = w.cur AND a.rnk =
-           |    CAST(concat('0x', substr(sha256(CAST(w.walk AS VARCHAR) || ':$st'), 1, 15))
-           |         AS BIGINT) % d.deg)""".stripMargin
-      }.mkString(",\n")
-      val stepSelects = (1 to 3).map { st =>
-        s"UNION ALL SELECT walk, $st AS step, cur AS node FROM s$st"
-      }.mkString("\n")
-      s"""WITH $coEdgesCte,
-         |e2 AS (SELECT p1 AS src, p2 AS dst FROM pe
-         |       UNION ALL SELECT p2, p1 FROM pe),
-         |adj AS (SELECT src, dst,
-         |        row_number() OVER (PARTITION BY src ORDER BY dst) - 1 AS rnk
-         |        FROM e2),
-         |deg AS (SELECT src AS node, count(*) AS deg FROM e2 GROUP BY 1),
-         |w0 AS (SELECT node AS walk, node AS cur FROM deg),
-         |$stepCtes
-         |SELECT walk, 0 AS step, cur AS node FROM w0
-         |$stepSelects
-         |ORDER BY walk, step""".stripMargin
-    })
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e2")},
+            |adj AS (SELECT src, dst,
+            |        row_number() OVER (PARTITION BY src ORDER BY dst) - 1 AS rnk
+            |        FROM e2),
+            |deg AS (SELECT src AS node, count(*) AS deg FROM e2 GROUP BY 1),
+            |w0 AS (SELECT node AS walk, node AS cur FROM deg),
+            |${uniformWalkSteps(3)}
+            |${walkTailSql("w0", 3)}""".stripMargin))
 
   // MULTI-LEVEL LOUVAIN (q77): the full two-phase algorithm — after
   // q70's local moves, every community CONTRACTS to a super-node
@@ -662,8 +377,7 @@ object Graph {
   private val q77 = QueryDef(
     "q77_louvain_l2",
     (s, dir) => {
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdges(s, dir).toDF("src", "dst"), reliable = false)
+      val pe = cutCoEdges(s, dir).toDF("src", "dst")
       val l1 = graft.ops.GraphOps.louvain(pe)
       val coarse = graft.ops.GraphOps.louvainContract(pe, l1)
       val l2 = graft.ops.GraphOps.louvain(coarse, weightCol = Some("w"))
@@ -674,50 +388,23 @@ object Graph {
           count(lit(1)).over(Window.partitionBy(col("community"))))
         .orderBy("community", "part")
     },
-    Some {
-      def levelRounds(lp: String, e2: String, deg: String, m2t: String,
-                      kExpr: String, selfFilter: String): String =
-        (1 to 4).map { r =>
-          val p = s"$lp${r - 1}"
-          s"""tot$lp$r AS (SELECT c, CAST(sum(deg) AS BIGINT) AS tot FROM $p GROUP BY c),
-             |kic$lp$r AS (SELECT e.src AS node, l.c, $kExpr AS k
-             |        FROM $e2 e JOIN $p l ON e.dst = l.node
-             |        WHERE e.src % 2 = ${r % 2}$selfFilter GROUP BY 1, 2),
-             |cand$lp$r AS (SELECT node, c, k FROM kic$lp$r
-             |        UNION ALL SELECT node, c, 0 FROM $p WHERE node % 2 = ${r % 2}),
-             |sc$lp$r AS (SELECT cd.node, cd.c,
-             |        (SELECT m2 FROM $m2t) * cd.k - d.deg *
-             |        (t.tot - CASE WHEN cd.c = l.c THEN d.deg ELSE 0 END) AS score
-             |        FROM cand$lp$r cd JOIN $p l ON l.node = cd.node
-             |        JOIN $deg d ON d.node = cd.node JOIN tot$lp$r t ON t.c = cd.c),
-             |b$lp$r AS (SELECT node, c FROM (SELECT node, c,
-             |        row_number() OVER (PARTITION BY node ORDER BY score DESC, c) AS rn
-             |        FROM sc$lp$r) WHERE rn = 1),
-             |$lp$r AS MATERIALIZED (SELECT l.node, l.deg, coalesce(b.c, l.c) AS c
-             |        FROM $p l LEFT JOIN b$lp$r b ON b.node = l.node)""".stripMargin
-        }.mkString(",\n")
-      s"""WITH $coEdgesCte,
-         |e2 AS (SELECT p1 AS src, p2 AS dst FROM pe
-         |       UNION ALL SELECT p2, p1 FROM pe),
-         |deg AS (SELECT src AS node, count(*) AS deg FROM e2 GROUP BY src),
-         |m2t AS (SELECT sum(deg) AS m2 FROM deg),
-         |a0 AS (SELECT node, deg, node AS c FROM deg),
-         |${levelRounds("a", "e2", "deg", "m2t", "count(*)", "")},
-         |ce AS MATERIALIZED (SELECT least(la.c, lb.c) AS src,
-         |        greatest(la.c, lb.c) AS dst, count(*) AS w
-         |      FROM pe JOIN a4 la ON la.node = pe.p1
-         |      JOIN a4 lb ON lb.node = pe.p2 GROUP BY 1, 2),
-         |e2b AS (SELECT src, dst, w FROM ce UNION ALL SELECT dst, src, w FROM ce),
-         |degb AS (SELECT src AS node, CAST(sum(w) AS BIGINT) AS deg FROM e2b GROUP BY src),
-         |m2b AS (SELECT CAST(sum(deg) AS BIGINT) AS m2 FROM degb),
-         |b0 AS (SELECT node, deg, node AS c FROM degb),
-         |${levelRounds("b", "e2b", "degb", "m2b",
-              "CAST(sum(e.w) AS BIGINT)", " AND e.src <> e.dst")}
-         |SELECT p.node AS part, l2.c AS community,
-         |       count(*) OVER (PARTITION BY l2.c) AS community_size
-         |FROM a4 p JOIN b4 l2 ON l2.node = p.c
-         |ORDER BY community, part""".stripMargin
-    })
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e2")},
+            |deg AS (SELECT src AS node, count(*) AS deg FROM e2 GROUP BY src),
+            |m2t AS (SELECT sum(deg) AS m2 FROM deg),
+            |${louvainLevel("a")},
+            |ce AS MATERIALIZED (SELECT least(la.c, lb.c) AS src,
+            |        greatest(la.c, lb.c) AS dst, count(*) AS w
+            |      FROM pe JOIN a4 la ON la.node = pe.p1
+            |      JOIN a4 lb ON lb.node = pe.p2 GROUP BY 1, 2),
+            |${bothWaysCte("e2b", "ce", Seq("src" -> "src", "dst" -> "dst", "w" -> "w"))},
+            |degb AS (SELECT src AS node, CAST(sum(w) AS BIGINT) AS deg FROM e2b GROUP BY src),
+            |m2b AS (SELECT CAST(sum(deg) AS BIGINT) AS m2 FROM degb),
+            |${louvainLevel("b", "e2b", "degb", "m2b", "CAST(sum(e.w) AS BIGINT)", " AND e.src <> e.dst")}
+            |SELECT p.node AS part, l2.c AS community,
+            |       count(*) OVER (PARTITION BY l2.c) AS community_size
+            |FROM a4 p JOIN b4 l2 ON l2.node = p.c
+            |ORDER BY community, part""".stripMargin))
 
   // FREQUENT TRIPLES (q79): the market-basket itemset classic one
   // level above the co-purchase PAIR build — parts bought together in
@@ -733,8 +420,7 @@ object Graph {
   private val q79 = QueryDef(
     "q79_frequent_triples",
     (s, dir) => {
-      val op = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
+      val op = orderParts(s, dir)
       op.as("a")
         .join(op.as("b"), col("a.l_orderkey") === col("b.l_orderkey") &&
           col("a.l_partkey") < col("b.l_partkey"))
@@ -772,8 +458,7 @@ object Graph {
   private val q80 = QueryDef(
     "q80_assoc_rules",
     (s, dir) => {
-      val op = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey")).distinct()
+      val op = orderParts(s, dir)
       val supp = op.groupBy(col("l_partkey").as("p")).agg(count(lit(1)).as("s"))
       val n = op.select(col("l_orderkey")).distinct()
         .agg(count(lit(1)).as("n"))
@@ -797,15 +482,14 @@ object Graph {
           round(col("sp") / col("sa") * col("n") / col("sb"), 6).as("lift"))
         .orderBy(desc("lift"), asc("a"), asc("b")).limit(20)
     },
-    Some("""WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    Some(s"""WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
             |supp AS (SELECT l_partkey AS p, count(*) AS s FROM op GROUP BY 1),
             |n AS (SELECT count(DISTINCT l_orderkey) AS n FROM op),
             |pairs AS (SELECT a.l_partkey AS p1, b.l_partkey AS p2, count(*) AS sp
             |          FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey
             |                            AND a.l_partkey < b.l_partkey
             |          GROUP BY 1, 2 HAVING count(*) >= 2),
-            |rules AS (SELECT p1 AS a, p2 AS b, sp FROM pairs
-            |          UNION ALL SELECT p2, p1, sp FROM pairs)
+            |${bothWaysCte("rules", "pairs", Seq("p1" -> "a", "p2" -> "b", "sp" -> "sp"))}
             |SELECT r.a, r.b, r.sp AS support,
             |       round(r.sp / sa.s, 6) AS confidence,
             |       round(r.sp / sa.s * (SELECT n FROM n) / sb.s, 6) AS lift
@@ -836,13 +520,9 @@ object Graph {
           (col("deg_a") * col("deg_b")).as("pref"))
         .orderBy(desc("jaccard"), asc("a"), asc("b")).limit(30)
     },
-    Some(s"""WITH $coEdgesCte,
-            |prm AS (SELECT GREATEST(64, (SELECT MIN(1::BIGINT << b)
-            |        FROM (SELECT unnest(range(0, 32)) AS b)
-            |        WHERE (1::BIGINT << b) * (1::BIGINT << b) >=
-            |              2 * (SELECT count(*) FROM pe))) AS cap),
-            |e2 AS (SELECT p1 AS src, p2 AS dst FROM pe
-            |       UNION ALL SELECT p2, p1 FROM pe),
+    Some(s"""WITH ${coEdgesCte()},
+            |$hubCapCte,
+            |${bothWaysCte("e2")},
             |deg AS (SELECT src AS z, count(*) AS deg FROM e2 GROUP BY src),
             |zn AS (SELECT e2.src AS z2, e2.dst AS n
             |       FROM e2 JOIN deg ON e2.src = deg.z
@@ -873,71 +553,15 @@ object Graph {
   private val q85 = QueryDef(
     "q85_betweenness",
     (s, dir) => {
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdges(s, dir), reliable = false)
-      val edges = pe.union(pe.select(col("p2").as("p1"), col("p1").as("p2")))
-        .toDF("src", "dst")
-      val seeds = edges.select(col("src").as("node"))
-        .distinct().orderBy("node").limit(10)
-      graft.ops.GraphOps.betweenness(edges, seeds, maxHops = 3)
+      val edges = bothWays(cutCoEdges(s, dir)).toDF("src", "dst")
+      graft.ops.GraphOps.betweenness(edges, smallestSeeds(edges), maxHops = 3)
         .select(col("node").as("part"), round(col("bc"), 6).as("bc"))
         .orderBy("part")
     },
-    Some(s"""WITH $coEdgesCte,
-            |e AS (SELECT p1 AS src, p2 AS dst FROM pe
-            |      UNION ALL SELECT p2, p1 FROM pe),
-            |sd AS (SELECT DISTINCT src AS node FROM e ORDER BY node LIMIT 10),
-            |st0 AS (SELECT node AS seed, node, 0 AS dist, 1::BIGINT AS sigma FROM sd),
-            |c1 AS (SELECT f.seed, e.dst AS node, CAST(sum(f.sigma) AS BIGINT) AS sigma
-            |       FROM e JOIN st0 f ON e.src = f.node GROUP BY 1, 2),
-            |n1 AS (SELECT seed, node, 1 AS dist, sigma FROM c1
-            |       WHERE NOT EXISTS (SELECT 1 FROM st0 x
-            |                         WHERE x.seed = c1.seed AND x.node = c1.node)),
-            |st1 AS MATERIALIZED (SELECT * FROM st0 UNION ALL SELECT * FROM n1),
-            |c2 AS (SELECT f.seed, e.dst AS node, CAST(sum(f.sigma) AS BIGINT) AS sigma
-            |       FROM e JOIN st1 f ON e.src = f.node WHERE f.dist = 1 GROUP BY 1, 2),
-            |n2 AS (SELECT seed, node, 2 AS dist, sigma FROM c2
-            |       WHERE NOT EXISTS (SELECT 1 FROM st1 x
-            |                         WHERE x.seed = c2.seed AND x.node = c2.node)),
-            |st2 AS MATERIALIZED (SELECT * FROM st1 UNION ALL SELECT * FROM n2),
-            |c3 AS (SELECT f.seed, e.dst AS node, CAST(sum(f.sigma) AS BIGINT) AS sigma
-            |       FROM e JOIN st2 f ON e.src = f.node WHERE f.dist = 2 GROUP BY 1, 2),
-            |n3 AS (SELECT seed, node, 3 AS dist, sigma FROM c3
-            |       WHERE NOT EXISTS (SELECT 1 FROM st2 x
-            |                         WHERE x.seed = c3.seed AND x.node = c3.node)),
-            |st3 AS MATERIALIZED (SELECT * FROM st2 UNION ALL SELECT * FROM n3),
-            |d3 AS (SELECT seed, node, sigma, 0.0 AS delta FROM st3 WHERE dist = 3),
-            |t2 AS (SELECT v.seed, v.node,
-            |         round(sum(CAST(v.sigma AS DOUBLE) / CAST(p.sigma AS DOUBLE)
-            |               * (1 + p.delta)), 9) AS delta
-            |       FROM st3 v JOIN e ON e.src = v.node
-            |       JOIN d3 p ON p.seed = v.seed AND p.node = e.dst
-            |       WHERE v.dist = 2 GROUP BY 1, 2),
-            |d2 AS MATERIALIZED (SELECT v.seed, v.node, v.sigma, coalesce(t.delta, 0.0) AS delta
-            |       FROM st3 v LEFT JOIN t2 t ON t.seed = v.seed AND t.node = v.node
-            |       WHERE v.dist = 2),
-            |t1 AS (SELECT v.seed, v.node,
-            |         round(sum(CAST(v.sigma AS DOUBLE) / CAST(p.sigma AS DOUBLE)
-            |               * (1 + p.delta)), 9) AS delta
-            |       FROM st3 v JOIN e ON e.src = v.node
-            |       JOIN d2 p ON p.seed = v.seed AND p.node = e.dst
-            |       WHERE v.dist = 1 GROUP BY 1, 2),
-            |d1 AS MATERIALIZED (SELECT v.seed, v.node, v.sigma, coalesce(t.delta, 0.0) AS delta
-            |       FROM st3 v LEFT JOIN t1 t ON t.seed = v.seed AND t.node = v.node
-            |       WHERE v.dist = 1),
-            |t0 AS (SELECT v.seed, v.node,
-            |         round(sum(CAST(v.sigma AS DOUBLE) / CAST(p.sigma AS DOUBLE)
-            |               * (1 + p.delta)), 9) AS delta
-            |       FROM st3 v JOIN e ON e.src = v.node
-            |       JOIN d1 p ON p.seed = v.seed AND p.node = e.dst
-            |       WHERE v.dist = 0 GROUP BY 1, 2),
-            |d0 AS (SELECT v.seed, v.node, v.sigma, coalesce(t.delta, 0.0) AS delta
-            |       FROM st3 v LEFT JOIN t0 t ON t.seed = v.seed AND t.node = v.node
-            |       WHERE v.dist = 0),
-            |al AS (SELECT seed, node, delta FROM d0
-            |       UNION ALL SELECT seed, node, delta FROM d1
-            |       UNION ALL SELECT seed, node, delta FROM d2
-            |       UNION ALL SELECT seed, node, delta FROM d3)
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e")},
+            |${bfsLevels(3)},
+            |${dependencyLevels(3)}
             |SELECT node AS part, round(sum(delta), 6) AS bc
             |FROM al WHERE node != seed GROUP BY node ORDER BY part""".stripMargin))
 
@@ -956,10 +580,8 @@ object Graph {
   private val q86 = QueryDef(
     "q86_graph_profile",
     (s, dir) => {
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdges(s, dir), reliable = false)
-      val e2 = pe.union(pe.select(col("p2").as("p1"), col("p1").as("p2")))
-      val deg = e2.groupBy(col("p1").as("node")).agg(count(lit(1)).as("deg"))
+      val pe = cutCoEdges(s, dir)
+      val deg = bothWays(pe).groupBy(col("p1").as("node")).agg(count(lit(1)).as("deg"))
       val ds = broadcast(deg.agg(count(lit(1)).as("n"), max("deg").as("max_deg"),
         expr("cast(sum(deg * (deg - 1) div 2) as bigint)").as("wedges")))
       val mm = broadcast(pe.agg(count(lit(1)).as("m")))
@@ -977,9 +599,8 @@ object Graph {
               / col("wedges").cast("double"), 6))
             .otherwise(lit(0.0)).as("clustering"))
     },
-    Some(s"""WITH $coEdgesCte,
-            |e2 AS (SELECT p1 AS src, p2 AS dst FROM pe
-            |       UNION ALL SELECT p2, p1 FROM pe),
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e2")},
             |deg AS (SELECT src AS node, count(*) AS deg FROM e2 GROUP BY 1),
             |ds AS (SELECT count(*) AS n, max(deg) AS max_deg,
             |              CAST(sum(deg * (deg - 1) // 2) AS BIGINT) AS wedges
@@ -1017,12 +638,8 @@ object Graph {
     "q87_node2vec_walks",
     (s, dir) => {
       import graft.queries.QueryDef.sha60
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdges(s, dir), reliable = false)
       val scope = graft.ops.CacheScope.sessionOwned
-      val adj = scope.cached(
-        pe.select(col("p1").as("src"), col("p2").as("dst"))
-          .union(pe.select(col("p2").as("src"), col("p1").as("dst"))))
+      val adj = scope.cached(bothWays(cutCoEdges(s, dir)).toDF("src", "dst"))
       var pos = adj.select(col("src").as("walk")).distinct()
         .select(col("walk"), col("walk").as("prev"), col("walk").as("cur"))
       val steps = scala.collection.mutable.ArrayBuffer(
@@ -1050,36 +667,11 @@ object Graph {
       }
       steps.reduce(_.unionByName(_)).orderBy("walk", "step")
     },
-    Some {
-      val stepCtes = (1 to 3).map { st =>
-        val p = if (st == 1) "s0" else s"s${st - 1}"
-        s"""c$st AS (SELECT w.walk, w.cur, a.dst,
-           |    CASE WHEN a.dst = w.prev THEN 1
-           |         WHEN ex.src IS NOT NULL THEN 2 ELSE 4 END AS wt
-           |  FROM $p w JOIN adj a ON a.src = w.cur
-           |  LEFT JOIN adj ex ON ex.src = w.prev AND ex.dst = a.dst),
-           |k$st AS (SELECT walk, cur, dst, wt,
-           |    sum(wt) OVER (PARTITION BY walk ORDER BY dst
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-           |    sum(wt) OVER (PARTITION BY walk) AS tot
-           |  FROM c$st),
-           |s$st AS (SELECT walk, cur AS prev, dst AS cur FROM k$st
-           |  WHERE cum - wt <=
-           |    CAST(concat('0x', substr(sha256(CAST(walk AS VARCHAR) || ':$st'), 1, 15)) AS BIGINT) % tot
-           |   AND CAST(concat('0x', substr(sha256(CAST(walk AS VARCHAR) || ':$st'), 1, 15)) AS BIGINT) % tot < cum)""".stripMargin
-      }.mkString(",\n")
-      val stepSelects = (1 to 3).map { st =>
-        s"UNION ALL SELECT walk, $st AS step, cur AS node FROM s$st"
-      }.mkString("\n")
-      s"""WITH $coEdgesCte,
-         |adj AS (SELECT p1 AS src, p2 AS dst FROM pe
-         |        UNION ALL SELECT p2, p1 FROM pe),
-         |s0 AS (SELECT DISTINCT src AS walk, src AS prev, src AS cur FROM adj),
-         |$stepCtes
-         |SELECT walk, 0 AS step, cur AS node FROM s0
-         |$stepSelects
-         |ORDER BY walk, step""".stripMargin
-    })
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("adj")},
+            |s0 AS (SELECT DISTINCT src AS walk, src AS prev, src AS cur FROM adj),
+            |${node2vecSteps(3)}
+            |${walkTailSql("s0", 3)}""".stripMargin))
 
   // HARMONIC CENTRALITY (q93): the centrality family's third member —
   // H(v) = Σ 1/d(s,v) from the same 10 seeds and 3-hop horizon as
@@ -1092,40 +684,15 @@ object Graph {
   private val q93 = QueryDef(
     "q93_harmonic",
     (s, dir) => {
-      val pe = graft.ops.CacheScope.sessionOwned
-        .checkpointed(coEdges(s, dir), reliable = false)
-      val edges = pe.union(pe.select(col("p2").as("p1"), col("p1").as("p2")))
-        .toDF("src", "dst")
-      val seeds = edges.select(col("src").as("node"))
-        .distinct().orderBy("node").limit(10)
-      graft.ops.GraphOps.harmonicCentrality(edges, seeds, maxHops = 3)
+      val edges = bothWays(cutCoEdges(s, dir)).toDF("src", "dst")
+      graft.ops.GraphOps.harmonicCentrality(edges, smallestSeeds(edges), maxHops = 3)
         .select(col("node").as("part"), col("n_reached"),
           round(col("harmonic"), 6).as("harmonic"))
         .orderBy("part")
     },
-    Some(s"""WITH $coEdgesCte,
-            |e AS (SELECT p1 AS src, p2 AS dst FROM pe
-            |      UNION ALL SELECT p2, p1 FROM pe),
-            |sd AS (SELECT DISTINCT src AS node FROM e ORDER BY node LIMIT 10),
-            |st0 AS (SELECT node AS seed, node, 0 AS dist, 1::BIGINT AS sigma FROM sd),
-            |c1 AS (SELECT f.seed, e.dst AS node, CAST(sum(f.sigma) AS BIGINT) AS sigma
-            |       FROM e JOIN st0 f ON e.src = f.node GROUP BY 1, 2),
-            |n1 AS (SELECT seed, node, 1 AS dist, sigma FROM c1
-            |       WHERE NOT EXISTS (SELECT 1 FROM st0 x
-            |                         WHERE x.seed = c1.seed AND x.node = c1.node)),
-            |st1 AS MATERIALIZED (SELECT * FROM st0 UNION ALL SELECT * FROM n1),
-            |c2 AS (SELECT f.seed, e.dst AS node, CAST(sum(f.sigma) AS BIGINT) AS sigma
-            |       FROM e JOIN st1 f ON e.src = f.node WHERE f.dist = 1 GROUP BY 1, 2),
-            |n2 AS (SELECT seed, node, 2 AS dist, sigma FROM c2
-            |       WHERE NOT EXISTS (SELECT 1 FROM st1 x
-            |                         WHERE x.seed = c2.seed AND x.node = c2.node)),
-            |st2 AS MATERIALIZED (SELECT * FROM st1 UNION ALL SELECT * FROM n2),
-            |c3 AS (SELECT f.seed, e.dst AS node, CAST(sum(f.sigma) AS BIGINT) AS sigma
-            |       FROM e JOIN st2 f ON e.src = f.node WHERE f.dist = 2 GROUP BY 1, 2),
-            |n3 AS (SELECT seed, node, 3 AS dist, sigma FROM c3
-            |       WHERE NOT EXISTS (SELECT 1 FROM st2 x
-            |                         WHERE x.seed = c3.seed AND x.node = c3.node)),
-            |st3 AS (SELECT * FROM st2 UNION ALL SELECT * FROM n3)
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e")},
+            |${bfsLevels(3)}
             |SELECT node AS part, count(*) AS n_reached,
             |       round(SUM(CAST(1.0 AS DOUBLE) / dist), 6) AS harmonic
             |FROM st3 WHERE dist >= 1
@@ -1171,23 +738,9 @@ object Graph {
           (col("d90_est") === col("d90_exact")).as("d90_match"))
         .orderBy("h")
     },
-    Some(s"""WITH $coEdgesCte,
-            |e2 AS (SELECT p1 AS src, p2 AS dst FROM pe
-            |       UNION ALL SELECT p2, p1 FROM pe),
-            |b0 AS MATERIALIZED (SELECT DISTINCT src AS a, src AS b FROM e2),
-            |b1 AS MATERIALIZED (SELECT DISTINCT a, b FROM (
-            |  SELECT a, b FROM b0 UNION ALL
-            |  SELECT b0.a, e2.dst AS b FROM b0 JOIN e2 ON b0.b = e2.src)),
-            |b2 AS MATERIALIZED (SELECT DISTINCT a, b FROM (
-            |  SELECT a, b FROM b1 UNION ALL
-            |  SELECT b1.a, e2.dst AS b FROM b1 JOIN e2 ON b1.b = e2.src)),
-            |b3 AS MATERIALIZED (SELECT DISTINCT a, b FROM (
-            |  SELECT a, b FROM b2 UNION ALL
-            |  SELECT b2.a, e2.dst AS b FROM b2 JOIN e2 ON b2.b = e2.src)),
-            |ns AS (          SELECT 0 AS h, count(*) AS n_exact FROM b0
-            |       UNION ALL SELECT 1 AS h, count(*) AS n_exact FROM b1
-            |       UNION ALL SELECT 2 AS h, count(*) AS n_exact FROM b2
-            |       UNION ALL SELECT 3 AS h, count(*) AS n_exact FROM b3)
+    Some(s"""WITH ${coEdgesCte()},
+            |${bothWaysCte("e2")},
+            |${ballRounds(3)}
             |SELECT h, n_exact, true AS within_5pct, true AS d90_match
             |FROM ns ORDER BY h""".stripMargin))
 
@@ -1210,23 +763,11 @@ object Graph {
         .select(col("src").as("p1"), col("dst").as("p2"), col("support"))
         .orderBy("p1", "p2")
     },
-    Some {
-      val rounds = (1 to 4).map { r =>
-        s"""t$r AS MATERIALIZED (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-           |  FROM e${r - 1} e1 JOIN e${r - 1} e2 ON e1.dst = e2.src
-           |  JOIN e${r - 1} e3 ON e3.src = e1.src AND e3.dst = e2.dst),
-           |s$r AS MATERIALIZED (SELECT src, dst, count(*) AS support FROM (
-           |            SELECT a AS src, b AS dst FROM t$r
-           |  UNION ALL SELECT b AS src, c AS dst FROM t$r
-           |  UNION ALL SELECT a AS src, c AS dst FROM t$r) GROUP BY src, dst),
-           |e$r AS MATERIALIZED (SELECT src, dst FROM s$r WHERE support >= 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $coEdgesCte,
-         |e0 AS (SELECT p1 AS src, p2 AS dst FROM pe),
-         |$rounds
-         |SELECT src AS p1, dst AS p2, support FROM s4
-         |WHERE support >= 1 ORDER BY p1, p2""".stripMargin
-    })
+    Some(s"""WITH ${coEdgesCte()},
+            |e0 AS (SELECT p1 AS src, p2 AS dst FROM pe),
+            |${kTrussRounds(3, 4)}
+            |SELECT src AS p1, dst AS p2, support FROM s4
+            |WHERE support >= 1 ORDER BY p1, p2""".stripMargin))
 
   // SCC CONDENSATION (q99): the component-level view of the directed
   // trade graph — contract q72's SCC assignment onto the edges. Rows
@@ -1257,7 +798,7 @@ object Graph {
         .orderBy("c_src", "c_dst")
     },
     Some {
-      s"""WITH ${sccOracleCtes(sccOracleRounds(Seq(5, 2)))}
+      s"""WITH ${sccCtes(Seq(5, 2))}
          |SELECT ca.component AS c_src, cb.component AS c_dst,
          |       count(*) AS n_edges
          |FROM de JOIN allf ca ON de.src = ca.node

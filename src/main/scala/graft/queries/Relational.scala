@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Encoder, Encoders}
 
 import graft.Tables
+import GraphKit._
 import QueryDef.dsum
 
 /** The relational battery — SURVEY.md §2B Q1..Q26, every query a total
@@ -1290,64 +1291,16 @@ object Relational {
       // the graph instead of a fixture-tuned literal. The seam
       // materializes the edge build's stages at construction (the
       // documented iterative-graph exemption, same as dupClusters).
-      // integer node ids end-to-end (supplier s → 2s, customer c →
-      // 2c+1): every join, distinct, and aggregate below keys on a
-      // long, not a concatenated string — the display label is
-      // materialized once, on the 20 output rows
-      val ed = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") * 2).as("src"),
-          (col("o_custkey") * 2 + 1).as("dst"))
-        .distinct()
-      // the iterations themselves are the reusable op
-      // (graft.ops.GraphOps.pageRank — edge/degree tables scope-cached,
-      // node count as ONE action-free broadcast aggregate riding the
-      // iterations as a constant column); undirecting the edge list
-      // gives every node outdeg >= 1, so no dangling-mass correction.
-      // Both directions union WITHOUT the generic undirect()'s second
-      // distinct: src parity (even) differs from dst parity (odd), so
-      // the reversed copy cannot collide with the forward one — one
-      // fewer corpus-sized shuffle, identical edge set (the oracle's
-      // UNION dedup sees disjoint inputs)
-      val edges = ed.union(ed.select(col("dst").as("src"), col("src").as("dst")))
-      val pr = graft.ops.GraphOps.pageRank(edges)
-      // rank on the integer node id; label the 20 survivors only
-      val fin = pr.select(col("node"), round(col("pr"), 6).as("pr"))
-        .orderBy(desc("pr"), asc("node")).limit(20)
-        .withColumn("rnk",
-          row_number().over(Window.orderBy(desc("pr"), asc("node"))))
-        .select(col("rnk"),
-          when(col("node") % 2 === 0, concat(lit("s"), expr("cast(node div 2 as string)")))
-            .otherwise(concat(lit("c"), expr("cast(node div 2 as string)"))).as("node"),
-          col("pr"))
-      fin.orderBy("rnk")
+      // Integer node ids end-to-end (GraphKit: supplier s → 2s,
+      // customer c → 2c+1), labelled on the 20 output rows only. The
+      // iterations are graft.ops.GraphOps.pageRank; both edge
+      // directions (every node has outdeg >= 1, so no dangling-mass
+      // correction) union without undirect()'s second distinct — the
+      // parity split keeps the halves disjoint.
+      val pr = graft.ops.GraphOps.pageRank(bothWays(txEdges(s, dir)))
+      labelTop(pr, "pr", 20, "pr").orderBy("rnk")
     },
-    Some("""WITH ed AS (SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-            |            FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-            |e AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
-            |deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY src),
-            |n AS (SELECT count(*) AS n FROM deg),
-            |p0 AS (SELECT node, deg, 1.0 / (SELECT n FROM n) AS pr FROM deg),
-            |p1 AS (SELECT d.node, d.deg,
-            |              round(0.15 / (SELECT n FROM n) + 0.85 * SUM(p.pr / p.deg), 9) AS pr
-            |       FROM e JOIN p0 p ON p.node = e.src JOIN deg d ON d.node = e.dst
-            |       GROUP BY d.node, d.deg),
-            |p2 AS (SELECT d.node, d.deg,
-            |              round(0.15 / (SELECT n FROM n) + 0.85 * SUM(p.pr / p.deg), 9) AS pr
-            |       FROM e JOIN p1 p ON p.node = e.src JOIN deg d ON d.node = e.dst
-            |       GROUP BY d.node, d.deg),
-            |p3 AS (SELECT d.node, d.deg,
-            |              round(0.15 / (SELECT n FROM n) + 0.85 * SUM(p.pr / p.deg), 9) AS pr
-            |       FROM e JOIN p2 p ON p.node = e.src JOIN deg d ON d.node = e.dst
-            |       GROUP BY d.node, d.deg),
-            |fin AS (SELECT node, round(pr, 6) AS pr FROM p3
-            |        ORDER BY pr DESC, node LIMIT 20),
-            |r AS (SELECT row_number() OVER (ORDER BY pr DESC, node) AS rnk, node, pr FROM fin)
-            |SELECT rnk,
-            |       CASE WHEN node % 2 = 0 THEN 's' || (node // 2)
-            |            ELSE 'c' || (node // 2) END AS node, pr
-            |FROM r ORDER BY rnk""".stripMargin))
+    Some(txPageRankSql(weighted = false, personalized = false)))
 
   // PERSONALIZED PageRank (q44's seeded variant): teleport mass
   // restarts at the SUPPLIER nodes only, so the stationary mass over
@@ -1361,57 +1314,13 @@ object Relational {
     "q46_ppr",
     (s, dir) => {
       // same round discipline as q44: edge build in the caller's
-      // session, iterations under GraphOps' edge-width child session
-      val ed = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") * 2).as("src"),
-          (col("o_custkey") * 2 + 1).as("dst"))
-        .distinct()
-      // parity-disjoint undirection, one distinct (see q44)
-      val edges = ed.union(ed.select(col("dst").as("src"), col("src").as("dst")))
-      // seed set = the supplier nodes — derived from lineitem DIRECTLY
-      // (every order line names a supplier with at least one edge, so
-      // the set equals "even-parity nodes of the edge list"): deriving
-      // it FROM `edges` would re-run the whole join+distinct edge
-      // build a second time at GraphOps' seed checkpoint seam —
-      // measured +3 s at sf0.1 for byte-identical output
-      val seeds = t(s, dir, "lineitem")
-        .select((col("l_suppkey") * 2).as("node")).distinct()
-      val pr = graft.ops.GraphOps.personalizedPageRank(edges, seeds)
-      val fin = pr.where(col("node") % 2 === 1)
-        .select(col("node"), round(col("pr"), 6).as("pr"))
-        .orderBy(desc("pr"), asc("node")).limit(20)
-        .withColumn("rnk",
-          row_number().over(Window.orderBy(desc("pr"), asc("node"))))
-        .select(col("rnk"),
-          concat(lit("c"), expr("cast(node div 2 as string)")).as("node"),
-          col("pr"))
-      fin.orderBy("rnk")
+      // session, iterations under GraphOps' edge-width child session;
+      // the seeds are GraphKit.supplierSeeds, read from lineitem
+      val pr = graft.ops.GraphOps.personalizedPageRank(
+        bothWays(txEdges(s, dir)), supplierSeeds(s, dir))
+      labelTop(pr, "pr", 20, "pr", customersOnly = true).orderBy("rnk")
     },
-    Some("""WITH ed AS (SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-            |            FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-            |e AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
-            |deg AS (SELECT src AS node, count(*) AS deg FROM e GROUP BY src),
-            |ns AS (SELECT count(*) AS ns FROM deg WHERE node % 2 = 0),
-            |b AS (SELECT node, deg,
-            |             CASE WHEN node % 2 = 0 THEN 1.0 / (SELECT ns FROM ns) ELSE 0.0 END AS pr0,
-            |             CASE WHEN node % 2 = 0 THEN 0.15 / (SELECT ns FROM ns) ELSE 0.0 END AS bs
-            |      FROM deg),
-            |p0 AS (SELECT node, deg, bs, pr0 AS pr FROM b),
-            |p1 AS (SELECT b.node, b.deg, b.bs, round(b.bs + 0.85 * SUM(p.pr / p.deg), 9) AS pr
-            |       FROM e JOIN p0 p ON p.node = e.src JOIN b ON b.node = e.dst
-            |       GROUP BY b.node, b.deg, b.bs),
-            |p2 AS (SELECT b.node, b.deg, b.bs, round(b.bs + 0.85 * SUM(p.pr / p.deg), 9) AS pr
-            |       FROM e JOIN p1 p ON p.node = e.src JOIN b ON b.node = e.dst
-            |       GROUP BY b.node, b.deg, b.bs),
-            |p3 AS (SELECT b.node, b.deg, b.bs, round(b.bs + 0.85 * SUM(p.pr / p.deg), 9) AS pr
-            |       FROM e JOIN p2 p ON p.node = e.src JOIN b ON b.node = e.dst
-            |       GROUP BY b.node, b.deg, b.bs),
-            |fin AS (SELECT node, round(pr, 6) AS pr FROM p3 WHERE node % 2 = 1
-            |        ORDER BY pr DESC, node LIMIT 20),
-            |r AS (SELECT row_number() OVER (ORDER BY pr DESC, node) AS rnk, node, pr FROM fin)
-            |SELECT rnk, 'c' || (node // 2) AS node, pr FROM r ORDER BY rnk""".stripMargin))
+    Some(txPageRankSql(weighted = false, personalized = true)))
 
   // WEIGHTED PageRank (q44 keeps the graph, drops the distinct): the
   // customer–supplier edge WEIGHT is the transaction multiplicity
@@ -1428,53 +1337,10 @@ object Relational {
   private val q47 = QueryDef(
     "q47_pagerank_weighted",
     (s, dir) => {
-      val ed = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") * 2).as("src"),
-          (col("o_custkey") * 2 + 1).as("dst"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      val edges = ed.union(
-        ed.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      val pr = graft.ops.GraphOps.pageRankWeighted(edges, "w")
-      val fin = pr.select(col("node"), round(col("pr"), 6).as("pr"))
-        .orderBy(desc("pr"), asc("node")).limit(20)
-        .withColumn("rnk",
-          row_number().over(Window.orderBy(desc("pr"), asc("node"))))
-        .select(col("rnk"),
-          when(col("node") % 2 === 0, concat(lit("s"), expr("cast(node div 2 as string)")))
-            .otherwise(concat(lit("c"), expr("cast(node div 2 as string)"))).as("node"),
-          col("pr"))
-      fin.orderBy("rnk")
+      val pr = graft.ops.GraphOps.pageRankWeighted(bothWays(txEdges(s, dir, weighted = true)), "w")
+      labelTop(pr, "pr", 20, "pr").orderBy("rnk")
     },
-    Some("""WITH ed AS (SELECT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst,
-            |                  count(*) AS w
-            |            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            |            GROUP BY 1, 2),
-            |e AS (SELECT src, dst, w FROM ed
-            |      UNION ALL SELECT dst AS src, src AS dst, w FROM ed),
-            |deg AS (SELECT src AS node, sum(w) AS deg FROM e GROUP BY src),
-            |n AS (SELECT count(*) AS n FROM deg),
-            |p0 AS (SELECT node, deg, 1.0 / (SELECT n FROM n) AS pr FROM deg),
-            |p1 AS (SELECT d.node, d.deg,
-            |              round(0.15 / (SELECT n FROM n) + 0.85 * SUM(p.pr * e.w / p.deg), 9) AS pr
-            |       FROM e JOIN p0 p ON p.node = e.src JOIN deg d ON d.node = e.dst
-            |       GROUP BY d.node, d.deg),
-            |p2 AS (SELECT d.node, d.deg,
-            |              round(0.15 / (SELECT n FROM n) + 0.85 * SUM(p.pr * e.w / p.deg), 9) AS pr
-            |       FROM e JOIN p1 p ON p.node = e.src JOIN deg d ON d.node = e.dst
-            |       GROUP BY d.node, d.deg),
-            |p3 AS (SELECT d.node, d.deg,
-            |              round(0.15 / (SELECT n FROM n) + 0.85 * SUM(p.pr * e.w / p.deg), 9) AS pr
-            |       FROM e JOIN p2 p ON p.node = e.src JOIN deg d ON d.node = e.dst
-            |       GROUP BY d.node, d.deg),
-            |fin AS (SELECT node, round(pr, 6) AS pr FROM p3
-            |        ORDER BY pr DESC, node LIMIT 20),
-            |r AS (SELECT row_number() OVER (ORDER BY pr DESC, node) AS rnk, node, pr FROM fin)
-            |SELECT rnk,
-            |       CASE WHEN node % 2 = 0 THEN 's' || (node // 2)
-            |            ELSE 'c' || (node // 2) END AS node, pr
-            |FROM r ORDER BY rnk""".stripMargin))
+    Some(txPageRankSql(weighted = true, personalized = false)))
 
   // Equal-width value HISTOGRAM per event_type — the distribution
   // profile q30/q32's rank-based views don't give (bin populations at
@@ -1909,53 +1775,11 @@ object Relational {
   private val q63 = QueryDef(
     "q63_wppr",
     (s, dir) => {
-      val ed = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") * 2).as("src"),
-          (col("o_custkey") * 2 + 1).as("dst"))
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      val edges = ed.union(
-        ed.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      val seeds = t(s, dir, "lineitem")
-        .select((col("l_suppkey") * 2).as("node")).distinct()
-      val pr = graft.ops.GraphOps.personalizedPageRankWeighted(edges, seeds, "w")
-      pr.filter(col("node") % 2 === 1)
-        .select(col("node"), round(col("pr"), 6).as("pr"))
-        .orderBy(desc("pr"), asc("node")).limit(20)
-        .withColumn("rnk",
-          row_number().over(Window.orderBy(desc("pr"), asc("node"))))
-        .select(col("rnk"),
-          concat(lit("c"), expr("cast(node div 2 as string)")).as("node"),
-          col("pr"))
-        .orderBy("rnk")
+      val pr = graft.ops.GraphOps.personalizedPageRankWeighted(
+        bothWays(txEdges(s, dir, weighted = true)), supplierSeeds(s, dir), "w")
+      labelTop(pr, "pr", 20, "pr", customersOnly = true).orderBy("rnk")
     },
-    Some("""WITH ed AS (SELECT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst,
-            |                  count(*) AS w
-            |            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            |            GROUP BY 1, 2),
-            |e AS (SELECT src, dst, w FROM ed
-            |      UNION ALL SELECT dst AS src, src AS dst, w FROM ed),
-            |deg AS (SELECT src AS node, sum(w) AS deg FROM e GROUP BY src),
-            |ns AS (SELECT count(*) AS ns FROM deg WHERE node % 2 = 0),
-            |b AS (SELECT node, deg,
-            |             CASE WHEN node % 2 = 0 THEN 1.0 / (SELECT ns FROM ns) ELSE 0.0 END AS pr0,
-            |             CASE WHEN node % 2 = 0 THEN 0.15 / (SELECT ns FROM ns) ELSE 0.0 END AS bs
-            |      FROM deg),
-            |p0 AS (SELECT node, deg, bs, pr0 AS pr FROM b),
-            |p1 AS (SELECT b.node, b.deg, b.bs, round(b.bs + 0.85 * SUM(p.pr * e.w / p.deg), 9) AS pr
-            |       FROM e JOIN p0 p ON p.node = e.src JOIN b ON b.node = e.dst
-            |       GROUP BY b.node, b.deg, b.bs),
-            |p2 AS (SELECT b.node, b.deg, b.bs, round(b.bs + 0.85 * SUM(p.pr * e.w / p.deg), 9) AS pr
-            |       FROM e JOIN p1 p ON p.node = e.src JOIN b ON b.node = e.dst
-            |       GROUP BY b.node, b.deg, b.bs),
-            |p3 AS (SELECT b.node, b.deg, b.bs, round(b.bs + 0.85 * SUM(p.pr * e.w / p.deg), 9) AS pr
-            |       FROM e JOIN p2 p ON p.node = e.src JOIN b ON b.node = e.dst
-            |       GROUP BY b.node, b.deg, b.bs),
-            |fin AS (SELECT node, round(pr, 6) AS pr FROM p3 WHERE node % 2 = 1
-            |        ORDER BY pr DESC, node LIMIT 20),
-            |r AS (SELECT row_number() OVER (ORDER BY pr DESC, node) AS rnk, node, pr FROM fin)
-            |SELECT rnk, 'c' || (node // 2) AS node, pr FROM r ORDER BY rnk""".stripMargin))
+    Some(txPageRankSql(weighted = true, personalized = true)))
 
   // HITS hubs & authorities (q65): Kleinberg's mutually-reinforcing
   // centrality pair over the DIRECTED supplier→customer transaction
@@ -1971,46 +1795,15 @@ object Relational {
   private val q65 = QueryDef(
     "q65_hits",
     (s, dir) => {
-      val edges = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-        .join(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") * 2).as("src"),
-          (col("o_custkey") * 2 + 1).as("dst"))
-        .distinct()
-      val ha = graft.ops.GraphOps.hits(edges)
-      def top(scoreCol: String, role: String) = ha
-        .select(col("node"), round(col(scoreCol), 6).as("score"))
-        .orderBy(desc("score"), asc("node")).limit(10)
-        .withColumn("rnk",
-          row_number().over(Window.orderBy(desc("score"), asc("node"))))
-        .select(lit(role).as("role"), col("rnk"),
-          when(col("node") % 2 === 0, concat(lit("s"), expr("cast(node div 2 as string)")))
-            .otherwise(concat(lit("c"), expr("cast(node div 2 as string)"))).as("node"),
-          col("score"))
+      val ha = graft.ops.GraphOps.hits(txEdges(s, dir))
+      def top(scoreCol: String, role: String) = labelTop(ha, scoreCol, 10, "score")
+        .select(lit(role).as("role"), col("rnk"), col("node"), col("score"))
       top("hub", "hub").unionByName(top("auth", "auth")).orderBy("role", "rnk")
     },
-    Some("""WITH ed AS (SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-            |            FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+    Some(s"""WITH ${txEdgeCte()},
             |nodes AS (SELECT src AS node FROM ed UNION SELECT dst FROM ed),
             |h0 AS (SELECT node, 1.0 AS h FROM nodes),
-            |a1 AS MATERIALIZED (SELECT n.node, coalesce(p.raw, 0.0) AS a FROM nodes n LEFT JOIN
-            |  (SELECT e.dst AS node, SUM(h.h) AS raw FROM ed e JOIN h0 h ON e.src = h.node
-            |   GROUP BY e.dst) p ON n.node = p.node),
-            |h1 AS MATERIALIZED (SELECT n.node, coalesce(p.raw, 0.0) AS h FROM nodes n LEFT JOIN
-            |  (SELECT e.src AS node, SUM(a.a) AS raw FROM ed e JOIN a1 a ON e.dst = a.node
-            |   GROUP BY e.src) p ON n.node = p.node),
-            |a2 AS MATERIALIZED (SELECT n.node, coalesce(p.raw, 0.0) AS a FROM nodes n LEFT JOIN
-            |  (SELECT e.dst AS node, SUM(h.h) AS raw FROM ed e JOIN h1 h ON e.src = h.node
-            |   GROUP BY e.dst) p ON n.node = p.node),
-            |h2 AS MATERIALIZED (SELECT n.node, coalesce(p.raw, 0.0) AS h FROM nodes n LEFT JOIN
-            |  (SELECT e.src AS node, SUM(a.a) AS raw FROM ed e JOIN a2 a ON e.dst = a.node
-            |   GROUP BY e.src) p ON n.node = p.node),
-            |a3 AS MATERIALIZED (SELECT n.node, coalesce(p.raw, 0.0) AS a FROM nodes n LEFT JOIN
-            |  (SELECT e.dst AS node, SUM(h.h) AS raw FROM ed e JOIN h2 h ON e.src = h.node
-            |   GROUP BY e.dst) p ON n.node = p.node),
-            |h3 AS MATERIALIZED (SELECT n.node, coalesce(p.raw, 0.0) AS h FROM nodes n LEFT JOIN
-            |  (SELECT e.src AS node, SUM(a.a) AS raw FROM ed e JOIN a3 a ON e.dst = a.node
-            |   GROUP BY e.src) p ON n.node = p.node),
+            |${hitsRounds(3)},
             |n2 AS (SELECT SUM(h.h * h.h) AS hn2, SUM(a.a * a.a) AS an2
             |       FROM h3 h JOIN a3 a USING (node)),
             |fin AS (SELECT h.node,
@@ -2028,9 +1821,7 @@ object Relational {
             |ra AS (SELECT 'auth' AS role, row_number() OVER (ORDER BY score DESC, node) AS rnk,
             |              node, score FROM ta),
             |u AS (SELECT * FROM rh UNION ALL SELECT * FROM ra)
-            |SELECT role, rnk,
-            |       CASE WHEN node % 2 = 0 THEN 's' || (node // 2)
-            |            ELSE 'c' || (node // 2) END AS node, score
+            |SELECT role, rnk, $nodeLabelSql AS node, score
             |FROM u ORDER BY role, rnk""".stripMargin))
 
   // TPC-H Q18 (q67) — large-volume customers: orders whose TOTAL line
@@ -2202,72 +1993,31 @@ object Relational {
   private val q76 = QueryDef(
     "q76_pagerank_incr",
     (s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
       val cut = lit("2000-01-01").cast("timestamp_ntz")
       // BOTH phases' edge sets derive from the same lineitem⋈orders
       // join — cache it once so the prior phase and the warm phase
       // don't each re-run the corpus-sized join
-      val joined = cached(
-        li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .select((col("l_suppkey") * 2).as("src"),
-            (col("o_custkey") * 2 + 1).as("dst"), col("o_orderdate")))(
-        graft.ops.CacheScope.sessionOwned)
-      def undirected(df: DataFrame): DataFrame = {
-        val ed = df.select(col("src"), col("dst")).distinct()
-        // parity-disjoint undirection, one distinct (see q44)
-        ed.union(ed.select(col("dst").as("src"), col("src").as("dst")))
-      }
+      val joined = cached(txPairs(s, dir, "o_orderdate"))(graft.ops.CacheScope.sessionOwned)
+      def undirected(df: DataFrame): DataFrame =
+        bothWays(df.select(col("src"), col("dst")).distinct())
       val prior = graft.ops.GraphOps.pageRank(
         undirected(joined.filter(col("o_orderdate") < cut)))
       val pr = graft.ops.GraphOps.pageRankWarm(
         undirected(joined), prior.select(col("node"), col("pr")), iters = 2)
-      pr.select(col("node"), round(col("pr"), 6).as("pr"))
-        .orderBy(desc("pr"), asc("node")).limit(20)
-        .withColumn("rnk",
-          row_number().over(Window.orderBy(desc("pr"), asc("node"))))
-        .select(col("rnk"),
-          when(col("node") % 2 === 0, concat(lit("s"), expr("cast(node div 2 as string)")))
-            .otherwise(concat(lit("c"), expr("cast(node div 2 as string)"))).as("node"),
-          col("pr"))
-        .orderBy("rnk")
+      labelTop(pr, "pr", 20, "pr").orderBy("rnk")
     },
-    Some {
-      def prRounds(prefix: String, from: String, e: String, deg: String,
-                   n: String, k: Int): String =
-        (1 to k).map { i =>
-          val p = if (i == 1) from else s"$prefix${i - 1}"
-          s"""$prefix$i AS (SELECT d.node, d.deg,
-             |       round(0.15 / (SELECT n FROM $n) + 0.85 * SUM(p.pr / p.deg), 9) AS pr
-             |       FROM $e e JOIN $p p ON p.node = e.src
-             |       JOIN $deg d ON d.node = e.dst
-             |       GROUP BY d.node, d.deg)""".stripMargin
-        }.mkString(",\n")
-      s"""WITH edo AS (SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-         |             FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |             WHERE o_orderdate < TIMESTAMP '2000-01-01'),
-         |eo AS (SELECT src, dst FROM edo UNION SELECT dst, src FROM edo),
-         |dego AS (SELECT src AS node, count(*) AS deg FROM eo GROUP BY src),
-         |no AS (SELECT count(*) AS n FROM dego),
-         |o0 AS (SELECT node, deg, 1.0 / (SELECT n FROM no) AS pr FROM dego),
-         |${prRounds("o", "o0", "eo", "dego", "no", 3)},
-         |edf AS (SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-         |             FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |ef AS (SELECT src, dst FROM edf UNION SELECT dst, src FROM edf),
-         |degf AS (SELECT src AS node, count(*) AS deg FROM ef GROUP BY src),
-         |nf AS (SELECT count(*) AS n FROM degf),
-         |w0 AS (SELECT d.node, d.deg, coalesce(p.pr, 1.0 / (SELECT n FROM nf)) AS pr
-         |       FROM degf d LEFT JOIN o3 p ON p.node = d.node),
-         |${prRounds("w", "w0", "ef", "degf", "nf", 2)},
-         |fin AS (SELECT node, round(pr, 6) AS pr FROM w2
-         |        ORDER BY pr DESC, node LIMIT 20),
-         |r AS (SELECT row_number() OVER (ORDER BY pr DESC, node) AS rnk, node, pr FROM fin)
-         |SELECT rnk,
-         |       CASE WHEN node % 2 = 0 THEN 's' || (node // 2)
-         |            ELSE 'c' || (node // 2) END AS node, pr
-         |FROM r ORDER BY rnk""".stripMargin
-    })
+    Some(s"""WITH ${txEdgeCte("edo", where = "o_orderdate < TIMESTAMP '2000-01-01'")},
+            |${txBothWaysCte(name = "eo", from = "edo")},
+            |${prDegSql("eo", "dego", "no")},
+            |o0 AS (SELECT node, deg, 1.0 / (SELECT n FROM no) AS pr FROM dego),
+            |${prRounds(3, "o", "o0", "eo", "dego d", restart = "0.15 / (SELECT n FROM no)")},
+            |${txEdgeCte("edf")},
+            |${txBothWaysCte(name = "ef", from = "edf")},
+            |${prDegSql("ef", "degf", "nf")},
+            |w0 AS (SELECT d.node, d.deg, coalesce(p.pr, 1.0 / (SELECT n FROM nf)) AS pr
+            |       FROM degf d LEFT JOIN o3 p ON p.node = d.node),
+            |${prRounds(2, "w", "w0", "ef", "degf d", restart = "0.15 / (SELECT n FROM nf)")},
+            |${labelTopSql("w2")}""".stripMargin))
 
   // EVENT FUNNEL (q78): the product-analytics sequential-conversion
   // classic — how many users progress view → click → purchase IN

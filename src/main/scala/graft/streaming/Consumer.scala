@@ -79,8 +79,7 @@ final class ShardConsumer(log: ShardLog, initial: Cursor, pollIntervalMs: Long =
     case StartingPoint.AtProviderSequence(seq, inc) =>
       nextIdx = ShardLog.parseSeq(seq) + (if (inc) 0 else 1)
     case StartingPoint.AtProviderTime(ts) =>
-      nextIdx = log.sequenceAtTimestamp(ts).map(ShardLog.parseSeq)
-        .getOrElse(ShardLog.parseSeq(log.endSequence))
+      nextIdx = log.indexAtTimestamp(ts)
     case StartingPoint.AtUlid(u, inc, tol) =>
       scanToMatch(u.timestampMillis - tol, u.timestampMillis + tol,
         m => m.ulid.contains(u), inc)
@@ -90,26 +89,23 @@ final class ShardConsumer(log: ShardLog, initial: Cursor, pollIntervalMs: Long =
 
   private def scanToMatch(lower: Long, upper: Long,
                           matches: Message => Boolean, inclusive: Boolean): Unit = {
-    val startIdx = log.sequenceAtTimestamp(lower).map(ShardLog.parseSeq)
-    startIdx match {
-      case None =>
-        nextIdx = ShardLog.parseSeq(log.endSequence) // nothing at/after lower bound yet
-      case Some(s0) =>
-        var i = s0
-        val end = ShardLog.parseSeq(log.endSequence)
-        var found = -1L
-        while (found < 0 && i < end) {
-          val rec = log.read(Some(ShardLog.formatSeq(i)), inclusive = true, limit = 1)
-          rec.headOption match {
-            case Some((_, m)) if matches(m) => found = i
-            case Some((_, m)) if m.provider.exists(_.publishedTimestamp > upper) =>
-              i = end // out of the tolerance window: stop scanning
-            case _ => i += 1
-          }
-        }
-        // exact match → position there; no match → lookahead replay
-        // from the first message >= lower bound
-        nextIdx = if (found >= 0) found + (if (inclusive) 0 else 1) else s0
+    // no message at/after the lower bound yet: the seek lands on the
+    // end index and there is nothing to scan
+    val s0 = log.indexAtTimestamp(lower)
+    var i = s0
+    val end = ShardLog.parseSeq(log.endSequence)
+    var found = -1L
+    while (found < 0 && i < end) {
+      val rec = log.read(Some(ShardLog.formatSeq(i)), inclusive = true, limit = 1)
+      rec.headOption match {
+        case Some((_, m)) if matches(m) => found = i
+        case Some((_, m)) if m.provider.exists(_.publishedTimestamp > upper) =>
+          i = end // out of the tolerance window: stop scanning
+        case _ => i += 1
+      }
     }
+    // exact match → position there; no match → lookahead replay
+    // from the first message >= lower bound
+    nextIdx = if (found >= 0) found + (if (inclusive) 0 else 1) else s0
   }
 }

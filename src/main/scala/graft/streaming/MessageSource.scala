@@ -144,8 +144,7 @@ final class MessageScan(logNames: Seq[String], startingPosition: Option[String],
       logNames.map { n =>
         val log = ShardLog.getOrCreate(n)
         val start = minArrival match {
-          case Some(ts) => log.sequenceAtTimestamp(ts).map(ShardLog.parseSeq)
-            .getOrElse(ShardLog.parseSeq(log.endSequence))
+          case Some(ts) => log.indexAtTimestamp(ts)
           case None => 0L
         }
         MessagePartition(n, start, ShardLog.parseSeq(log.endSequence)): InputPartition
@@ -269,8 +268,11 @@ final class MessageMicroBatchStream(logNames: Seq[String], startingPosition: Opt
     * reference's `millisBehindLatest` pacing signal: per shard
     * (`recordsBehindLatest.<shardId>`, the shard log's end minus the
     * consumed offset) and their max (`maxRecordsBehindLatest`). Reads
-    * each shard's end position once: O(shards), no job. Empty until a
-    * batch has been consumed. */
+    * each shard's end position once: O(shards), no job. Then the
+    * reader's recoveries per shard, cumulative over the log's life:
+    * `throttleBackoffs.<shardId>`, `readRetries.<shardId>` and
+    * `iteratorReacquisitions.<shardId>`. Empty until a batch has been
+    * consumed. */
   override def metrics(latestConsumedOffset: java.util.Optional[Offset]): util.Map[String, String] =
     if (!latestConsumedOffset.isPresent) util.Collections.emptyMap()
     else {
@@ -283,6 +285,11 @@ final class MessageMicroBatchStream(logNames: Seq[String], startingPosition: Opt
       val m = new util.LinkedHashMap[String, String]()
       m.put("maxRecordsBehindLatest", behind.map(_._2).max.toString)
       behind.foreach { case (id, n) => m.put(s"recordsBehindLatest.$id", n.toString) }
+      logs.foreach { log =>
+        m.put(s"throttleBackoffs.${log.shardId}", log.throttleBackoffs.get.toString)
+        m.put(s"readRetries.${log.shardId}", log.readRetries.get.toString)
+        m.put(s"iteratorReacquisitions.${log.shardId}", log.iteratorReacquisitions.get.toString)
+      }
       m
     }
 }
@@ -341,6 +348,7 @@ object ReadRetry {
         case _: ThrottledException =>
           consecutiveExpiries = 0 // a different signal: the handle reached the service
           throttles += 1
+          log.throttleBackoffs.incrementAndGet()
           if (throttles % 10 == 0) // periodic heartbeat: backpressure, not a hang
             System.err.println(s"[graft-source] still throttled after $throttles attempts on ${log.shardId}")
           Thread.sleep(3 * pollIntervalMs) // reference: 3x poll-interval
@@ -348,6 +356,7 @@ object ReadRetry {
           consecutiveExpiries = 0
           genericFailures += 1
           if (genericFailures >= MaxGenericAttempts) throw e
+          log.readRetries.incrementAndGet()
           System.err.println(s"[graft-source] read failed (${e.getMessage}); retrying in ${pollIntervalMs}ms")
           Thread.sleep(pollIntervalMs)
       }
@@ -424,8 +433,7 @@ object MessageStartingPosition {
         case Some("latest") => ShardLog.parseSeq(log.endSequence)
         case Some(sp) if sp.startsWith("at_timestamp:") =>
           val ts = sp.stripPrefix("at_timestamp:").toLong
-          log.sequenceAtTimestamp(ts).map(ShardLog.parseSeq)
-            .getOrElse(ShardLog.parseSeq(log.endSequence))
+          log.indexAtTimestamp(ts)
         case Some(json) =>
           TopicOffset.fromJson(json).offsets.find(_.shardId == log.shardId)
             .map(_.nextIndex).getOrElse(0L)

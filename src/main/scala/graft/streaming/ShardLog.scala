@@ -57,6 +57,13 @@ final class ShardLog(val shardId: String = "shardId-000000000000") {
     * nextShardIteratorSupplier through the same seam. */
   val iteratorReacquisitions = new java.util.concurrent.atomic.AtomicLong()
 
+  /** Throttled reads [[ReadRetry.readWithRetry]] backed off from, and
+    * generic read failures it retried, since creation. Cumulative,
+    * like [[iteratorReacquisitions]]; the micro-batch source reports
+    * all three per shard in its progress metrics. */
+  val throttleBackoffs = new java.util.concurrent.atomic.AtomicLong()
+  val readRetries = new java.util.concurrent.atomic.AtomicLong()
+
   /** The re-acquisition seam ([[ReadRetry.readWithRetry]]'s `reacquire`
     * callback): reconstruct the read position from the cursor. */
   def reacquireIterator(): Unit = iteratorReacquisitions.incrementAndGet()
@@ -116,6 +123,14 @@ final class ShardLog(val shardId: String = "shardId-000000000000") {
     * semantics, linear scan like the simulator). None = past the end. */
   def sequenceAtTimestamp(epochMillis: Long): Option[String] = synchronized {
     records.find(_.arrivalMillis >= epochMillis).map(_.sequenceNumber)
+  }
+
+  /** Index of the first record with arrival timestamp >= ts — the
+    * AT_TIMESTAMP seek; past the end it is the end index, so a reader
+    * positioned there waits for the next record. */
+  def indexAtTimestamp(epochMillis: Long): Long = synchronized {
+    sequenceAtTimestamp(epochMillis).map(ShardLog.parseSeq)
+      .getOrElse(ShardLog.parseSeq(endSequence))
   }
 
   private def enrich(r: Record): Message = {

@@ -212,6 +212,20 @@ class ConsumerTckSpec extends AnyFunSuite {
       .flatMap(_.externalId) == Seq("a", "b"))
   }
 
+  test("async publish resolves to the assigned sequence numbers in order; a consumer reads them back") {
+    import scala.concurrent.Await
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val log = freshLog()
+    log.injectPutFailures(1) // the future completes only after the retry lands
+    val p = new Producer(log, pollIntervalMs = 1, seed = 1)
+    val seqs = Await.result(p.publishAsync(msg("a"), msg("b"), msg("c")), 10.seconds)
+    assert(seqs == Seq(0L, 1L, 2L).map(ShardLog.formatSeq))
+    val got = drain(new ShardConsumer(log, Cursor.trimHorizon(log.shardId)), 3)
+    assert(got.flatMap(_.externalId) == Seq("a", "b", "c"))
+    assert(got.flatMap(_.provider.map(_.sequenceNumber)) == seqs)
+  }
+
   test("closed producer/consumer throw on use") {
     val log = freshLog()
     val p = new Producer(log, seed = 1)

@@ -84,11 +84,48 @@ class TopicSpec extends AnyFunSuite {
       // after the first batch each shard is behind by what the cap held back
       val first = lag(q.recentProgress.find(_.numInputRows > 0).get.sources.head.metrics)
       val behind = topic.shards.map(s => s.shardId -> math.max(0, s.size - cap))
+      // no read failed, so every recovery counter reads 0
+      val recoveries = for (s <- topic.shards;
+                            k <- Seq("throttleBackoffs", "readRetries", "iteratorReacquisitions"))
+        yield s"$k.${s.shardId}" -> "0"
       assert(first == (behind.map { case (id, n) => s"recordsBehindLatest.$id" -> n.toString } :+
-        ("maxRecordsBehindLatest" -> behind.map(_._2).max.toString)).toMap)
+        ("maxRecordsBehindLatest" -> behind.map(_._2).max.toString)).toMap ++ recoveries)
       assert(first("maxRecordsBehindLatest").toLong > 0)
       val last = lag(q.lastProgress.sources.head.metrics)
-      assert(last.size == 3 && last.values.forall(_ == "0"), s"caught up yet behind: $last")
+      assert(last.size == 3 + recoveries.size && last.values.forall(_ == "0"),
+        s"caught up yet behind: $last")
+    } finally q.stop()
+  }
+
+  test("source recovery metrics: throttle backoffs, read retries and iterator re-acquisitions per shard") {
+    val name = "tp-recover-" + System.nanoTime()
+    val topic = Topics.create(name, 2)
+    val p = topic.producer(seed = 4)
+    def publish(from: Int): Unit = (from until from + 20).foreach(i => p.publish(msg("k" + i, "e" + i)))
+    publish(0)
+    assert(topic.shards.forall(_.size > 0), "fixture: both shards hold records")
+    val Seq(hit, quiet) = topic.shards
+    // first batch: one expired iterator, then two throttles on the same read
+    hit.injectIteratorExpiry(1)
+    hit.injectReadFailures(2)
+    val q = spark.readStream.format("graft-messages").option("topic", name)
+      .option("pollIntervalMs", "10").load()
+      .writeStream.format("noop")
+      .option("checkpointLocation", Files.createTempDirectory("tp-recover").toString).start()
+    try {
+      q.processAllAvailable()
+      // second batch: one generic read failure
+      hit.injectReadFailures(1, generic = true)
+      publish(20)
+      q.processAllAvailable()
+      assert(q.recentProgress.map(_.numInputRows).sum == 40)
+      val m = q.lastProgress.sources.head.metrics.asScala.toMap
+      def counts(id: String) = Seq("throttleBackoffs", "readRetries", "iteratorReacquisitions")
+        .map(k => m(s"$k.$id").toLong)
+      assert(counts(hit.shardId) == Seq(2L, 1L, 1L), s"injected on ${hit.shardId}: $m")
+      assert(counts(quiet.shardId) == Seq(0L, 0L, 0L), s"nothing injected on ${quiet.shardId}: $m")
+      assert(Seq(hit.throttleBackoffs.get, hit.readRetries.get, hit.iteratorReacquisitions.get) ==
+        Seq(2L, 1L, 1L))
     } finally q.stop()
   }
 
