@@ -56,7 +56,7 @@ object Tables {
     names.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 
   /** `spark.read.parquet(path)` with the session's cached schema. */
-  private def parquet(spark: SparkSession, path: String): DataFrame =
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(schema(spark, path)).parquet(path)
 
   /** The schema `spark.read.parquet(path)` infers, partition columns

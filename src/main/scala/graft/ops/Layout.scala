@@ -514,35 +514,6 @@ object Layout {
     }
   }
 
-  /** RETENTION for a maintained file-zone table — the rebuild-
-    * equivalent drop of rows whose file no longer exists:
-    * [[maintainFileZones]] deliberately keeps stale rows for vanished
-    * files (harmless — the reader keys on files actually listed), so
-    * at production cadence the table grows by every compacted-away
-    * generation. This compacts it back: list the table's CURRENT
-    * files once (driver metadata, the same manifest-sized class as
-    * the reader's collect) and keep exactly the zone rows whose
-    * scheme-normalized path is still listed. Because parquet files
-    * are immutable per path, a kept row's envelope is identical to
-    * what a fresh [[fileZones]] scan would recompute — compacted ==
-    * rebuild, with zero data scanned (LayoutSpec pins it). Run it on
-    * the vacuum cadence, after compactions rewrite files. */
-  def compactFileZones(spark: org.apache.spark.sql.SparkSession,
-                       path: String, zones: DataFrame): DataFrame = {
-    require(zones.columns.contains("file"),
-      s"zone table has no 'file' key column (the fileZones convention) — " +
-        s"zone columns: ${zones.columns.mkString(", ")}")
-    def key(p: String) = graft.plans.ZoneMapFileIndex.pathKey(p)
-    val current = spark.read.parquet(path).inputFiles.map(key).toSet
-    // both sides of the membership test are file-count-bounded driver
-    // metadata (the maintainFileZones `known` collect, reversed);
-    // isInCollection compiles to a hashed InSet — no join, no UDF
-    val keptRaw = zones.select(col("file").cast("string")).collect()
-      .map(_.getString(0)).filter(f => f != null && current.contains(key(f)))
-    if (keptRaw.isEmpty) zones.limit(0)
-    else zones.filter(col("file").cast("string").isInCollection(keptRaw.toIndexedSeq))
-  }
-
   /** [[zoneMapRead]] at FILE granularity over a PLAIN (unpartitioned)
     * parquet table — no layout contract needed: `zones` carries one
     * row per FILE (`fileCol` = file path, the [[fileZones]]

@@ -168,6 +168,11 @@ object TableOps {
                    keys: Seq[String]): DataFrame =
     mv.unionByName(joinDelta(a, deltaA, b, deltaB, keys, mv.columns.toSeq))
 
+  /** `df` with every row at multiplicity `mult`, in the `_mult` column
+    * the counted maintainers below read by default. */
+  private[graft] def counted(df: DataFrame, mult: Long): DataFrame =
+    df.withColumn("_mult", lit(mult))
+
   /** COUNTED-multiset join delta — the general differential the
     * insert-only [[joinDelta]] documents as out of scope: every input
     * row carries a signed MULTIPLICITY (`multCol`: +1 insert, −1

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorExprs.vec_cos
 import graft.ops.TextScores
+import graft.ops.TableOps.counted
 import graft.ops.CorpusOps.{JaccardThreshold, bigramRows, bm25StatRows, bm25TfRows, bm25Top,
   ceilLog2, cellScores, cosineCells, hashRank, idHash, idUniform, lshBands, lshCandidates,
   minhashSigs, nearDupPairs, shuffleOrder, simhashPairs, sqrtSeedCents, subPlaneVal,
@@ -3567,11 +3568,10 @@ object Llm {
         keys = Seq("stat", "k"), sumCols = Seq("v"))
       // per-(doc, term) tf + dl for the catalog — linear, so the same
       // counted maintainer keeps them current
-      def signedTf(d: DataFrame, mult: Long): DataFrame =
-        bm25TfRows(d, bm25Terms).withColumn("_mult", lit(mult))
       val tfMv0 = bm25TfRows(stored, bm25Terms).withColumn("cnt", lit(1L))
       val tfM = graft.ops.TableOps.maintainAggCounted(tfMv0,
-        signedTf(ins, 1L).unionByName(signedTf(del, -1L)),
+        counted(bm25TfRows(ins, bm25Terms), 1)
+          .unionByName(counted(bm25TfRows(del, bm25Terms), -1)),
         keys = Seq("doc_id", "term"), sumCols = Seq("tf", "dl"))
       // the READ: maintained state only — no corpus text anywhere
       val lenRow = broadcast(statsM.filter(col("stat") === "len")
@@ -5412,7 +5412,7 @@ object Llm {
       w(arts.annAssign, "annAssign"); w(arts.vectors, "vectors")
       w(arts.bm25Stats, "bm25Stats"); w(cents, "cents")
     }
-    def r(n: String) = s.read.parquet(new java.io.File(root, n).toString)
+    def r(n: String) = Tables.parquet(s, new java.io.File(root, n).toString)
     (CorpusOps.CorpusArtifacts(r("exactAux"), r("exactKeepers"), r("clusters"),
       r("pairs"), r("annIndex"), r("annProbes"), r("annAssign"),
       r("vectors"), r("bm25Stats")), r("cents"))

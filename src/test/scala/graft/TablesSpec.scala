@@ -121,6 +121,17 @@ class TablesSpec extends AnyFunSuite {
     } finally pool.shutdownNow()
   }
 
+  test("a zone _apply cell built again reads its persisted zone table without an inference job") {
+    val cell = SparkEntry.queries("q128_zonemap_file_read_apply")
+    val first = cell(spark, fixtures) // builds or finds the persisted fixture
+    val (again, jobs) = jobsOf(cell(spark, fixtures))
+    // only the envelope collect: the table's and the zone table's
+    // schemas both come from the cache (a bare zone-table read would
+    // infer its schema with one job more)
+    assert(jobs == 1)
+    assert(again.collect().toSeq == first.collect().toSeq)
+  }
+
   test("BenchSession.releaseCaches leaves the schema cache alone") {
     val dir = freshCopy("orders")
     val before = Tables(spark, dir, "orders").cache()

@@ -175,43 +175,6 @@ class LayoutSpec extends AnyFunSuite {
       .filter(col("k") === newProbe).count() == 1)
   }
 
-  test("compactFileZones drops exactly the vanished-file rows — compacted == fileZones rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cfz").toString
-    spark.range(0, 800).toDF("id")
-      .repartitionByRange(8, col("id")).sortWithinPartitions("id")
-      .write.mode("overwrite").parquet(dir)
-    val gen1 = Layout.fileZones(spark, dir, Seq("id"))
-    val gen1Df = spark.createDataFrame(
-      spark.sparkContext.parallelize(gen1.collect().toIndexedSeq), gen1.schema)
-    // a COMPACTION rewrites the table: every gen-1 file vanishes, new
-    // files land — exactly the growth maintainFileZones documents as
-    // "harmless but loose" (stale rows for vanished files keep forever)
-    spark.range(0, 800).toDF("id")
-      .repartitionByRange(4, col("id")).sortWithinPartitions("id")
-      .write.mode("overwrite").parquet(dir)
-    val maintained = Layout.maintainFileZones(spark, dir, gen1Df, Seq("id"))
-    assert(maintained.count() == 12, "8 stale + 4 fresh rows expected")
-    // compaction drops the 8 vanished-file rows; what remains equals a
-    // from-scratch fileZones rebuild (parquet immutability per path —
-    // a kept row's envelope cannot differ from the rescan's)
-    val compacted = Layout.compactFileZones(spark, dir, maintained)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.toString).toSet
-    assert(rows(compacted) == rows(Layout.fileZones(spark, dir, Seq("id"))),
-      "compacted file zones diverged from the rebuild")
-    // the compacted table still prunes and stays row-exact
-    val r = Layout.zoneMapReadFiles(spark, dir, compacted, "file", Seq("id"))
-      .filter(col("id").between(0, 99))
-    assert(r.count() == 100)
-    assert(graft.TestPlans.scannedFiles(
-      Layout.zoneMapReadFiles(spark, dir, compacted, "file", Seq("id"))
-        .filter(col("id").between(0, 99))) < 4L)
-    // a zones table without the file key fails loudly
-    intercept[IllegalArgumentException] {
-      Layout.compactFileZones(spark, dir, maintained.withColumnRenamed("file", "f"))
-    }
-  }
-
   test("clusterByMorton partitions cover near-square blocks; lexicographic sort covers stripes") {
     // a full 128x128 grid into 16 partitions: a lexicographic (x, y)
     // range layout makes thin full-height x-stripes (extent 8 + 128),
