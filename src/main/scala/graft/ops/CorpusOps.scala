@@ -2258,40 +2258,6 @@ object CorpusOps {
     comps.reduce(_ unionByName _).select(col("component"), col("d"), col("v"))
   }
 
-  /** All-but-the-Top application (Mu & Viswanath 2018): mean-center
-    * and remove the projections onto the top-`k` principal
-    * directions — the post-processing that measurably improves
-    * embedding isotropy before similarity search. One corpus-sized
-    * row-local map per removed direction; directions come from
-    * [[topPrincipalDirections]] on the same corpus. Returns
-    * (vec_id, corrected ARRAY<double>). */
-  def removeDominantDirections(vecs: DataFrame, k: Int = 1, iters: Int = 3,
-                               scale: Int = 9)
-                              (implicit cscope: CacheScope): DataFrame = {
-    val dirs = topPrincipalDirections(vecs, k, iters, scale)
-    val x = vecs.select(col("vec_id"),
-      expr("transform(embedding, e -> cast(e as double))").as("xs"))
-    val mean = cscope.cached(
-      x.select(posexplode(col("xs")).as(Seq("d", "xd")))
-        .groupBy("d").agg(
-          (sum(col("xd").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-            .cast("double") / count(lit(1))).as("m")))
-    val meanArr = mean.agg(
-      expr("transform(sort_array(collect_list(struct(d, m))), p -> p.m)").as("arr"))
-    var cur = x.crossJoin(broadcast(meanArr))
-      .select(col("vec_id"), expr("zip_with(xs, arr, (a, b) -> a - b)").as("xs"))
-    for (c <- 1 to k) {
-      val vArr = dirs.filter(col("component") === c)
-        .agg(expr("transform(sort_array(collect_list(struct(d, v))), p -> p.v)").as("arr"))
-      cur = cur.crossJoin(broadcast(vArr))
-        .withColumn("dot",
-          round(expr("aggregate(zip_with(xs, arr, (a, b) -> a * b), 0d, (acc, p) -> acc + p)"),
-            scale))
-        .select(col("vec_id"), expr("zip_with(xs, arr, (x, vv) -> x - dot * vv)").as("xs"))
-    }
-    cur.select(col("vec_id"), col("xs").as("corrected"))
-  }
-
   /** EVERY maintained corpus artifact, bundled — the stored state the
     * cascade composites consume AND return. The round-14 positional
     * form took 12–14 `DataFrame` parameters, several schema-identical

@@ -13,6 +13,7 @@ import graft.ops.CorpusOps.{JaccardThreshold, bigramRows, bm25StatRows, bm25TfRo
   minhashSigs, nearDupPairs, shuffleOrder, simhashPairs, sqrtSeedCents, subPlaneVal,
   topPerQuery, verifiedJaccard}
 import QueryDef.sha60
+import VecKit._
 
 /** LLM-data-pipeline operators over `documents` / `embeddings`
   * (SURVEY.md §2B L1–L7: exact + MinHash/LSH + SimHash +
@@ -428,29 +429,17 @@ object Llm {
     "l3_knn_bruteforce",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = queries(e, "qe")
       val c = e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
       topPerQuery(c.join(broadcast(q), col("vid") =!= col("qid"))
           .select(col("qid"), col("vid"),
             round(vec_cos(col("qe"), col("ve")), 6).as("simr")), 10)
         .orderBy("qid", "rn")
     },
-    Some("""WITH q AS (SELECT vec_id AS qid, unnest(embedding) AS qx,
-                       generate_subscripts(embedding, 1) AS i
-                FROM embeddings WHERE vec_id IN (0, 1, 2)),
-            e AS (SELECT vec_id AS vid, unnest(embedding) AS ex,
-                       generate_subscripts(embedding, 1) AS i FROM embeddings),
-            d AS (SELECT qid, vid, SUM(CAST(qx AS DOUBLE) * CAST(ex AS DOUBLE)) AS dot
-                  FROM q JOIN e USING (i) WHERE vid != qid GROUP BY qid, vid),
-            n AS (SELECT vec_id, sqrt(SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS nrm
-                  FROM (SELECT vec_id, unnest(embedding) AS x FROM embeddings) GROUP BY vec_id),
-            sdf AS (SELECT qid, vid, round(dot / (nq.nrm * nv.nrm), 6) AS simr
-                   FROM d JOIN n nq ON nq.vec_id = qid JOIN n nv ON nv.vec_id = vid),
-            r AS (SELECT qid, vid, simr,
-                         row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-                  FROM sdf)
-            SELECT qid, rn, vid, simr FROM r WHERE rn <= 10 ORDER BY qid, rn"""))
+    Some(s"""WITH $longCtes,
+            |${allPairsCte("cand")},
+            |${scoreCtes("", "cand")}
+            |${topKSql("sc")}""".stripMargin))
 
   // LSH-bucketed ANN (the 100 TB scale path): 8 tables x 6 random
   // hyperplanes (deterministic pseudo-random components), candidates =
@@ -494,8 +483,10 @@ object Llm {
         .select(col("vec_id"), col("embedding"), col("tc.tb").as("tb"), col("tc.code").as("code"))
       // query side: base code + per-table bit ranking by |rounded dot|
       // (sort_array on struct<ad, bit> = (ad, bit) lexicographic), then
-      // explode the 4 deterministic probes
-      val q0 = e.filter(col("vec_id").isin(0, 1, 2)).select(
+      // explode the 4 deterministic probes. The rename to (qid, qe)
+      // shares the explode's select: a separate queries() projection
+      // stays a Project under the Generate in the physical plan.
+      val q0 = e.filter(isQuery(col("vec_id"))).select(
         col("vec_id").as("qid"), col("embedding").as("qe"),
         explode(array((0 until 8).map(t0 => struct(
           lit(t0).as("tb"),
@@ -519,42 +510,26 @@ object Llm {
           round(vec_cos(col("qe"), col("ve")), 6).as("simr")), 10)
         .orderBy("qid", "rn")
     },
-    Some("""WITH planes AS (
-              SELECT p, d,
-                     CAST(((p*64 + d) * 2654435761 + 1013904223) % 2147483647 AS DOUBLE)
-                       / 2147483647.0 * 2 - 1 AS v
-              FROM (SELECT unnest(range(0,48)) AS p) tp, (SELECT unnest(range(0,64)) AS d) td),
-            x AS (SELECT vec_id, unnest(embedding) AS e,
-                         generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-            dots AS (SELECT vec_id, p, SUM(CAST(e AS DOUBLE) * v) AS dot
-                     FROM x JOIN planes USING (d) GROUP BY vec_id, p),
-            codes AS (SELECT vec_id, p // 6 AS tb,
-                             SUM(CASE WHEN round(dot, 6) > 0 THEN (1 << (p % 6)) ELSE 0 END) AS code
-                      FROM dots GROUP BY vec_id, p // 6),
-            q AS (SELECT vec_id AS qid, tb, code FROM codes WHERE vec_id IN (0, 1, 2)),
-            brank AS (SELECT vec_id AS qid, p // 6 AS tb, p % 6 AS bit,
-                             row_number() OVER (PARTITION BY vec_id, p // 6
-                                                ORDER BY abs(round(dot, 6)), p % 6) AS rk
-                      FROM dots WHERE vec_id IN (0, 1, 2)),
-            qp AS (SELECT qid, tb, code FROM q
-                   UNION
-                   SELECT q.qid, q.tb, CAST(xor(q.code, 1 << r.bit) AS BIGINT) AS code
-                   FROM q JOIN brank r ON r.qid = q.qid AND r.tb = q.tb AND r.rk <= 3),
-            cand AS (SELECT DISTINCT qp.qid, c.vec_id AS vid
-                     FROM codes c JOIN qp ON c.tb = qp.tb AND c.code = qp.code
-                     WHERE c.vec_id != qp.qid),
-            n AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-                  FROM x GROUP BY vec_id),
-            dp AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-                   FROM cand JOIN x xa ON xa.vec_id = qid
-                   JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d
-                   GROUP BY qid, vid),
-            sdf AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-                    FROM dp JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid),
-            r AS (SELECT qid, vid, simr,
-                         row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-                  FROM sdf)
-            SELECT qid, rn, vid, simr FROM r WHERE rn <= 10 ORDER BY qid, rn"""))
+    Some(s"""WITH ${planesCte("planes", "48")},
+            |$longCtes,
+            |${planeDotsCte("dots", "planes")},
+            |codes AS (SELECT vec_id, p // 6 AS tb,
+            |                 SUM(CASE WHEN round(dot, 6) > 0 THEN (1 << (p % 6)) ELSE 0 END) AS code
+            |          FROM dots GROUP BY vec_id, p // 6),
+            |q AS (SELECT vec_id AS qid, tb, code FROM codes WHERE ${isQuerySql("vec_id")}),
+            |brank AS (SELECT vec_id AS qid, p // 6 AS tb, p % 6 AS bit,
+            |                 row_number() OVER (PARTITION BY vec_id, p // 6
+            |                                    ORDER BY abs(round(dot, 6)), p % 6) AS rk
+            |          FROM dots WHERE ${isQuerySql("vec_id")}),
+            |qp AS (SELECT qid, tb, code FROM q
+            |       UNION
+            |       SELECT q.qid, q.tb, CAST(xor(q.code, 1 << r.bit) AS BIGINT) AS code
+            |       FROM q JOIN brank r ON r.qid = q.qid AND r.tb = q.tb AND r.rk <= 3),
+            |cand AS (SELECT DISTINCT qp.qid, c.vec_id AS vid
+            |         FROM codes c JOIN qp ON c.tb = qp.tb AND c.code = qp.code
+            |         WHERE c.vec_id != qp.qid),
+            |${scoreCtes("", "cand")}
+            |${topKSql("sc")}""".stripMargin))
 
   // ANN recall evaluation — the index-quality gate a pipeline runs on
   // every ANN build: recall@10 per (variant, query) for the WHOLE
@@ -574,8 +549,7 @@ object Llm {
     (s, dir) => {
       val cosRef = l3.run(s, dir).select(col("qid"), col("vid"))
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = queries(e, "qe")
       val wL2 = Window.partitionBy("qid").orderBy(col("d2r").asc, col("vid").asc)
       val l2Ref = e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
         .join(broadcast(q), col("vid") =!= col("qid"))
@@ -583,67 +557,33 @@ object Llm {
           round(graft.functions.VectorExprs.vec_l2sq(col("qe"), col("ve")), 6))
         .withColumn("rn", row_number().over(wL2)).filter(col("rn") <= 10)
         .select("qid", "vid")
-      val variants: Seq[(String, DataFrame, DataFrame)] = Seq(
-        ("ivf", l3ivf.run(s, dir), cosRef),
-        ("ivf_kmeans", l3ivfKmeans.run(s, dir), cosRef),
-        ("ivfpq", l3ivfpq.run(s, dir), l2Ref),
-        ("ivfpq_residual", l3ivfpqRes.run(s, dir), l2Ref),
-        ("lsh", l3ann.run(s, dir), cosRef),
-        ("pq", l3pq.run(s, dir), l2Ref),
-        ("pq_trained", l3pqTrained.run(s, dir), l2Ref),
-        ("refined", l3refined.run(s, dir), cosRef))
-      variants.map { case (name, ann, ref) =>
-        val hits = ref.join(ann.select("qid", "vid"), Seq("qid", "vid"), "semi")
-          .groupBy("qid").agg(count(lit(1)).as("n_hit"))
-        ref.select("qid").distinct()
-          .join(hits, Seq("qid"), "left")
-          .select(lit(name).as("variant"), col("qid"),
-            coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-            round(coalesce(col("n_hit"), lit(0L)) / 10.0, 6).as("recall"))
+      recallVariants.map { case (name, qd, cosine) =>
+        recallRows(lit(name).as("variant"), if (cosine) cosRef else l2Ref, qd.run(s, dir))
       }.reduce(_ union _).orderBy("variant", "qid")
     },
     Some {
-      def recallCte(name: String, ref: String): String =
-        s"""r_$name AS (SELECT '$name' AS variant, q0.qid, CAST(coalesce(h.n, 0) AS BIGINT) AS n_hit
-           |  FROM (SELECT DISTINCT qid FROM $ref) q0
-           |  LEFT JOIN (SELECT r0.qid, count(*) AS n FROM $ref r0
-           |             JOIN v_$name s0 ON s0.qid = r0.qid AND s0.vid = r0.vid
-           |             GROUP BY r0.qid) h ON h.qid = q0.qid)""".stripMargin
       s"""WITH knn AS (SELECT qid, vid FROM (${l3.oracle.get})),
-         |xx AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
-         |              generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
+         |${longCte()},
          |l2d AS (SELECT q.vec_id AS qid, v.vec_id AS vid,
-         |               round(SUM((q.e - v.e) * (q.e - v.e)), 6) AS d2r
-         |        FROM xx q JOIN xx v ON v.d = q.d AND v.vec_id != q.vec_id
-         |        WHERE q.vec_id IN (0, 1, 2)
+         |               round(SUM((q.v - v.v) * (q.v - v.v)), 6) AS adr
+         |        FROM x q JOIN x v ON v.d = q.d AND v.vec_id != q.vec_id
+         |        WHERE ${isQuerySql("q.vec_id")}
          |        GROUP BY q.vec_id, v.vec_id),
-         |l2ref AS (SELECT qid, vid FROM (
-         |        SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY d2r, vid) AS rn
-         |        FROM l2d) WHERE rn <= 10),
-         |v_lsh AS (SELECT qid, vid FROM (${l3ann.oracle.get})),
-         |v_ivf AS (SELECT qid, vid FROM (${l3ivf.oracle.get})),
-         |v_ivf_kmeans AS (SELECT qid, vid FROM (${l3ivfKmeans.oracle.get})),
-         |v_pq AS (SELECT qid, vid FROM (${l3pq.oracle.get})),
-         |v_pq_trained AS (SELECT qid, vid FROM (${l3pqTrained.oracle.get})),
-         |v_ivfpq AS (SELECT qid, vid FROM (${l3ivfpq.oracle.get})),
-         |v_ivfpq_residual AS (SELECT qid, vid FROM (${l3ivfpqRes.oracle.get})),
-         |v_refined AS (SELECT qid, vid FROM (${l3refined.oracle.get})),
-         |${recallCte("lsh", "knn")},
-         |${recallCte("ivf", "knn")},
-         |${recallCte("ivf_kmeans", "knn")},
-         |${recallCte("pq", "l2ref")},
-         |${recallCte("pq_trained", "l2ref")},
-         |${recallCte("ivfpq", "l2ref")},
-         |${recallCte("ivfpq_residual", "l2ref")},
-         |${recallCte("refined", "knn")}
-         |SELECT variant, qid, n_hit, round(n_hit / 10.0, 6) AS recall
-         |FROM (SELECT * FROM r_ivf UNION ALL SELECT * FROM r_ivf_kmeans
-         |      UNION ALL SELECT * FROM r_ivfpq UNION ALL SELECT * FROM r_ivfpq_residual
-         |      UNION ALL SELECT * FROM r_lsh
-         |      UNION ALL SELECT * FROM r_pq UNION ALL SELECT * FROM r_pq_trained
-         |      UNION ALL SELECT * FROM r_refined)
-         |ORDER BY variant, qid""".stripMargin
+         |${topKCte("l2ref", "l2d", 10, "qid, vid", l2 = true)},
+         |${recallVariants.map { case (name, qd, _) =>
+              s"v_$name AS (SELECT qid, vid FROM (${qd.oracle.get}))" }.mkString(",\n")},
+         |${recallVariants.map { case (name, _, cosine) =>
+              hitsCte(s"r_$name", s"'$name' AS variant", if (cosine) "knn" else "l2ref", s"v_$name")
+            }.mkString(",\n")}
+         |${recallSql("variant", recallVariants.map("r_" + _._1))}""".stripMargin
     })
+
+  /** l3_ann_recall's variants: (name, query, ranked by cosine — else
+    * by L2, and measured against the exact L2 top-10). */
+  private lazy val recallVariants: Seq[(String, QueryDef, Boolean)] = Seq(
+    ("ivf", l3ivf, true), ("ivf_kmeans", l3ivfKmeans, true), ("ivfpq", l3ivfpq, false),
+    ("ivfpq_residual", l3ivfpqRes, false), ("lsh", l3ann, true), ("pq", l3pq, false),
+    ("pq_trained", l3pqTrained, false), ("refined", l3refined, true))
 
   // CONTENT-DEFINED CHUNKING dedup (l8_cdc_chunks): the
   // restic/FastCDC storage-dedup semantic at TOKEN level — chunk
@@ -727,57 +667,36 @@ object Llm {
   // precision. Same eval scaffold as l3_ann_recall (top-k-sized
   // joins; the candidate pass per dims-variant is the brute-force
   // kernel on `slice`d arrays, round(·,6) rank contract), so the
-  // oracle replays it dimension-filtered (i <= d) in long format.
+  // oracle replays it as the brute-force score over the long format
+  // cut to the first `dims` components.
   private lazy val l3trunc = QueryDef(
     "l3_truncated_recall",
     (s, dir) => {
       val ref = l3.run(s, dir).select(col("qid"), col("vid"))
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+      val q = queries(e, "qe")
       val c = e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
       Seq(8, 16, 32).map { d =>
         val sims = c.join(broadcast(q), col("vid") =!= col("qid"))
           .withColumn("simr",
             round(vec_cos(slice(col("qe"), 1, d), slice(col("ve"), 1, d)), 6))
-        val top = topPerQuery(sims, 10).select("qid", "vid")
-        val hits = ref.join(top, Seq("qid", "vid"), "semi")
-          .groupBy("qid").agg(count(lit(1)).as("n_hit"))
-        ref.select("qid").distinct()
-          .join(hits, Seq("qid"), "left")
-          .select(lit(d).as("dims"), col("qid"),
-            coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-            round(coalesce(col("n_hit"), lit(0L)) / 10.0, 6).as("recall"))
+        recallRows(lit(d).as("dims"), ref, topPerQuery(sims, 10))
       }.reduce(_ union _).orderBy("dims", "qid")
     },
     Some {
-      val dimCtes = Seq(8, 16, 32).map { d =>
-        s"""t$d AS (SELECT qid, vid FROM (
-           |  SELECT dd.qid, dd.vid,
-           |         row_number() OVER (PARTITION BY dd.qid
-           |                            ORDER BY dd.simr DESC, dd.vid) AS rn
-           |  FROM (SELECT q.vec_id AS qid, v.vec_id AS vid,
-           |               round(SUM(q.x * v.x) /
-           |                     (sqrt((SELECT SUM(n1.x * n1.x) FROM xx n1
-           |                            WHERE n1.vec_id = q.vec_id AND n1.i <= $d)) *
-           |                      sqrt((SELECT SUM(n2.x * n2.x) FROM xx n2
-           |                            WHERE n2.vec_id = v.vec_id AND n2.i <= $d))), 6) AS simr
-           |        FROM xx q JOIN xx v ON v.i = q.i AND v.vec_id != q.vec_id
-           |        WHERE q.vec_id IN (0, 1, 2) AND q.i <= $d
-           |        GROUP BY q.vec_id, v.vec_id) dd) WHERE rn <= 10),
-           |r$d AS (SELECT $d AS dims, q0.qid, CAST(coalesce(h.n, 0) AS BIGINT) AS n_hit
-           |  FROM (SELECT DISTINCT qid FROM knn) q0
-           |  LEFT JOIN (SELECT k.qid, count(*) AS n FROM knn k
-           |             JOIN t$d s0 ON s0.qid = k.qid AND s0.vid = k.vid
-           |             GROUP BY k.qid) h ON h.qid = q0.qid)""".stripMargin
+      val dims = Seq(8, 16, 32)
+      val dimCtes = dims.map { d =>
+        s"""x$d AS (SELECT * FROM x WHERE d < $d),
+           |${normCte(s"n$d", s"x$d")},
+           |${scoreCtes(s"$d", "cand", x = s"x$d", n = s"n$d")},
+           |${topKCte(s"t$d", s"sc$d", 10, "qid, vid")},
+           |${hitsCte(s"r$d", s"$d AS dims", "knn", s"t$d")}""".stripMargin
       }.mkString(",\n")
       s"""WITH knn AS (SELECT qid, vid FROM (${l3.oracle.get})),
-         |xx AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS x,
-         |              generate_subscripts(embedding, 1) AS i FROM embeddings),
+         |${longCte()},
+         |${allPairsCte("cand")},
          |$dimCtes
-         |SELECT dims, qid, n_hit, round(n_hit / 10.0, 6) AS recall
-         |FROM (SELECT * FROM r8 UNION ALL SELECT * FROM r16 UNION ALL SELECT * FROM r32)
-         |ORDER BY dims, qid""".stripMargin
+         |${recallSql("dims", dims.map(d => s"r$d"))}""".stripMargin
     })
 
   // IVF with k-means training: 2 Lloyd iterations from the same
@@ -820,63 +739,18 @@ object Llm {
       val s3 = cached(sims(lloyd(lloyd(c0))))
       val assign = assignOf(s3)
       val wProbe = Window.partitionBy("vid").orderBy(col("simr").desc, col("cid").asc)
-      val probes = s3.filter(col("vid").isin(0, 1, 2))
+      val probes = s3.filter(isQuery(col("vid")))
         .withColumn("rn", row_number().over(wProbe)).filter(col("rn") <= 4)
         .select(col("vid").as("qid"), col("cid"))
       topPerQuery(cellScores(probes, assign, e), 10).orderBy("qid", "rn")
     },
-    Some("""WITH x AS (SELECT vec_id, unnest(embedding) AS e,
-                         generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-            n AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-                  FROM x GROUP BY vec_id),
-            c0 AS (SELECT vec_id AS cid, d, CAST(e AS DOUBLE) AS v FROM x WHERE vec_id < 32),
-            cn0 AS (SELECT cid, sqrt(SUM(v*v)) AS cnrm FROM c0 GROUP BY cid),
-            s1 AS (SELECT x.vec_id AS vid, c.cid,
-                          round(SUM(CAST(x.e AS DOUBLE) * c.v) / (n.nrm * cn0.cnrm), 6) AS simr
-                   FROM x JOIN c0 c ON c.d = x.d
-                   JOIN n ON n.vec_id = x.vec_id JOIN cn0 ON cn0.cid = c.cid
-                   GROUP BY x.vec_id, c.cid, n.nrm, cn0.cnrm),
-            a1 AS (SELECT vid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-                   FROM s1) WHERE rn = 1),
-            c1 AS (SELECT a1.cid, x.d, round(AVG(CAST(x.e AS DOUBLE)), 6) AS v
-                   FROM a1 JOIN x ON x.vec_id = a1.vid GROUP BY a1.cid, x.d),
-            cn1 AS (SELECT cid, sqrt(SUM(v*v)) AS cnrm FROM c1 GROUP BY cid),
-            s2 AS (SELECT x.vec_id AS vid, c.cid,
-                          round(SUM(CAST(x.e AS DOUBLE) * c.v) / (n.nrm * cn1.cnrm), 6) AS simr
-                   FROM x JOIN c1 c ON c.d = x.d
-                   JOIN n ON n.vec_id = x.vec_id JOIN cn1 ON cn1.cid = c.cid
-                   GROUP BY x.vec_id, c.cid, n.nrm, cn1.cnrm),
-            a2 AS (SELECT vid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-                   FROM s2) WHERE rn = 1),
-            c2 AS (SELECT a2.cid, x.d, round(AVG(CAST(x.e AS DOUBLE)), 6) AS v
-                   FROM a2 JOIN x ON x.vec_id = a2.vid GROUP BY a2.cid, x.d),
-            cn2 AS (SELECT cid, sqrt(SUM(v*v)) AS cnrm FROM c2 GROUP BY cid),
-            s3 AS (SELECT x.vec_id AS vid, c.cid,
-                          round(SUM(CAST(x.e AS DOUBLE) * c.v) / (n.nrm * cn2.cnrm), 6) AS simr
-                   FROM x JOIN c2 c ON c.d = x.d
-                   JOIN n ON n.vec_id = x.vec_id JOIN cn2 ON cn2.cid = c.cid
-                   GROUP BY x.vec_id, c.cid, n.nrm, cn2.cnrm),
-            assign AS (SELECT vid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-                   FROM s3) WHERE rn = 1),
-            probes AS (SELECT vid AS qid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-                   FROM s3 WHERE vid IN (0, 1, 2)) WHERE rn <= 4),
-            cand AS (SELECT DISTINCT p.qid, a.vid
-                     FROM probes p JOIN assign a ON a.cid = p.cid
-                     WHERE a.vid != p.qid),
-            dp AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-                   FROM cand JOIN x xa ON xa.vec_id = qid
-                   JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d
-                   GROUP BY qid, vid),
-            sdf AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-                    FROM dp JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid),
-            r AS (SELECT qid, vid, simr,
-                         row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-                  FROM sdf)
-            SELECT qid, rn, vid, simr FROM r WHERE rn <= 10 ORDER BY qid, rn"""))
+    Some(s"""WITH $longCtes,
+            |${seedCents()},
+            |${lloydCtes()},
+            |${cellCtes("", "cent2", queriesOnly = true)},
+            |${candCte()},
+            |${scoreCtes("", "cand")}
+            |${topKSql("sc")}""".stripMargin))
 
   // Embedding-cosine near-dup: random-hyperplane codes bucket the
   // vectors; same-code pairs are exact-verified at cosine >= 0.9.
@@ -914,33 +788,20 @@ object Llm {
         .filter(col("simr") >= 0.9)
         .orderBy("v1", "v2")
     },
-    Some("""WITH nn AS (SELECT count(*) AS n FROM embeddings),
-            prm AS (SELECT GREATEST(16, (SELECT MIN(b) FROM (SELECT unnest(range(0,62)) AS b)
-                    WHERE (1::BIGINT << b) >= (SELECT n FROM nn))) AS nb),
-            planes AS (
-              SELECT p, d,
-                     CAST(((p*64 + d) * 2654435761 + 1013904223) % 2147483647 AS DOUBLE)
-                       / 2147483647.0 * 2 - 1 AS v
-              FROM (SELECT unnest(range(0, (SELECT nb FROM prm))) AS p) tp,
-                   (SELECT unnest(range(0,64)) AS d) td),
-            x AS (SELECT vec_id, unnest(embedding) AS e,
-                         generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-            dots AS (SELECT vec_id, p, SUM(CAST(e AS DOUBLE) * v) AS dot
-                     FROM x JOIN planes USING (d) GROUP BY vec_id, p),
-            codes AS (SELECT vec_id,
-                             CAST(SUM(CASE WHEN round(dot, 6) > 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS code
-                      FROM dots GROUP BY vec_id),
-            cand AS (SELECT a.vec_id AS v1, b.vec_id AS v2 FROM codes a
-                     JOIN codes b ON a.code = b.code AND a.vec_id < b.vec_id),
-            n AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-                  FROM x GROUP BY vec_id),
-            dp AS (SELECT v1, v2, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-                   FROM cand JOIN x xa ON xa.vec_id = v1 JOIN x xb ON xb.vec_id = v2 AND xb.d = xa.d
-                   GROUP BY v1, v2)
-            SELECT v1, v2, round(dot / (na.nrm * nb.nrm), 6) AS simr
-            FROM dp JOIN n na ON na.vec_id = v1 JOIN n nb ON nb.vec_id = v2
-            WHERE round(dot / (na.nrm * nb.nrm), 6) >= 0.9
-            ORDER BY v1, v2"""))
+    Some(s"""WITH nn AS (SELECT count(*) AS n FROM embeddings),
+            |prm AS (SELECT GREATEST(16, (SELECT MIN(b) FROM (SELECT unnest(range(0,62)) AS b)
+            |        WHERE (1::BIGINT << b) >= (SELECT n FROM nn))) AS nb),
+            |${planesCte("planes", "(SELECT nb FROM prm)")},
+            |$longCtes,
+            |${planeDotsCte("dots", "planes")},
+            |codes AS (SELECT vec_id,
+            |                 CAST(SUM(CASE WHEN round(dot, 6) > 0 THEN (1::BIGINT << p) ELSE 0 END) AS BIGINT) AS code
+            |          FROM dots GROUP BY vec_id),
+            |cand AS (SELECT a.vec_id AS qid, b.vec_id AS vid FROM codes a
+            |         JOIN codes b ON a.code = b.code AND a.vec_id < b.vec_id),
+            |${scoreCtes("", "cand")}
+            |SELECT qid AS v1, vid AS v2, simr FROM sc WHERE simr >= 0.9
+            |ORDER BY v1, v2""".stripMargin))
 
   // IVF-lite ANN (the other scale path): 32 deterministic centroids
   // (the first 32 vectors — honest about being init-only; see
@@ -958,42 +819,18 @@ object Llm {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       val cells = cosineCells(e, e.filter(col("vec_id") < 32), 4)
-      val probes = cells.filter(col("vid").isin(0, 1, 2))
+      val probes = cells.filter(isQuery(col("vid")))
         .select(col("vid").as("qid"), col("cid"))
       topPerQuery(cellScores(probes,
           cells.filter(col("rn") === 1).select("vid", "cid"), e), 10)
         .orderBy("qid", "rn")
     },
-    Some("""WITH x AS (SELECT vec_id, unnest(embedding) AS e,
-                         generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-            n AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-                  FROM x GROUP BY vec_id),
-            cd AS (SELECT xv.vec_id AS vid, xc.vec_id AS cid,
-                          round(SUM(CAST(xv.e AS DOUBLE) * CAST(xc.e AS DOUBLE))
-                                / (nv.nrm * nc.nrm), 6) AS simr
-                   FROM x xv JOIN x xc ON xc.d = xv.d AND xc.vec_id < 32
-                   JOIN n nv ON nv.vec_id = xv.vec_id
-                   JOIN n nc ON nc.vec_id = xc.vec_id
-                   GROUP BY xv.vec_id, xc.vec_id, nv.nrm, nc.nrm),
-            assign AS (SELECT vid, cid FROM (
-                  SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-                  FROM cd) WHERE rn = 1),
-            probes AS (SELECT vid AS qid, cid FROM (
-                  SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-                  FROM cd WHERE vid IN (0, 1, 2)) WHERE rn <= 4),
-            cand AS (SELECT DISTINCT p.qid, a.vid
-                     FROM probes p JOIN assign a ON a.cid = p.cid
-                     WHERE a.vid != p.qid),
-            dp AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-                   FROM cand JOIN x xa ON xa.vec_id = qid
-                   JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d
-                   GROUP BY qid, vid),
-            sdf AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-                    FROM dp JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid),
-            r AS (SELECT qid, vid, simr,
-                         row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-                  FROM sdf)
-            SELECT qid, rn, vid, simr FROM r WHERE rn <= 10 ORDER BY qid, rn"""))
+    Some(s"""WITH $longCtes,
+            |${seedCents()},
+            |${cellCtes("", "cent0", queriesOnly = true)},
+            |${candCte()},
+            |${scoreCtes("", "cand")}
+            |${topKSql("sc")}""".stripMargin))
 
   // NPROBE RECALL/COST SWEEP (l3_nprobe_sweep): the index-tuning
   // table every IVF deployment reads before picking its operating
@@ -1016,7 +853,7 @@ object Llm {
       // is its rn <= np prefix, rn = 1 every vector's assignment
       val cells = scope.cached(cosineCells(e, e.filter(col("vec_id") < 32), 8))
       val assign = scope.cached(cells.filter(col("rn") === 1).select("vid", "cid"))
-      val qcells = cells.filter(col("vid").isin(0, 1, 2))
+      val qcells = cells.filter(isQuery(col("vid")))
       val ref = scope.cached(l3.run(s, dir).select(col("qid"), col("vid")))
       Seq(1, 2, 4, 8).map { np =>
         val probes = qcells.filter(col("rn") <= np)
@@ -1025,69 +862,26 @@ object Llm {
         // and it is query-sized (3 probe lists' members)
         val cand = scope.cached(cellScores(probes, assign, e))
         val ncand = cand.groupBy("qid").agg(count(lit(1)).as("n_cand"))
-        val top = topPerQuery(cand, 10)
-        val hits = ref.join(top.select("qid", "vid"), Seq("qid", "vid"), "semi")
-          .groupBy("qid").agg(count(lit(1)).as("n_hit"))
-        ref.select("qid").distinct()
-          .join(ncand, Seq("qid"), "left").join(hits, Seq("qid"), "left")
-          .select(lit(np).as("nprobe"), col("qid"),
-            coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-            coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-            round(coalesce(col("n_hit"), lit(0L)) / 10.0, 6).as("recall"))
+        recallRows(lit(np).as("nprobe"), ref, topPerQuery(cand, 10), Some(ncand))
       }.reduce(_ union _).orderBy("nprobe", "qid")
     },
     Some {
-      val perNp = Seq(1, 2, 4, 8).map { np =>
-        s"""p$np AS (SELECT vid AS qid, cid FROM qcd WHERE rn <= $np),
-           |c$np AS (SELECT DISTINCT p.qid, a.vid
-           |         FROM p$np p JOIN assign a ON a.cid = p.cid
-           |         WHERE a.vid != p.qid),
+      val nps = Seq(1, 2, 4, 8)
+      val perNp = nps.map { np =>
+        s"""${candCte(maxRank = np, name = s"c$np")},
            |nc$np AS (SELECT qid, count(*) AS n_cand FROM c$np GROUP BY 1),
-           |dp$np AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-           |          FROM c$np JOIN x xa ON xa.vec_id = qid
-           |          JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d
-           |          GROUP BY qid, vid),
-           |r$np AS (SELECT qid, vid FROM (
-           |    SELECT dp.qid, dp.vid,
-           |           row_number() OVER (PARTITION BY dp.qid
-           |             ORDER BY round(dot / (na.nrm * nb.nrm), 6) DESC, dp.vid) AS rn
-           |    FROM dp$np dp JOIN n na ON na.vec_id = dp.qid
-           |    JOIN n nb ON nb.vec_id = dp.vid) WHERE rn <= 10),
-           |h$np AS (SELECT r0.qid, count(*) AS n FROM knn r0
-           |         JOIN r$np s0 ON s0.qid = r0.qid AND s0.vid = r0.vid
-           |         GROUP BY 1),
-           |o$np AS (SELECT $np AS nprobe, q0.qid,
-           |           CAST(coalesce(nc.n_cand, 0) AS BIGINT) AS n_cand,
-           |           CAST(coalesce(h.n, 0) AS BIGINT) AS n_hit,
-           |           round(coalesce(h.n, 0) / 10.0, 6) AS recall
-           |         FROM (SELECT DISTINCT qid FROM knn) q0
-           |         LEFT JOIN nc$np nc ON nc.qid = q0.qid
-           |         LEFT JOIN h$np h ON h.qid = q0.qid)""".stripMargin
+           |${scoreCtes(s"$np", s"c$np")},
+           |${topKCte(s"r$np", s"sc$np", 10, "qid, vid")},
+           |${hitsCte(s"h$np", s"$np AS nprobe", "knn", s"r$np")},
+           |o$np AS (SELECT h.*, CAST(coalesce(nc.n_cand, 0) AS BIGINT) AS n_cand
+           |  FROM h$np h LEFT JOIN nc$np nc ON nc.qid = h.qid)""".stripMargin
       }.mkString(",\n")
-      val unions = Seq(1, 2, 4, 8)
-        .map(np => s"SELECT * FROM o$np").mkString("\nUNION ALL ")
       s"""WITH knn AS (SELECT qid, vid FROM (${l3.oracle.get})),
-         |x AS (SELECT vec_id, unnest(embedding) AS e,
-         |       generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-         |n AS (SELECT vec_id,
-         |       sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-         |     FROM x GROUP BY vec_id),
-         |cd AS (SELECT xv.vec_id AS vid, xc.vec_id AS cid,
-         |       round(SUM(CAST(xv.e AS DOUBLE) * CAST(xc.e AS DOUBLE))
-         |             / (nv.nrm * nc.nrm), 6) AS simr
-         |     FROM x xv JOIN x xc ON xc.d = xv.d AND xc.vec_id < 32
-         |     JOIN n nv ON nv.vec_id = xv.vec_id
-         |     JOIN n nc ON nc.vec_id = xc.vec_id
-         |     GROUP BY xv.vec_id, xc.vec_id, nv.nrm, nc.nrm),
-         |assign AS (SELECT vid, cid FROM (
-         |     SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-         |     FROM cd) WHERE rn = 1),
-         |qcd AS (SELECT vid, cid,
-         |     row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-         |     FROM cd WHERE vid IN (0, 1, 2)),
+         |$longCtes,
+         |${seedCents()},
+         |${cellCtes("", "cent0", probeK = 8, queriesOnly = true)},
          |$perNp
-         |$unions
-         |ORDER BY nprobe, qid""".stripMargin
+         |${recallSql("nprobe", nps.map(np => s"o$np"), ", n_cand")}""".stripMargin
     })
 
   // Symmetric int8 quantization of the embedding column — the storage
@@ -1217,64 +1011,42 @@ object Llm {
     // planes) is replayed IDENTICALLY below — at fixture skew every
     // nbits is 0 and sub collapses to 0, but the oracle carries the
     // full arithmetic so the gate would stay bit-for-bit on ANY skew
-    Some("""WITH prm AS (SELECT GREATEST(32, (SELECT MIN(1::BIGINT << b)
-                    FROM (SELECT unnest(range(0, 62)) AS b)
-                    WHERE (1::BIGINT << b) >= (nn + 63) // 64)) AS k
-                  FROM (SELECT count(*) AS nn FROM embeddings)),
-            x AS (SELECT vec_id, unnest(embedding) AS e,
-                         generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-            n AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-                  FROM x GROUP BY vec_id),
-            c0 AS (SELECT vec_id AS cid, d, CAST(e AS DOUBLE) AS v FROM x
-                   WHERE vec_id < (SELECT k FROM prm)),
-            cn AS (SELECT cid, sqrt(SUM(v * v)) AS cnrm FROM c0 GROUP BY cid),
-            s AS (SELECT x.vec_id AS vid, c.cid,
-                         round(SUM(CAST(x.e AS DOUBLE) * c.v) / (n.nrm * cn.cnrm), 6) AS simr
-                  FROM x JOIN c0 c ON c.d = x.d
-                  JOIN n ON n.vec_id = x.vec_id JOIN cn ON cn.cid = c.cid
-                  GROUP BY x.vec_id, c.cid, n.nrm, cn.cnrm),
-            assign AS (SELECT vid, cid FROM (
-                  SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-                  FROM s) WHERE rn = 1),
-            csz AS (SELECT cid, count(*) AS csz FROM assign GROUP BY cid),
-            nb AS (SELECT cid, CASE WHEN m <= 1 THEN 0 ELSE COALESCE(
-                     (SELECT MIN(b) FROM (SELECT unnest(range(0, 17)) AS b)
-                      WHERE (1::BIGINT << b) >= m), 16) END AS nbits
-                   FROM (SELECT cid, (csz + 255) // 256 AS m FROM csz)),
-            pl AS (SELECT p, d,
-                     CAST(((p*64 + d) * 2654435761 + 1013904223) % 2147483647 AS DOUBLE)
-                       / 2147483647.0 * 2 - 1 AS v
-                   FROM (SELECT unnest(range(0, 16)) AS p) tp,
-                        (SELECT unnest(range(0, 64)) AS d) td),
-            cdot AS (SELECT c0.cid, pl.p, round(SUM(c0.v * pl.v), 6) AS cd
-                     FROM c0 JOIN pl ON pl.d = c0.d GROUP BY c0.cid, pl.p),
-            chosen AS (SELECT cid, p, rk - 1 AS bit FROM (
-                     SELECT cdot.cid, cdot.p, nb.nbits,
-                            row_number() OVER (PARTITION BY cdot.cid
-                                               ORDER BY abs(cdot.cd), cdot.p) AS rk
-                     FROM cdot JOIN nb ON nb.cid = cdot.cid) WHERE rk <= nbits),
-            vd AS (SELECT x.vec_id AS vid, pl.p,
-                          round(SUM(CAST(x.e AS DOUBLE) * pl.v), 6) AS vdot
-                   FROM x JOIN pl ON pl.d = x.d GROUP BY x.vec_id, pl.p),
-            sub AS (SELECT a.vid, COALESCE(SUM(CASE WHEN vd.vdot > 0
-                             THEN (1::BIGINT << ch.bit) ELSE 0 END), 0) AS sub
-                    FROM assign a
-                    LEFT JOIN chosen ch ON ch.cid = a.cid
-                    LEFT JOIN vd ON vd.vid = a.vid AND vd.p = ch.p
-                    GROUP BY a.vid),
-            p AS (SELECT a.vid AS v1, b.vid AS v2
-                  FROM assign a JOIN sub sa ON sa.vid = a.vid
-                  JOIN assign b ON a.cid = b.cid AND a.vid < b.vid
-                  JOIN sub sb ON sb.vid = b.vid AND sb.sub = sa.sub),
-            dp AS (SELECT v1, v2, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-                   FROM p JOIN x xa ON xa.vec_id = v1
-                   JOIN x xb ON xb.vec_id = v2 AND xb.d = xa.d GROUP BY v1, v2),
-            sims AS (SELECT v1, v2, round(dot / (na.nrm * nb.nrm), 6) AS simr
-                     FROM dp JOIN n na ON na.vec_id = v1 JOIN n nb ON nb.vec_id = v2),
-            dropped AS (SELECT v2 AS vid, MIN(v1) AS dup_of FROM sims
-                        WHERE simr >= 0.35 GROUP BY v2)
-            SELECT a.vid AS vec_id, a.cid, d.dup_of IS NULL AS keep, d.dup_of
-            FROM assign a LEFT JOIN dropped d ON d.vid = a.vid ORDER BY vec_id"""))
+    Some(s"""WITH prm AS (SELECT GREATEST(32, (SELECT MIN(1::BIGINT << b)
+            |        FROM (SELECT unnest(range(0, 62)) AS b)
+            |        WHERE (1::BIGINT << b) >= (nn + 63) // 64)) AS k
+            |      FROM (SELECT count(*) AS nn FROM embeddings)),
+            |$longCtes,
+            |${seedCents(lists = "(SELECT k FROM prm)")},
+            |${cellCtes("", "cent0", probeK = 0)},
+            |csz AS (SELECT cid, count(*) AS csz FROM assign GROUP BY cid),
+            |nb AS (SELECT cid, CASE WHEN m <= 1 THEN 0 ELSE COALESCE(
+            |         (SELECT MIN(b) FROM (SELECT unnest(range(0, 17)) AS b)
+            |          WHERE (1::BIGINT << b) >= m), 16) END AS nbits
+            |       FROM (SELECT cid, (csz + 255) // 256 AS m FROM csz)),
+            |${planesCte("pl", "16")},
+            |cdot AS (SELECT c.cid, pl.p, round(SUM(c.v * pl.v), 6) AS dot
+            |         FROM cent0 c JOIN pl ON pl.d = c.d GROUP BY c.cid, pl.p),
+            |chosen AS (SELECT cid, p, rk - 1 AS bit FROM (
+            |         SELECT cdot.cid, cdot.p, nb.nbits,
+            |                row_number() OVER (PARTITION BY cdot.cid
+            |                                   ORDER BY abs(cdot.dot), cdot.p) AS rk
+            |         FROM cdot JOIN nb ON nb.cid = cdot.cid) WHERE rk <= nbits),
+            |${planeDotsCte("vd", "pl")},
+            |sub AS (SELECT a.vid, COALESCE(SUM(CASE WHEN round(vd.dot, 6) > 0
+            |                 THEN (1::BIGINT << ch.bit) ELSE 0 END), 0) AS sub
+            |        FROM assign a
+            |        LEFT JOIN chosen ch ON ch.cid = a.cid
+            |        LEFT JOIN vd ON vd.vec_id = a.vid AND vd.p = ch.p
+            |        GROUP BY a.vid),
+            |p AS (SELECT a.vid AS qid, b.vid AS vid
+            |      FROM assign a JOIN sub sa ON sa.vid = a.vid
+            |      JOIN assign b ON a.cid = b.cid AND a.vid < b.vid
+            |      JOIN sub sb ON sb.vid = b.vid AND sb.sub = sa.sub),
+            |${scoreCtes("", "p")},
+            |dropped AS (SELECT vid, MIN(qid) AS dup_of FROM sc
+            |            WHERE simr >= 0.35 GROUP BY vid)
+            |SELECT a.vid AS vec_id, a.cid, d.dup_of IS NULL AS keep, d.dup_of
+            |FROM assign a LEFT JOIN dropped d ON d.vid = a.vid ORDER BY vec_id""".stripMargin))
 
   // Product-quantization ANN (IVF-PQ's storage half): codebook = per
   // 8-dim subspace the 16 seed subvectors (deterministic smallest
@@ -1295,31 +1067,13 @@ object Llm {
       val e = t(s, dir, "embeddings")
       val cb = graft.ops.CorpusOps.pqCodebook(e)
       val codes = graft.ops.CorpusOps.pqEncode(e, cb)
-      val q = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding"))
-      graft.ops.CorpusOps.pqTopK(codes, cb, q).orderBy("qid", "rn")
+      graft.ops.CorpusOps.pqTopK(codes, cb, queries(e)).orderBy("qid", "rn")
     },
-    Some("""WITH x AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-                              CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-            sv AS (SELECT vec_id, d // 8 AS sub, d % 8 AS sd, v FROM x),
-            cb AS (SELECT sub, vec_id AS cid, sd, v AS cv FROM sv WHERE vec_id < 16),
-            d2 AS (SELECT s.vec_id, s.sub, c.cid,
-                          SUM((s.v - c.cv) * (s.v - c.cv)) AS qd2,
-                          round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                   FROM sv s JOIN cb c ON c.sub = s.sub AND c.sd = s.sd
-                   GROUP BY s.vec_id, s.sub, c.cid),
-            codes AS (SELECT vec_id, sub, cid AS code FROM (
-                   SELECT vec_id, sub, cid,
-                          row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                   FROM d2) WHERE rn = 1),
-            adc AS (SELECT l.vec_id AS qid, c.vec_id AS vid, round(SUM(l.qd2), 6) AS adr
-                    FROM codes c JOIN d2 l ON l.sub = c.sub AND l.cid = c.code
-                    WHERE l.vec_id IN (0, 1, 2) AND c.vec_id != l.vec_id
-                    GROUP BY l.vec_id, c.vec_id),
-            r AS (SELECT qid, vid, adr,
-                         row_number() OVER (PARTITION BY qid ORDER BY adr, vid) AS rn
-                  FROM adc)
-            SELECT qid, rn, vid, adr FROM r WHERE rn <= 10 ORDER BY qid, rn"""))
+    Some(s"""WITH ${longCte()},
+            |${pqCodebookCtes()},
+            |${pqEncodeCtes("", "sv", "cb0")},
+            |${adcCte()}
+            |${topKSql("adc", l2 = true)}""".stripMargin))
 
   // PQ with a Lloyd-TRAINED codebook: 2 k-means iterations per
   // subspace from the same deterministic seed init (CorpusOps.
@@ -1338,53 +1092,19 @@ object Llm {
       // build is the 2-iteration Lloyd chain over the corpus
       val cb = cached(graft.ops.CorpusOps.pqCodebookTrained(e))
       val codes = graft.ops.CorpusOps.pqEncode(e, cb)
-      val q = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding"))
-      graft.ops.CorpusOps.pqTopK(codes, cb, q).orderBy("qid", "rn")
+      graft.ops.CorpusOps.pqTopK(codes, cb, queries(e)).orderBy("qid", "rn")
     },
-    Some("""WITH x AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-                              CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-            sv AS (SELECT vec_id, d // 8 AS sub, d % 8 AS sd, v FROM x),
-            cb0 AS (SELECT sub, vec_id AS cid, sd, v AS cv FROM sv WHERE vec_id < 16),
-            d2a AS (SELECT s.vec_id, s.sub, c.cid,
-                           round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                    FROM sv s JOIN cb0 c ON c.sub = s.sub AND c.sd = s.sd
-                    GROUP BY s.vec_id, s.sub, c.cid),
-            as1 AS (SELECT vec_id, sub, cid FROM (
-                    SELECT vec_id, sub, cid,
-                           row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                    FROM d2a) WHERE rn = 1),
-            cb1 AS (SELECT s.sub, a.cid, s.sd, round(AVG(s.v), 6) AS cv
-                    FROM as1 a JOIN sv s ON s.vec_id = a.vec_id AND s.sub = a.sub
-                    GROUP BY s.sub, a.cid, s.sd),
-            d2b AS (SELECT s.vec_id, s.sub, c.cid,
-                           round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                    FROM sv s JOIN cb1 c ON c.sub = s.sub AND c.sd = s.sd
-                    GROUP BY s.vec_id, s.sub, c.cid),
-            as2 AS (SELECT vec_id, sub, cid FROM (
-                    SELECT vec_id, sub, cid,
-                           row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                    FROM d2b) WHERE rn = 1),
-            cb2 AS (SELECT s.sub, a.cid, s.sd, round(AVG(s.v), 6) AS cv
-                    FROM as2 a JOIN sv s ON s.vec_id = a.vec_id AND s.sub = a.sub
-                    GROUP BY s.sub, a.cid, s.sd),
-            d2 AS (SELECT s.vec_id, s.sub, c.cid,
-                          SUM((s.v - c.cv) * (s.v - c.cv)) AS qd2,
-                          round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                   FROM sv s JOIN cb2 c ON c.sub = s.sub AND c.sd = s.sd
-                   GROUP BY s.vec_id, s.sub, c.cid),
-            codes AS (SELECT vec_id, sub, cid AS code FROM (
-                   SELECT vec_id, sub, cid,
-                          row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                   FROM d2) WHERE rn = 1),
-            adc AS (SELECT l.vec_id AS qid, c.vec_id AS vid, round(SUM(l.qd2), 6) AS adr
-                    FROM codes c JOIN d2 l ON l.sub = c.sub AND l.cid = c.code
-                    WHERE l.vec_id IN (0, 1, 2) AND c.vec_id != l.vec_id
-                    GROUP BY l.vec_id, c.vec_id),
-            r AS (SELECT qid, vid, adr,
-                         row_number() OVER (PARTITION BY qid ORDER BY adr, vid) AS rn
-                  FROM adc)
-            SELECT qid, rn, vid, adr FROM r WHERE rn <= 10 ORDER BY qid, rn"""))
+    Some(s"""WITH ${longCte()},
+            |$pqTrainedCtes
+            |${topKSql("adc", l2 = true)}""".stripMargin))
+
+  /** l3_ann_pq_trained's chain after `x`: the 2-round trained
+    * codebook, the encode and the full ADC `adc` — l3_ann_refined's
+    * candidate source too. */
+  private lazy val pqTrainedCtes: String =
+    s"""${pqCodebookCtes(iters = 2)},
+       |${pqEncodeCtes("", "sv", "cb2")},
+       |${adcCte()}""".stripMargin
 
   // IVF-PQ (the FAISS IVFADC composite — THE 100 TB ANN architecture):
   // an L2 coarse quantizer assigns every vector to its nearest of 32
@@ -1400,47 +1120,21 @@ object Llm {
     "l3_ann_ivfpq",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding"))
+      val q = queries(e)
       val cand = graft.ops.CorpusOps.ivfCandidates(e, q)
       val cb = graft.ops.CorpusOps.pqCodebook(e)
       val codes = graft.ops.CorpusOps.pqEncode(e, cb)
       graft.ops.CorpusOps.pqTopK(codes, cb, q, candidates = Some(cand))
         .orderBy("qid", "rn")
     },
-    Some("""WITH x AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-                              CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-            cd AS (SELECT a.vec_id AS vid, c.vec_id AS cid,
-                          round(SUM((a.v - c.v) * (a.v - c.v)), 6) AS d2c
-                   FROM x a JOIN x c ON c.d = a.d AND c.vec_id < 32
-                   GROUP BY a.vec_id, c.vec_id),
-            assign AS (SELECT vid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-                   FROM cd) WHERE rn = 1),
-            probes AS (SELECT vid AS qid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-                   FROM cd WHERE vid IN (0, 1, 2)) WHERE rn <= 4),
-            cand AS (SELECT DISTINCT p.qid, a.vid FROM probes p JOIN assign a ON a.cid = p.cid
-                     WHERE a.vid != p.qid),
-            sv AS (SELECT vec_id, d // 8 AS sub, d % 8 AS sd, v FROM x),
-            cb AS (SELECT sub, vec_id AS cid, sd, v AS cv FROM sv WHERE vec_id < 16),
-            d2 AS (SELECT s.vec_id, s.sub, c.cid,
-                          SUM((s.v - c.cv) * (s.v - c.cv)) AS qd2,
-                          round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                   FROM sv s JOIN cb c ON c.sub = s.sub AND c.sd = s.sd
-                   GROUP BY s.vec_id, s.sub, c.cid),
-            codes AS (SELECT vec_id, sub, cid AS code FROM (
-                   SELECT vec_id, sub, cid,
-                          row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                   FROM d2) WHERE rn = 1),
-            adc AS (SELECT cn.qid, cn.vid, round(SUM(l.qd2), 6) AS adr
-                    FROM cand cn JOIN codes k ON k.vec_id = cn.vid
-                    JOIN d2 l ON l.vec_id = cn.qid AND l.sub = k.sub AND l.cid = k.code
-                    GROUP BY cn.qid, cn.vid),
-            r AS (SELECT qid, vid, adr,
-                         row_number() OVER (PARTITION BY qid ORDER BY adr, vid) AS rn
-                  FROM adc)
-            SELECT qid, rn, vid, adr FROM r WHERE rn <= 10 ORDER BY qid, rn"""))
+    Some(s"""WITH ${longCte()},
+            |${seedCents()},
+            |${cellCtes("", "cent0", l2 = true, queriesOnly = true)},
+            |${candCte()},
+            |${pqCodebookCtes()},
+            |${pqEncodeCtes("", "sv", "cb0")},
+            |${adcCte("cand")}
+            |${topKSql("adc", l2 = true)}""".stripMargin))
 
   // FILTERED ANN (l3_ann_filtered): "top-k among vectors WHERE
   // <metadata predicate>" — the FAISS-IDSelector / pgvector-WHERE
@@ -1457,39 +1151,16 @@ object Llm {
     "l3_ann_filtered",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding"))
       val allowed = e.filter(col("label").isin(2, 5, 7)).select("vec_id")
-      graft.ops.CorpusOps.ivfFilteredTopK(e, q, allowed).orderBy("qid", "rn")
+      graft.ops.CorpusOps.ivfFilteredTopK(e, queries(e), allowed).orderBy("qid", "rn")
     },
-    Some("""WITH x AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-                              CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-            cd AS (SELECT a.vec_id AS vid, c.vec_id AS cid,
-                          round(SUM((a.v - c.v) * (a.v - c.v)), 6) AS d2c
-                   FROM x a JOIN x c ON c.d = a.d AND c.vec_id < 32
-                   GROUP BY a.vec_id, c.vec_id),
-            assign AS (SELECT vid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-                   FROM cd) WHERE rn = 1),
-            probes AS (SELECT vid AS qid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-                   FROM cd WHERE vid IN (0, 1, 2)) WHERE rn <= 4),
-            al AS (SELECT vec_id FROM embeddings WHERE label IN (2, 5, 7)),
-            cand AS (SELECT DISTINCT p.qid, a.vid FROM probes p
-                     JOIN assign a ON a.cid = p.cid
-                     JOIN al ON al.vec_id = a.vid
-                     WHERE a.vid != p.qid),
-            n AS (SELECT vec_id, sqrt(SUM(v * v)) AS nrm FROM x GROUP BY vec_id),
-            dp AS (SELECT c.qid, c.vid, SUM(xa.v * xb.v) AS dot
-                   FROM cand c JOIN x xa ON xa.vec_id = c.qid
-                   JOIN x xb ON xb.vec_id = c.vid AND xb.d = xa.d
-                   GROUP BY c.qid, c.vid),
-            sdf AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-                    FROM dp JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid),
-            rr AS (SELECT qid, vid, simr,
-                          row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-                   FROM sdf)
-            SELECT qid, rn, vid, simr FROM rr WHERE rn <= 10 ORDER BY qid, rn"""))
+    Some(s"""WITH $longCtes,
+            |${seedCents()},
+            |${cellCtes("", "cent0", l2 = true, queriesOnly = true)},
+            |allowed AS (SELECT vec_id FROM embeddings WHERE label IN (2, 5, 7)),
+            |${candCte(allowed = "allowed")},
+            |${scoreCtes("", "cand")}
+            |${topKSql("sc")}""".stripMargin))
 
   // Residual-encoding IVF-PQ (the full FAISS IVFADC, Jégou et al.
   // TPAMI'11 §IV): vectors PQ-coded as residuals against their coarse
@@ -1508,76 +1179,25 @@ object Llm {
     "l3_ann_ivfpq_residual",
     (s, dir) => {
       val e = t(s, dir, "embeddings")
-      val q = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding"))
-      graft.ops.CorpusOps.ivfpqResidualTopK(e, q).orderBy("qid", "rn")
+      graft.ops.CorpusOps.ivfpqResidualTopK(e, queries(e)).orderBy("qid", "rn")
     },
-    Some("""WITH x AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-                              CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-            cd AS (SELECT a.vec_id AS vid, c.vec_id AS cid,
-                          round(SUM((a.v - c.v) * (a.v - c.v)), 6) AS d2c
-                   FROM x a JOIN x c ON c.d = a.d AND c.vec_id < 32
-                   GROUP BY a.vec_id, c.vec_id),
-            assign AS (SELECT vid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-                   FROM cd) WHERE rn = 1),
-            probes AS (SELECT vid AS qid, cid FROM (
-                   SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-                   FROM cd WHERE vid IN (0, 1, 2)) WHERE rn <= 4),
-            res AS (SELECT a.vid AS vec_id, xa.d, xa.v - xc.v AS v
-                    FROM assign a JOIN x xa ON xa.vec_id = a.vid
-                    JOIN x xc ON xc.vec_id = a.cid AND xc.d = xa.d),
-            sv AS (SELECT vec_id, d // 8 AS sub, d % 8 AS sd, v FROM res),
-            cb0 AS (SELECT sub, vec_id AS cid, sd, v AS cv FROM sv WHERE vec_id < 16),
-            d2a AS (SELECT s.vec_id, s.sub, c.cid,
-                           round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                    FROM sv s JOIN cb0 c ON c.sub = s.sub AND c.sd = s.sd
-                    GROUP BY s.vec_id, s.sub, c.cid),
-            as1 AS (SELECT vec_id, sub, cid FROM (
-                    SELECT vec_id, sub, cid,
-                           row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                    FROM d2a) WHERE rn = 1),
-            cb1 AS (SELECT s.sub, a.cid, s.sd, round(AVG(s.v), 6) AS cv
-                    FROM as1 a JOIN sv s ON s.vec_id = a.vec_id AND s.sub = a.sub
-                    GROUP BY s.sub, a.cid, s.sd),
-            d2b AS (SELECT s.vec_id, s.sub, c.cid,
-                           round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                    FROM sv s JOIN cb1 c ON c.sub = s.sub AND c.sd = s.sd
-                    GROUP BY s.vec_id, s.sub, c.cid),
-            as2 AS (SELECT vec_id, sub, cid FROM (
-                    SELECT vec_id, sub, cid,
-                           row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                    FROM d2b) WHERE rn = 1),
-            cb2 AS (SELECT s.sub, a.cid, s.sd, round(AVG(s.v), 6) AS cv
-                    FROM as2 a JOIN sv s ON s.vec_id = a.vec_id AND s.sub = a.sub
-                    GROUP BY s.sub, a.cid, s.sd),
-            d2 AS (SELECT s.vec_id, s.sub, c.cid,
-                          round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                   FROM sv s JOIN cb2 c ON c.sub = s.sub AND c.sd = s.sd
-                   GROUP BY s.vec_id, s.sub, c.cid),
-            codes AS (SELECT vec_id, sub, cid AS code FROM (
-                   SELECT vec_id, sub, cid,
-                          row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                   FROM d2) WHERE rn = 1),
-            qres AS (SELECT p.qid, p.cid, xa.d, xa.v - xc.v AS v
-                     FROM probes p JOIN x xa ON xa.vec_id = p.qid
-                     JOIN x xc ON xc.vec_id = p.cid AND xc.d = xa.d),
-            qsv AS (SELECT qid, cid, d // 8 AS sub, d % 8 AS sd, v FROM qres),
-            lut AS (SELECT q.qid, q.cid, q.sub, c.cid AS code,
-                           SUM((q.v - c.cv) * (q.v - c.cv)) AS qd2
-                    FROM qsv q JOIN cb2 c ON c.sub = q.sub AND c.sd = q.sd
-                    GROUP BY q.qid, q.cid, q.sub, c.cid),
-            cand AS (SELECT p.qid, p.cid, a.vid FROM probes p JOIN assign a ON a.cid = p.cid
-                     WHERE a.vid != p.qid),
-            adc AS (SELECT cn.qid, cn.vid, round(SUM(l.qd2), 6) AS adr
-                    FROM cand cn JOIN codes k ON k.vec_id = cn.vid
-                    JOIN lut l ON l.qid = cn.qid AND l.cid = cn.cid
-                               AND l.sub = k.sub AND l.code = k.code
-                    GROUP BY cn.qid, cn.vid),
-            r AS (SELECT qid, vid, adr,
-                         row_number() OVER (PARTITION BY qid ORDER BY adr, vid) AS rn
-                  FROM adc)
-            SELECT qid, rn, vid, adr FROM r WHERE rn <= 10 ORDER BY qid, rn"""))
+    Some(s"""WITH ${longCte()},
+            |${seedCents()},
+            |${cellCtes("", "cent0", l2 = true, queriesOnly = true)},
+            |${residualCte("res", "assign", "cent0")},
+            |${pqCodebookCtes(src = "res", iters = 2)},
+            |${pqEncodeCtes("", "sv", "cb2")},
+            |qres AS (SELECT p.qid, p.cid, x.d, x.v - c.v AS v
+            |         FROM probes p JOIN x ON x.vec_id = p.qid
+            |         JOIN cent0 c ON c.cid = p.cid AND c.d = x.d),
+            |${subvectorsCte("qsv", "qres", "qid, cid")},
+            |lut AS (SELECT q.qid, q.cid, q.sub, c.cid AS code,
+            |               SUM((q.v - c.cv) * (q.v - c.cv)) AS qd2
+            |        FROM qsv q JOIN cb2 c ON c.sub = q.sub AND c.sd = q.sd
+            |        GROUP BY q.qid, q.cid, q.sub, c.cid),
+            |${candCte()},
+            |${adcCte("cand", "lut")}
+            |${topKSql("adc", l2 = true)}""".stripMargin))
 
   // Exact re-rank REFINE (FAISS IndexRefine — the recall-restoring
   // final hop every production ANN serves): the trained-PQ full ADC
@@ -1599,26 +1219,15 @@ object Llm {
       // build is the 2-iteration Lloyd chain over the corpus
       val cb = cached(graft.ops.CorpusOps.pqCodebookTrained(e))
       val codes = graft.ops.CorpusOps.pqEncode(e, cb)
-      val q = e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding"))
+      val q = queries(e)
       val cand = graft.ops.CorpusOps.pqTopK(codes, cb, q, topK = 100)
       graft.ops.CorpusOps.refine(cand, e, q).orderBy("qid", "rn")
     },
-    Some(s"""WITH cand AS (SELECT qid, vid FROM (${l3pqTrained.oracle.get
-               .replace("WHERE rn <= 10 ORDER BY qid, rn", "WHERE rn <= 100")})),
-            |x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS e,
-            |             generate_subscripts(embedding, 1) AS i FROM embeddings),
-            |n AS (SELECT vec_id, sqrt(SUM(e * e)) AS nrm FROM x GROUP BY vec_id),
-            |dp AS (SELECT c.qid, c.vid, SUM(xa.e * xb.e) AS dot
-            |       FROM cand c JOIN x xa ON xa.vec_id = c.qid
-            |       JOIN x xb ON xb.vec_id = c.vid AND xb.i = xa.i
-            |       GROUP BY c.qid, c.vid),
-            |sdf AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-            |        FROM dp JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid),
-            |rr AS (SELECT qid, vid, simr,
-            |              row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-            |       FROM sdf)
-            |SELECT qid, rn, vid, simr FROM rr WHERE rn <= 10 ORDER BY qid, rn""".stripMargin))
+    Some(s"""WITH $longCtes,
+            |$pqTrainedCtes,
+            |${topKCte("top100", "adc", 100, "qid, vid", l2 = true)},
+            |${scoreCtes("", "top100")}
+            |${topKSql("sc")}""".stripMargin))
 
   // INCREMENTAL index maintenance (CorpusOps.ivfpqIncremental): the
   // corpus splits into a training prefix (vec_id < 400 — builds the
@@ -1639,66 +1248,21 @@ object Llm {
         e.filter(col("vec_id") < 400), e.filter(col("vec_id") >= 400))
         .orderBy("vec_id")
     },
-    Some("""WITH x AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-                              CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
-            cd AS (SELECT a.vec_id AS vid, c.vec_id AS cid,
-                          round(SUM((a.v - c.v) * (a.v - c.v)), 6) AS d2c
-                   FROM x a JOIN x c ON c.d = a.d AND c.vec_id < 32
-                   GROUP BY a.vec_id, c.vec_id),
-            asg AS (SELECT vid, cid, d2c FROM (
-                   SELECT vid, cid, d2c,
-                          row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-                   FROM cd) WHERE rn = 1),
-            ta AS (SELECT * FROM asg WHERE vid < 400),
-            ba AS (SELECT * FROM asg WHERE vid >= 400),
-            res AS (SELECT a.vid AS vec_id, xa.d, xa.v - xc.v AS v
-                    FROM ta a JOIN x xa ON xa.vec_id = a.vid
-                    JOIN x xc ON xc.vec_id = a.cid AND xc.d = xa.d),
-            sv AS (SELECT vec_id, d // 8 AS sub, d % 8 AS sd, v FROM res),
-            cb0 AS (SELECT sub, vec_id AS cid, sd, v AS cv FROM sv WHERE vec_id < 16),
-            d2a AS (SELECT s.vec_id, s.sub, c.cid,
-                           round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                    FROM sv s JOIN cb0 c ON c.sub = s.sub AND c.sd = s.sd
-                    GROUP BY s.vec_id, s.sub, c.cid),
-            as1 AS (SELECT vec_id, sub, cid FROM (
-                    SELECT vec_id, sub, cid,
-                           row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                    FROM d2a) WHERE rn = 1),
-            cb1 AS (SELECT s.sub, a.cid, s.sd, round(AVG(s.v), 6) AS cv
-                    FROM as1 a JOIN sv s ON s.vec_id = a.vec_id AND s.sub = a.sub
-                    GROUP BY s.sub, a.cid, s.sd),
-            d2b AS (SELECT s.vec_id, s.sub, c.cid,
-                           round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                    FROM sv s JOIN cb1 c ON c.sub = s.sub AND c.sd = s.sd
-                    GROUP BY s.vec_id, s.sub, c.cid),
-            as2 AS (SELECT vec_id, sub, cid FROM (
-                    SELECT vec_id, sub, cid,
-                           row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                    FROM d2b) WHERE rn = 1),
-            cb2 AS (SELECT s.sub, a.cid, s.sd, round(AVG(s.v), 6) AS cv
-                    FROM as2 a JOIN sv s ON s.vec_id = a.vec_id AND s.sub = a.sub
-                    GROUP BY s.sub, a.cid, s.sd),
-            bres AS (SELECT a.vid AS vec_id, xa.d, xa.v - xc.v AS v
-                     FROM ba a JOIN x xa ON xa.vec_id = a.vid
-                     JOIN x xc ON xc.vec_id = a.cid AND xc.d = xa.d),
-            bsv AS (SELECT vec_id, d // 8 AS sub, d % 8 AS sd, v FROM bres),
-            bd2 AS (SELECT s.vec_id, s.sub, c.cid,
-                           round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-                    FROM bsv s JOIN cb2 c ON c.sub = s.sub AND c.sd = s.sd
-                    GROUP BY s.vec_id, s.sub, c.cid),
-            bcodes AS (SELECT vec_id, sub, cid AS code FROM (
-                    SELECT vec_id, sub, cid,
-                           row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-                    FROM bd2) WHERE rn = 1),
-            csum AS (SELECT vec_id,
-                            CAST(SUM(code * CAST(power(16, sub) AS BIGINT)) AS BIGINT) AS code_sum
-                     FROM bcodes GROUP BY vec_id),
-            dr AS (SELECT round(bm.m / tm.m, 6) AS drift FROM
-                   (SELECT CAST(SUM(CAST(d2c AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS m FROM ba) bm,
-                   (SELECT CAST(SUM(CAST(d2c AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS m FROM ta) tm)
-            SELECT b.vid AS vec_id, b.cid, b.d2c, c.code_sum, dr.drift
-            FROM ba b JOIN csum c ON c.vec_id = b.vid, dr
-            ORDER BY vec_id"""))
+    Some(s"""WITH ${longCte()},
+            |${seedCents()},
+            |${cellCtes("", "cent0", l2 = true, probeK = 0)},
+            |ta AS (SELECT * FROM assign WHERE vid < 400),
+            |ba AS (SELECT * FROM assign WHERE vid >= 400),
+            |${residualCte("res", "ta", "cent0")},
+            |${pqCodebookCtes(src = "res", iters = 2)},
+            |${residualCte("bres", "ba", "cent0")},
+            |${subvectorsCte("bsv", "bres")},
+            |${pqEncodeCtes("b", "bsv", "cb2")},
+            |${codeSumCte("codesb")},
+            |${driftCte("assign")}
+            |SELECT b.vid AS vec_id, b.cid, b.d2c, c.code_sum, dr.drift
+            |FROM ba b JOIN csum c ON c.vec_id = b.vid, dr
+            |ORDER BY vec_id""".stripMargin))
 
   // STORED-STATE frozen ingest (l3_ann_incremental_stored): the same
   // semantics as l3_ann_incremental served from a PERSISTABLE
@@ -1749,86 +1313,19 @@ object Llm {
       val (out, _) = graft.ops.CorpusOps.retrainIfDrifted(train, batch, 1.5)
       out.orderBy("vec_id")
     },
-    Some("""WITH x0 AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
-            |                   CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings),
+    Some(s"""WITH ${longCte("x0")},
             |x AS (SELECT vec_id, d, CASE WHEN vec_id >= 400 THEN v * 2 ELSE v END AS v FROM x0),
-            |fcd AS (SELECT a.vec_id AS vid, c.vec_id AS cid,
-            |               round(SUM((a.v - c.v) * (a.v - c.v)), 6) AS d2c
-            |        FROM x a JOIN x c ON c.d = a.d AND c.vec_id < 32
-            |        GROUP BY a.vec_id, c.vec_id),
-            |fasg AS (SELECT vid, cid, d2c FROM (
-            |        SELECT vid, cid, d2c,
-            |               row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-            |        FROM fcd) WHERE rn = 1),
-            |dr AS (SELECT round(bm.m / tm.m, 6) AS drift FROM
-            |       (SELECT CAST(SUM(CAST(d2c AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS m
-            |        FROM fasg WHERE vid >= 400) bm,
-            |       (SELECT CAST(SUM(CAST(d2c AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS m
-            |        FROM fasg WHERE vid < 400) tm),
-            |k0 AS (SELECT vec_id AS cid, d, v FROM x WHERE vec_id < 32),
-            |kd1 AS (SELECT a.vec_id AS vid, c.cid,
-            |               round(SUM((a.v - c.v) * (a.v - c.v)), 6) AS d2c
-            |        FROM x a JOIN k0 c ON c.d = a.d GROUP BY a.vec_id, c.cid),
-            |ka1 AS (SELECT vid, cid FROM (
-            |        SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-            |        FROM kd1) WHERE rn = 1),
-            |kc1 AS (SELECT a.cid, x.d, round(AVG(x.v), 6) AS v
-            |        FROM ka1 a JOIN x ON x.vec_id = a.vid GROUP BY a.cid, x.d),
-            |kd2 AS (SELECT a.vec_id AS vid, c.cid,
-            |               round(SUM((a.v - c.v) * (a.v - c.v)), 6) AS d2c
-            |        FROM x a JOIN kc1 c ON c.d = a.d GROUP BY a.vec_id, c.cid),
-            |ka2 AS (SELECT vid, cid FROM (
-            |        SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-            |        FROM kd2) WHERE rn = 1),
-            |kc2 AS (SELECT a.cid, x.d, round(AVG(x.v), 6) AS v
-            |        FROM ka2 a JOIN x ON x.vec_id = a.vid GROUP BY a.cid, x.d),
-            |acd AS (SELECT a.vec_id AS vid, c.cid,
-            |               round(SUM((a.v - c.v) * (a.v - c.v)), 6) AS d2c
-            |        FROM x a JOIN kc2 c ON c.d = a.d GROUP BY a.vec_id, c.cid),
-            |aasg AS (SELECT vid, cid, d2c FROM (
-            |        SELECT vid, cid, d2c,
-            |               row_number() OVER (PARTITION BY vid ORDER BY d2c, cid) AS rn
-            |        FROM acd) WHERE rn = 1),
-            |res AS (SELECT a.vid AS vec_id, x.d, x.v - c.v AS v
-            |        FROM aasg a JOIN x ON x.vec_id = a.vid
-            |        JOIN kc2 c ON c.cid = a.cid AND c.d = x.d),
-            |sv AS (SELECT vec_id, d // 8 AS sub, d % 8 AS sd, v FROM res),
-            |cb0 AS (SELECT sub, vec_id AS cid, sd, v AS cv FROM sv WHERE vec_id < 16),
-            |d2a AS (SELECT s.vec_id, s.sub, c.cid,
-            |               round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-            |        FROM sv s JOIN cb0 c ON c.sub = s.sub AND c.sd = s.sd
-            |        GROUP BY s.vec_id, s.sub, c.cid),
-            |as1 AS (SELECT vec_id, sub, cid FROM (
-            |        SELECT vec_id, sub, cid,
-            |               row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-            |        FROM d2a) WHERE rn = 1),
-            |cb1 AS (SELECT s.sub, a.cid, s.sd, round(AVG(s.v), 6) AS cv
-            |        FROM as1 a JOIN sv s ON s.vec_id = a.vec_id AND s.sub = a.sub
-            |        GROUP BY s.sub, a.cid, s.sd),
-            |d2b AS (SELECT s.vec_id, s.sub, c.cid,
-            |               round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-            |        FROM sv s JOIN cb1 c ON c.sub = s.sub AND c.sd = s.sd
-            |        GROUP BY s.vec_id, s.sub, c.cid),
-            |as2 AS (SELECT vec_id, sub, cid FROM (
-            |        SELECT vec_id, sub, cid,
-            |               row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-            |        FROM d2b) WHERE rn = 1),
-            |cb2 AS (SELECT s.sub, a.cid, s.sd, round(AVG(s.v), 6) AS cv
-            |        FROM as2 a JOIN sv s ON s.vec_id = a.vec_id AND s.sub = a.sub
-            |        GROUP BY s.sub, a.cid, s.sd),
-            |ed AS (SELECT s.vec_id, s.sub, c.cid,
-            |              round(SUM((s.v - c.cv) * (s.v - c.cv)), 6) AS d2r
-            |       FROM sv s JOIN cb2 c ON c.sub = s.sub AND c.sd = s.sd
-            |       GROUP BY s.vec_id, s.sub, c.cid),
-            |codes AS (SELECT vec_id, sub, cid AS code FROM (
-            |        SELECT vec_id, sub, cid,
-            |               row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2r, cid) AS rn
-            |        FROM ed) WHERE rn = 1),
-            |csum AS (SELECT vec_id,
-            |                CAST(SUM(code * CAST(power(16, sub) AS BIGINT)) AS BIGINT) AS code_sum
-            |         FROM codes GROUP BY vec_id)
+            |${seedCents()},
+            |${cellCtes("f", "cent0", l2 = true, probeK = 0)},
+            |${driftCte("assignf")},
+            |${lloydCtes(l2 = true)},
+            |${cellCtes("", "cent2", l2 = true, probeK = 0)},
+            |${residualCte("res", "assign", "cent2")},
+            |${pqCodebookCtes(src = "res", iters = 2)},
+            |${pqEncodeCtes("", "sv", "cb2")},
+            |${codeSumCte("codes")}
             |SELECT a.vid AS vec_id, a.cid, a.d2c, c.code_sum, dr.drift
-            |FROM aasg a JOIN csum c ON c.vec_id = a.vid, dr
+            |FROM assign a JOIN csum c ON c.vec_id = a.vid, dr
             |ORDER BY vec_id""".stripMargin))
 
   // ---------------------------------------------------------------- L4
@@ -3720,75 +3217,13 @@ object Llm {
   // inverted lists are the one skew axis — the semDedup size-capped
   // sub-bucket guard (CorpusOps.semDedup) is the documented remedy
   // when real embeddings collapse onto few lists.
-  /** The IVF-bounded top-5 kNN graph build (unordered) — shared by
-    * l3_knn_graph and the l3_ann_graph_search traversal over it.
-    * Split: [[knnCandScored]] is the IVF-bucketed scored-candidate
-    * core (qid, vid, simr — every probe-bucket pair, no rank cut);
-    * [[knnGraphTop5]] ranks it to the top-5 graph, and l3_ann_hnsw
-    * additionally derives its per-LAYER adjacencies from the same
-    * scored set (one shared scoring pass, three consumers). */
-  private def knnCandScored(s: SparkSession, dir: String)
-                           (implicit scope: graft.ops.CacheScope): DataFrame =
-    knnCandScoredOver(t(s, dir, "embeddings"))
-
-  /** [[knnCandScored]] over an arbitrary vector set (vec_id,
-    * embedding) — the l3_ann_hnsw_incremental frozen-index build
-    * scores the STORED corpus only through this. */
-  private def knnCandScoredOver(e: DataFrame)
-                               (implicit scope: graft.ops.CacheScope): DataFrame = {
-    // one centroid-similarity pass shared by assignment and probes;
-    // only the rn<=4 slice materializes (4n rows — LINEAR; assign =
-    // rn=1 is a subset of the probe lists, so caching the full
-    // n x nlist table would store n^1.5 rows for nothing)
-    val cdTop = cached(cosineCells(e, sqrtSeedCents(e), 4))
-    cellScores(cdTop.select(col("vid").as("qid"), col("cid")),
-      cdTop.filter(col("rn") === 1).select("vid", "cid"), e)
-  }
-
-  private def knnGraphTop5(s: SparkSession, dir: String)
-                          (implicit scope: graft.ops.CacheScope): DataFrame =
-    topPerQuery(knnCandScored(s, dir), 5)
-
-  /** The l3_knn_graph oracle's CTE chain ending in
-    * `r(qid, vid, simr, rn)` — also the prefix of the graph-search
-    * oracle (which additionally reuses `x` and `n` for its per-round
-    * scoring). */
-  private val knnGraphOracleCtes =
-    """x AS (SELECT vec_id, unnest(embedding) AS e,
-      |             generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-      |n AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-      |      FROM x GROUP BY vec_id),
-      |nl AS (SELECT GREATEST(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS nlist
-      |       FROM embeddings),
-      |cd AS (SELECT xv.vec_id AS vid, xc.vec_id AS cid,
-      |              round(SUM(CAST(xv.e AS DOUBLE) * CAST(xc.e AS DOUBLE))
-      |                    / (nv.nrm * nc.nrm), 6) AS simr
-      |       FROM x xv JOIN x xc ON xc.d = xv.d AND xc.vec_id < (SELECT nlist FROM nl)
-      |       JOIN n nv ON nv.vec_id = xv.vec_id
-      |       JOIN n nc ON nc.vec_id = xc.vec_id
-      |       GROUP BY xv.vec_id, xc.vec_id, nv.nrm, nc.nrm),
-      |r0 AS (SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-      |       FROM cd),
-      |assign AS (SELECT vid, cid FROM r0 WHERE rn = 1),
-      |probes AS (SELECT vid AS qid, cid FROM r0 WHERE rn <= 4),
-      |cand AS (SELECT p.qid, a.vid FROM probes p JOIN assign a ON a.cid = p.cid
-      |         WHERE a.vid != p.qid),
-      |dp AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-      |       FROM cand JOIN x xa ON xa.vec_id = qid
-      |       JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d
-      |       GROUP BY qid, vid),
-      |sdf AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-      |        FROM dp JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid),
-      |r AS (SELECT qid, vid, simr,
-      |             row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-      |      FROM sdf)""".stripMargin
-
   private val l3knnGraph = QueryDef(
     "l3_knn_graph",
-    (s, dir) => knnGraphTop5(s, dir)(graft.ops.CacheScope.sessionOwned)
+    (s, dir) => knnGraphTop5(t(s, dir, "embeddings"))(graft.ops.CacheScope.sessionOwned)
       .orderBy("qid", "rn"),
-    Some(s"""WITH $knnGraphOracleCtes
-            |SELECT qid, rn, vid, simr FROM r WHERE rn <= 5 ORDER BY qid, rn""".stripMargin))
+    Some(s"""WITH $longCtes,
+            |${knnCtes()}
+            |${topKSql("sc", 5)}""".stripMargin))
 
   // GRAPH-BASED ANN SEARCH (l3_ann_graph_search): the NSW/HNSW-family
   // traversal over the l3_knn_graph index — beam search: start every
@@ -3803,75 +3238,25 @@ object Llm {
   // identical traversal with generated beam CTEs. The query vector
   // itself rides the beam (sim 1.0 anchors the search) and is
   // excluded at output, the l3_knn_bruteforce convention.
+  // The beam rounds are HnswSearch.flatBeam, shared with l3_ann_hnsw's
+  // flat arm; this cell caches each round's beam where that arm cuts
+  // lineage, so each keeps its own plan.
   private val l3graphSearch = QueryDef(
     "l3_ann_graph_search",
     (s, dir) => {
       implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.sessionOwned
-      val e = t(s, dir, "embeddings")
-      val g = knnGraphTop5(s, dir).select(col("qid").as("a"), col("vid").as("b"))
-      val adj = cached(
-        g.union(g.select(col("b").as("a"), col("a").as("b"))).distinct())
-      val q = broadcast(e.filter(col("vec_id").isin(0, 1, 2))
-        .select(col("vec_id").as("qid"), col("embedding").as("qe")))
-      def scored(cands: DataFrame): DataFrame =
-        cands.join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
-          .join(q, "qid")
-          .select(col("qid"), col("vid"),
-            round(vec_cos(col("qe"), col("ve")), 6).as("simr"))
-      val wB = Window.partitionBy("qid").orderBy(col("simr").desc, col("vid").asc)
-      var beam = cached(scored(q.select(col("qid"))
-        .crossJoin(broadcast(e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("vid"))))))
-      for (_ <- 1 to 3) {
-        val expand = beam.select(col("qid"), col("vid").as("a"))
-          .join(adj, "a").select(col("qid"), col("b").as("vid"))
-          .distinct()
-          .join(beam.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-        beam = cached(beam.union(scored(expand))
-          .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 10)
-          .select("qid", "vid", "simr"))
-      }
-      beam.filter(col("vid") =!= col("qid"))
-        .withColumn("rn", row_number().over(wB)).filter(col("rn") <= 10)
-        .select("qid", "rn", "vid", "simr")
-        .orderBy("qid", "rn")
+      val hs = new HnswSearch(t(s, dir, "embeddings"))
+      val adj = cached(hs.sym(hs.top(knnCandScored(t(s, dir, "embeddings")), 5)))
+      val (beam, _) = hs.flatBeam(adj, cached, keepSeen = false)
+      topPerQuery(beam.filter(col("vid") =!= col("qid")), 10).orderBy("qid", "rn")
     },
-    Some {
-      val rounds = (1 to 3).map { i =>
-        s"""ex$i AS (SELECT DISTINCT b.qid, adj.b AS vid
-           |  FROM b${i - 1} b JOIN adj ON adj.a = b.vid
-           |  WHERE NOT EXISTS (SELECT 1 FROM b${i - 1} p
-           |                    WHERE p.qid = b.qid AND p.vid = adj.b)),
-           |dpx$i AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-           |  FROM ex$i JOIN x xa ON xa.vec_id = qid
-           |  JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d GROUP BY qid, vid),
-           |scx$i AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-           |  FROM dpx$i JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid),
-           |b$i AS MATERIALIZED (SELECT qid, vid, simr FROM (
-           |  SELECT qid, vid, simr,
-           |    row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-           |  FROM (SELECT * FROM b${i - 1} UNION ALL SELECT * FROM scx$i))
-           |  WHERE rn <= 10)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $knnGraphOracleCtes,
-         |g5 AS MATERIALIZED (SELECT qid AS a, vid AS b FROM r WHERE rn <= 5),
-         |adj AS MATERIALIZED (SELECT DISTINCT a, b FROM
-         |  (SELECT a, b FROM g5 UNION ALL SELECT b, a FROM g5)),
-         |qs AS (SELECT 0 AS qid UNION ALL SELECT 1 UNION ALL SELECT 2),
-         |c0 AS (SELECT qs.qid, v.vec_id AS vid FROM qs,
-         |       (SELECT vec_id FROM embeddings WHERE vec_id < 4) v),
-         |dpx0 AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-         |  FROM c0 JOIN x xa ON xa.vec_id = qid
-         |  JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d GROUP BY qid, vid),
-         |b0 AS MATERIALIZED (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-         |  FROM dpx0 JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid),
-         |$rounds
-         |SELECT qid, rn, vid, simr FROM (
-         |  SELECT qid, vid, simr,
-         |    row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-         |  FROM b3 WHERE vid <> qid) WHERE rn <= 10
-         |ORDER BY qid, rn""".stripMargin
-    })
+    Some(s"""WITH $longCtes,
+            |${knnCtes()},
+            |${topKCte("g5", "sc", 5, "qid AS a, vid AS b", materialized = true)},
+            |${symCte("adj", Seq("g5"))},
+            |$queryIdsCte,
+            |${flatBeamCtes("adj")}
+            |${topKSql("(SELECT * FROM fb3 WHERE vid <> qid)")}""".stripMargin))
 
   // HNSW-LAYERED ANN SEARCH (l3_ann_hnsw): the hierarchy over the
   // flat NSW traversal (Malkov & Yashunin 2018). Layer membership is
@@ -3909,23 +3294,12 @@ object Llm {
       implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.sessionOwned
       val e = t(s, dir, "embeddings")
       val hs = new HnswSearch(e)
-      val cs = cached(knnCandScored(s, dir))
+      val cs = cached(knnCandScored(t(s, dir, "embeddings")))
       val adj = cached(hs.sym(hs.top(cs, 5)))
       // --- HNSW: the shared layered search, scored set kept ---
       val seen = hs.seen(adj, l => hs.sym(hs.layerTop3(cs, l)))
-      // --- flat: l3_ann_graph_search's exact traversal, scored set kept ---
-      var fseen = hs.cut(hs.scored(hs.q.select(col("qid"))
-        .crossJoin(broadcast(e.filter(col("vec_id") < 4)
-          .select(col("vec_id").as("vid"))))))
-      var fbeam = fseen
-      for (_ <- 1 to 3) {
-        val expand = fbeam.select(col("qid"), col("vid").as("a"))
-          .join(adj, "a").select(col("qid"), col("b").as("vid")).distinct()
-          .join(fbeam.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-        val ns = hs.cut(hs.scored(expand))
-        fseen = hs.cut(fseen.union(ns))
-        fbeam = hs.cut(hs.beam10(fbeam.union(ns)))
-      }
+      // --- flat: l3_ann_graph_search's traversal, scored set kept ---
+      val (_, fseen) = hs.flatBeam(adj, hs.cut, keepSeen = true)
       // --- exact top-10 ground truth + the two report rows ---
       val exactTop = cached(
         topPerQuery(hs.scored(hs.q.select(col("qid"))
@@ -3944,131 +3318,38 @@ object Llm {
             .agg(count(lit(1)).as("hits_at_10")))
           .select(lit(method).as("method"), col("n_scored"), col("hits_at_10"))
       }
-      report("flat", fseen).unionByName(report("hnsw", seen)).orderBy("method")
+      report("flat", fseen.get).unionByName(report("hnsw", seen)).orderBy("method")
     },
     Some {
-      def scoreCtes(tag: String, candCte: String): String =
-        s"""dp$tag AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-           |  FROM $candCte JOIN x xa ON xa.vec_id = qid
-           |  JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d GROUP BY qid, vid),
-           |sc$tag AS MATERIALIZED (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-           |  FROM dp$tag JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid)""".stripMargin
-      // per-layer kNN adjacency: top-3 among layer members from the
-      // shared scored-candidate CTE (sdf), symmetrized
-      val layers = (1 to 3).map { l =>
-        s"""al$l AS (SELECT a, b FROM (
-           |  SELECT s.qid AS a, s.vid AS b,
-           |    row_number() OVER (PARTITION BY s.qid ORDER BY s.simr DESC, s.vid) AS rn
-           |  FROM sdm s JOIN lvl la ON la.vid = s.qid AND la.lvl >= $l
-           |             JOIN lvl lb ON lb.vid = s.vid AND lb.lvl >= $l) WHERE rn <= 3),
-           |adjl$l AS MATERIALIZED (SELECT DISTINCT a, b FROM
-           |  (SELECT a, b FROM al$l UNION ALL SELECT b, a FROM al$l))""".stripMargin
-      }.mkString(",\n")
-      // beam-1 descent: one layer-adjacency expansion per layer 3..1
-      val descent = (1 to 3).map { i =>
-        val l = 4 - i
-        s"""hcur$i AS (SELECT qid, vid FROM (
-           |  SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-           |  FROM seen${i - 1}) WHERE rn <= 1),
-           |hnb$i AS (SELECT DISTINCT c.qid, adjl$l.b AS vid
-           |  FROM hcur$i c JOIN adjl$l ON adjl$l.a = c.vid
-           |  WHERE NOT EXISTS (SELECT 1 FROM seen${i - 1} p
-           |                    WHERE p.qid = c.qid AND p.vid = adjl$l.b)),
-           |${scoreCtes(s"h$i", s"hnb$i")},
-           |seen$i AS MATERIALIZED (SELECT * FROM seen${i - 1}
-           |  UNION ALL SELECT * FROM sch$i)""".stripMargin
-      }.mkString(",\n")
-      // base-layer beam, seeded from the descent's scored top-10
-      val hnswRounds = (1 to 2).map { j =>
-        val i = j + 3
-        s"""hex$j AS (SELECT DISTINCT b.qid, adj.b AS vid
-           |  FROM hb${j - 1} b JOIN adj ON adj.a = b.vid
-           |  WHERE NOT EXISTS (SELECT 1 FROM seen${i - 1} p
-           |                    WHERE p.qid = b.qid AND p.vid = adj.b)),
-           |${scoreCtes(s"hx$j", s"hex$j")},
-           |seen$i AS MATERIALIZED (SELECT * FROM seen${i - 1}
-           |  UNION ALL SELECT * FROM schx$j),
-           |hb$j AS MATERIALIZED (SELECT qid, vid, simr FROM (
-           |  SELECT qid, vid, simr,
-           |    row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-           |  FROM (SELECT * FROM hb${j - 1} UNION ALL SELECT * FROM schx$j))
-           |  WHERE rn <= 10)""".stripMargin
-      }.mkString(",\n")
-      // flat: the l3_ann_graph_search traversal, verbatim discipline
-      val flatRounds = (1 to 3).map { i =>
-        s"""fex$i AS (SELECT DISTINCT b.qid, adj.b AS vid
-           |  FROM fb${i - 1} b JOIN adj ON adj.a = b.vid
-           |  WHERE NOT EXISTS (SELECT 1 FROM fb${i - 1} p
-           |                    WHERE p.qid = b.qid AND p.vid = adj.b)),
-           |${scoreCtes(s"f$i", s"fex$i")},
-           |fb$i AS MATERIALIZED (SELECT qid, vid, simr FROM (
-           |  SELECT qid, vid, simr,
-           |    row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-           |  FROM (SELECT * FROM fb${i - 1} UNION ALL SELECT * FROM scf$i))
-           |  WHERE rn <= 10)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $knnGraphOracleCtes,
-         |g5 AS MATERIALIZED (SELECT qid AS a, vid AS b FROM r WHERE rn <= 5),
-         |adj AS MATERIALIZED (SELECT DISTINCT a, b FROM
-         |  (SELECT a, b FROM g5 UNION ALL SELECT b, a FROM g5)),
-         |lvl AS MATERIALIZED (SELECT vid, CASE WHEN h % 64 = 0 THEN 3
-         |    WHEN h % 16 = 0 THEN 2 WHEN h % 4 = 0 THEN 1 ELSE 0 END AS lvl
-         |  FROM (SELECT vec_id AS vid,
-         |    CAST('0x' || substr(sha256(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-         |  FROM embeddings)),
-         |sdm AS MATERIALIZED (SELECT qid, vid, simr FROM sdf),
-         |$layers,
-         |entry AS (SELECT vid FROM lvl ORDER BY lvl DESC, vid LIMIT 1),
-         |qs AS (SELECT 0 AS qid UNION ALL SELECT 1 UNION ALL SELECT 2),
-         |hc0 AS (SELECT qs.qid, entry.vid FROM qs, entry
-         |  UNION ALL SELECT qid, qid AS vid FROM qs),
-         |${scoreCtes("h0", "hc0")},
-         |seen0 AS MATERIALIZED (SELECT * FROM sch0),
-         |$descent,
-         |hb0 AS MATERIALIZED (SELECT qid, vid, simr FROM (
-         |  SELECT qid, vid, simr,
-         |    row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-         |  FROM seen3) WHERE rn <= 10),
-         |$hnswRounds,
-         |fc0 AS (SELECT qs.qid, v.vec_id AS vid FROM qs,
-         |        (SELECT vec_id FROM embeddings WHERE vec_id < 4) v),
-         |${scoreCtes("f0", "fc0")},
-         |fb0 AS MATERIALIZED (SELECT * FROM scf0),
-         |$flatRounds,
+      def hits(top: String) =
+        s"(SELECT count(*) FROM $top JOIN exact ON exact.qid = $top.qid AND exact.vid = $top.vid)"
+      s"""WITH $longCtes,
+         |${knnCtes(materialized = true)},
+         |$lvlCte,
+         |${adjacencyCtes("h", Seq("sc"))},
+         |$entryCtes,
+         |${hnswSearchCtes("h")},
+         |${flatBeamCtes("adjh")},
          |fsc AS MATERIALIZED (SELECT DISTINCT qid, vid, simr FROM (
-         |  SELECT * FROM scf0 UNION ALL SELECT * FROM scf1
-         |  UNION ALL SELECT * FROM scf2 UNION ALL SELECT * FROM scf3)),
-         |bfc AS (SELECT qs.qid, e.vec_id AS vid FROM qs, embeddings e
-         |        WHERE e.vec_id <> qs.qid),
-         |${scoreCtes("bf", "bfc")},
-         |exact AS MATERIALIZED (SELECT qid, vid FROM (
-         |  SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-         |  FROM scbf) WHERE rn <= 10),
-         |ftop AS (SELECT qid, vid FROM (
-         |  SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-         |  FROM fsc WHERE vid <> qid) WHERE rn <= 10),
-         |htop AS (SELECT qid, vid FROM (
-         |  SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-         |  FROM seen5 WHERE vid <> qid) WHERE rn <= 10)
+         |  ${(0 to 3).map(i => s"SELECT * FROM scf$i").mkString(" UNION ALL ")})),
+         |${topKCte("flattop", "fsc", 10, "qid, vid", where = "vid <> qid")},
+         |${allPairsCte("bfc")},
+         |${scoreCtes("bf", "bfc", materialized = true)},
+         |${topKCte("exact", "scbf", 10, "qid, vid", materialized = true)}
          |SELECT method, n_scored, hits_at_10 FROM (
-         |  SELECT 'flat' AS method,
-         |    (SELECT count(*) FROM fsc) AS n_scored,
-         |    (SELECT count(*) FROM ftop JOIN exact
-         |       ON exact.qid = ftop.qid AND exact.vid = ftop.vid) AS hits_at_10
-         |  UNION ALL SELECT 'hnsw',
-         |    (SELECT count(*) FROM (SELECT DISTINCT qid, vid FROM seen5)),
-         |    (SELECT count(*) FROM htop JOIN exact
-         |       ON exact.qid = htop.qid AND exact.vid = htop.vid))
+         |  SELECT 'flat' AS method, (SELECT count(*) FROM fsc) AS n_scored,
+         |    ${hits("flattop")} AS hits_at_10
+         |  UNION ALL SELECT 'hnsw', (SELECT count(*) FROM (SELECT DISTINCT qid, vid FROM seenh5)),
+         |    ${hits("ftoph")})
          |ORDER BY method""".stripMargin
     })
-
 
   // INCREMENTAL HNSW INDEX MAINTENANCE (l3_ann_hnsw_incremental):
   // l3_knn_graph and l3_ann_hnsw rebuild their graphs from scratch —
   // this maintains them under a batch ADD (vec_id % 8 == 5, ~12% of
   // the fixture) without re-running the n^1.5 corpus-wide build:
   //  - the FROZEN index is the IVF-bounded build over the STORED
-  //    corpus only (knnCandScoredOver — same machinery, smaller n);
+  //    corpus only (knnCandScored — same machinery, smaller n);
   //  - each batch vector draws its layer by the SAME sha60 rule the
   //    full build uses (layer membership is a pure function of vid,
   //    so maintained and rebuilt hierarchies agree on levels by
@@ -4095,292 +3376,34 @@ object Llm {
   // maintenance cost is batch-sized (b·n scoring + batch-sized link
   // ranking); only the rebuilt arm — present here as the comparison
   // target — pays the n^1.5 build.
-  /** The l3_ann_hnsw layered search over the corpus `e`, written once
-    * for l3_ann_hnsw, l3_ann_hnsw_incremental and l3_ann_compact: the
-    * sha60 level table, top-k link ranking ([[top]], [[layerTop3]],
-    * [[sym]]), the scorer for the three query nodes, and the search —
-    * {top-level entry, the query itself}, a beam-1 descent per layer
-    * 3→1, then a width-10 base-layer beam for two rounds. [[seen]]
-    * returns every (qid, vid, simr) the search scored; [[search]] its
-    * result-heap top-10. */
-  private final class HnswSearch(val e: DataFrame)
-                                (implicit scope: graft.ops.CacheScope) {
-    private val lvl: DataFrame = cached(e.select(col("vec_id").as("vid"))
-      .withColumn("h", sha60(col("vid").cast("string")))
-      .withColumn("lvl",
-        when(pmod(col("h"), lit(64L)) === 0, 3)
-          .when(pmod(col("h"), lit(16L)) === 0, 2)
-          .when(pmod(col("h"), lit(4L)) === 0, 1)
-          .otherwise(0))
-      .select("vid", "lvl"))
-    val q: DataFrame = broadcast(e.filter(col("vec_id").isin(0, 1, 2))
-      .select(col("vec_id").as("qid"), col("embedding").as("qe")))
-    def scored(cands: DataFrame): DataFrame =
-      cands.join(e.select(col("vec_id").as("vid"), col("embedding").as("ve")), "vid")
-        .join(q, "qid")
-        .select(col("qid"), col("vid"),
-          round(vec_cos(col("qe"), col("ve")), 6).as("simr"))
-    // per-round LINEAGE CUTS, not caches: each round references the
-    // previous scored set TWICE (anti-join + union), so cached
-    // lineage doubles the logical plan every round — 10 rounds
-    // would hand Catalyst a 2^10-node tree (measured: minutes of
-    // pure planning). The GraphOps round discipline applies.
-    def cut(df: DataFrame): DataFrame = scope.checkpointed(df, reliable = false)
-    def beam10(df: DataFrame): DataFrame =
-      topPerQuery(df, 10).select("qid", "vid", "simr")
-    /** Each node's top-`k` scored links as directed (a, b) edges. */
-    def top(cs: DataFrame, k: Int): DataFrame =
-      topPerQuery(cs, k).select(col("qid").as("a"), col("vid").as("b"))
-    def sym(g: DataFrame): DataFrame =
-      g.union(g.select(col("b").as("a"), col("a").as("b"))).distinct()
-    /** Top-3 links among layer-`l` members — a kNN graph WITHIN the
-      * layer, so upper layers are not left edgeless. */
-    def layerTop3(cs: DataFrame, l: Int): DataFrame =
-      top(cs.join(lvl.select(col("vid").as("qid"), col("lvl").as("lq"))
-          .filter(col("lq") >= l), "qid")
-        .join(lvl.select(col("vid"), col("lvl").as("lv"))
-          .filter(col("lv") >= l), "vid"), 3)
-    private val entry = broadcast(lvl.orderBy(col("lvl").desc, col("vid").asc)
-      .limit(1).select(col("vid")))
-
-    def seen(adjBase: DataFrame, layerAdj: Int => DataFrame): DataFrame = {
-      var all = cut(scored(q.select(col("qid")).crossJoin(entry)
-        .union(q.select(col("qid"), col("qid").as("vid")))))
-      for (l <- 3 to 1 by -1) {
-        val top1 = topPerQuery(all, 1).select(col("qid"), col("vid").as("a"))
-        val neigh = top1.join(layerAdj(l), "a")
-          .select(col("qid"), col("b").as("vid")).distinct()
-          .join(all.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-        all = cut(all.union(scored(neigh)))
-      }
-      var beam = cut(beam10(all))
-      for (_ <- 1 to 2) {
-        val expand = beam.select(col("qid"), col("vid").as("a"))
-          .join(adjBase, "a").select(col("qid"), col("b").as("vid")).distinct()
-          .join(all.select("qid", "vid"), Seq("qid", "vid"), "left_anti")
-        val ns = cut(scored(expand))
-        all = cut(all.union(ns))
-        beam = cut(beam10(beam.union(ns)))
-      }
-      all
-    }
-
-    def search(adjBase: DataFrame, layerAdj: Int => DataFrame,
-               method: String): DataFrame =
-      topPerQuery(seen(adjBase, layerAdj).select("qid", "vid", "simr").distinct()
-          .filter(col("vid") =!= col("qid")), 10)
-        .select(lit(method).as("method"), col("qid"), col("rn"),
-          col("vid"), col("simr"))
-  }
-
-  /** Shared scaffolding for the incremental-HNSW family
-    * (l3_ann_hnsw_incremental and l3_ann_compact): the frozen
-    * stored-corpus candidate scores, the one batch-vs-stored scoring
-    * pass and the insertion-maintained adjacency, over the shared
-    * [[HnswSearch]] — factored so compaction composes on top instead
-    * of duplicating the build. */
-  private final case class HnswIncrKit(hs: HnswSearch, adjM: DataFrame,
-                                       layerAdjM: Int => DataFrame)
-
-  private def hnswIncrKit(s: SparkSession, dir: String)
-                         (implicit scope: graft.ops.CacheScope): HnswIncrKit = {
-    val hs = new HnswSearch(t(s, dir, "embeddings"))
-    val stored = hs.e.filter(col("vec_id") % 8 =!= 5)
-    val batch = hs.e.filter(col("vec_id") % 8 === 5)
-    // frozen stored-corpus index + one batch-vs-stored scoring pass
-    // (batch side BROADCAST so the corpus side streams — the
-    // l3_knn_bruteforce idiom; at real scale swap the brute pass
-    // for IVF probe lists, docs/SCALING.md)
-    val csStored = cached(knnCandScoredOver(stored))
-    val bs = cached(stored
-      .select(col("vec_id").as("vid"), col("embedding").as("ve"))
-      .crossJoin(broadcast(batch
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))))
-      .select(col("qid"), col("vid"),
-        round(vec_cos(col("qe"), col("ve")), 6).as("simr")))
-    val adjM = cached(hs.sym(hs.top(csStored, 5).unionByName(hs.top(bs, 5))))
-    HnswIncrKit(hs, adjM,
-      l => hs.sym(hs.layerTop3(csStored, l).unionByName(hs.layerTop3(bs, l))))
-  }
-
-  // ---- shared oracle CTE builders for the incremental-HNSW family
-  // (l3_ann_hnsw_incremental + l3_ann_compact) — SQL mirrors of
-  // hnswIncrKit, factored so the compaction oracle composes on the
-  // identical maintained-index chain instead of duplicating it ----
-  private val hivStoredPred = "vec_id % 8 <> 5"
-
-  /** A second IVF chain over the STORED corpus only — the frozen
-    * index build (mirrors knnCandScoredOver(stored) CTE-for-CTE). */
-  private val hivStoredIvf =
-    s"""nls AS (SELECT GREATEST(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS nlist
-       |        FROM embeddings WHERE $hivStoredPred),
-       |cds AS (SELECT xv.vec_id AS vid, xc.vec_id AS cid,
-       |              round(SUM(CAST(xv.e AS DOUBLE) * CAST(xc.e AS DOUBLE))
-       |                    / (nv.nrm * nc.nrm), 6) AS simr
-       |       FROM x xv JOIN x xc ON xc.d = xv.d
-       |         AND xc.vec_id < (SELECT nlist FROM nls) AND xc.$hivStoredPred
-       |       JOIN n nv ON nv.vec_id = xv.vec_id
-       |       JOIN n nc ON nc.vec_id = xc.vec_id
-       |       WHERE xv.$hivStoredPred
-       |       GROUP BY xv.vec_id, xc.vec_id, nv.nrm, nc.nrm),
-       |r0s AS (SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-       |        FROM cds),
-       |assigns AS (SELECT vid, cid FROM r0s WHERE rn = 1),
-       |probess AS (SELECT vid AS qid, cid FROM r0s WHERE rn <= 4),
-       |candss AS (SELECT p.qid, a.vid FROM probess p JOIN assigns a ON a.cid = p.cid
-       |           WHERE a.vid != p.qid),
-       |dpss AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-       |         FROM candss JOIN x xa ON xa.vec_id = qid
-       |         JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d
-       |         GROUP BY qid, vid),
-       |sdms AS MATERIALIZED (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-       |        FROM dpss JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid)""".stripMargin
-
-  /** One batch-vs-stored scoring pass (the insertion cost). */
-  private val hivBatchScore =
-    s"""bsc AS MATERIALIZED (
-       |  SELECT d.qid, d.vid, round(d.dot / (na.nrm * nb.nrm), 6) AS simr FROM (
-       |    SELECT xa.vec_id AS qid, xb.vec_id AS vid,
-       |           SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-       |    FROM x xa JOIN x xb ON xb.d = xa.d AND xb.$hivStoredPred
-       |    WHERE xa.vec_id % 8 = 5 GROUP BY 1, 2) d
-       |  JOIN n na ON na.vec_id = d.qid JOIN n nb ON nb.vec_id = d.vid)""".stripMargin
-
-  private def hivTop5(tag: String, src: String): String =
-    s"""g5$tag AS (SELECT qid AS a, vid AS b FROM (
-       |  SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-       |  FROM $src) WHERE rn <= 5)""".stripMargin
-
-  /** Per-layer top-3 adjacency arms (both sides layer members). */
-  private def hivLayer3(tag: String, src: String, l: Int): String =
-    s"""al$tag$l AS (SELECT a, b FROM (
-       |  SELECT s.qid AS a, s.vid AS b,
-       |    row_number() OVER (PARTITION BY s.qid ORDER BY s.simr DESC, s.vid) AS rn
-       |  FROM $src s JOIN lvl la ON la.vid = s.qid AND la.lvl >= $l
-       |             JOIN lvl lb ON lb.vid = s.vid AND lb.lvl >= $l) WHERE rn <= 3)""".stripMargin
-
-  /** The MAINTAINED adjacency: frozen top-5 ∪ batch top-5, symmetrized,
-    * plus the three layer arms. */
-  private val hivMaintainedAdjacency =
-    s"""${hivTop5("s", "sdms")},
-       |${hivTop5("b", "bsc")},
-       |adjm AS MATERIALIZED (SELECT DISTINCT a, b FROM (
-       |  SELECT a, b FROM g5s UNION ALL SELECT b, a FROM g5s
-       |  UNION ALL SELECT a, b FROM g5b UNION ALL SELECT b, a FROM g5b)),
-       |${(1 to 3).map { l =>
-          s"""${hivLayer3("s", "sdms", l)},
-             |${hivLayer3("b", "bsc", l)},
-             |adjml$l AS MATERIALIZED (SELECT DISTINCT a, b FROM (
-             |  SELECT a, b FROM als$l UNION ALL SELECT b, a FROM als$l
-             |  UNION ALL SELECT a, b FROM alb$l UNION ALL SELECT b, a FROM alb$l))""".stripMargin
-        }.mkString(",\n")}""".stripMargin
-
-  private def hivScoreCtes(tag: String, candCte: String): String =
-    s"""dp$tag AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-       |  FROM $candCte JOIN x xa ON xa.vec_id = qid
-       |  JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d GROUP BY qid, vid),
-       |sc$tag AS MATERIALIZED (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-       |  FROM dp$tag JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid)""".stripMargin
-
-  private val hivLvl =
-    """lvl AS MATERIALIZED (SELECT vid, CASE WHEN h % 64 = 0 THEN 3
-      |    WHEN h % 16 = 0 THEN 2 WHEN h % 4 = 0 THEN 1 ELSE 0 END AS lvl
-      |  FROM (SELECT vec_id AS vid,
-      |    CAST('0x' || substr(sha256(CAST(vec_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-      |  FROM embeddings))""".stripMargin
-
-  private val hivEntryQs =
-    """entry AS (SELECT vid FROM lvl ORDER BY lvl DESC, vid LIMIT 1),
-      |qs AS (SELECT 0 AS qid UNION ALL SELECT 1 UNION ALL SELECT 2)""".stripMargin
-
-  /** The l3_ann_hnsw search chain, parameterized by index tag. */
-  private def hivSearchCtes(m: String, adjBase: String,
-                            adjL: Int => String): String = {
-    val descent = (1 to 3).map { i =>
-      val l = 4 - i
-      s"""hcur$m$i AS (SELECT qid, vid FROM (
-         |  SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-         |  FROM seen$m${i - 1}) WHERE rn <= 1),
-         |hnb$m$i AS (SELECT DISTINCT c.qid, ja.b AS vid
-         |  FROM hcur$m$i c JOIN ${adjL(l)} ja ON ja.a = c.vid
-         |  WHERE NOT EXISTS (SELECT 1 FROM seen$m${i - 1} p
-         |                    WHERE p.qid = c.qid AND p.vid = ja.b)),
-         |${hivScoreCtes(s"h$m$i", s"hnb$m$i")},
-         |seen$m$i AS MATERIALIZED (SELECT * FROM seen$m${i - 1}
-         |  UNION ALL SELECT * FROM sch$m$i)""".stripMargin
-    }.mkString(",\n")
-    val baseRounds = (1 to 2).map { j =>
-      val i = j + 3
-      s"""hex$m$j AS (SELECT DISTINCT b.qid, ja.b AS vid
-         |  FROM hb$m${j - 1} b JOIN $adjBase ja ON ja.a = b.vid
-         |  WHERE NOT EXISTS (SELECT 1 FROM seen$m${i - 1} p
-         |                    WHERE p.qid = b.qid AND p.vid = ja.b)),
-         |${hivScoreCtes(s"hx$m$j", s"hex$m$j")},
-         |seen$m$i AS MATERIALIZED (SELECT * FROM seen$m${i - 1}
-         |  UNION ALL SELECT * FROM schx$m$j),
-         |hb$m$j AS MATERIALIZED (SELECT qid, vid, simr FROM (
-         |  SELECT qid, vid, simr,
-         |    row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-         |  FROM (SELECT * FROM hb$m${j - 1} UNION ALL SELECT * FROM schx$m$j))
-         |  WHERE rn <= 10)""".stripMargin
-    }.mkString(",\n")
-    s"""hc0$m AS (SELECT qs.qid, entry.vid FROM qs, entry
-       |  UNION ALL SELECT qid, qid AS vid FROM qs),
-       |${hivScoreCtes(s"h${m}0", s"hc0$m")},
-       |seen${m}0 AS MATERIALIZED (SELECT * FROM sch${m}0),
-       |$descent,
-       |hb${m}0 AS MATERIALIZED (SELECT qid, vid, simr FROM (
-       |  SELECT qid, vid, simr,
-       |    row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-       |  FROM seen${m}3) WHERE rn <= 10),
-       |$baseRounds,
-       |ftop$m AS (SELECT qid, rn, vid, simr FROM (
-       |  SELECT qid, vid, simr,
-       |    row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-       |  FROM (SELECT DISTINCT qid, vid, simr FROM seen${m}5 WHERE vid <> qid))
-       |  WHERE rn <= 10)""".stripMargin
-  }
-
   private val l3hnswIncr = QueryDef(
     "l3_ann_hnsw_incremental",
     (s, dir) => {
       implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.sessionOwned
-      val kit = hnswIncrKit(s, dir)
+      val kit = hnswIncrKit(t(s, dir, "embeddings"))
       val hs = kit.hs
       // rebuilt full-corpus index (the comparison target)
-      val csAll = cached(knnCandScoredOver(hs.e))
+      val csAll = cached(knnCandScored(hs.e))
       val adjR = cached(hs.sym(hs.top(csAll, 5)))
       def layerAdjR(l: Int): DataFrame = hs.sym(hs.layerTop3(csAll, l))
       hs.search(kit.adjM, kit.layerAdjM, "maintained")
         .unionByName(hs.search(adjR, layerAdjR, "rebuilt"))
         .orderBy("method", "qid", "rn")
     },
-    Some {
-      // the REBUILT arm's adjacency (full-corpus top-5 + layer arms)
-      val rebuiltAdjacency =
-        s"""${hivTop5("r", "sdm")},
-           |adjr AS MATERIALIZED (SELECT DISTINCT a, b FROM (
-           |  SELECT a, b FROM g5r UNION ALL SELECT b, a FROM g5r)),
-           |${(1 to 3).map { l =>
-              s"""${hivLayer3("r", "sdm", l)},
-                 |adjrl$l AS MATERIALIZED (SELECT DISTINCT a, b FROM (
-                 |  SELECT a, b FROM alr$l UNION ALL SELECT b, a FROM alr$l))""".stripMargin
-            }.mkString(",\n")}""".stripMargin
-      s"""WITH $knnGraphOracleCtes,
-         |sdm AS MATERIALIZED (SELECT qid, vid, simr FROM sdf),
-         |$hivStoredIvf,
-         |$hivBatchScore,
-         |$hivLvl,
-         |$hivMaintainedAdjacency,
-         |$rebuiltAdjacency,
-         |$hivEntryQs,
-         |${hivSearchCtes("m", "adjm", l => s"adjml$l")},
-         |${hivSearchCtes("r", "adjr", l => s"adjrl$l")}
-         |SELECT method, qid, rn, vid, simr FROM (
-         |  SELECT 'maintained' AS method, qid, rn, vid, simr FROM ftopm
-         |  UNION ALL SELECT 'rebuilt', qid, rn, vid, simr FROM ftopr)
-         |ORDER BY method, qid, rn""".stripMargin
-    })
+    Some(s"""WITH $longCtes,
+            |${knnCtes(materialized = true)},
+            |$storedKnnCtes,
+            |$batchScoreCtes,
+            |$lvlCte,
+            |${adjacencyCtes("m", Seq("scs", "scb"))},
+            |${adjacencyCtes("r", Seq("sc"))},
+            |$entryCtes,
+            |${hnswSearchCtes("m")},
+            |${hnswSearchCtes("r")}
+            |SELECT method, qid, rn, vid, simr FROM (
+            |  SELECT 'maintained' AS method, qid, rn, vid, simr FROM ftopm
+            |  UNION ALL SELECT 'rebuilt', qid, rn, vid, simr FROM ftopr)
+            |ORDER BY method, qid, rn""".stripMargin))
 
   // ANN INDEX COMPACTION (l3_ann_compact): the documented other half
   // of incremental maintenance — insertion symmetrizes fresh links
@@ -4403,7 +3426,7 @@ object Llm {
     "l3_ann_compact",
     (s, dir) => {
       implicit val scope: graft.ops.CacheScope = graft.ops.CacheScope.sessionOwned
-      val kit = hnswIncrKit(s, dir)
+      val kit = hnswIncrKit(t(s, dir, "embeddings"))
       // caps follow HNSW's Mmax rule: the SEARCH graph is the
       // symmetrized top-M lists, so its healthy degree envelope is 2M
       // (out-links + reverse links) — compaction prunes back to
@@ -4419,24 +3442,21 @@ object Llm {
     Some {
       // compaction in SQL: re-score the maintained adjacency's edges
       // (adjacency-sized candidate set through the shared score CTEs)
-      // and keep each node's top-5 (top-3 per layer) — DIRECTED, no
+      // and keep each node's top-10 (top-6 per layer) — DIRECTED, no
       // re-symmetrization (that would re-inflate)
-      def compact(outCte: String, edges: String, tag: String, k: Int): String =
+      def compact(out: String, edges: String, tag: String, k: Int): String =
         s"""c$tag AS (SELECT a AS qid, b AS vid FROM $edges),
-           |${hivScoreCtes(tag, s"c$tag")},
-           |$outCte AS MATERIALIZED (SELECT qid AS a, vid AS b FROM (
-           |  SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-           |  FROM sc$tag) WHERE rn <= $k)""".stripMargin
-      s"""WITH $knnGraphOracleCtes,
-         |$hivStoredIvf,
-         |$hivBatchScore,
-         |$hivLvl,
-         |$hivMaintainedAdjacency,
-         |${compact("adjc", "adjm", "cb", 10)},
-         |${(1 to 3).map(l => compact(s"adjcl$l", s"adjml$l", s"cl$l", 6))
-            .mkString(",\n")},
-         |$hivEntryQs,
-         |${hivSearchCtes("c", "adjc", l => s"adjcl$l")}
+           |${scoreCtes(tag, s"c$tag", materialized = true)},
+           |${topKCte(out, s"sc$tag", k, "qid AS a, vid AS b", materialized = true)}""".stripMargin
+      s"""WITH $longCtes,
+         |$storedKnnCtes,
+         |$batchScoreCtes,
+         |$lvlCte,
+         |${adjacencyCtes("m", Seq("scs", "scb"))},
+         |${compact("adjc", "adjm", "k", 10)},
+         |${(1 to 3).map(l => compact(s"adjc$l", s"adjm$l", s"k$l", 6)).mkString(",\n")},
+         |$entryCtes,
+         |${hnswSearchCtes("c")}
          |SELECT 'compacted' AS method, qid, rn, vid, simr FROM ftopc
          |ORDER BY qid, rn""".stripMargin
     })
@@ -4474,42 +3494,12 @@ object Llm {
         e.filter(col("vec_id") % 9 === 3).select("vec_id"), g, probes, assign, e, 5)
       repaired.orderBy("qid", "rn")
     },
-    Some {
-      val surv = "vec_id % 9 <> 3"
-      // the l3_knn_graph chain rebuilt over survivors with the FROZEN
-      // quantizer: nl counts the ORIGINAL corpus, centroid ids are
-      // original, both candidate sides filter to survivors
-      s"""WITH x AS (SELECT vec_id, unnest(embedding) AS e,
-         |             generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-         |n AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-         |      FROM x GROUP BY vec_id),
-         |nl AS (SELECT GREATEST(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS nlist
-         |       FROM embeddings),
-         |cd AS (SELECT xv.vec_id AS vid, xc.vec_id AS cid,
-         |              round(SUM(CAST(xv.e AS DOUBLE) * CAST(xc.e AS DOUBLE))
-         |                    / (nv.nrm * nc.nrm), 6) AS simr
-         |       FROM x xv JOIN x xc ON xc.d = xv.d AND xc.vec_id < (SELECT nlist FROM nl)
-         |       JOIN n nv ON nv.vec_id = xv.vec_id
-         |       JOIN n nc ON nc.vec_id = xc.vec_id
-         |       WHERE xv.$surv
-         |       GROUP BY xv.vec_id, xc.vec_id, nv.nrm, nc.nrm),
-         |r0 AS (SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-         |       FROM cd),
-         |assign AS (SELECT vid, cid FROM r0 WHERE rn = 1),
-         |probes AS (SELECT vid AS qid, cid FROM r0 WHERE rn <= 4),
-         |cand AS (SELECT p.qid, a.vid FROM probes p JOIN assign a ON a.cid = p.cid
-         |         WHERE a.vid != p.qid),
-         |dp AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-         |       FROM cand JOIN x xa ON xa.vec_id = qid
-         |       JOIN x xb ON xb.vec_id = vid AND xb.d = xa.d
-         |       GROUP BY qid, vid),
-         |sdf AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-         |        FROM dp JOIN n na ON na.vec_id = qid JOIN n nb ON nb.vec_id = vid),
-         |r AS (SELECT qid, vid, simr,
-         |             row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-         |      FROM sdf)
-         |SELECT qid, rn, vid, simr FROM r WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
-    })
+    // the l3_knn_graph chain rebuilt over survivors with the FROZEN
+    // quantizer: nl counts the ORIGINAL corpus, centroid ids are
+    // original, both candidate sides filter to survivors
+    Some(s"""WITH $longCtes,
+            |${knnCtes(where = "vec_id % 9 <> 3")}
+            |${topKSql("sc", 5)}""".stripMargin))
 
   // Exact substring-SPAN dedup (Lee et al. 2022) — any >=8-token run
   // already present in an earlier doc is removed token-exactly from
@@ -4562,33 +3552,17 @@ object Llm {
   // output-pinned), so the window must materialize all ranks —
   // l3_cluster_sample_kept below is the production shape whose rank
   // filter compiles to a partial per-partition WindowGroupLimit.
-  private def clusterAssign(e: DataFrame): DataFrame =
-    cosineCells(e, sqrtSeedCents(e), 1).select(col("vid"), col("cid"))
-      .withColumn("hk", pmod(sha60(col("vid").cast("string")), lit(1000000007L)))
-
   private val clusterSampleOracle =
-    """WITH x AS (SELECT vec_id, unnest(embedding) AS e,
-      |             generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-      |n AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-      |      FROM x GROUP BY vec_id),
-      |nk AS (SELECT GREATEST(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS kk
-      |       FROM embeddings),
-      |cd AS (SELECT xv.vec_id AS vid, xc.vec_id AS cid,
-      |              round(SUM(CAST(xv.e AS DOUBLE) * CAST(xc.e AS DOUBLE))
-      |                    / (nv.nrm * nc.nrm), 6) AS simr
-      |       FROM x xv JOIN x xc ON xc.d = xv.d AND xc.vec_id < (SELECT kk FROM nk)
-      |       JOIN n nv ON nv.vec_id = xv.vec_id
-      |       JOIN n nc ON nc.vec_id = xc.vec_id
-      |       GROUP BY xv.vec_id, xc.vec_id, nv.nrm, nc.nrm),
-      |assign AS (SELECT vid, cid FROM (
-      |      SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-      |      FROM cd) WHERE rn = 1),
-      |h AS (SELECT vid, cid,
-      |        CAST(concat('0x', substr(sha256(CAST(vid AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000007 AS hk
-      |      FROM assign),
-      |r AS (SELECT vid, cid,
-      |             row_number() OVER (PARTITION BY cid ORDER BY hk, vid) AS rank
-      |      FROM h)""".stripMargin
+    s"""WITH $longCtes,
+       |${sqrtListsCte()},
+       |${seedCents(lists = sqrtLists())},
+       |${cellCtes("", "cent0", probeK = 0)},
+       |h AS (SELECT vid, cid,
+       |        CAST(concat('0x', substr(sha256(CAST(vid AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000007 AS hk
+       |      FROM assign),
+       |r AS (SELECT vid, cid,
+       |             row_number() OVER (PARTITION BY cid ORDER BY hk, vid) AS rank
+       |      FROM h)""".stripMargin
 
   private val l3clusterSample = QueryDef(
     "l3_cluster_sample",
@@ -5473,35 +4447,9 @@ object Llm {
             |      w -> list_contains(['table','scan','join','merge'], w)))) AS term
             |    FROM sv) GROUP BY term),
             |blen AS (SELECT CAST(SUM(len(ws)) AS BIGINT) AS v, count(*) AS cnt FROM sv),
-            |vx AS (SELECT vec_id, unnest(embedding) AS e,
-            |         generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-            |vn AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-            |       FROM vx GROUP BY vec_id),
-            |nl AS (SELECT GREATEST(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS nlist
-            |       FROM embeddings),
-            |cd AS (SELECT xv.vec_id AS vid, xc.vec_id AS cid,
-            |              round(SUM(CAST(xv.e AS DOUBLE) * CAST(xc.e AS DOUBLE))
-            |                    / (nv.nrm * nc.nrm), 6) AS simr
-            |       FROM vx xv JOIN vx xc ON xc.d = xv.d AND xc.vec_id < (SELECT nlist FROM nl)
-            |       JOIN vn nv ON nv.vec_id = xv.vec_id
-            |       JOIN vn nc ON nc.vec_id = xc.vec_id
-            |       WHERE xv.vec_id % 7 <> 0
-            |       GROUP BY xv.vec_id, xc.vec_id, nv.nrm, nc.nrm),
-            |r0 AS (SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-            |       FROM cd),
-            |vassign AS (SELECT vid, cid FROM r0 WHERE rn = 1),
-            |vprobes AS (SELECT vid AS qid, cid FROM r0 WHERE rn <= 4),
-            |acand AS (SELECT p.qid, a.vid FROM vprobes p JOIN vassign a ON a.cid = p.cid
-            |          WHERE a.vid != p.qid),
-            |dp AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-            |       FROM acand JOIN vx xa ON xa.vec_id = qid
-            |       JOIN vx xb ON xb.vec_id = vid AND xb.d = xa.d
-            |       GROUP BY qid, vid),
-            |sdf AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-            |        FROM dp JOIN vn na ON na.vec_id = qid JOIN vn nb ON nb.vec_id = vid),
-            |rr AS (SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-            |       FROM sdf),
-            |ann AS (SELECT qid, rn, vid FROM rr WHERE rn <= 5),
+            |$longCtes,
+            |${knnCtes("v", where = "vec_id % 7 <> 0")},
+            |${topKCte("ann", "scv", 5, "qid, rn, vid")},
             |ndel AS (SELECT count(*) AS y FROM documents WHERE doc_id % 7 = 0)
             |SELECT * FROM (
             |SELECT 'ann' AS artifact, CAST(NULL AS VARCHAR) AS k, qid AS x, rn AS y, vid AS z FROM ann
@@ -5572,36 +4520,9 @@ object Llm {
             |      w -> list_contains(['table','scan','join','merge'], w)))) AS term
             |    FROM sv) GROUP BY term),
             |blen AS (SELECT CAST(SUM(len(ws)) AS BIGINT) AS v, count(*) AS cnt FROM sv),
-            |vx AS (SELECT vec_id, unnest(embedding) AS e,
-            |         generate_subscripts(embedding, 1) - 1 AS d FROM embeddings),
-            |vn AS (SELECT vec_id, sqrt(SUM(CAST(e AS DOUBLE) * CAST(e AS DOUBLE))) AS nrm
-            |       FROM vx GROUP BY vec_id),
-            |nl AS (SELECT GREATEST(32, CAST(ceil(sqrt(count(*))) AS BIGINT)) AS nlist
-            |       FROM embeddings WHERE vec_id % 10 <> 0),
-            |cd AS (SELECT xv.vec_id AS vid, xc.vec_id AS cid,
-            |              round(SUM(CAST(xv.e AS DOUBLE) * CAST(xc.e AS DOUBLE))
-            |                    / (nv.nrm * nc.nrm), 6) AS simr
-            |       FROM vx xv JOIN vx xc ON xc.d = xv.d
-            |         AND xc.vec_id % 10 <> 0
-            |         AND xc.vec_id < (SELECT nlist FROM nl)
-            |       JOIN vn nv ON nv.vec_id = xv.vec_id
-            |       JOIN vn nc ON nc.vec_id = xc.vec_id
-            |       GROUP BY xv.vec_id, xc.vec_id, nv.nrm, nc.nrm),
-            |r0 AS (SELECT vid, cid, row_number() OVER (PARTITION BY vid ORDER BY simr DESC, cid) AS rn
-            |       FROM cd),
-            |vassign AS (SELECT vid, cid FROM r0 WHERE rn = 1),
-            |vprobes AS (SELECT vid AS qid, cid FROM r0 WHERE rn <= 4),
-            |acand AS (SELECT p.qid, a.vid FROM vprobes p JOIN vassign a ON a.cid = p.cid
-            |          WHERE a.vid != p.qid),
-            |dp AS (SELECT qid, vid, SUM(CAST(xa.e AS DOUBLE) * CAST(xb.e AS DOUBLE)) AS dot
-            |       FROM acand JOIN vx xa ON xa.vec_id = qid
-            |       JOIN vx xb ON xb.vec_id = vid AND xb.d = xa.d
-            |       GROUP BY qid, vid),
-            |sdf AS (SELECT qid, vid, round(dot / (na.nrm * nb.nrm), 6) AS simr
-            |        FROM dp JOIN vn na ON na.vec_id = qid JOIN vn nb ON nb.vec_id = vid),
-            |rr AS (SELECT qid, vid, row_number() OVER (PARTITION BY qid ORDER BY simr DESC, vid) AS rn
-            |       FROM sdf),
-            |ann AS (SELECT qid, rn, vid FROM rr WHERE rn <= 5),
+            |$longCtes,
+            |${knnCtes("v", stored = "vec_id % 10 <> 0")},
+            |${topKCte("ann", "scv", 5, "qid, rn, vid")},
             |nins AS (SELECT count(*) AS y FROM documents WHERE doc_id % 10 = 0)
             |SELECT * FROM (
             |SELECT 'ann' AS artifact, CAST(NULL AS VARCHAR) AS k, qid AS x, rn AS y, vid AS z FROM ann

@@ -4361,7 +4361,7 @@ object Relational {
         .write.mode("overwrite").parquet(path),
       Seq("sk"), bloomCols = Seq("sk")),
     (s, path, zones) => {
-      val probe = s.read.parquet(path)
+      val probe = Tables.parquet(s, path)
         .orderBy("l_orderkey", "l_linenumber").select("sk").head().getLong(0)
       graft.ops.Layout.zoneMapReadFiles(s, path, zones, "file", Seq("sk"))
         .filter(col("sk") === lit(probe))

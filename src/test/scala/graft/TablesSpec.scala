@@ -122,14 +122,17 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("a zone _apply cell built again reads its persisted zone table without an inference job") {
-    val cell = SparkEntry.queries("q128_zonemap_file_read_apply")
-    val first = cell(spark, fixtures) // builds or finds the persisted fixture
-    val (again, jobs) = jobsOf(cell(spark, fixtures))
-    // only the envelope collect: the table's and the zone table's
-    // schemas both come from the cache (a bare zone-table read would
-    // infer its schema with one job more)
-    assert(jobs == 1)
-    assert(again.collect().toSeq == first.collect().toSeq)
+    // q128: only the envelope collect; q136: its probe row as well.
+    // Every schema comes from the cache (a bare read of the table or
+    // the zone table would infer its schema with one job more)
+    for ((name, expected) <- Seq("q128_zonemap_file_read_apply" -> 1,
+                                 "q136_zonemap_bloom_read_apply" -> 2)) {
+      val cell = SparkEntry.queries(name)
+      val first = cell(spark, fixtures) // builds or finds the persisted fixture
+      val (again, jobs) = jobsOf(cell(spark, fixtures))
+      assert(jobs == expected, name)
+      assert(again.collect().toSeq == first.collect().toSeq, name)
+    }
   }
 
   test("BenchSession.releaseCaches leaves the schema cache alone") {

@@ -713,27 +713,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     assert(math.abs(cos(comp(1), comp(2))) <= 0.05, "components must be near-orthogonal")
   }
 
-  test("removeDominantDirections kills the dominant axis variance (All-but-the-Top)") {
-    implicit val scope: CacheScope = CacheScope.sessionOwned
-    val planted = Array(1.0, 1.0, 0, 0, 0, 0, 0, 0).map(_ / math.sqrt(2.0))
-    val rnd = new scala.util.Random(17)
-    val rows = (0 until 200).map { i =>
-      val s = (i % 21) - 10.0
-      (i.toLong, Array.tabulate(8)(d =>
-        (s * planted(d) + 0.05 * (rnd.nextDouble() * 2 - 1)).toFloat))
-    }
-    val df = rows.toDF("vec_id", "embedding")
-    val corrected = CorpusOps.removeDominantDirections(df, k = 1)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toMap
-    // projection of every corrected vector onto the planted axis must
-    // be noise-sized (the signal spanned [-10, 10] before)
-    val maxProj = corrected.values
-      .map(xs => math.abs(xs.zip(planted).map { case (a, b) => a * b }.sum)).max
-    assert(maxProj <= 0.2, s"dominant-axis projection survives: $maxProj")
-    // and the corrected corpus still differs row-to-row (not zeroed)
-    assert(corrected.values.map(xs => xs.map(x => x * x).sum).max > 1e-4)
-  }
-
   /** The cascade fixture: eight stored docs and a three-doc batch
     * with planted exact and near-dup groups, 4-d vectors around three
     * axis centroids. */
